@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 
 /** Lineage-truncation strategy for iterative operators (PageRank, BFS,
   * connected components, SimHash blocking, curation staging). Each round's
@@ -30,6 +30,26 @@ sealed trait Checkpointer {
   /** Materialize `df` and return a plan-truncated frame over the stored
     * partitions. */
   def apply(df: DataFrame): DataFrame
+
+  /** Materialize `df` like [[apply]] and evaluate the aggregates
+    * `metric +: more` over its rows in the SAME job (`Dataset.observe`):
+    * the convergence probe of an iterative operator without a probe
+    * query of its own. Returns the checkpointed frame and the observed
+    * row, one field per metric in order.
+    *
+    * Exact, not approximate: the metrics run in a `CollectMetricsExec`
+    * above the checkpointed plan's last stage, so they see every row the
+    * checkpoint stores, and result-stage accumulator updates apply once
+    * per partition even when a task is retried. */
+  def observed(df: DataFrame, metric: Column, more: Column*)
+      : (DataFrame, Row) = {
+    val obs = Observation()
+    val out = apply(df.observe(obs, metric, more: _*))
+    // the metrics reach the driver with the execution's end event,
+    // which the listener bus may deliver just after the action returns
+    (out, scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration.Inf))
+  }
 }
 
 object Checkpointer {

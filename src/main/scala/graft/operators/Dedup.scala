@@ -687,67 +687,72 @@ object Dedup {
     * minimum id reachable through near-dup edges; that min id is the
     * canonical keeper).
     *
-    * Iterative min-label propagation with POINTER JUMPING (each round also
-    * shortcuts `comp ← comp(comp)`), converging in O(log diameter) rounds
-    * instead of O(diameter) — the difference between 10 and 10,000 rounds
-    * on a long dup chain. Each round is two shuffles on uniformly-hashed
-    * ids; lineage is truncated per round with the supplied
-    * [[graft.Checkpointer]] (local blocks by default; pass
-    * `Checkpointer.Reliable` for fault-tolerant cluster runs) so plans
-    * don't grow exponentially. This is the standard large-graph CC shape
-    * (cf. the large-star/small-star family) expressed in DataFrames.
+    * Iterative min-label propagation with POINTER JUMPING, converging in
+    * O(log diameter) rounds instead of O(diameter) — the difference
+    * between 10 and 10,000 rounds on a long dup chain. Each round is ONE
+    * message pass: every vertex v receives its neighbours' labels (hop
+    * messages along the symmetrized edges) and comp(comp(v)) (a pointer
+    * jump from comp(v) to v, which is also v's self message: comp(x) ≤ x
+    * for every vertex, so the jump never raises a label and at a root it
+    * IS v's own label). All messages read the round-start labels through
+    * one join and take one `groupBy(to).min`. The new label is
+    * min(neighbour labels, comp(comp(v))); at a round that changes
+    * nothing, every vertex's label is at most its neighbours' and is
+    * itself a member of its component, so the fixpoint is the exact
+    * per-component minimum.
+    *
+    * Pair endpoints outside `vertices` are ignored: the edges are
+    * restricted to the vertex set once, inside the edge checkpoint.
+    * Labels only ever decrease, so an unchanged sum(comp) certifies the
+    * fixpoint; the sum is observed on the round's own checkpoint
+    * ([[graft.Checkpointer.observed]]) — one Spark SQL execution per
+    * round, no probe query. Hitting `maxIter` unconverged fails fast
+    * (half-propagated labels would split components). Lineage is
+    * truncated per round with the supplied [[graft.Checkpointer]] (local
+    * blocks by default; pass `Checkpointer.Reliable` for fault-tolerant
+    * cluster runs). This is the standard large-graph CC shape (cf. the
+    * large-star/small-star family) expressed in DataFrames.
     */
   def connectedComponents(vertices: DataFrame, idCol: String,
       pairs: DataFrame, maxIter: Int = 25,
       ckpt: Checkpointer = Checkpointer.Local): DataFrame = {
+    // distinct: vertices form a SET. A duplicated vertex id would give
+    // the label join a non-unique build key, and every message read
+    // through a duplicated id would MULTIPLY each round. One partial-agg
+    // here is the cheap insurance.
+    var labels = ckpt(
+      vertices.select(col(idCol).as("id"), col(idCol).as("comp"))
+        .distinct())
+    val ids = labels.select("id")
     val edges = ckpt(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionByName(
           pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .distinct())
-    // distinct: vertices form a SET. A duplicated vertex id would give
-    // the pointer-jump self-join a non-unique build key, and rows whose
-    // comp points at a duplicated id then MULTIPLY every round — an
-    // exponential row explosion (2^maxIter) from a single dup. One
-    // partial-agg here is the cheap insurance.
-    var labels = ckpt(
-      vertices.select(col(idCol).as("id"), col(idCol).as("comp"))
-        .distinct())
-    // labels only ever decrease, so an unchanged sum(comp) is a fixpoint —
-    // a single-column aggregate beats a join-based diff as the convergence
-    // probe.
+        .distinct()
+        .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+        .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi"))
     var prevSum = Option.empty[Any]
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      // one-hop: adopt the smallest neighbor component
-      val nbrMin = edges
-        .join(labels.withColumnsRenamed(Map("id" -> "dst", "comp" -> "_nc")),
-          Seq("dst"))
-        .groupBy(col("src").as("id")).agg(min(col("_nc")).as("_nbr"))
-      val hopped = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("_nbr"), col("comp"))).as("comp"))
-      // pointer jump: comp ← comp's comp (path halving) — read through
-      // the CHECKPOINTED labels, not through hopped itself: a
-      // hopped-on-hopped self-join re-executes the whole hop pipeline
-      // for its build side (the two uses shuffle on different keys, so
-      // nothing is reused), while labels is materialized blocks. The
-      // jump target is one round staler, which can cost one extra
-      // halving round on deep chains but never changes the fixpoint:
-      // labels(x) <= x always (monotone descent), so the probe's
-      // unchanged-sum test still certifies hop AND jump no-ops, and the
-      // converged labels are the exact per-component minimum either way.
-      val jumped = ckpt(hopped
-        .join(labels.select(col("id").as("comp"), col("comp").as("_cc")),
-          Seq("comp"), "left")
-        .select(col("id"), coalesce(col("_cc"), col("comp")).as("comp")))
-      val curSum = jumped.agg(sum(col("comp"))).head().get(0)
+      val msgs = edges.select(col("src").as("from"), col("dst").as("to"))
+        .unionAll(labels.select(col("comp").as("from"), col("id").as("to")))
+      // LEFT join: a null id's jump message finds no label and keeps
+      // its (null) row
+      val (next, row) = ckpt.observed(
+        msgs.join(labels.withColumnsRenamed(
+            Map("id" -> "from", "comp" -> "_lc")), Seq("from"), "left")
+          .groupBy(col("to").as("id")).agg(min(col("_lc")).as("comp")),
+        sum(col("comp")))
+      val curSum = row.get(0)
       converged = prevSum.contains(curSum)
       prevSum = Some(curSum)
-      labels = jumped
+      labels = next
       i += 1
     }
+    require(converged,
+      s"connectedComponents did not converge in $maxIter iterations — " +
+        "raise maxIter (component diameter exceeds 2^maxIter after jumps)")
     labels
   }
 

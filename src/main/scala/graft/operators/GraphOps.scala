@@ -30,6 +30,14 @@ object GraphOps {
 
   import RelPipeline.{StartId, EndId}
 
+  /** `ckpt(df)` and its row count, observed on the checkpoint's own job
+    * ([[graft.Checkpointer.observed]]) instead of a count query. */
+  private def ckptCount(ckpt: Checkpointer, df: DataFrame)
+      : (DataFrame, Long) = {
+    val (c, row) = ckpt.observed(df, count(lit(1)))
+    (c, row.getLong(0))
+  }
+
   /** Per-node degree over an edge table: `out`, `in`, or `total`
     * (undirected) degree. One hash aggregation. */
   def degrees(edges: DataFrame, direction: String = "out"): DataFrame =
@@ -120,10 +128,10 @@ object GraphOps {
         weightCol.map(w => col(w).cast("double").as("_w")).toSeq: _*))
     val endpoints = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id")))
-    val n = ckpt(nodes.fold(endpoints)(extra =>
+    val (n, nCount) = ckptCount(ckpt, nodes.fold(endpoints)(extra =>
         endpoints.unionAll(extra.select(col(extra.columns.head).as("id"))))
       .distinct())
-    val nNodes = n.count().toDouble
+    val nNodes = nCount.toDouble
     // out-"degree": edge count unweighted, outgoing weight sum weighted.
     // A null or non-positive weight sum would silently turn ranks into
     // NaN (0/0) or leak mass (null flow rows vanish from the sum while
@@ -348,9 +356,8 @@ object GraphOps {
     val n = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id")))
       .distinct()
-    val seedSet = ckpt(
+    val (seedSet, nSeeds) = ckptCount(ckpt,
       seeds.select(col(seeds.columns.head).as("id")).distinct())
-    val nSeeds = seedSet.count()
     require(nSeeds > 0, "seeds must be non-empty")
     // node table with the reset weight s(v), checkpointed once
     val ns = ckpt(n.join(seedSet.withColumn("_s", lit(1.0 / nSeeds)),
@@ -550,20 +557,20 @@ object GraphOps {
         least(col(StartId), col(EndId)).as("a"),
         greatest(col(StartId), col(EndId)).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    var e = ckpt(canon)
+    var (e, curEdges) = ckptCount(ckpt, canon)
     var prevEdges = -1L
-    var curEdges = e.count()
     var i = 0
     while (curEdges != prevEdges && curEdges > 0 && i < maxIter) {
       val deg = e.select(col("a").as("id"))
         .unionAll(e.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("_d"))
       val keep = deg.filter(col("_d") >= k).select("id")
-      e = ckpt(e
+      val (kept, n) = ckptCount(ckpt, e
         .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi"))
+      e = kept
       prevEdges = curEdges
-      curEdges = e.count()
+      curEdges = n
       i += 1
     }
     if (curEdges != prevEdges && curEdges > 0)
@@ -610,9 +617,8 @@ object GraphOps {
         least(col(StartId), col(EndId)).as("a"),
         greatest(col(StartId), col(EndId)).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    var e = ckpt(canon)
+    var (e, curEdges) = ckptCount(ckpt, canon)
     var prevEdges = -1L
-    var curEdges = e.count()
     var i = 0
     while (curEdges != prevEdges && curEdges > 0 && i < maxIter) {
       val e1 = e.select(col("a"), col("b"))
@@ -625,10 +631,12 @@ object GraphOps {
         .unionAll(tri.select(col("a"), col("c").as("b")))
         .unionAll(tri.select(col("b").as("a"), col("c").as("b")))
         .groupBy("a", "b").agg(count(lit(1)).as("_sup"))
-      e = ckpt(e.join(support.filter(col("_sup") >= k - 2)
-        .select("a", "b"), Seq("a", "b"), "left_semi"))
+      val (kept, n) = ckptCount(ckpt, e.join(
+        support.filter(col("_sup") >= k - 2).select("a", "b"),
+        Seq("a", "b"), "left_semi"))
+      e = kept
       prevEdges = curEdges
-      curEdges = e.count()
+      curEdges = n
       i += 1
     }
     if (curEdges != prevEdges && curEdges > 0)
@@ -678,13 +686,12 @@ object GraphOps {
     val n = nodes.fold(endpoints: DataFrame)(extra =>
       endpoints.unionAll(extra.select(col(extra.columns.head).as("id"))))
       .distinct()
-    var active = ckpt(n.select(col("id"),
+    var (active, activeCount) = ckptCount(ckpt, n.select(col("id"),
       graft.functions.PortableHash.hash48(col("id"), seed).as("_p")))
     val spark = edges.sparkSession
     import spark.implicits._
     var out = spark.emptyDataset[(Long, Long)].toDF("id", "mis_round")
     var round = 1
-    var activeCount = active.count()
     while (activeCount > 0) {
       if (round > maxRounds) throw new IllegalStateException(
         s"maximalIndependentSet: $activeCount nodes still undecided " +
@@ -696,10 +703,10 @@ object GraphOps {
         .join(active.select(col("id").as("dst"), col("_p").as("_pd")),
           Seq("dst"))
         .groupBy(col("src").as("id")).agg(min("_pd").as("_m"))
-      val selected = ckpt(active.join(nbrMin, Seq("id"), "left")
-        .filter(col("_m").isNull || col("_p") < col("_m"))
-        .select("id"))
-      val selCount = selected.count()
+      val (selected, selCount) = ckptCount(ckpt,
+        active.join(nbrMin, Seq("id"), "left")
+          .filter(col("_m").isNull || col("_p") < col("_m"))
+          .select("id"))
       if (selCount == 0) throw new IllegalStateException(
         s"maximalIndependentSet: round $round selected nothing with " +
           s"$activeCount nodes active — neighbor priority tie " +
@@ -709,8 +716,10 @@ object GraphOps {
       val removed = selected
         .unionAll(sym.join(selected.withColumnRenamed("id", "src"),
           Seq("src"), "left_semi").select(col("dst").as("id")))
-      active = ckpt(active.join(removed.distinct(), Seq("id"), "left_anti"))
-      activeCount = active.count()
+      val (left, nLeft) = ckptCount(ckpt,
+        active.join(removed.distinct(), Seq("id"), "left_anti"))
+      active = left
+      activeCount = nLeft
       round += 1
     }
     out
@@ -1250,20 +1259,21 @@ object GraphOps {
       // final distance.
       val curBest = when(col("dist").isNotNull,
         struct(col("dist"), col("via")))
-      dist = ckpt(dist.join(relaxed, Seq("id"), "full_outer")
-        .select(col("id"),
-          when(curBest.isNull, col("_c"))
-            .when(col("_c").isNull, curBest)
-            .when(col("_c.dist") < col("dist"), col("_c"))
-            .otherwise(curBest).as("_b"))
-        .select(col("id"), col("_b.dist").as("dist"),
-          col("_b.via").as("via")))
       // distances only decrease and the node set only grows, so an
-      // unchanged (count, sum) is a fixpoint. The probe scans the
-      // partitions ckpt just materialized — cost is one task-launch
-      // round trip, scale-independent (trade analysis in SCALE.md
-      // "Iteration and fault tolerance").
-      val probe = dist.agg(count(lit(1)), sum(col("dist"))).head()
+      // unchanged (count, sum) is a fixpoint — observed on the round's
+      // own checkpoint, no probe query (SCALE.md "Iteration and fault
+      // tolerance")
+      val (relaxedDist, probe) = ckpt.observed(
+        dist.join(relaxed, Seq("id"), "full_outer")
+          .select(col("id"),
+            when(curBest.isNull, col("_c"))
+              .when(col("_c").isNull, curBest)
+              .when(col("_c.dist") < col("dist"), col("_c"))
+              .otherwise(curBest).as("_b"))
+          .select(col("id"), col("_b.dist").as("dist"),
+            col("_b.via").as("via")),
+        count(lit(1)), sum(col("dist")))
+      dist = relaxedDist
       val cur = (probe.getLong(0), probe.get(1))
       converged = prev.contains(cur)
       prev = Some(cur)
@@ -1885,88 +1895,79 @@ object GraphOps {
   /** FUSED forward/backward min-label propagation — F(v) = least id
     * with a directed path TO v (labels flow src → dst), B(v) = least
     * id v has a path to (labels flow dst → src) — computed in ONE
-    * loop over one (`id`, `f`, `b`) frame. Per direction each
-    * iteration is the classic hop (adopt the min neighbour label) plus
-    * pointer jump (lbl ← lbl(lbl)), both sound because the invariant
-    * "F(v) reaches v" / "v reaches B(v)" is transitive, so the
-    * fixpoint lands in O(log diameter) rounds as in
-    * [[Dedup.connectedComponents]]. Labels are per-node non-increasing,
-    * so an unchanged sum certifies a direction's fixpoint; a CONVERGED
-    * direction is frozen (its hop/jump joins drop out of later
-    * iterations — hop and jump are no-ops at the fixpoint, so freezing
-    * changes nothing but cost) while the other finishes. vs the old
-    * two-loop form (r16): ONE checkpoint and ONE convergence probe per
-    * iteration instead of two independent loops (max(k_f, k_b)
-    * iterations, not k_f + k_b) and no trailing F ⋈ B join — the two
-    * directions share the single checkpointed adjacency instead of
-    * re-deriving state separately. Returns (`id`, `f`, `b`). */
+    * loop over one (`id`, `f`, `b`) frame, ONE message pass per round.
+    *
+    * Each round every node v takes the minimum label its messages
+    * carry, all read through ONE join of the messages' `from` ids
+    * against the checkpointed labels and ONE `groupBy(to).min`:
+    *
+    *  - hop messages along each live edge (F: src → dst carrying
+    *    f(src); B: dst → src carrying b(dst));
+    *  - pointer-jump messages from f(v) and b(v) to v, carrying f(f(v))
+    *    and b(b(v)) — one message when f(v) = b(v). A node's jump
+    *    message is also its self message: f(f(v)) ≤ f(v), since every
+    *    label is the id of a node of the same class whose own label is
+    *    at most its id, and at a root (f(v) = v) the message IS v's own
+    *    label. So no node is ever dropped and no label ever rises.
+    *
+    * Both jumps come from a single `explode` over the label frame, so
+    * the map-side partial aggregate combines them per node (separate
+    * union children would ship each one through the shuffle). The new
+    * label is min(hop labels, f(f(v))). At a round that changes
+    * nothing, f(v) ≤ f(u) along every edge u → v and f(v) is a reacher
+    * of v, so f(v) is the least reacher (the same argument gives B),
+    * reached in O(log diameter) rounds as in
+    * [[Dedup.connectedComponents]].
+    *
+    * Labels are per-node non-increasing, so an unchanged sum certifies
+    * a direction's fixpoint; a CONVERGED direction is frozen (its hop
+    * messages drop out of later rounds, its jumps are no-ops) while the
+    * other finishes. The sums, and the number of nodes whose F and B
+    * differ, are observed on the round's own checkpoint
+    * ([[graft.Checkpointer.observed]]): one Spark SQL execution per
+    * round, no probe query. `nodes` must be cheap to read twice (a
+    * checkpointed frame or a filter over one): the first round reads
+    * its initial labels straight from it. Returns (`id`, `f`, `b`) and
+    * the count of nodes with f ≠ b. */
   private def fbMinProp(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int, ckpt: Checkpointer): DataFrame = {
-    var labels = ckpt(nodes.select(col("id"), col("id").as("f"),
-      col("id").as("b")))
+      maxIter: Int, ckpt: Checkpointer): (DataFrame, Long) = {
+    var labels = nodes.select(col("id"), col("id").as("f"),
+      col("id").as("b"))
+    var split = 0L
     var prevF = Option.empty[Any]
     var prevB = Option.empty[Any]
     var fDone = false
     var bDone = false
     var i = 0
     while (!(fDone && bDone) && i < maxIter) {
-      // ONE fused message pass for both directions: F messages flow
-      // src→dst carrying f(src), B messages flow dst→src carrying
-      // b(dst); a frozen direction's messages simply drop out of the
-      // union. One labels join + one groupBy per iteration where the
-      // unfused form paid two of each PLUS a closing F ⋈ B join —
-      // same shuffled bytes (the union is the two message sets), three
-      // fewer joins (three fewer broadcast-build jobs locally, three
-      // fewer exchanges at scale) per iteration.
-      val fwdMsg = edges.select(col("src").as("from"),
-        col("dst").as("to"), lit(true).as("_isF"))
-      val bwdMsg = edges.select(col("dst").as("from"),
-        col("src").as("to"), lit(false).as("_isF"))
-      val msg =
-        if (fDone) bwdMsg
-        else if (bDone) fwdMsg
-        else fwdMsg.unionAll(bwdMsg)
-      // min over an empty/absent message set is null → coalesce keeps
-      // the old label, exactly the old left-join-miss semantics
-      val agged = msg
-        .join(labels.select(col("id").as("from"), col("f").as("_lf"),
-          col("b").as("_lb")), Seq("from"))
-        .groupBy(col("to").as("id"))
-        .agg(min(when(col("_isF"), col("_lf"))).as("_nf"),
-          min(when(!col("_isF"), col("_lb"))).as("_nb"))
-      val hopped = labels
-        .join(agged, Seq("id"), "left")
-        .select(col("id"),
-          least(col("f"), coalesce(col("_nf"), col("f"))).as("f"),
-          least(col("b"), coalesce(col("_nb"), col("b"))).as("b"))
-      // jump through the CHECKPOINTED labels, not hopped itself: a
-      // hopped-on-hopped self-join re-executes the hop pipeline for
-      // its build side (different join keys — nothing reused), while
-      // labels is materialized blocks. One round staler halving,
-      // identical fixpoint (see Dedup.connectedComponents). A frozen
-      // direction skips its jump (its labels no longer move).
-      val jf =
-        if (fDone) hopped
-        else hopped
-          .join(labels.select(col("id").as("f"), col("f").as("_ff")),
-            Seq("f"), "left")
-          .select(col("id"), coalesce(col("_ff"), col("f")).as("f"),
-            col("b"))
-      val jb =
-        if (bDone) jf
-        else jf
-          .join(labels.select(col("id").as("b"), col("b").as("_bb")),
-            Seq("b"), "left")
-          .select(col("id"), col("f"),
-            coalesce(col("_bb"), col("b")).as("b"))
-      val jumped = ckpt(jb)
-      val sums = jumped.agg(sum(col("f")), sum(col("b"))).head()
+      val edgeMsgs = Seq(
+          Option.when(!fDone)(labelMsg(col("src"), col("dst"), true, false)),
+          Option.when(!bDone)(labelMsg(col("dst"), col("src"), false, true)))
+        .flatten
+      val jumps =
+        when(col("f") === col("b"),
+          array(labelMsg(col("f"), col("id"), true, true)))
+          .otherwise(array(labelMsg(col("f"), col("id"), true, false),
+            labelMsg(col("b"), col("id"), false, true)))
+      val msgs = edges.select(explode(array(edgeMsgs: _*)).as("_m"))
+        .unionAll(labels.select(explode(jumps).as("_m")))
+        .select("_m.*")
+      // LEFT join: a null id's jump message finds no label and keeps
+      // its (null) row
+      val (next, sums) = ckpt.observed(
+        msgs.join(labels.select(col("id").as("from"), col("f").as("_lf"),
+            col("b").as("_lb")), Seq("from"), "left")
+          .groupBy(col("to").as("id"))
+          .agg(min(when(col("_toF"), col("_lf"))).as("f"),
+            min(when(col("_toB"), col("_lb"))).as("b")),
+        sum(col("f")), sum(col("b")), count_if(col("f") =!= col("b")))
       val (curF, curB) = (sums.get(0), sums.get(1))
+      split = sums.getLong(2)
       fDone = fDone || prevF.contains(curF)
       bDone = bDone || prevB.contains(curB)
       prevF = Some(curF)
       prevB = Some(curB)
-      labels = jumped
+      labels = next
       i += 1
     }
     // Fail fast on truncated propagation (mirrors the outer maxRounds
@@ -1979,8 +1980,15 @@ object GraphOps {
     require(fDone && bDone,
       s"min-label propagation did not converge in $maxIter iterations — " +
         "raise maxIter (graph diameter exceeds 2^maxIter after jumps)")
-    labels
+    (labels, split)
   }
+
+  /** One min-label message of [[fbMinProp]]'s round: the label of
+    * `from` goes to `to`, for the F and/or the B direction. */
+  private def labelMsg(from: org.apache.spark.sql.Column,
+      to: org.apache.spark.sql.Column, toF: Boolean, toB: Boolean) =
+    struct(from.as("from"), to.as("to"), lit(toF).as("_toF"),
+      lit(toB).as("_toB"))
 
   /** Strongly connected components over a DIRECTED edge table: each
     * node labelled with the smallest node id in its SCC (its
@@ -1992,7 +2000,8 @@ object GraphOps {
     *   F(v) = least id with a path to v   (forward [[fbMinProp]])
     *   B(v) = least id v has a path to    (backward — reversed edges;
     *          both directions run FUSED in one loop, sharing the
-    *          checkpointed live adjacency, one probe per iteration)
+    *          checkpointed live adjacency: one message join, one
+    *          groupBy and one checkpoint per iteration)
     *
     * F(v) = B(v) = m certifies v ↔ m, hence v ∈ SCC(m); and all of
     * SCC(m) shares both labels (mutually reachable nodes see the same
@@ -2014,13 +2023,17 @@ object GraphOps {
     *
     * Scale notes (100 TB edge table): everything is equi-joins and
     * partial-aggregated groupBys on the label frame (|V| rows, small
-    * against edges) — AQE broadcasts label sides that fit; no
-    * driver-side data beyond the two scalar probes per inner round
-    * (sum) and one count per outer round. Inner loops are
+    * against edges) — AQE broadcasts label sides that fit. Driver-side
+    * data is two scalar sums and one count per inner round, all
+    * observed on checkpoints the rounds take anyway
+    * ([[graft.Checkpointer.observed]]), so no probe query runs: every
+    * inner round is ONE Spark SQL execution. Inner loops are
     * O(log diameter) via pointer jumping; outer rounds collapse on the
     * pair split (real graphs: a handful). The live edge set only
     * shrinks — each round's filter drops cross-class edges for good,
-    * so late rounds run on the shrinking core, not the whole graph.
+    * so late rounds run on the shrinking core, not the whole graph;
+    * once it is empty, the remaining nodes are singleton SCCs and are
+    * labelled without a propagation round.
     * Per-iteration checkpoints truncate lineage (measured stats via
     * [[org.apache.spark.sql.graft.CheckpointStats]] keep the planner's
     * broadcast decisions honest across rounds). Self-loops are dropped
@@ -2033,34 +2046,43 @@ object GraphOps {
       maxIter: Int = 25,
       ckpt: Checkpointer = Checkpointer.Local): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    var live = ckpt(edges
+    var (live, nLive) = ckptCount(ckpt, edges
       .select(col(StartId).as("src"), col(EndId).as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
     // vertex set from the UNFILTERED edges: a node whose only edge is
-    // its self-loop must still label itself (F = B = id, round 1)
-    var remaining = ckpt(edges.select(col(StartId).as("id"))
-      .unionAll(edges.select(col(EndId).as("id"))).distinct())
+    // its self-loop must still label itself (F = B = id, round 1); a
+    // null endpoint is no node
+    var (remaining, nRemaining) = ckptCount(ckpt,
+      edges.select(col(StartId).as("id"))
+        .unionAll(edges.select(col(EndId).as("id")))
+        .filter(col("id").isNotNull).distinct())
     val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var nRemaining = remaining.count()
     var round = 0
     while (nRemaining > 0 && round < maxRounds) {
-      // ONE fused pass computes F and B over the shared live adjacency
-      // (one checkpoint + one probe per iteration, max(k_f, k_b)
-      // iterations) — the old form ran two independent dirMinProp
-      // loops (k_f + k_b iterations, two jobs each) plus an F ⋈ B join.
-      val fb = fbMinProp(remaining, live, maxIter, ckpt)
-      done += fb.filter(col("f") === col("b"))
-        .select(col("id"), col("f").as("scc"))
-      val rest = fb.filter(col("f") =!= col("b"))
-      remaining = ckpt(rest.select("id"))
-      live = ckpt(live
-        .join(rest.withColumnsRenamed(
-          Map("id" -> "src", "f" -> "_fs", "b" -> "_bs")), Seq("src"))
-        .join(rest.withColumnsRenamed(
-          Map("id" -> "dst", "f" -> "_fd", "b" -> "_bd")), Seq("dst"))
-        .filter(col("_fs") === col("_fd") && col("_bs") === col("_bd"))
-        .select("src", "dst"))
-      nRemaining = remaining.count()
+      if (nLive == 0) {
+        // no live edge left: every remaining node is its own SCC, which
+        // is what a propagation round would certify
+        done += remaining.select(col("id"), col("id").as("scc"))
+        nRemaining = 0
+      } else {
+        // ONE fused pass computes F and B over the shared live adjacency
+        // (one checkpoint per iteration, max(k_f, k_b) iterations)
+        val (fb, nSplit) = fbMinProp(remaining, live, maxIter, ckpt)
+        done += fb.filter(col("f") === col("b"))
+          .select(col("id"), col("f").as("scc"))
+        val rest = fb.filter(col("f") =!= col("b"))
+        remaining = rest.select("id")
+        nRemaining = nSplit
+        val (l, n) = ckptCount(ckpt, live
+          .join(rest.withColumnsRenamed(
+            Map("id" -> "src", "f" -> "_fs", "b" -> "_bs")), Seq("src"))
+          .join(rest.withColumnsRenamed(
+            Map("id" -> "dst", "f" -> "_fd", "b" -> "_bd")), Seq("dst"))
+          .filter(col("_fs") === col("_fd") && col("_bs") === col("_bd"))
+          .select("src", "dst"))
+        live = l
+        nLive = n
+      }
       round += 1
     }
     require(nRemaining == 0,
@@ -2332,11 +2354,14 @@ object GraphOps {
           Map("scc" -> "src", "level" -> "_sl")), Seq("src"))
         .groupBy(col("dst").as("scc"))
         .agg(max(col("_sl") + 1).as("_in"))
-      levels = ckpt(levels.join(incoming, Seq("scc"), "left")
-        .select(col("scc"),
-          greatest(col("level"), coalesce(col("_in"), col("level")))
-            .as("level")))
-      val curSum = levels.agg(sum(col("level"))).head().get(0)
+      val (relaxed, probe) = ckpt.observed(
+        levels.join(incoming, Seq("scc"), "left")
+          .select(col("scc"),
+            greatest(col("level"), coalesce(col("_in"), col("level")))
+              .as("level")),
+        sum(col("level")))
+      levels = relaxed
+      val curSum = probe.get(0)
       converged = prevSum.contains(curSum)
       prevSum = Some(curSum)
       i += 1
@@ -2381,11 +2406,11 @@ object GraphOps {
     var i = 0
     while (!converged && i < maxIter) {
       val hops = reach.select(col("a").as("_mid"), col("b").as("_c"))
-      reach = ckpt(reach.unionAll(
+      val (doubled, cur) = ckptCount(ckpt, reach.unionAll(
           reach.join(hops, reach("b") === hops("_mid"))
             .select(col("a"), col("_c").as("b")))
         .filter(col("a") =!= col("b")).distinct())
-      val cur = reach.count()
+      reach = doubled
       converged = cur == prev
       prev = cur
       i += 1
@@ -2449,10 +2474,13 @@ object GraphOps {
         .join(masks.withColumnsRenamed(
           Map("id" -> "src", "reach_mask" -> "_m")), Seq("src"))
         .groupBy("id").agg(expr("bit_or(_m)").as("_in"))
-      masks = ckpt(masks.join(incoming, Seq("id"), "left")
-        .select(col("id"), col("reach_mask")
-          .bitwiseOR(coalesce(col("_in"), lit(0L))).as("reach_mask")))
-      val cur = masks.agg(sum(expr("bit_count(reach_mask)"))).head().get(0)
+      val (grown, probe) = ckpt.observed(
+        masks.join(incoming, Seq("id"), "left")
+          .select(col("id"), col("reach_mask")
+            .bitwiseOR(coalesce(col("_in"), lit(0L))).as("reach_mask")),
+        sum(expr("bit_count(reach_mask)")))
+      masks = grown
+      val cur = probe.get(0)
       converged = prev.contains(cur)
       prev = Some(cur)
       i += 1
@@ -2516,8 +2544,7 @@ object GraphOps {
       .filter(col("a") =!= col("b")).distinct())
     val adj = ckpt(canon.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(canon.select(col("b").as("src"), col("a").as("dst"))))
-    var reach = ckpt(canon.withColumn("node", col("a")))
-    var n = reach.count()
+    var (reach, n) = ckptCount(ckpt, canon.withColumn("node", col("a")))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -2525,8 +2552,7 @@ object GraphOps {
         .filter(!(least(col("src"), col("dst")) === col("a") &&
           greatest(col("src"), col("dst")) === col("b")))
         .select(col("a"), col("b"), col("dst").as("node"))
-      val nxt = ckpt(reach.unionByName(step).distinct())
-      val m = nxt.count()
+      val (nxt, m) = ckptCount(ckpt, reach.unionByName(step).distinct())
       converged = m == n
       n = m
       reach = nxt
@@ -2565,16 +2591,14 @@ object GraphOps {
     val cand = nbrs.groupBy("c").agg(
         countDistinct(col("node")).as("_d"), min(col("node")).as("node"))
       .filter(col("_d") >= 2).drop("_d")
-    var reach = ckpt(cand)
-    var n = reach.count()
+    var (reach, n) = ckptCount(ckpt, cand)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       val step = reach.join(adj, col("node") === col("src"))
         .filter(col("dst") =!= col("c"))
         .select(col("c"), col("dst").as("node"))
-      val nxt = ckpt(reach.unionByName(step).distinct())
-      val m = nxt.count()
+      val (nxt, m) = ckptCount(ckpt, reach.unionByName(step).distinct())
       converged = m == n
       n = m
       reach = nxt

@@ -51,8 +51,16 @@ object SchemaMerge {
       else FloatType
     case (x, f) if isIntegral(x) && isFractional(f) => widen(DoubleType, f)
     case (f, x) if isFractional(f) && isIntegral(x) => widen(f, DoubleType)
-    // temporal
+    // temporal, as Spark's own type coercion widens: a zoneless
+    // timestamp (TIMESTAMP_NTZ — e.g. a Parquet timestamp written
+    // without UTC adjustment) meeting a session-zone one (a CSV-inferred
+    // timestamp) widens to the session-zone type; a date meeting either
+    // widens to that timestamp type
     case (DateType, TimestampType) | (TimestampType, DateType) => TimestampType
+    case (TimestampNTZType, TimestampType) |
+        (TimestampType, TimestampNTZType) => TimestampType
+    case (DateType, TimestampNTZType) | (TimestampNTZType, DateType) =>
+      TimestampNTZType
     // null column (all-missing source) adopts the other side's type
     case (NullType, o) => o
     case (o, NullType) => o

@@ -512,6 +512,15 @@ class DedupSpec extends SparkSpec {
     assert(comps.toSeq == Seq(0L)) // one component, min label 0
   }
 
+  test("connectedComponents: hitting maxIter unconverged fails fast") {
+    val n = 60L
+    val vertices = (0L until n).toDF("id")
+    val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val ex = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(vertices, "id", pairs, maxIter = 3))
+    assert(ex.getMessage.contains("did not converge"))
+  }
+
   test("cosineNearDups brute force matches blocked candidates on dup vectors") {
     val vecs = Seq(
       (0L, Array(1f, 0f, 0f, 0f)),

@@ -99,6 +99,34 @@ class GraphBuilderSpec extends SparkSpec {
     assert(g.nodes("N").head().getString(1) == "from_zzz")
   }
 
+  test("an NTZ Parquet timestamp merges with a CSV-inferred timestamp") {
+    val tmp = Files.createTempDirectory("graft-ntz").toString
+    import spark.implicits._
+    // java.time.LocalDateTime encodes as TIMESTAMP_NTZ
+    Seq((1L, java.time.LocalDateTime.parse("2024-01-02T03:04:05")))
+      .toDF("id", "seen_at").write.parquet(s"$tmp/t_p.parquet")
+    Seq((2L, "2024-05-06 07:08:09")).toDF("id", "seen_at")
+      .write.option("header", "true").csv(s"$tmp/t_c.csv")
+    val yaml =
+      s"""Database: { name: Ntz, version: "1" }
+         |Sources:
+         |  P: { source type: parquet, path: $tmp }
+         |  C: { source type: csv, path: $tmp }
+         |Nodes:
+         |  N:
+         |    sources:
+         |      P: { table: t_p, id_key: id }
+         |      C: { table: t_c, id_key: id }
+         |""".stripMargin
+    val n = GraphBuilder.build(spark, GraphConfig.fromYaml(yaml)).nodes("N")
+    assert(n.schema("seen_at").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    // the session zone is UTC, so the zoneless value keeps its wall clock
+    assert(n.orderBy("id").select("seen_at").as[java.sql.Timestamp]
+      .collect().map(_.toInstant.toString).toSeq ==
+      Seq("2024-01-02T03:04:05Z", "2024-05-06T07:08:09Z"))
+  }
+
   test("staging + Neo4j CSV export write expected layouts") {
     val tmp = Files.createTempDirectory("graft-sink").toString
     val g = GraphBuilder.build(spark, cfg)

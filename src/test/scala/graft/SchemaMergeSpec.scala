@@ -38,6 +38,21 @@ class SchemaMergeSpec extends AnyFunSuite {
     assert(SchemaMerge.widen(NullType, StringType) == StringType)
   }
 
+  private val temporals: Seq[DataType] =
+    Seq(DateType, TimestampType, TimestampNTZType)
+
+  test("widen: TIMESTAMP_NTZ follows Spark's coercion") {
+    assert(SchemaMerge.widen(TimestampNTZType, TimestampType) ==
+      TimestampType)
+    assert(SchemaMerge.widen(DateType, TimestampNTZType) == TimestampNTZType)
+    intercept[IllegalArgumentException](
+      SchemaMerge.widen(TimestampNTZType, LongType))
+    // the same answers Spark's own union coercion gives
+    for (a <- temporals; b <- temporals)
+      assert(SchemaMerge.widen(a, b) == org.apache.spark.sql.catalyst
+        .analysis.TypeCoercion.findWiderTypeForTwo(a, b).get, s"$a, $b")
+  }
+
   test("widen: incompatible kinds fail with a clear error") {
     val e = intercept[IllegalArgumentException](
       SchemaMerge.widen(StringType, IntegerType))
@@ -62,10 +77,10 @@ class SchemaMergeSpec extends AnyFunSuite {
     Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
 
   test("property (exhaustive): widen is commutative, associative, idempotent") {
-    for (a <- numerics; b <- numerics) {
+    for (kinds <- Seq(numerics, temporals); a <- kinds; b <- kinds) {
       assert(SchemaMerge.widen(a, b) == SchemaMerge.widen(b, a))
       assert(SchemaMerge.widen(a, a) == a)
-      for (c <- numerics)
+      for (c <- kinds)
         assert(SchemaMerge.widen(SchemaMerge.widen(a, b), c) ==
           SchemaMerge.widen(a, SchemaMerge.widen(b, c)))
     }
