@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+
+import graft.operators.{Decontaminate, Dedup, Funnel, GraphOps, Layout, Relevance, Similarity, Tokenizer}
 
 /** Input/output rows for the stateful per-user accumulator (ST1 variant). */
 case class UserEvent(user_id: Long, value: Double)
@@ -739,27 +742,6 @@ object StreamingIngest {
       }
       .start()
 
-  /** Incremental SCC maintenance on edge arrivals — the
-    * [[streamingCommunities]] loop over
-    * [[graft.operators.GraphOps.incrementalScc]], with one crucial
-    * upgrade: the incremental step is EXACT (append-only edges only
-    * merge SCCs — see the primitive's theorem note), so the stored
-    * labels are bit-equal to a full recompute after every trigger,
-    * not a local approximation needing periodic consolidation.
-    *
-    * Two parquet stores ARE the state: (`id`, `scc`) labels and the
-    * (`src_scc`, `dst_scc`) condensation — the quotient store is what
-    * makes each trigger condensation-sized + delta-sized instead of
-    * corpus-sized: after the cold-start batch (full
-    * [[graft.operators.GraphOps.stronglyConnectedComponents]] over the
-    * accumulated store), the accumulated edge table is NEVER re-read;
-    * the append to `edgesDir` is durability only (cold restart,
-    * audits). At-least-once batch redelivery is absorbed twice over:
-    * the quotient union runs `distinct`, and re-applying an already
-    * merged delta is a fixpoint (SCCs only merge once).
-    *
-    * Both stores localCheckpoint before either overwrite — the
-    * incremental plan reads the same parquet paths it replaces. */
   /** Interval-island maintenance on interval arrivals — the
     * [[streamingScc]] loop over
     * [[graft.operators.Funnel.absorbIntervals]], and EXACT by the same
@@ -772,70 +754,35 @@ object StreamingIngest {
     * trigger is islands+delta-sized and the raw append is durability
     * only.
     *
-    * `n_merged` exactness needs each batch applied ONCE, so a
-    * per-batchId marker under `rawDir/_batches/` (underscore-prefixed
-    * — invisible to parquet readers) makes redelivery of a COMPLETED
-    * batch a no-op, and the raw append itself is IDEMPOTENT: each
-    * batch overwrites its own `rawDir/batch=<id>/` subpath, so a
-    * crash between the raw write and the marker cannot duplicate
-    * ground-truth rows on redelivery (an append to a shared directory
-    * would). A crash strictly mid-batch can still double-apply the
-    * delta to the ISLANDS store; recovery is mechanical because the
-    * raw store holds exact ground truth — delete the islands store
-    * and the next trigger cold-starts an exact rebuild.
+    * `n_merged` exactness needs each batch applied ONCE. The raw store
+    * is the op store of [[markerGuarded]]: a completed batch's
+    * redelivery is a no-op, and the raw write overwrites its own
+    * `rawDir/batch=<id>/`, so it never duplicates ground-truth rows.
+    * The absorb is NOT idempotent — re-absorbing a delta inflates its
+    * island's `n_merged` — so a mid-crash redelivery cold-rebuilds the
+    * islands from the raw store instead.
     *
     * LAYOUT (breaking change vs the pre-r11 flat append): the raw
     * store is `batch=<id>/` partition subdirectories. A pre-r11 FLAT
-    * rawDir that starts receiving `batch=` subdirs becomes a mixed
-    * layout Spark's partition discovery cannot read consistently
-    * (cold-start rebuilds could fail or silently drop the partition
-    * column), so the first trigger REFUSES a rawDir holding loose
-    * root-level data files — migrate once by moving them into a
-    * `batch=-1/` subdirectory (any id below the stream's first batch),
-    * after which cold start reads the full history again. */
+    * rawDir is refused by the layout guard — migrate once by moving
+    * its loose files into a `batch=-1/` subdirectory (any id below
+    * the stream's first batch), after which cold start reads the full
+    * history again. */
   def streamingIntervals(intervals: DataFrame, rawDir: String,
       islandsDir: String, checkpointDir: String, keyCol: String,
       startCol: String, endCol: String,
-      minGap: Long = 0L): org.apache.spark.sql.streaming.StreamingQuery = {
-    val layoutChecked = new java.util.concurrent.atomic.AtomicBoolean(false)
-    intervals
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.select(col(keyCol), col(startCol), col(endCol))
-          .localCheckpoint()
-        if (!delta.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$rawDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true))
-            requireBatchLayout(fs, rawDir, "streamingIntervals")
-          if (!fs.exists(marker)) {
-            // batchId-keyed overwrite: redelivery after a crash
-            // replaces (never duplicates) this batch's raw rows
-            delta.write.mode("overwrite")
-              .parquet(s"$rawDir/batch=$batchId")
-            val sMark =
-              new org.apache.hadoop.fs.Path(s"$islandsDir/_SUCCESS")
-            val islands =
-              if (fs.exists(sMark))
-                graft.operators.Funnel.absorbIntervals(
-                  spark.read.parquet(islandsDir), delta, keyCol,
-                  startCol, endCol, minGap)
-              else
-                graft.operators.Funnel.mergeIntervals(
-                  spark.read.parquet(rawDir), keyCol, startCol, endCol,
-                  minGap)
-            islands.localCheckpoint()
-              .write.mode("overwrite").parquet(islandsDir)
-            fs.mkdirs(marker): Unit
-          }
-        }
-      }
-      .start()
-  }
+      minGap: Long = 0L): StreamingQuery =
+    markerGuarded(intervals, checkpointDir, rawDir, "streamingIntervals",
+        Seq(rawDir))(_.select(col(keyCol), col(startCol), col(endCol))) {
+      (delta, t) =>
+        t.record(delta, rawDir): Unit
+        replace(
+          (if (t.built(islandsDir) && !t.midCrash)
+            Funnel.absorbIntervals(t.spark.read.parquet(islandsDir),
+              delta, keyCol, startCol, endCol, minGap)
+          else Funnel.mergeIntervals(t.spark.read.parquet(rawDir),
+            keyCol, startCol, endCol, minGap)) -> islandsDir)
+    }
 
   /** Interval-island maintenance under a CDC interval stream — adds
     * AND deletes interleaved, the takedown-complete upgrade of
@@ -848,24 +795,18 @@ object StreamingIngest {
     * completed trigger the islands store is bit-equal to a full
     * [[graft.operators.Funnel.mergeIntervals]] over the EFFECTIVE
     * interval set. The CDC store is SET-semantics on the interval
-    * identity (`key`, `start`, `end`): the latest operation per
-    * identity wins, a delete beats an add in the same batch, and
-    * re-adding a deleted interval resurrects it — so `n_merged`
-    * counts LIVE DISTINCT intervals per island (contrast the
-    * append-only twin's multiset counts, where redelivered duplicates
-    * are deduplicated by the marker, not the store).
+    * identity (`key`, `start`, `end`) — [[setFold]]: the latest
+    * operation per identity wins, a delete beats an add in the same
+    * batch, and re-adding a deleted interval resurrects it — so
+    * `n_merged` counts LIVE DISTINCT intervals per island (contrast
+    * the append-only twin's multiset counts, where redelivered
+    * duplicates are deduplicated by the marker, not the store).
     *
-    * Ground truth lives in two batchId-keyed op stores
-    * (`rawDir/batch=<id>/`, `delsDir/batch=<id>/` — idempotent
-    * overwrites) reconciled latest-wins; a per-batchId marker makes
-    * completed-batch redelivery a no-op, and a mid-batch crash
-    * self-heals via the two-phase `started`/final marker (the
-    * [[streamingAnnIngest]] discipline): a redelivery that finds
-    * `started` without the final marker cold-rebuilds the islands
-    * store from the reconciled ground truth instead of re-absorbing
-    * the delta — the absorb path is NOT idempotent (a re-absorbed
-    * interval would inflate its island's `n_merged`), unlike the
-    * dup/neighborAgg twins whose folds are.
+    * Ground truth lives in two op stores (`rawDir/batch=<id>/`,
+    * `delsDir/batch=<id>/`) under [[markerGuarded]]. The absorb path
+    * is NOT idempotent (a re-absorbed interval would inflate its
+    * island's `n_merged`), so a mid-crash redelivery cold-rebuilds the
+    * islands store from the reconciled ground truth.
     *
     * Scale notes (100 TB): add-only triggers are islands+delta-sized
     * after the reconciliation fold; the fold itself is one
@@ -877,111 +818,119 @@ object StreamingIngest {
   def streamingIntervalsCdc(events: DataFrame, rawDir: String,
       delsDir: String, islandsDir: String, checkpointDir: String,
       keyCol: String, startCol: String, endCol: String,
-      minGap: Long = 0L, opCol: String = "op")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      minGap: Long = 0L, opCol: String = "op"): StreamingQuery = {
+    val keys = Seq(keyCol, startCol, endCol)
+    markerGuarded(events, checkpointDir, rawDir, "streamingIntervalsCdc",
+        Seq(rawDir, delsDir))(withOp(opCol, keys)) { (b, t) =>
+      val (adds, dels) = split(b, keys, distinct = true)
+      t.record(adds, rawDir): Unit
+      val hasDels = t.record(dels, delsDir)
+      // keepPre = the PRE-batch live set
+      def live(keepPre: Boolean) = setFold(t, rawDir, delsDir, keys,
+        adds.limit(0), if (keepPre) col("_b") =!= t.batchId else lit(true))
+      replace((
+        if (t.built(islandsDir) && !t.midCrash) {
+          val now = live(keepPre = false).localCheckpoint()
+          // the ADD delta the store hasn't absorbed yet: this batch's
+          // adds that are live after the fold (a same-batch delete must
+          // not reach the absorb) AND were NOT live before it
+          // (re-adding a still-live interval must not double its
+          // n_merged count — set semantics; the pre-batch fold is the
+          // price of the exactness claim, paid only on add-bearing
+          // triggers)
+          val newLive = adds.join(now, keys, "left_semi")
+            .join(live(keepPre = true), keys, "left_anti")
+            .localCheckpoint()
+          val prev = t.spark.read.parquet(islandsDir)
+          val st1 =
+            if (newLive.isEmpty) prev
+            else Funnel.absorbIntervals(prev, newLive, keyCol, startCol,
+              endCol, minGap)
+          if (!hasDels) st1
+          else Funnel.deleteIntervals(st1, now, dels, keyCol, startCol,
+            endCol, minGap)
+        } else Funnel.mergeIntervals(live(keepPre = false), keyCol,
+          startCol, endCol, minGap)) -> islandsDir)
+    }
+  }
+
+  /** What [[markerGuarded]] hands a twin's body for one batch.
+    * `midCrash` is true when an earlier attempt at this batch started
+    * and never finished. */
+  private final case class Trigger(spark: SparkSession, fs: FileSystem,
+      batchId: Long, midCrash: Boolean) {
+
+    /** True iff the store rooted at `dir` was ever written. */
+    def built(dir: String): Boolean = fs.exists(new Path(s"$dir/_SUCCESS"))
+
+    /** True iff op store `dir` holds at least one `batch=<id>/` data
+      * subdirectory. The marker tree alone makes the directory EXIST,
+      * so a bare `fs.exists` would send `spark.read.parquet` into a
+      * data-less directory and fail schema inference — e.g. a
+      * delete-only stream whose add store never received a batch. */
+    def hasData(dir: String): Boolean = {
+      val p = new Path(dir)
+      fs.exists(p) && fs.listStatus(p).exists(st =>
+        st.isDirectory && st.getPath.getName.startsWith("batch="))
+    }
+
+    /** Writes this batch's `rows` of op store `dir` to
+      * `dir/batch=<id>/` — an overwrite, so a redelivery replaces
+      * whatever a crashed attempt wrote and never duplicates it.
+      * Returns false, writing nothing, when `rows` is empty. */
+    def record(rows: DataFrame, dir: String): Boolean = {
+      val any = !rows.isEmpty
+      if (any) rows.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+      any
+    }
+  }
+
+  /** The exactly-once trigger every marker-guarded twin runs on.
+    *
+    * Each micro-batch is `project`ed and materialized once; an empty
+    * batch does nothing. Once per started query, before its first
+    * write, every directory in `opStores` must pass
+    * [[requireBatchLayout]]. Then the two-phase marker under
+    * `markerDir/_batches/` — underscore-prefixed, so parquet readers
+    * never see it, and kept under an op store because the maintained
+    * stores are overwritten whole, which would wipe it:
+    *
+    *  - the final marker `<id>` present: the batch completed before,
+    *    and its redelivery is a no-op;
+    *  - otherwise the started marker (`<id>` with a `started` suffix)
+    *    is created, `body` runs, the final marker lands, and the
+    *    started marker is deleted;
+    *  - a started marker already present means an earlier attempt died
+    *    after any subset of the body's writes. The body is told so
+    *    (`midCrash`): a twin whose maintain step reads the store it
+    *    then overwrites takes its cold-rebuild or self-heal branch; a
+    *    twin whose fold is idempotent given the op stores re-runs as
+    *    on a first delivery.
+    *
+    * Op-store writes go through [[Trigger.record]], so a redelivered
+    * batch replaces its own rows. */
+  private def markerGuarded(source: DataFrame, checkpointDir: String,
+      markerDir: String, who: String, opStores: Seq[String])(
+      project: DataFrame => DataFrame)(
+      body: (DataFrame, Trigger) => Unit): StreamingQuery = {
     val layoutChecked = new java.util.concurrent.atomic.AtomicBoolean(false)
-    events
+    source
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col(keyCol), col(startCol), col(endCol)).localCheckpoint()
+        val b = project(batch).localCheckpoint()
         if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$rawDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true)) {
-            requireBatchLayout(fs, rawDir, "streamingIntervalsCdc")
-            requireBatchLayout(fs, delsDir, "streamingIntervalsCdc")
-          }
-          if (!fs.exists(marker)) {
-            // Two-phase marker: `started` lands before any mutation.
-            // A redelivery that finds it knows the previous attempt
-            // may have overwritten the islands store already — the
-            // absorb below would then re-merge the same delta and
-            // inflate n_merged — so it takes the cold-rebuild branch
-            // (exact from reconciled ground truth; the op-store
-            // writes are idempotent overwrites either way).
-            val started = new org.apache.hadoop.fs.Path(
-              s"$rawDir/_batches/$batchId.started")
+          val spark = batch.sparkSession
+          val marker = s"$markerDir/_batches/$batchId"
+          val (done, started) = (new Path(marker), new Path(s"$marker.started"))
+          val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          if (layoutChecked.compareAndSet(false, true))
+            opStores.foreach(requireBatchLayout(fs, _, who))
+          if (!fs.exists(done)) {
             val midCrash = fs.exists(started)
             if (!midCrash) fs.mkdirs(started): Unit
-            val adds = b.filter(col("_op") === "add")
-              .select(col(keyCol), col(startCol), col(endCol))
-              .distinct().localCheckpoint()
-            val dels = b.filter(col("_op") === "del")
-              .select(col(keyCol), col(startCol), col(endCol))
-              .distinct().localCheckpoint()
-            val nDels = dels.count()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$rawDir/batch=$batchId")
-            if (nDels > 0L)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            def store(dir: String, op: Int) =
-              spark.read.parquet(dir).select(col(keyCol), col(startCol),
-                col(endCol), col("batch").cast("long").as("_b"),
-                lit(op).as("_o"))
-            // latest op per interval identity; del beats add within
-            // one batch (the _d tiebreaker, streamingSccCdc's fold).
-            // excludeThisBatch = the PRE-batch live set.
-            def remaining(excludeThisBatch: Boolean) = {
-              val haveAdds =
-                hasBatchData(fs, rawDir)
-              val haveDels =
-                hasBatchData(fs, delsDir)
-              val empty = adds.limit(0)
-                .select(col(keyCol), col(startCol), col(endCol),
-                  lit(-1L).as("_b"), lit(0).as("_o"))
-              val u = (if (haveAdds) store(rawDir, 1) else empty)
-                .unionByName(if (haveDels) store(delsDir, 0) else empty)
-              (if (excludeThisBatch) u.filter(col("_b") =!= batchId)
-               else u)
-                .groupBy(keyCol, startCol, endCol)
-                .agg(max(struct(col("_b"), (lit(1) - col("_o")).as("_d"),
-                  col("_o"))).as("_m"))
-                .filter(col("_m._o") === 1)
-                .select(keyCol, startCol, endCol)
-            }
-            val sMark =
-              new org.apache.hadoop.fs.Path(s"$islandsDir/_SUCCESS")
-            val islands =
-              if (fs.exists(sMark) && !midCrash) {
-                val live = remaining(excludeThisBatch = false)
-                  .localCheckpoint()
-                // the ADD delta the store hasn't absorbed yet: this
-                // batch's adds that are live after the fold (a
-                // same-batch delete must not reach the absorb) AND
-                // were NOT live before it (re-adding a still-live
-                // interval must not double its n_merged count — set
-                // semantics; the pre-batch fold is the price of the
-                // exactness claim, paid only on add-bearing triggers)
-                val newLive = adds
-                  .join(live, Seq(keyCol, startCol, endCol), "left_semi")
-                  .join(remaining(excludeThisBatch = true),
-                    Seq(keyCol, startCol, endCol), "left_anti")
-                  .localCheckpoint()
-                val st1 =
-                  if (newLive.isEmpty)
-                    spark.read.parquet(islandsDir)
-                  else graft.operators.Funnel.absorbIntervals(
-                    spark.read.parquet(islandsDir), newLive, keyCol,
-                    startCol, endCol, minGap)
-                if (nDels == 0L) st1
-                else graft.operators.Funnel.deleteIntervals(st1, live,
-                  dels, keyCol, startCol, endCol, minGap)
-              } else
-                // cold start OR mid-crash redelivery: exact rebuild
-                // from the reconciled effective interval set
-                graft.operators.Funnel.mergeIntervals(
-                  remaining(excludeThisBatch = false),
-                  keyCol, startCol, endCol, minGap)
-            islands.localCheckpoint()
-              .write.mode("overwrite").parquet(islandsDir)
-            fs.mkdirs(marker): Unit
+            body(b, Trigger(spark, fs, batchId, midCrash))
+            fs.mkdirs(done): Unit
             fs.delete(started, true): Unit
           }
         }
@@ -989,58 +938,104 @@ object StreamingIngest {
       .start()
   }
 
-  /** True iff `dir` holds at least one `batch=<id>/` data
-    * subdirectory. The op-store directories also carry the
-    * underscore-prefixed `_batches/` marker tree (invisible to parquet
-    * readers but enough to make the directory EXIST), so a bare
-    * `fs.exists` check would send `spark.read.parquet` into a
-    * data-less directory and fail schema inference — e.g. a
-    * delete-only stream whose add store never received a batch. */
-  private def hasBatchData(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch="))
+  /** A CDC twin's projection: the op column as the string `_op`, then
+    * `cols`. */
+  private def withOp(opCol: String, cols: Seq[String])
+      : DataFrame => DataFrame =
+    _.select(col(opCol).cast("string").as("_op") +: cols.map(col): _*)
+
+  /** The (`start_id`, `end_id`) columns of the edge-stream twins. */
+  private val edgeCols = Seq("start_id", "end_id")
+
+  /** A CDC batch's add and del rows over `cols`, each materialized. */
+  private def split(b: DataFrame, cols: Seq[String],
+      distinct: Boolean = false): (DataFrame, DataFrame) = {
+    def rows(op: String) = {
+      val r = b.filter(col("_op") === op).select(cols.map(col): _*)
+      (if (distinct) r.distinct() else r).localCheckpoint()
+    }
+    (rows("add"), rows("del"))
   }
 
-  /** Latest-wins reconciliation of a batchId-keyed add/del op-store
-    * pair — the CDC grid's standard fold, shared by the lexical, LM
-    * and layout twins (one fix, one place; the decontamination twin's
-    * fold differs — it has no takedown store): one row per id from
-    * the NEWEST add batch below `limit` (the erasure paths pass the
-    * current batchId to see the state BEFORE their own writes), live
-    * iff that add is strictly newer than the id's latest takedown —
-    * a same-batch takedown beats the add. `empty` supplies the
-    * (id + payload) schema when the add store has no batches yet. */
-  private def latestWinsFold(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, addsDir: String,
-      delsDir: String, idCol: String, payload: Seq[String],
-      empty: => DataFrame,
-      limit: Long = Long.MaxValue): DataFrame =
-    if (!hasBatchData(fs, addsDir)) empty
+  /** A per-id CDC batch: its takedown ids, and its adds folded to one
+    * deterministic row per id (max over the `payload` struct — a
+    * trigger batch has no client-visible row order) with same-batch
+    * takedowns removed, since a takedown beats an add of its batch. */
+  private def idOps(b: DataFrame, idCol: String,
+      payload: Seq[String]): (DataFrame, DataFrame) = {
+    val dels = b.filter(col("_op") === "del")
+      .select(col(idCol)).distinct().localCheckpoint()
+    val adds = b.filter(col("_op") === "add")
+      .groupBy(col(idCol)).agg(max(struct(payload.map(col): _*)).as("_s"))
+      .select(col(idCol) +: payload.map(c => col(s"_s.$c").as(c)): _*)
+      .join(dels, Seq(idCol), "left_anti")
+      .localCheckpoint()
+    (adds, dels)
+  }
+
+  /** Materializes every frame, then overwrites each store with its
+    * frame: the maintain plans read the very parquet they replace, so
+    * no store may be overwritten before all of them are computed. */
+  private def replace(stores: (DataFrame, String)*): Unit =
+    stores.map { case (df, dir) => (df.localCheckpoint(), dir) }
+      .foreach { case (df, dir) => df.write.mode("overwrite").parquet(dir) }
+
+  /** Per-id latest-wins reconciliation of a batchId-keyed op store,
+    * shared by the lexical, LM, word-store, PCA, layout and
+    * decontamination twins: one row per id from the NEWEST add batch
+    * below `limit` (the erasure paths pass the current batchId to see
+    * the state BEFORE their own writes), live iff that add is strictly
+    * newer than the id's latest takedown in `delsDir` — a same-batch
+    * takedown beats the add. Without a takedown store every id's
+    * newest add is live. `empty` supplies the (id + payload) schema
+    * when the add store has no batches yet. */
+  private def latestWinsFold(t: Trigger, addsDir: String,
+      delsDir: Option[String], idCol: String, payload: Seq[String],
+      empty: => DataFrame, limit: Long = Long.MaxValue): DataFrame =
+    if (!t.hasData(addsDir)) empty
     else {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col(idCol))
         .orderBy(col("batch").cast("long").desc)
-      val latest = spark.read.parquet(addsDir)
+      val latest = t.spark.read.parquet(addsDir)
         .filter(col("batch").cast("long") < limit)
         .withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1)
         .select(col(idCol) +: payload.map(col) :+
           col("batch").cast("long").as("_ab"): _*)
-      val dMax =
-        if (hasBatchData(fs, delsDir))
-          spark.read.parquet(delsDir)
-            .filter(col("batch").cast("long") < limit)
-            .groupBy(idCol)
-            .agg(max(col("batch").cast("long")).as("_db"))
-        else latest.limit(0).select(col(idCol))
-          .withColumn("_db", lit(-1L))
-      latest.join(dMax, Seq(idCol), "left")
-        .filter(col("_db").isNull || col("_db") < col("_ab"))
-        .select(col(idCol) +: payload.map(col): _*)
+      delsDir.filter(t.hasData).fold(latest) { d =>
+        val dMax = t.spark.read.parquet(d)
+          .filter(col("batch").cast("long") < limit)
+          .groupBy(idCol)
+          .agg(max(col("batch").cast("long")).as("_db"))
+        latest.join(dMax, Seq(idCol), "left")
+          .filter(col("_db").isNull || col("_db") < col("_ab"))
+      }.select(col(idCol) +: payload.map(col): _*)
     }
+
+  /** Set-semantics reconciliation of a batchId-keyed add/del op-store
+    * pair, shared by the interval, SCC, community and neighbor-agg
+    * twins: the identities `keys` whose latest operation is an add,
+    * where a delete beats an add of the same batch. `keep` filters the
+    * op rows first — `_b` is the batch id, `_o` 1 for an add and 0 for
+    * a delete — so a twin can fold the world before (part of) its own
+    * batch. `empty` supplies the key schema while a store has no
+    * batches yet. */
+  private def setFold(t: Trigger, addsDir: String, delsDir: String,
+      keys: Seq[String], empty: => DataFrame,
+      keep: Column = lit(true)): DataFrame = {
+    def ops(dir: String, op: Int) = (
+      if (t.hasData(dir)) t.spark.read.parquet(dir)
+        .select(keys.map(col) :+ col("batch").cast("long").as("_b"): _*)
+      else empty.select(keys.map(col) :+ lit(-1L).as("_b"): _*)
+    ).withColumn("_o", lit(op))
+    ops(addsDir, 1).unionByName(ops(delsDir, 0)).filter(keep)
+      .groupBy(keys.map(col): _*)
+      .agg(max(struct(col("_b"), (lit(1) - col("_o")).as("_d"),
+        col("_o"))).as("_m"))
+      .filter(col("_m._o") === 1)
+      .select(keys.map(col): _*)
+  }
 
   /** Refuse a raw store whose root holds loose data files beside (or
     * about to gain) `batch=<id>/` subdirectories — the mixed layout
@@ -1049,9 +1044,9 @@ object StreamingIngest {
     * listed first. Checked once per started query, before the first
     * write. Underscore/dot-prefixed entries (markers, _SUCCESS, CRC
     * sidecars) are ignored, as parquet readers ignore them. */
-  private def requireBatchLayout(fs: org.apache.hadoop.fs.FileSystem,
-      rawDir: String, who: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(rawDir)
+  private def requireBatchLayout(fs: FileSystem, rawDir: String,
+      who: String): Unit = {
+    val root = new Path(rawDir)
     if (fs.exists(root)) {
       val loose = fs.listStatus(root).filter { st =>
         val n = st.getPath.getName
@@ -1076,77 +1071,51 @@ object StreamingIngest {
     * streaming corpus drives the full serving lifecycle, retrain
     * recommendation included.
     *
-    * Exactly-once per batch via a TWO-PHASE marker discipline under
-    * `indexDir/_batches/` (underscore-prefixed — invisible to parquet
-    * readers): `<id>.started` lands BEFORE the append, `<id>` after,
-    * so every redelivery is unambiguous. Final marker present →
-    * completed batch, no-op. Started marker without final → a crash
-    * mid-batch, where a PARTIAL append may exist — the trigger
-    * SELF-HEALS by running the documented id-contract recovery
-    * mechanically: tombstone the batch's ids
+    * Exactly-once per batch via [[markerGuarded]], markers under
+    * `indexDir/_batches/`. The append is not idempotent, so a mid-crash
+    * redelivery, where a PARTIAL append may exist, SELF-HEALS by
+    * running the documented id-contract recovery mechanically:
+    * tombstone the batch's ids
     * ([[graft.operators.Similarity.deleteFromIndex]]), purge them
     * physically ([[graft.operators.Similarity.compactIndex]] — also
     * clears the tombstones, so the re-applied ids come back live),
-    * then re-apply the batch. Neither marker → first delivery, no
-    * healing cost. The one residue: if the crash hit between the
-    * drift-ledger append and the final marker, the healed re-apply
-    * ledgers the batch twice — a policy-weight skew only (the drift
-    * verdict weights by n_added; labels and served rows stay exact).
+    * then re-apply the batch. A first delivery pays no healing cost.
+    * The one residue: if the crash hit between the drift-ledger append
+    * and the final marker, the healed re-apply ledgers the batch twice
+    * — a policy-weight skew only (the drift verdict weights by
+    * n_added; labels and served rows stay exact).
     *
     * Compaction threshold checked per trigger: with `maxFragments` >
     * 0, a trigger that leaves more than that many parquet fragments
     * under `vectors/` runs [[graft.operators.Similarity.compactIndex]]
     * inline — the maintenance cadence a daily-ingest serving index
     * needs, without an external scheduler. 0 disables (default:
-    * compaction stays an explicit operational decision). */
+    * compaction stays an explicit operational decision). The check
+    * runs inside the guarded body, before the final marker. */
   def streamingAnnIngest(deltas: DataFrame, indexDir: String,
       checkpointDir: String, vecCol: String, idCol: String,
-      maxFragments: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    deltas
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.select(col(idCol), col(vecCol))
-          .localCheckpoint()
-        if (!delta.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$indexDir/_batches/$batchId")
-          val started = new org.apache.hadoop.fs.Path(
-            s"$indexDir/_batches/$batchId.started")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(marker)) {
-            if (fs.exists(started)) {
-              // redelivery after a mid-batch crash: a partial append
-              // may exist — tombstone this batch's ids and purge them
-              // physically, then fall through to a clean re-apply
-              graft.operators.Similarity.deleteFromIndex(spark,
-                indexDir, delta.select(col(idCol)), idCol): Unit
-              graft.operators.Similarity.compactIndex(spark,
-                indexDir): Unit
-            } else fs.mkdirs(started): Unit
-            // eager by construction: the append + ledger happen inside
-            graft.operators.Similarity.updateIndex(spark, indexDir,
-              delta, vecCol, idCol): Unit
-            fs.mkdirs(marker): Unit
-            fs.delete(started, true): Unit
-            if (maxFragments > 0) {
-              val vecPath =
-                new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-              val it = fs.listFiles(vecPath, true)
-              var n = 0
-              while (it.hasNext) {
-                if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-              }
-              if (n > maxFragments)
-                graft.operators.Similarity
-                  .compactIndex(spark, indexDir): Unit
-            }
-          }
-        }
+      maxFragments: Int = 0): StreamingQuery =
+    markerGuarded(deltas, checkpointDir, indexDir, "streamingAnnIngest",
+        Nil)(_.select(col(idCol), col(vecCol))) { (delta, t) =>
+      if (t.midCrash) {
+        // a partial append may exist — tombstone this batch's ids and
+        // purge them physically, then fall through to a clean re-apply
+        Similarity.deleteFromIndex(t.spark, indexDir,
+          delta.select(col(idCol)), idCol): Unit
+        Similarity.compactIndex(t.spark, indexDir): Unit
       }
-      .start()
+      // eager by construction: the append + ledger happen inside
+      Similarity.updateIndex(t.spark, indexDir, delta, vecCol, idCol): Unit
+      if (maxFragments > 0) {
+        val it = t.fs.listFiles(new Path(s"$indexDir/vectors"), true)
+        var n = 0
+        while (it.hasNext) {
+          if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+        }
+        if (n > maxFragments)
+          Similarity.compactIndex(t.spark, indexDir): Unit
+      }
+    }
 
   /** Dup-cluster maintenance under a CDC stream of verified pairs and
     * document TAKEDOWNS — the dedup member of the CDC-twin grid: each
@@ -1172,118 +1141,67 @@ object StreamingIngest {
     * live-pair endpoints the labels are bit-equal to a full CC
     * recompute over the live pair graph (the spec asserts both).
     *
-    * Ground truth = two batchId-keyed op stores (`pairsDir/batch=`,
-    * `delsDir/batch=`; idempotent overwrites, per-batchId marker =
-    * redelivery no-op); mid-batch crash recovery is mechanical
-    * (delete the clusters store → cold rebuild from the fold). */
+    * Ground truth = two op stores (`pairsDir/batch=`, `delsDir/batch=`)
+    * under [[markerGuarded]], markers under `pairsDir`. The
+    * incremental step reads the clusters store it then overwrites, so
+    * a mid-crash redelivery cold-rebuilds from the fold. */
   def streamingDupClustersCdc(events: DataFrame, pairsDir: String,
       delsDir: String, clustersDir: String, checkpointDir: String,
-      opCol: String = "op",
-      maxIter: Int = 25): org.apache.spark.sql.streaming.StreamingQuery =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col("id_a"), col("id_b")).localCheckpoint()
-        if (!b.isEmpty) {
-          // markers live under the op store: the clusters store is
-          // rewritten with mode("overwrite") each trigger, which would
-          // wipe any marker history kept beside it
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$pairsDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(marker)) {
-            val adds = b.filter(col("_op") === "add")
-              .select("id_a", "id_b").distinct().localCheckpoint()
-            val dels = b.filter(col("_op") === "del")
-              .select(col("id_a").as("id")).distinct().localCheckpoint()
-            val nDels = dels.count()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$pairsDir/batch=$batchId")
-            if (nDels > 0L)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            // live pairs: latest add strictly newer than each
-            // endpoint's latest takedown (same-batch del wins)
-            def livePairs() = {
-              val havePairs =
-                hasBatchData(fs, pairsDir)
-              val haveDels =
-                hasBatchData(fs, delsDir)
-              val pAll =
-                if (havePairs) spark.read.parquet(pairsDir)
-                  .groupBy("id_a", "id_b")
-                  .agg(max(col("batch").cast("long")).as("_ab"))
-                else adds.limit(0).select(col("id_a"), col("id_b"),
-                  lit(-1L).as("_ab"))
-              val dRaw =
-                if (haveDels) spark.read.parquet(delsDir)
-                  .select(col("id"), col("batch").cast("long").as("_db"))
-                else dels.limit(0).select(col("id"), lit(-1L).as("_db"))
-              val d = dRaw.groupBy("id").agg(max(col("_db")).as("_db"))
-              pAll
-                .join(d.withColumnsRenamed(
-                  Map("id" -> "id_a", "_db" -> "_da")), Seq("id_a"),
-                  "left")
-                .join(d.withColumnsRenamed(
-                  Map("id" -> "id_b", "_db" -> "_dbb")), Seq("id_b"),
-                  "left")
-                .filter((col("_da").isNull || col("_da") < col("_ab")) &&
-                  (col("_dbb").isNull || col("_dbb") < col("_ab")))
-                .select("id_a", "id_b")
-            }
-            val sMark =
-              new org.apache.hadoop.fs.Path(s"$clustersDir/_SUCCESS")
-            val clusters =
-              if (fs.exists(sMark)) {
-                val prev = spark.read.parquet(clustersDir)
-                val l1 =
-                  if (adds.isEmpty) prev
-                  else graft.operators.Dedup.incrementalDupClusters(
-                    adds, prev, maxIter)
-                if (nDels == 0L) l1
-                else graft.operators.Dedup.decrementalDupClusters(
-                  livePairs(), dels, l1, maxIter)
-              } else {
-                val live = livePairs().localCheckpoint()
-                // vertex rule (matches the composed primitives): a doc
-                // has a row iff its own latest takedown is older than
-                // the latest pair-add naming it — so an endpoint whose
-                // only pair died with the OTHER doc's takedown stays,
-                // while erased docs leave
-                val pRaw =
-                  (if (hasBatchData(fs, pairsDir))
-                    spark.read.parquet(pairsDir)
-                  else adds.limit(0).withColumn("batch", lit(-1L)))
-                    .select(col("id_a"), col("id_b"),
-                      col("batch").cast("long").as("_b"))
-                val vCand = pRaw.select(col("id_a").as("id"), col("_b"))
-                  .unionAll(pRaw.select(col("id_b").as("id"), col("_b")))
-                  .groupBy("id").agg(max(col("_b")).as("_vb"))
-                val dMax =
-                  if (hasBatchData(fs, delsDir))
-                    spark.read.parquet(delsDir)
-                      .groupBy("id")
-                      .agg(max(col("batch").cast("long")).as("_db"))
-                  else dels.limit(0).select(col("id"),
-                    lit(-1L).as("_db"))
-                val verts = vCand.join(dMax, Seq("id"), "left")
-                  .filter(col("_db").isNull || col("_db") < col("_vb"))
-                  .select("id")
-                graft.operators.Dedup.connectedComponents(verts, "id",
-                  live, maxIter)
-              }
-            clusters.localCheckpoint()
-              .write.mode("overwrite").parquet(clustersDir)
-            fs.mkdirs(marker): Unit
-          }
-        }
-      }
-      .start()
+      opCol: String = "op", maxIter: Int = 25): StreamingQuery =
+    markerGuarded(events, checkpointDir, pairsDir,
+        "streamingDupClustersCdc", Seq(pairsDir, delsDir))(
+        withOp(opCol, Seq("id_a", "id_b"))) { (b, t) =>
+      val spark = t.spark
+      val adds = b.filter(col("_op") === "add")
+        .select("id_a", "id_b").distinct().localCheckpoint()
+      val dels = b.filter(col("_op") === "del")
+        .select(col("id_a").as("id")).distinct().localCheckpoint()
+      val hasAdds = t.record(adds, pairsDir)
+      val hasDels = t.record(dels, delsDir)
+      lazy val pRaw =
+        (if (t.hasData(pairsDir)) spark.read.parquet(pairsDir)
+        else adds.limit(0).withColumn("batch", lit(-1L)))
+          .select(col("id_a"), col("id_b"),
+            col("batch").cast("long").as("_b"))
+      // each doc's latest takedown batch
+      lazy val dMax =
+        (if (t.hasData(delsDir)) spark.read.parquet(delsDir)
+        else dels.limit(0).withColumn("batch", lit(-1L)))
+          .groupBy("id").agg(max(col("batch").cast("long")).as("_db"))
+      // live pairs: latest add strictly newer than each endpoint's
+      // latest takedown (same-batch del wins)
+      def livePairs() = pRaw.groupBy("id_a", "id_b")
+        .agg(max(col("_b")).as("_ab"))
+        .join(dMax.withColumnsRenamed(
+          Map("id" -> "id_a", "_db" -> "_da")), Seq("id_a"), "left")
+        .join(dMax.withColumnsRenamed(
+          Map("id" -> "id_b", "_db" -> "_dbb")), Seq("id_b"), "left")
+        .filter((col("_da").isNull || col("_da") < col("_ab")) &&
+          (col("_dbb").isNull || col("_dbb") < col("_ab")))
+        .select("id_a", "id_b")
+      replace((
+        if (t.built(clustersDir) && !t.midCrash) {
+          val prev = spark.read.parquet(clustersDir)
+          val l1 =
+            if (!hasAdds) prev
+            else Dedup.incrementalDupClusters(adds, prev, maxIter)
+          if (!hasDels) l1
+          else Dedup.decrementalDupClusters(livePairs(), dels, l1, maxIter)
+        } else {
+          val live = livePairs().localCheckpoint()
+          // vertex rule (matches the composed primitives): a doc has a
+          // row iff its own latest takedown is older than the latest
+          // pair-add naming it — so an endpoint whose only pair died
+          // with the OTHER doc's takedown stays, while erased docs leave
+          val verts = pRaw.select(col("id_a").as("id"), col("_b"))
+            .unionAll(pRaw.select(col("id_b").as("id"), col("_b")))
+            .groupBy("id").agg(max(col("_b")).as("_vb"))
+            .join(dMax, Seq("id"), "left")
+            .filter(col("_db").isNull || col("_db") < col("_vb"))
+            .select("id")
+          Dedup.connectedComponents(verts, "id", live, maxIter)
+        }) -> clustersDir)
+    }
 
   /** ANN index maintenance under a CDC vector stream — adds AND
     * deletes interleaved, the takedown-complete upgrade of
@@ -1310,97 +1228,62 @@ object StreamingIngest {
     * deletes, which is the asymmetry that pricing them at one inline
     * compaction accepts.
     *
-    * Crash safety is [[streamingAnnIngest]]'s two-phase marker
-    * discipline verbatim: `<id>.started` before any mutation, `<id>`
-    * after all of them; a started-without-final redelivery self-heals
-    * by tombstoning the batch's add ids, compacting (physical purge +
-    * tombstone clear), and re-applying the whole batch — deletions
-    * re-tombstone idempotently. */
+    * Crash safety is [[streamingAnnIngest]]'s: under [[markerGuarded]],
+    * a mid-crash redelivery self-heals by tombstoning the batch's add
+    * ids, compacting (physical purge + tombstone clear), and
+    * re-applying the whole batch — deletions re-tombstone
+    * idempotently. */
   def streamingAnnCdc(events: DataFrame, indexDir: String,
       checkpointDir: String, vecCol: String, idCol: String,
-      opCol: String = "op"): org.apache.spark.sql.streaming.StreamingQuery =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col(idCol), col(vecCol)).localCheckpoint()
-        if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$indexDir/_batches/$batchId")
-          val started = new org.apache.hadoop.fs.Path(
-            s"$indexDir/_batches/$batchId.started")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(marker)) {
-            // Fold adds to ONE row per id BEFORE touching the index:
-            // two adds of one id in a single trigger would otherwise
-            // append two live rows — the exact id-contract violation
-            // this twin exists to prevent. A trigger batch has no
-            // client-visible row order, so "latest" is undefined
-            // within it; the fold picks a deterministic representative
-            // (max by Spark's array ordering) — re-running the batch
-            // always yields the same index.
-            val adds = b.filter(col("_op") === "add")
-              .select(col(idCol), col(vecCol))
-              .groupBy(col(idCol))
-              .agg(max(col(vecCol)).as(vecCol))
-              .localCheckpoint()
-            val dels = b.filter(col("_op") === "del")
-              .select(col(idCol)).distinct().localCheckpoint()
-            if (fs.exists(started)) {
-              // mid-batch crash redelivery: purge any partial append
-              if (!adds.isEmpty) {
-                graft.operators.Similarity.deleteFromIndex(spark,
-                  indexDir, adds.select(col(idCol)), idCol): Unit
-                graft.operators.Similarity.compactIndex(spark,
-                  indexDir): Unit
-              }
-            } else fs.mkdirs(started): Unit
-            val tombPath =
-              new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-            val vecsPath =
-              new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-            if (!adds.isEmpty) {
-              val addIds = adds.select(col(idCol))
-              // resurrection check: a tombstoned re-add needs the old
-              // rows physically gone before its tombstone clears
-              val tombHit = fs.exists(tombPath) &&
-                !spark.read.parquet(tombPath.toString)
-                  .join(broadcast(addIds), Seq(idCol), "left_semi")
-                  .isEmpty
-              // update-style re-add of a LIVE id: the old row must be
-              // tombstoned and physically purged before the append, or
-              // the trigger leaves two live rows for one id (the other
-              // CDC twins fold latest-wins per identity; the ANN store
-              // is append-only, so "latest wins" is delete-then-add)
-              val liveHit = fs.exists(vecsPath) &&
-                !spark.read.parquet(vecsPath.toString)
-                  .select(col(idCol))
-                  .join(broadcast(addIds), Seq(idCol), "left_semi")
-                  .isEmpty
-              if (tombHit || liveHit) {
-                // tombstoning ids with no stored row is a no-op, so
-                // covering ALL add ids is safe and catches both cases
-                if (liveHit)
-                  graft.operators.Similarity.deleteFromIndex(spark,
-                    indexDir, addIds, idCol): Unit
-                graft.operators.Similarity.compactIndex(spark,
-                  indexDir): Unit
-              }
-              graft.operators.Similarity.updateIndex(spark, indexDir,
-                adds, vecCol, idCol): Unit
-            }
-            if (!dels.isEmpty)
-              graft.operators.Similarity.deleteFromIndex(spark,
-                indexDir, dels, idCol): Unit
-            fs.mkdirs(marker): Unit
-            fs.delete(started, true): Unit
-          }
-        }
+      opCol: String = "op"): StreamingQuery =
+    markerGuarded(events, checkpointDir, indexDir, "streamingAnnCdc", Nil)(
+        withOp(opCol, Seq(idCol, vecCol))) { (b, t) =>
+      val spark = t.spark
+      // Fold adds to ONE row per id BEFORE touching the index: two
+      // adds of one id in a single trigger would otherwise append two
+      // live rows — the exact id-contract violation this twin exists to
+      // prevent. A trigger batch has no client-visible row order, so
+      // "latest" is undefined within it; the fold picks a deterministic
+      // representative (max by Spark's array ordering) — re-running the
+      // batch always yields the same index.
+      val adds = b.filter(col("_op") === "add")
+        .groupBy(col(idCol)).agg(max(col(vecCol)).as(vecCol))
+        .localCheckpoint()
+      val dels = b.filter(col("_op") === "del")
+        .select(col(idCol)).distinct().localCheckpoint()
+      val hasAdds = !adds.isEmpty
+      if (t.midCrash && hasAdds) {
+        // purge any partial append
+        Similarity.deleteFromIndex(spark, indexDir,
+          adds.select(col(idCol)), idCol): Unit
+        Similarity.compactIndex(spark, indexDir): Unit
       }
-      .start()
+      if (hasAdds) {
+        val addIds = adds.select(col(idCol))
+        def hit(dir: String, ids: DataFrame => DataFrame) =
+          t.fs.exists(new Path(dir)) && !ids(spark.read.parquet(dir))
+            .join(broadcast(addIds), Seq(idCol), "left_semi").isEmpty
+        // resurrection check: a tombstoned re-add needs the old rows
+        // physically gone before its tombstone clears
+        val tombHit = hit(s"$indexDir/tombstones", identity)
+        // update-style re-add of a LIVE id: the old row must be
+        // tombstoned and physically purged before the append, or the
+        // trigger leaves two live rows for one id (the other CDC twins
+        // fold latest-wins per identity; the ANN store is append-only,
+        // so "latest wins" is delete-then-add)
+        val liveHit = hit(s"$indexDir/vectors", _.select(col(idCol)))
+        if (tombHit || liveHit) {
+          // tombstoning ids with no stored row is a no-op, so covering
+          // ALL add ids is safe and catches both cases
+          if (liveHit)
+            Similarity.deleteFromIndex(spark, indexDir, addIds, idCol): Unit
+          Similarity.compactIndex(spark, indexDir): Unit
+        }
+        Similarity.updateIndex(spark, indexDir, adds, vecCol, idCol): Unit
+      }
+      if (!dels.isEmpty)
+        Similarity.deleteFromIndex(spark, indexDir, dels, idCol): Unit
+    }
 
   /** EXACT SCC maintenance under a CDC edge stream — adds AND deletes
     * interleaved, the takedown-complete upgrade of [[streamingScc]]:
@@ -1413,15 +1296,15 @@ object StreamingIngest {
     * full recompute over the EFFECTIVE edge set. Within a batch,
     * deletes win over adds of the same edge (the order the two
     * primitives apply); across batches the latest operation wins —
-    * re-adding a previously deleted edge resurrects it.
+    * re-adding a previously deleted edge resurrects it ([[setFold]]).
     *
-    * Ground truth lives in two batchId-keyed op stores
-    * (`edgesDir/batch=<id>/`, `delsDir/batch=<id>/` — idempotent
-    * overwrites, the [[streamingIntervals]] discipline) reconciled by
-    * a latest-wins fold when a trigger carries deletes; a per-batchId
-    * marker makes completed-batch redelivery a no-op, and a mid-batch
-    * crash recovers mechanically (delete the labels store → cold
-    * rebuild from the reconciled ground truth).
+    * Ground truth lives in two op stores (`edgesDir/batch=<id>/`,
+    * `delsDir/batch=<id>/`) under [[markerGuarded]], markers under
+    * `edgesDir`. The labels and quotient stores are overwritten one
+    * after the other, so a crash between the two leaves them out of
+    * step; a mid-crash redelivery therefore cold-rebuilds both from the
+    * reconciled ground truth. An `edgesDir` that [[streamingScc]]
+    * appended loose files into is refused by the layout guard.
     *
     * Scale notes (100 TB): add-only triggers never read the
     * accumulated stores (quotient+delta cost, exactly [[streamingScc]]);
@@ -1433,90 +1316,32 @@ object StreamingIngest {
   def streamingSccCdc(events: DataFrame, edgesDir: String,
       delsDir: String, labelsDir: String, quotientDir: String,
       checkpointDir: String, opCol: String = "op",
-      maxRounds: Int = 20,
-      maxIter: Int = 25): org.apache.spark.sql.streaming.StreamingQuery =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col("start_id"), col("end_id")).localCheckpoint()
-        if (!b.isEmpty) {
-          // markers live under the op store — the labels store's
-          // whole-directory overwrite would wipe them
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$edgesDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(marker)) {
-            val adds = b.filter(col("_op") === "add")
-              .select("start_id", "end_id").localCheckpoint()
-            val dels = b.filter(col("_op") === "del")
-              .select("start_id", "end_id").localCheckpoint()
-            val nDels = dels.count()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$edgesDir/batch=$batchId")
-            if (nDels > 0L)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            def store(dir: String, op: Int) =
-              spark.read.parquet(dir).select(col("start_id"),
-                col("end_id"), col("batch").cast("long").as("_b"),
-                lit(op).as("_o"))
-            // latest op per edge; del beats add within one batch (the
-            // primitive application order below)
-            def remaining() = {
-              val haveAdds =
-                hasBatchData(fs, edgesDir)
-              val haveDels =
-                hasBatchData(fs, delsDir)
-              val empty = adds.limit(0)
-                .select(col("start_id"), col("end_id"),
-                  lit(-1L).as("_b"), lit(0).as("_o"))
-              val u = (if (haveAdds) store(edgesDir, 1) else empty)
-                .unionByName(if (haveDels) store(delsDir, 0) else empty)
-              u.groupBy("start_id", "end_id")
-                .agg(max(struct(col("_b"), (lit(1) - col("_o")).as("_d"),
-                  col("_o"))).as("_m"))
-                .filter(col("_m._o") === 1)
-                .select("start_id", "end_id")
-            }
-            val sMark =
-              new org.apache.hadoop.fs.Path(s"$labelsDir/_SUCCESS")
-            val nDel = nDels
-            val (labels, quotient) =
-              if (fs.exists(sMark)) {
-                val st1 =
-                  if (adds.isEmpty)
-                    graft.operators.GraphOps.SccState(
-                      spark.read.parquet(labelsDir),
-                      spark.read.parquet(quotientDir))
-                  else graft.operators.GraphOps.incrementalScc(adds,
-                    spark.read.parquet(labelsDir),
-                    spark.read.parquet(quotientDir), maxRounds, maxIter)
-                val st2 =
-                  if (nDel == 0L) st1
-                  else graft.operators.GraphOps.decrementalScc(
-                    remaining(), dels, st1.labels, st1.quotient,
-                    maxRounds, maxIter)
-                (st2.labels, st2.quotient)
-              } else {
-                val all = remaining()
-                val lb = graft.operators.GraphOps
-                  .stronglyConnectedComponents(all, maxRounds, maxIter)
-                (lb, graft.operators.GraphOps.condensation(all, lb))
-              }
-            val lc = labels.localCheckpoint()
-            val qc = quotient.localCheckpoint()
-            lc.write.mode("overwrite").parquet(labelsDir)
-            qc.write.mode("overwrite").parquet(quotientDir)
-            fs.mkdirs(marker): Unit
-          }
+      maxRounds: Int = 20, maxIter: Int = 25): StreamingQuery =
+    markerGuarded(events, checkpointDir, edgesDir, "streamingSccCdc",
+        Seq(edgesDir, delsDir))(withOp(opCol, edgeCols)) { (b, t) =>
+      val (adds, dels) = split(b, edgeCols)
+      val hasAdds = t.record(adds, edgesDir)
+      val hasDels = t.record(dels, delsDir)
+      def remaining() = setFold(t, edgesDir, delsDir, edgeCols, adds.limit(0))
+      val st =
+        if (t.built(labelsDir) && !t.midCrash) {
+          val prev = GraphOps.SccState(t.spark.read.parquet(labelsDir),
+            t.spark.read.parquet(quotientDir))
+          val st1 =
+            if (!hasAdds) prev
+            else GraphOps.incrementalScc(adds, prev.labels, prev.quotient,
+              maxRounds, maxIter)
+          if (!hasDels) st1
+          else GraphOps.decrementalScc(remaining(), dels, st1.labels,
+            st1.quotient, maxRounds, maxIter)
+        } else {
+          val all = remaining()
+          val lb = GraphOps.stronglyConnectedComponents(all, maxRounds,
+            maxIter)
+          GraphOps.SccState(lb, GraphOps.condensation(all, lb))
         }
-      }
-      .start()
+      replace(st.labels -> labelsDir, st.quotient -> quotientDir)
+    }
 
   /** Community-label maintenance under a CDC edge stream — adds AND
     * deletes interleaved, the takedown-complete upgrade of
@@ -1537,14 +1362,13 @@ object StreamingIngest {
     * [[graft.operators.GraphOps.leiden]] runs as the consolidation
     * story.
     *
-    * Ground truth lives in two batchId-keyed op stores
-    * (`edgesDir/batch=<id>/`, `delsDir/batch=<id>/` — idempotent
-    * overwrites) reconciled latest-wins per edge; a per-batchId
-    * marker makes completed-batch redelivery a no-op, and a
-    * mid-batch crash recovers mechanically (delete the labels store →
-    * cold rebuild). The incremental step needs the full effective
-    * edge set (its hop-region induces from it), so every trigger pays
-    * one reconciliation fold over the op stores — the cost
+    * Ground truth lives in two op stores (`edgesDir/batch=<id>/`,
+    * `delsDir/batch=<id>/`) under [[markerGuarded]], markers under
+    * `edgesDir`, reconciled per edge by [[setFold]]; the incremental
+    * step reads the labels store it then overwrites, so a mid-crash
+    * redelivery cold-rebuilds. The incremental step needs the full
+    * effective edge set (its hop-region induces from it), so every
+    * trigger pays one reconciliation fold over the op stores — the cost
     * [[streamingCommunities]] already paid reading its accumulated
     * append store, now delete-aware. The add-step reconciliation
     * EXCLUDES the current batch's deletes (the world the adds land
@@ -1552,94 +1376,41 @@ object StreamingIngest {
   def streamingCommunitiesCdc(events: DataFrame, edgesDir: String,
       delsDir: String, labelsDir: String, checkpointDir: String,
       opCol: String = "op", rounds: Int = 4,
-      hops: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col("start_id"), col("end_id")).localCheckpoint()
-        if (!b.isEmpty) {
-          // markers live under the op store — the labels store's
-          // whole-directory overwrite would wipe them
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$edgesDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(marker)) {
-            val adds = b.filter(col("_op") === "add")
-              .select("start_id", "end_id").localCheckpoint()
-            val dels = b.filter(col("_op") === "del")
-              .select("start_id", "end_id").localCheckpoint()
-            val nDels = dels.count()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$edgesDir/batch=$batchId")
-            if (nDels > 0L)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            def store(dir: String, op: Int) =
-              spark.read.parquet(dir).select(col("start_id"),
-                col("end_id"), col("batch").cast("long").as("_b"),
-                lit(op).as("_o"))
-            // Latest op per edge. `asOfAdds` drops the CURRENT batch's
-            // deletes from the fold — the effective set the add step
-            // lands in (del still beats add within one batch because
-            // the delete step re-derives from the FULL fold after).
-            def effective(asOfAdds: Boolean) = {
-              val haveAdds =
-                hasBatchData(fs, edgesDir)
-              val haveDels =
-                hasBatchData(fs, delsDir)
-              val empty = adds.limit(0)
-                .select(col("start_id"), col("end_id"),
-                  lit(-1L).as("_b"), lit(0).as("_o"))
-              val delRows =
-                if (!haveDels) empty
-                else if (asOfAdds) store(delsDir, 0)
-                  .filter(col("_b") =!= batchId)
-                else store(delsDir, 0)
-              (if (haveAdds) store(edgesDir, 1) else empty)
-                .unionByName(delRows)
-                .groupBy("start_id", "end_id")
-                .agg(max(struct(col("_b"), (lit(1) - col("_o")).as("_d"),
-                  col("_o"))).as("_m"))
-                .filter(col("_m._o") === 1)
-                .select("start_id", "end_id")
-            }
-            val sMark =
-              new org.apache.hadoop.fs.Path(s"$labelsDir/_SUCCESS")
-            val labels =
-              if (fs.exists(sMark)) {
-                val prev = spark.read.parquet(labelsDir)
-                val l1 =
-                  if (adds.isEmpty) prev
-                  else graft.operators.GraphOps.incrementalCommunities(
-                    effective(asOfAdds = true), adds, prev,
-                    rounds = rounds, hops = hops)
-                if (nDels == 0L) l1
-                else graft.operators.GraphOps.decrementalCommunities(
-                  effective(asOfAdds = false), dels, l1,
-                  rounds = rounds)
-              } else
-                graft.operators.GraphOps.louvain(
-                  effective(asOfAdds = false), rounds = rounds,
-                  schedule = "g" * rounds)
-            labels.localCheckpoint()
-              .write.mode("overwrite").parquet(labelsDir)
-            fs.mkdirs(marker): Unit
-          }
-        }
-      }
-      .start()
+      hops: Int = 2): StreamingQuery =
+    markerGuarded(events, checkpointDir, edgesDir,
+        "streamingCommunitiesCdc", Seq(edgesDir, delsDir))(
+        withOp(opCol, edgeCols)) { (b, t) =>
+      val (adds, dels) = split(b, edgeCols)
+      val hasAdds = t.record(adds, edgesDir)
+      val hasDels = t.record(dels, delsDir)
+      // `asOfAdds` drops the CURRENT batch's deletes from the fold —
+      // the effective set the add step lands in (del still beats add
+      // within one batch because the delete step re-derives from the
+      // FULL fold after)
+      def effective(asOfAdds: Boolean) = setFold(t, edgesDir, delsDir,
+        edgeCols, adds.limit(0),
+        if (asOfAdds) col("_o") === 1 || col("_b") =!= t.batchId
+        else lit(true))
+      replace((
+        if (t.built(labelsDir) && !t.midCrash) {
+          val prev = t.spark.read.parquet(labelsDir)
+          val l1 =
+            if (!hasAdds) prev
+            else GraphOps.incrementalCommunities(effective(asOfAdds = true),
+              adds, prev, rounds = rounds, hops = hops)
+          if (!hasDels) l1
+          else GraphOps.decrementalCommunities(effective(asOfAdds = false),
+            dels, l1, rounds = rounds)
+        } else GraphOps.louvain(effective(asOfAdds = false),
+          rounds = rounds, schedule = "g" * rounds)) -> labelsDir)
+    }
 
   /** Message-passing feature store under a CDC edge stream — the
     * streaming twin of [[graft.operators.GraphOps.maintainNeighborAgg]],
     * and the simplest CDC twin in the grid because the batch primitive
     * already takes adds and deletes through ONE signature (the
     * locality theorem has no add/delete asymmetry): each trigger folds
-    * the two batchId-keyed op stores latest-wins (the
+    * the two batchId-keyed op stores with [[setFold]] (the
     * [[streamingSccCdc]] discipline — same-batch del beats add,
     * re-adds resurrect) and hands the primitive the effective edge
     * set as ground truth plus the WHOLE batch (adds ∪ dels) as the
@@ -1649,78 +1420,60 @@ object StreamingIngest {
     * static base-feature frame (ground truth, re-read per trigger by
     * reference). Cold start = one full run.
     *
+    * Exactly-once via [[markerGuarded]], markers under `edgesDir`. The
+    * maintain step recomputes the changed neighborhoods from the op
+    * stores alone, so a mid-crash redelivery re-runs it unchanged.
+    *
     * Scale notes (100 TB): per trigger, one latest-wins fold over the
     * op stores plus the primitive's change-neighborhood-sized work;
     * the stored aggregate frame is overwritten whole (node-sized, not
-    * edge-sized); per-batchId markers make redelivery a no-op. */
+    * edge-sized). */
   def streamingNeighborAgg(events: DataFrame, features: DataFrame,
       edgesDir: String, delsDir: String, aggDir: String,
       checkpointDir: String, idCol: String, featCols: Seq[String],
       rounds: Int = 1, direction: String = "in", agg: String = "sum",
-      opCol: String = "op"): org.apache.spark.sql.streaming.StreamingQuery =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col("start_id"), col("end_id")).localCheckpoint()
-        if (!b.isEmpty) {
-          // markers live under the op store — the aggregate store's
-          // whole-directory overwrite would wipe them
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$edgesDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(marker)) {
-            val adds = b.filter(col("_op") === "add")
-              .select("start_id", "end_id").localCheckpoint()
-            val dels = b.filter(col("_op") === "del")
-              .select("start_id", "end_id").localCheckpoint()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$edgesDir/batch=$batchId")
-            if (!dels.isEmpty)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            def store(dir: String, op: Int) =
-              spark.read.parquet(dir).select(col("start_id"),
-                col("end_id"), col("batch").cast("long").as("_b"),
-                lit(op).as("_o"))
-            val haveAdds =
-              hasBatchData(fs, edgesDir)
-            val haveDels =
-              hasBatchData(fs, delsDir)
-            val empty = adds.limit(0)
-              .select(col("start_id"), col("end_id"),
-                lit(-1L).as("_b"), lit(0).as("_o"))
-            val effective = (if (haveAdds) store(edgesDir, 1) else empty)
-              .unionByName(if (haveDels) store(delsDir, 0) else empty)
-              .groupBy("start_id", "end_id")
-              .agg(max(struct(col("_b"), (lit(1) - col("_o")).as("_d"),
-                col("_o"))).as("_m"))
-              .filter(col("_m._o") === 1)
-              .select("start_id", "end_id")
-              .localCheckpoint()
-            val sMark =
-              new org.apache.hadoop.fs.Path(s"$aggDir/_SUCCESS")
-            val changed = adds.unionByName(dels)
-            val next =
-              if (fs.exists(sMark))
-                graft.operators.GraphOps.maintainNeighborAgg(effective,
-                  changed, features, spark.read.parquet(aggDir),
-                  idCol, featCols, rounds, direction, agg)
-              else
-                graft.operators.GraphOps.neighborAgg(effective,
-                  features, idCol, featCols, rounds, direction, agg)
-            next.localCheckpoint()
-              .write.mode("overwrite").parquet(aggDir)
-            fs.mkdirs(marker): Unit
-          }
-        }
-      }
-      .start()
+      opCol: String = "op"): StreamingQuery =
+    markerGuarded(events, checkpointDir, edgesDir, "streamingNeighborAgg",
+        Seq(edgesDir, delsDir))(withOp(opCol, edgeCols)) { (b, t) =>
+      val (adds, dels) = split(b, edgeCols)
+      t.record(adds, edgesDir): Unit
+      t.record(dels, delsDir): Unit
+      val effective = setFold(t, edgesDir, delsDir, edgeCols, adds.limit(0))
+        .localCheckpoint()
+      replace((
+        if (t.built(aggDir))
+          GraphOps.maintainNeighborAgg(effective, adds.unionByName(dels),
+            features, t.spark.read.parquet(aggDir), idCol, featCols, rounds,
+            direction, agg)
+        else GraphOps.neighborAgg(effective, features, idCol, featCols,
+          rounds, direction, agg)) -> aggDir)
+    }
 
+  /** Incremental SCC maintenance on edge arrivals — the
+    * [[streamingCommunities]] loop over
+    * [[graft.operators.GraphOps.incrementalScc]], with one crucial
+    * upgrade: the incremental step is EXACT (append-only edges only
+    * merge SCCs — see the primitive's theorem note), so the stored
+    * labels are bit-equal to a full recompute after every trigger,
+    * not a local approximation needing periodic consolidation.
+    *
+    * Two parquet stores ARE the state: (`id`, `scc`) labels and the
+    * (`src_scc`, `dst_scc`) condensation — the quotient store is what
+    * makes each trigger condensation-sized + delta-sized instead of
+    * corpus-sized: after the cold-start batch (full
+    * [[graft.operators.GraphOps.stronglyConnectedComponents]] over the
+    * accumulated store), the accumulated edge table is NEVER re-read;
+    * the append to `edgesDir` is durability only (cold restart,
+    * audits). At-least-once batch redelivery is absorbed twice over:
+    * the quotient union runs `distinct`, and re-applying an already
+    * merged delta is a fixpoint (SCCs only merge once).
+    *
+    * Both stores localCheckpoint before either overwrite — the
+    * incremental plan reads the same parquet paths it replaces.
+    *
+    * The edge append writes loose parquet files into `edgesDir`, so
+    * [[streamingSccCdc]] refuses that directory until its files move
+    * into a `batch=-1/` subdirectory. */
   def streamingScc(edges: DataFrame, edgesDir: String,
       labelsDir: String, quotientDir: String, checkpointDir: String,
       maxRounds: Int = 20,
@@ -1759,6 +1512,53 @@ object StreamingIngest {
       }
       .start()
 
+  /** The body the lexical, trigram-LM, word-store and PCA-moment twins
+    * share: a per-id CDC stream of (`idCol`, `payloadCol`) rows kept in
+    * two op stores (`docsDir/batch=`, `delsDir/batch=`) under
+    * [[markerGuarded]], markers under `docsDir`, and one maintained
+    * store whose `_SUCCESS` lives under `builtDir`.
+    *
+    * Fold contract (the CDC-grid standard, [[latestWinsFold]]): a doc
+    * is live iff its latest add batch is strictly newer than its
+    * latest takedown — a same-batch takedown beats the add, re-sending
+    * a live id REPLACES its content, and a LATER re-add of a taken-down
+    * id resurrects it with its new content (erasure means erased).
+    * Same-trigger duplicate adds fold to one deterministic row.
+    *
+    * Each trigger runs `maintain(load(), adds, dels, leaving)` on the
+    * stored state and `save`s the result. `leaving` yields the rows
+    * that leave the store — takedowns and the old rows of live
+    * re-adds — recovered from the op-store fold AS OF THE PREVIOUS
+    * BATCH, since a store that keeps no per-document rows cannot
+    * subtract what it cannot see; it is computed only when a twin asks
+    * for it. `maintain` READS the store `save` then overwrites, so it
+    * is not idempotent: a cold start and a mid-crash redelivery both
+    * `build` from the fold of every batch instead. */
+  private def maintainedDocStore[S](events: DataFrame, docsDir: String,
+      delsDir: String, builtDir: String, checkpointDir: String,
+      idCol: String, payloadCol: String, opCol: String, who: String)(
+      load: SparkSession => S,
+      maintain: (S, DataFrame, DataFrame, () => DataFrame) => S,
+      build: DataFrame => S, save: S => Unit): StreamingQuery =
+    markerGuarded(events, checkpointDir, docsDir, who,
+        Seq(docsDir, delsDir))(withOp(opCol, Seq(idCol, payloadCol))) {
+      (b, t) =>
+        val (adds, dels) = idOps(b, idCol, Seq(payloadCol))
+        t.record(adds, docsDir): Unit
+        t.record(dels, delsDir): Unit
+        def live(limit: Long) = latestWinsFold(t, docsDir, Some(delsDir),
+          idCol, Seq(payloadCol), adds.limit(0), limit)
+        save(
+          if (t.built(builtDir) && !t.midCrash) {
+            // this trigger's own writes are excluded by the < filter
+            lazy val leaving = live(t.batchId)
+              .join(broadcast(dels.unionByName(adds.select(col(idCol)))
+                .distinct()), Seq(idCol), "left_semi")
+              .localCheckpoint()
+            maintain(load(t.spark), adds, dels, () => leaving)
+          } else build(live(Long.MaxValue)))
+    }
+
   /** Lexical (BM25/TF-IDF) index maintenance under a CDC document
     * stream — adds AND takedowns interleaved, the serving-store twin
     * that completes the lexical tier's CDC story (every other store —
@@ -1772,22 +1572,11 @@ object StreamingIngest {
     * to a full [[graft.operators.Relevance.buildLexIndex]] over the
     * EFFECTIVE corpus.
     *
-    * Fold contract (the CDC-grid standard): a doc is live iff its
-    * latest add batch is strictly newer than its latest takedown —
-    * a same-batch takedown beats the add (`maintainLexIndex` alone
-    * would let adds win, so the trigger subtracts same-batch del ids
-    * from the adds first), re-sending a live id REPLACES its content,
-    * and a LATER re-add of a taken-down id resurrects it with its new
-    * text (erasure means erased — the old postings never return).
-    * Same-trigger duplicate adds fold to one deterministic row.
-    *
-    * Ground truth = two batchId-keyed op stores (`docsDir/batch=`,
-    * `delsDir/batch=`; idempotent overwrites, layout-guarded, marker
-    * tree under the docs op store). The maintain step READS the
-    * serving layout it then overwrites, so it is NOT idempotent
-    * across a mid-batch crash — the two-phase `started`/final marker
-    * ([[streamingIntervalsCdc]]'s discipline) routes a crash
-    * redelivery to a cold rebuild from the reconciled fold instead.
+    * The fold, op stores and crash handling are
+    * [[maintainedDocStore]]'s. `maintainLexIndex` alone would let adds
+    * win, so the same-batch takedowns leave the adds first; the index
+    * keeps per-document postings, so it takes the takedown ids, never
+    * the leaving text.
     *
     * Scale notes (100 TB): per trigger the corpus-scale posting store
     * is scanned once inside `maintainLexIndex` (broadcast anti/semi
@@ -1800,69 +1589,15 @@ object StreamingIngest {
   def streamingLexIndex(events: DataFrame, docsDir: String,
       delsDir: String, indexDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      opCol: String = "op")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val layoutChecked =
-      new java.util.concurrent.atomic.AtomicBoolean(false)
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col(idCol), col(textCol)).localCheckpoint()
-        if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$docsDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true)) {
-            requireBatchLayout(fs, docsDir, "streamingLexIndex")
-            requireBatchLayout(fs, delsDir, "streamingLexIndex")
-          }
-          if (!fs.exists(marker)) {
-            val started = new org.apache.hadoop.fs.Path(
-              s"$docsDir/_batches/$batchId.started")
-            val midCrash = fs.exists(started)
-            if (!midCrash) fs.mkdirs(started): Unit
-            val dels = b.filter(col("_op") === "del")
-              .select(col(idCol)).distinct().localCheckpoint()
-            // same-trigger duplicates fold; same-batch del beats add
-            val adds = b.filter(col("_op") === "add")
-              .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-              .join(dels, Seq(idCol), "left_anti")
-              .localCheckpoint()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$docsDir/batch=$batchId")
-            if (!dels.isEmpty)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            // reconciled ground truth: live docs = latest add strictly
-            // newer than the latest takedown, latest text wins
-            def liveDocs(): DataFrame = latestWinsFold(spark, fs,
-              docsDir, delsDir, idCol, Seq(textCol), adds.limit(0))
-            val sMark = new org.apache.hadoop.fs.Path(
-              s"$indexDir/docs/_SUCCESS")
-            val ix =
-              if (fs.exists(sMark) && !midCrash)
-                graft.operators.Relevance.maintainLexIndex(
-                  graft.operators.Relevance.loadLexIndex(spark,
-                    indexDir),
-                  adds, dels, idCol, textCol)
-              else
-                // cold start OR mid-crash redelivery: exact rebuild
-                // from the reconciled effective corpus
-                graft.operators.Relevance.buildLexIndex(liveDocs(),
-                  idCol, textCol)
-            graft.operators.Relevance.saveLexIndex(ix, indexDir)
-            fs.mkdirs(marker): Unit
-            fs.delete(started, true): Unit
-          }
-        }
-      }
-      .start()
-  }
+      opCol: String = "op"): StreamingQuery =
+    maintainedDocStore[Relevance.LexIndex](events, docsDir, delsDir,
+        s"$indexDir/docs", checkpointDir, idCol, textCol, opCol,
+        "streamingLexIndex")(
+      Relevance.loadLexIndex(_, indexDir),
+      (ix, adds, dels, _) =>
+        Relevance.maintainLexIndex(ix, adds, dels, idCol, textCol),
+      Relevance.buildLexIndex(_, idCol, textCol),
+      Relevance.saveLexIndex(_, indexDir))
 
   /** Trigram-LM count-store maintenance under a CDC document stream —
     * the n-gram model's serving-store twin (the [[streamingLexIndex]]
@@ -1876,24 +1611,14 @@ object StreamingIngest {
     * [[graft.operators.Relevance.buildTrigramLm]] over the EFFECTIVE
     * corpus.
     *
-    * Fold contract (the CDC-grid standard): a doc is live iff its
-    * latest add batch is strictly newer than its latest takedown (a
-    * same-batch takedown beats the add), re-sending a live id REPLACES
-    * its content, a later re-add resurrects. The store keeps no
-    * per-document rows, so the erasure path recovers each leaving
-    * doc's text from the OP-STORE FOLD AS OF THE PREVIOUS BATCH
-    * (ground truth is still on disk at takedown time — exactly the
+    * The fold, op stores and crash handling are
+    * [[maintainedDocStore]]'s. The store keeps no per-document rows, so
+    * the erasure path takes each leaving doc's text from the op-store
+    * fold as of the previous batch (ground truth is still on disk at
+    * takedown time — exactly the
     * [[graft.operators.Relevance.maintainTrigramLm]] contract); live
     * re-adds ship their old rows the same way, so the maintain call's
     * clash guard never fires from this twin.
-    *
-    * Ground truth = two batchId-keyed op stores (`docsDir/batch=`,
-    * `delsDir/batch=`; idempotent overwrites, layout-guarded, marker
-    * tree under the docs op store). The maintain step READS the
-    * serving layout it then overwrites, so a mid-batch crash
-    * redelivery routes to a cold rebuild from the reconciled fold via
-    * the two-phase `started`/final marker
-    * ([[streamingIntervalsCdc]]'s discipline).
     *
     * Scale notes (100 TB): per trigger the model-scale count store is
     * read once inside `maintainTrigramLm` (two vocabulary-bounded
@@ -1906,78 +1631,15 @@ object StreamingIngest {
   def streamingTrigramLm(events: DataFrame, docsDir: String,
       delsDir: String, lmDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      opCol: String = "op")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val layoutChecked =
-      new java.util.concurrent.atomic.AtomicBoolean(false)
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col(idCol), col(textCol)).localCheckpoint()
-        if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$docsDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true)) {
-            requireBatchLayout(fs, docsDir, "streamingTrigramLm")
-            requireBatchLayout(fs, delsDir, "streamingTrigramLm")
-          }
-          if (!fs.exists(marker)) {
-            val started = new org.apache.hadoop.fs.Path(
-              s"$docsDir/_batches/$batchId.started")
-            val midCrash = fs.exists(started)
-            if (!midCrash) fs.mkdirs(started): Unit
-            val dels = b.filter(col("_op") === "del")
-              .select(col(idCol)).distinct().localCheckpoint()
-            // same-trigger duplicates fold; same-batch del beats add
-            val adds = b.filter(col("_op") === "add")
-              .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-              .join(dels, Seq(idCol), "left_anti")
-              .localCheckpoint()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$docsDir/batch=$batchId")
-            if (!dels.isEmpty)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            // reconciled ground truth (optionally only batches BEFORE
-            // `limit` — the erasure path's prev-live lookup): live =
-            // latest add strictly newer than the latest takedown
-            def liveDocs(limit: Long = Long.MaxValue): DataFrame =
-              latestWinsFold(spark, fs, docsDir, delsDir, idCol,
-                Seq(textCol), adds.limit(0), limit)
-            val sMark = new org.apache.hadoop.fs.Path(
-              s"$lmDir/model/_SUCCESS")
-            val lm =
-              if (fs.exists(sMark) && !midCrash) {
-                // leaving text (takedowns + old rows of live re-adds)
-                // from the fold as of the PREVIOUS batch — this
-                // trigger's own writes are excluded by the < filter
-                val changed = dels
-                  .unionByName(adds.select(col(idCol))).distinct()
-                val leaving = liveDocs(batchId)
-                  .join(broadcast(changed), Seq(idCol), "left_semi")
-                  .localCheckpoint()
-                graft.operators.Relevance.maintainTrigramLm(
-                  graft.operators.Relevance.loadTrigramLm(spark, lmDir),
-                  adds, leaving, idCol, textCol)
-              } else
-                // cold start OR mid-crash redelivery: exact rebuild
-                // from the reconciled effective corpus
-                graft.operators.Relevance.buildTrigramLm(liveDocs(),
-                  idCol, textCol)
-            graft.operators.Relevance.saveTrigramLm(lm, lmDir)
-            fs.mkdirs(marker): Unit
-            fs.delete(started, true): Unit
-          }
-        }
-      }
-      .start()
-  }
+      opCol: String = "op"): StreamingQuery =
+    maintainedDocStore[Relevance.TrigramLm](events, docsDir, delsDir,
+        s"$lmDir/model", checkpointDir, idCol, textCol, opCol,
+        "streamingTrigramLm")(
+      Relevance.loadTrigramLm(_, lmDir),
+      (lm, adds, _, leaving) =>
+        Relevance.maintainTrigramLm(lm, adds, leaving(), idCol, textCol),
+      Relevance.buildTrigramLm(_, idCol, textCol),
+      Relevance.saveTrigramLm(_, lmDir))
 
   /** Tokenizer word-store maintenance under a CDC document stream —
     * the [[streamingTrigramLm]] shape for
@@ -1989,77 +1651,22 @@ object StreamingIngest {
     * vocabulary re-induced from it — is bit-equal to a full
     * [[graft.operators.Tokenizer.buildWordStore]] over the effective
     * corpus. Fold contract, op stores, the prev-batch erasure-text
-    * recovery, and the two-phase crash marker are all the grid
-    * standard — see [[streamingTrigramLm]]; tokenizers retrain rarely,
-    * so in production this twin runs at a slow trigger and the
-    * re-induction runs on demand off the always-current table. */
+    * recovery, and crash handling are [[maintainedDocStore]]'s;
+    * tokenizers retrain rarely, so in production this twin runs at a
+    * slow trigger and the re-induction runs on demand off the
+    * always-current table. */
   def streamingWordStore(events: DataFrame, docsDir: String,
       delsDir: String, storeDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      opCol: String = "op")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val layoutChecked =
-      new java.util.concurrent.atomic.AtomicBoolean(false)
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col(idCol), col(textCol)).localCheckpoint()
-        if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$docsDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true)) {
-            requireBatchLayout(fs, docsDir, "streamingWordStore")
-            requireBatchLayout(fs, delsDir, "streamingWordStore")
-          }
-          if (!fs.exists(marker)) {
-            val started = new org.apache.hadoop.fs.Path(
-              s"$docsDir/_batches/$batchId.started")
-            val midCrash = fs.exists(started)
-            if (!midCrash) fs.mkdirs(started): Unit
-            val dels = b.filter(col("_op") === "del")
-              .select(col(idCol)).distinct().localCheckpoint()
-            val adds = b.filter(col("_op") === "add")
-              .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-              .join(dels, Seq(idCol), "left_anti")
-              .localCheckpoint()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$docsDir/batch=$batchId")
-            if (!dels.isEmpty)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            def liveDocs(limit: Long = Long.MaxValue): DataFrame =
-              latestWinsFold(spark, fs, docsDir, delsDir, idCol,
-                Seq(textCol), adds.limit(0), limit)
-            val sMark = new org.apache.hadoop.fs.Path(
-              s"$storeDir/words/_SUCCESS")
-            val st =
-              if (fs.exists(sMark) && !midCrash) {
-                val changed = dels
-                  .unionByName(adds.select(col(idCol))).distinct()
-                val leaving = liveDocs(batchId)
-                  .join(broadcast(changed), Seq(idCol), "left_semi")
-                  .localCheckpoint()
-                graft.operators.Tokenizer.maintainWordStore(
-                  graft.operators.Tokenizer.loadWordStore(spark,
-                    storeDir),
-                  adds, leaving, idCol, textCol)
-              } else
-                graft.operators.Tokenizer.buildWordStore(liveDocs(),
-                  idCol, textCol)
-            graft.operators.Tokenizer.saveWordStore(st, storeDir)
-            fs.mkdirs(marker): Unit
-            fs.delete(started, true): Unit
-          }
-        }
-      }
-      .start()
-  }
+      opCol: String = "op"): StreamingQuery =
+    maintainedDocStore[Tokenizer.WordStore](events, docsDir, delsDir,
+        s"$storeDir/words", checkpointDir, idCol, textCol, opCol,
+        "streamingWordStore")(
+      Tokenizer.loadWordStore(_, storeDir),
+      (st, adds, _, leaving) =>
+        Tokenizer.maintainWordStore(st, adds, leaving(), idCol, textCol),
+      Tokenizer.buildWordStore(_, idCol, textCol),
+      Tokenizer.saveWordStore(_, storeDir))
 
   /** PCA-moment maintenance under a CDC embedding stream — the
     * [[streamingWordStore]] shape for
@@ -2074,106 +1681,22 @@ object StreamingIngest {
     * — are bit-equal to a one-shot
     * [[graft.operators.Similarity.pcaMoments]] over the effective
     * corpus. Fold contract, op stores, prev-batch erasure-vector
-    * recovery, and the two-phase crash marker are the grid standard
-    * (see [[streamingTrigramLm]]); rotations refit rarely, so this
-    * twin runs at a slow trigger and the refit runs on demand off the
-    * always-current table. */
+    * recovery, and crash handling are [[maintainedDocStore]]'s;
+    * rotations refit rarely, so this twin runs at a slow trigger and
+    * the refit runs on demand off the always-current table. */
   def streamingPcaMoments(events: DataFrame, docsDir: String,
       delsDir: String, storeDir: String, checkpointDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      opCol: String = "op")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val layoutChecked =
-      new java.util.concurrent.atomic.AtomicBoolean(false)
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col(idCol), col(vecCol)).localCheckpoint()
-        if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$docsDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true)) {
-            requireBatchLayout(fs, docsDir, "streamingPcaMoments")
-            requireBatchLayout(fs, delsDir, "streamingPcaMoments")
-          }
-          if (!fs.exists(marker)) {
-            val started = new org.apache.hadoop.fs.Path(
-              s"$docsDir/_batches/$batchId.started")
-            val midCrash = fs.exists(started)
-            if (!midCrash) fs.mkdirs(started): Unit
-            val dels = b.filter(col("_op") === "del")
-              .select(col(idCol)).distinct().localCheckpoint()
-            val adds = b.filter(col("_op") === "add")
-              .groupBy(col(idCol)).agg(max(col(vecCol)).as(vecCol))
-              .join(dels, Seq(idCol), "left_anti")
-              .localCheckpoint()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$docsDir/batch=$batchId")
-            if (!dels.isEmpty)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            def liveVecs(limit: Long = Long.MaxValue): DataFrame =
-              latestWinsFold(spark, fs, docsDir, delsDir, idCol,
-                Seq(vecCol), adds.limit(0), limit)
-            val sMark = new org.apache.hadoop.fs.Path(
-              s"$storeDir/moments/_SUCCESS")
-            val st =
-              if (fs.exists(sMark) && !midCrash) {
-                val changed = dels
-                  .unionByName(adds.select(col(idCol))).distinct()
-                val leaving = liveVecs(batchId)
-                  .join(broadcast(changed), Seq(idCol), "left_semi")
-                  .localCheckpoint()
-                graft.operators.Similarity.maintainPcaMoments(
-                  graft.operators.Similarity.loadMomentsStore(spark,
-                    storeDir),
-                  adds, leaving, idCol, vecCol)
-              } else
-                graft.operators.Similarity.buildMomentsStore(
-                  liveVecs(), idCol, vecCol)
-            graft.operators.Similarity.saveMomentsStore(st, storeDir)
-            fs.mkdirs(marker): Unit
-            fs.delete(started, true): Unit
-          }
-        }
-      }
-      .start()
-  }
+      opCol: String = "op"): StreamingQuery =
+    maintainedDocStore[Similarity.MomentsStore](events, docsDir, delsDir,
+        s"$storeDir/moments", checkpointDir, idCol, vecCol, opCol,
+        "streamingPcaMoments")(
+      Similarity.loadMomentsStore(_, storeDir),
+      (st, adds, _, leaving) =>
+        Similarity.maintainPcaMoments(st, adds, leaving(), idCol, vecCol),
+      Similarity.buildMomentsStore(_, idCol, vecCol),
+      Similarity.saveMomentsStore(_, storeDir))
 
-  /** Streaming ANN SEARCH off the maintained index — the QUERY side of
-    * the retrieval lifecycle's streaming story (the ingest side is
-    * [[streamingAnnCdc]]): query vectors arrive as a stream, and each
-    * trigger serves its batch through ONE
-    * [[graft.operators.Similarity.serveTopK]] pass against the index
-    * AS OF THE TRIGGER — loadIndex re-reads the layout every batch
-    * and the shared serving body honors the store's BASIS and CODEC
-    * identities (rotation record, residual encoding), so results
-    * track maintenance (updates, deletes via the tombstone anti-join,
-    * compaction, retrains, rotated/residual eras) with snapshot
-    * semantics: a trigger's results equal the batch query against the
-    * index state it loaded, bit for bit.
-    *
-    * Results land batchId-keyed (`outDir/batch=<id>`, idempotent
-    * overwrite), so a redelivered batch rewrites its own directory —
-    * no marker tree needed (search is read-only on the index).
-    *
-    * Single-writer interplay (COVERAGE.md contract): the trigger READS
-    * the index layout a maintenance writer may overwrite — run search
-    * triggers interleaved with maintenance under the same scheduler
-    * (the streaming runtime serializes foreachBatch bodies per query;
-    * across queries, point search at a snapshot copy or pause
-    * maintenance), exactly the discipline the bench fixtures follow.
-    *
-    * Scale notes (100 TB): per trigger the probed-cells join prunes
-    * the partitioned `vectors/` store to nProbe of k directories;
-    * queries are batch-sized and broadcast against them; the float
-    * corpus never ships (ADC on codes). */
   /** Daily-increment near-dedup under a STREAM of new documents — the
     * [[graft.operators.Dedup.SigIndex]]'s CDC twin, the last serving
     * store to join the maintained grid (it rolled forward batch-only
@@ -2188,15 +1711,16 @@ object StreamingIngest {
     * every completed trigger the store equals the batch-mode
     * increment fold applied in batch order, and its signatures equal
     * a fresh signing of the live corpus (the spec asserts both).
+    * Same-batch duplicate ids fold deterministically (max text — the
+    * CDC fold), matching the one-id-space corpus contract.
     *
-    * Exactly-once via the two-phase marker (the grid standard under
-    * `storeDir/_batches/`): final marker → no-op redelivery;
-    * `started` without final = crash mid-batch, where the sigs store
-    * may hold a PARTIAL roll-forward that would poison candidate
-    * generation (this batch's ids already banded as "old") — the
-    * trigger self-heals by RE-SIGNING the ground-truth corpus
-    * (batches before this one) under the stored identity and
-    * overwriting the store, then re-running the increment cleanly.
+    * Exactly-once via [[markerGuarded]], markers under `storeDir`. On
+    * a mid-crash redelivery the sigs store may hold a PARTIAL
+    * roll-forward that would poison candidate generation (this batch's
+    * ids already banded as "old"), so the trigger self-heals by
+    * RE-SIGNING the ground-truth corpus (batches before this one)
+    * under the stored identity and overwriting the store, then
+    * re-running the increment cleanly.
     *
     * Caller seeds `docsDir/batch=-1/` with the base corpus and
     * [[graft.operators.Dedup.saveSigIndex]]es its signatures once.
@@ -2210,78 +1734,45 @@ object StreamingIngest {
       storeDir: String, reportDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bands: Int = 4,
-      maxBucketSize: Int = 1000)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val layoutChecked =
-      new java.util.concurrent.atomic.AtomicBoolean(false)
-    newDocs
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.Dedup
-        // same-batch duplicate ids fold deterministically (max text —
-        // the CDC fold), matching the one-id-space corpus contract
-        val b = batch.select(col(idCol), col(textCol))
-          .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-          .localCheckpoint()
-        if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$storeDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true))
-            requireBatchLayout(fs, docsDir, "streamingSigIndexDedup")
-          if (!fs.exists(marker)) {
-            val started = new org.apache.hadoop.fs.Path(
-              s"$storeDir/_batches/$batchId.started")
-            val midCrash = fs.exists(started)
-            if (!midCrash) fs.mkdirs(started): Unit
-            def sign(ix: Dedup.SigIndex, docs: DataFrame): DataFrame =
-              if (ix.portable)
-                Dedup.minhashSignaturesPortable(docs, textCol, idCol,
-                  ix.numHashes, ix.shingleSize, ix.seed)
-              else Dedup.minhashSignatures(docs, textCol, idCol,
-                ix.numHashes, ix.shingleSize)
-            def corpusBefore(): DataFrame = spark.read.parquet(docsDir)
-              .filter(col("batch").cast("long") < batchId)
-              .select(col(idCol), col(textCol))
-            if (midCrash) {
-              // restore the store to the pre-batch state from ground
-              // truth: the identity rides the meta, the signatures
-              // re-derive from the completed batches only
-              val ix0 = Dedup.loadSigIndex(spark, storeDir)
-              Dedup.saveSigIndex(
-                ix0.copy(sigs = sign(ix0, corpusBefore())), storeDir)
-            }
-            val ix = Dedup.loadSigIndex(spark, storeDir)
-            val corpus = corpusBefore().localCheckpoint()
-            val rep = Dedup.incrementalDedupFromIndex(ix, corpus, b,
-                textCol, idCol, threshold, bands, maxBucketSize)
-              .localCheckpoint()
-            rep.write.mode("overwrite")
-              .parquet(s"$reportDir/batch=$batchId")
-            val kept = b.join(rep.filter(col("reason") === "kept")
-                .select(col("doc_id").as(idCol)), Seq(idCol))
-              .localCheckpoint()
-            if (!kept.isEmpty) {
-              kept.write.mode("overwrite")
-                .parquet(s"$docsDir/batch=$batchId")
-              // roll forward: the kept docs' signatures (derived
-              // under the store identity) union onto the store —
-              // saveSigIndex's localCheckpoint pins the union before
-              // the overwrite touches the files it read
-              Dedup.saveSigIndex(
-                ix.copy(sigs = ix.sigs.unionByName(sign(ix, kept))),
-                storeDir)
-            }
-            fs.mkdirs(marker): Unit
-            fs.delete(started, true): Unit
-          }
+      maxBucketSize: Int = 1000): StreamingQuery =
+    markerGuarded(newDocs, checkpointDir, storeDir,
+        "streamingSigIndexDedup", Seq(docsDir, reportDir))(
+        _.groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))) {
+      (b, t) =>
+        def sign(ix: Dedup.SigIndex, docs: DataFrame): DataFrame =
+          if (ix.portable)
+            Dedup.minhashSignaturesPortable(docs, textCol, idCol,
+              ix.numHashes, ix.shingleSize, ix.seed)
+          else Dedup.minhashSignatures(docs, textCol, idCol,
+            ix.numHashes, ix.shingleSize)
+        def corpusBefore(): DataFrame = t.spark.read.parquet(docsDir)
+          .filter(col("batch").cast("long") < t.batchId)
+          .select(col(idCol), col(textCol))
+        if (t.midCrash) {
+          // restore the store to the pre-batch state from ground truth:
+          // the identity rides the meta, the signatures re-derive from
+          // the completed batches only
+          val ix0 = Dedup.loadSigIndex(t.spark, storeDir)
+          Dedup.saveSigIndex(
+            ix0.copy(sigs = sign(ix0, corpusBefore())), storeDir)
         }
-      }
-      .start()
-  }
+        val ix = Dedup.loadSigIndex(t.spark, storeDir)
+        val rep = Dedup.incrementalDedupFromIndex(ix,
+            corpusBefore().localCheckpoint(), b, textCol, idCol, threshold,
+            bands, maxBucketSize)
+          .localCheckpoint()
+        t.record(rep, reportDir): Unit
+        val kept = b.join(rep.filter(col("reason") === "kept")
+            .select(col("doc_id").as(idCol)), Seq(idCol))
+          .localCheckpoint()
+        // roll forward: the kept docs' signatures (derived under the
+        // store identity) union onto the store — saveSigIndex's
+        // localCheckpoint pins the union before the overwrite touches
+        // the files it read
+        if (t.record(kept, docsDir))
+          Dedup.saveSigIndex(
+            ix.copy(sigs = ix.sigs.unionByName(sign(ix, kept))), storeDir)
+    }
 
   /** PageRank under a STREAM of edge deltas — the
     * [[graft.operators.GraphOps.RankStore]]'s CDC twin: each trigger
@@ -2361,6 +1852,34 @@ object StreamingIngest {
       .start()
   }
 
+  /** Streaming ANN SEARCH off the maintained index — the QUERY side of
+    * the retrieval lifecycle's streaming story (the ingest side is
+    * [[streamingAnnCdc]]): query vectors arrive as a stream, and each
+    * trigger serves its batch through ONE
+    * [[graft.operators.Similarity.serveTopK]] pass against the index
+    * AS OF THE TRIGGER — loadIndex re-reads the layout every batch
+    * and the shared serving body honors the store's BASIS and CODEC
+    * identities (rotation record, residual encoding), so results
+    * track maintenance (updates, deletes via the tombstone anti-join,
+    * compaction, retrains, rotated/residual eras) with snapshot
+    * semantics: a trigger's results equal the batch query against the
+    * index state it loaded, bit for bit.
+    *
+    * Results land batchId-keyed (`outDir/batch=<id>`, idempotent
+    * overwrite), so a redelivered batch rewrites its own directory —
+    * no marker tree needed (search is read-only on the index).
+    *
+    * Single-writer interplay (COVERAGE.md contract): the trigger READS
+    * the index layout a maintenance writer may overwrite — run search
+    * triggers interleaved with maintenance under the same scheduler
+    * (the streaming runtime serializes foreachBatch bodies per query;
+    * across queries, point search at a snapshot copy or pause
+    * maintenance), exactly the discipline the bench fixtures follow.
+    *
+    * Scale notes (100 TB): per trigger the probed-cells join prunes
+    * the partitioned `vectors/` store to nProbe of k directories;
+    * queries are batch-sized and broadcast against them; the float
+    * corpus never ships (ADC on codes). */
   def streamingAnnSearch(queries: DataFrame, indexDir: String,
       outDir: String, checkpointDir: String,
       vecCol: String = "embedding", idCol: String = "vec_id",
@@ -2394,18 +1913,17 @@ object StreamingIngest {
     * win — the grid fold; same-batch del beats the add).
     *
     * Contract: after every completed trigger the store's ROW SET
-    * equals the op-store fold's live rows, and [[graft.operators
-    * .Layout.prunedScan]] over it is lossless. Bucket ASSIGNMENT is
-    * anchor-history-dependent by design (the [[graft.operators
-    * .Layout.appendToLayout]] anchor-stability contract — appends
-    * never re-layout old files), so the store is content-equal, not
-    * file-equal, to a fresh build; a cold start or mid-crash
-    * redelivery re-anchors via a full
+    * equals the op-store fold's live rows ([[latestWinsFold]]), and
+    * [[graft.operators.Layout.prunedScan]] over it is lossless. Bucket
+    * ASSIGNMENT is anchor-history-dependent by design (the
+    * [[graft.operators.Layout.appendToLayout]] anchor-stability
+    * contract — appends never re-layout old files), so the store is
+    * content-equal, not file-equal, to a fresh build; a cold start or
+    * mid-crash redelivery re-anchors via a full
     * [[graft.operators.Layout.writeLayout]] rebuild from the fold
     * (re-clustering is always legal — it preserves row content and
-    * losslessness). The append step is NOT idempotent, so the
-    * two-phase started/final marker routes crash redeliveries to
-    * that rebuild.
+    * losslessness). The append step is NOT idempotent, which is why
+    * [[markerGuarded]]'s mid-crash redelivery takes that rebuild.
     *
     * Scale notes (100 TB): per trigger the delete probe scans the
     * store once (broadcast semi-join on change ids) and rewrites
@@ -2416,102 +1934,40 @@ object StreamingIngest {
       delsDir: String, storeDir: String, checkpointDir: String,
       cols: Seq[String], bits: Int, nBuckets: Int,
       idCol: String = "id", opCol: String = "op",
-      bloomCols: Seq[String] = Nil)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val layoutChecked =
-      new java.util.concurrent.atomic.AtomicBoolean(false)
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op") +:
-          col(idCol) +: cols.map(col): _*).localCheckpoint()
-        if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$addsDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true)) {
-            requireBatchLayout(fs, addsDir, "streamingLayout")
-            requireBatchLayout(fs, delsDir, "streamingLayout")
-          }
-          if (!fs.exists(marker)) {
-            val started = new org.apache.hadoop.fs.Path(
-              s"$addsDir/_batches/$batchId.started")
-            val midCrash = fs.exists(started)
-            if (!midCrash) fs.mkdirs(started): Unit
-            val dels = b.filter(col("_op") === "del")
-              .select(col(idCol)).distinct().localCheckpoint()
-            // same-trigger duplicates fold to one deterministic row;
-            // same-batch del beats add
-            val adds = b.filter(col("_op") === "add")
-              .groupBy(col(idCol))
-              .agg(max(struct(cols.map(col): _*)).as("_s"))
-              .select(col(idCol) +:
-                cols.map(c => col(s"_s.$c").as(c)): _*)
-              .join(dels, Seq(idCol), "left_anti")
-              .localCheckpoint()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$addsDir/batch=$batchId")
-            if (!dels.isEmpty)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            // reconciled live rows: latest add strictly newer than
-            // the latest takedown, latest values win
-            def liveRows(): DataFrame = latestWinsFold(spark, fs,
-              addsDir, delsDir, idCol, cols, adds.limit(0))
-            val sMark = new org.apache.hadoop.fs.Path(
-              s"$storeDir/_stats/_SUCCESS")
-            if (fs.exists(sMark) && !midCrash) {
-              // deletes first (takedowns + old rows of re-adds),
-              // then the delta appends under the original anchors
-              val changed = dels
-                .unionByName(adds.select(col(idCol))).distinct()
-              graft.operators.Layout.deleteFromLayout(spark, storeDir,
-                changed, idCol)
-              if (!adds.isEmpty) {
-                // a batch that emptied the whole store leaves no
-                // anchors to append under — re-anchor from the delta
-                if (spark.read.parquet(s"$storeDir/_stats").isEmpty) {
-                  fs.delete(new org.apache.hadoop.fs.Path(storeDir),
-                    true): Unit
-                  graft.operators.Layout.writeLayout(
-                    graft.operators.Layout.zOrderLayout(adds, cols,
-                      bits, nBuckets), storeDir, cols, "z", bits,
-                    nBuckets, bloomCols)
-                } else
-                  graft.operators.Layout.appendToLayout(spark,
-                    storeDir, adds, cols, bits, nBuckets)
-              }
-            } else {
-              // cold start OR mid-crash redelivery: re-anchor via a
-              // full rebuild from the reconciled fold. The old store
-              // clears UNCONDITIONALLY — if the live set is empty
-              // (e.g. the crashed batch took everything down),
-              // leaving the stale files would serve erased rows
-              // forever, since later triggers' change sets never
-              // name them again
-              val live = liveRows().localCheckpoint()
-              fs.delete(new org.apache.hadoop.fs.Path(storeDir),
-                true): Unit
-              if (!live.isEmpty)
-                // bloomCols ride every (re)build so a sketched store
-                // never silently loses its point-lookup column across
-                // a cold start or re-anchoring rebuild
-                graft.operators.Layout.writeLayout(
-                  graft.operators.Layout.zOrderLayout(live, cols,
-                    bits, nBuckets), storeDir, cols, "z", bits,
-                  nBuckets, bloomCols)
-            }
-            fs.mkdirs(marker): Unit
-            fs.delete(started, true): Unit
-          }
-        }
+      bloomCols: Seq[String] = Nil): StreamingQuery =
+    markerGuarded(events, checkpointDir, addsDir, "streamingLayout",
+        Seq(addsDir, delsDir))(withOp(opCol, idCol +: cols)) { (b, t) =>
+      val (adds, dels) = idOps(b, idCol, cols)
+      val hasAdds = t.record(adds, addsDir)
+      t.record(dels, delsDir): Unit
+      // re-anchor from `rows` alone. The old store clears
+      // UNCONDITIONALLY — if `rows` is empty (e.g. the crashed batch
+      // took everything down), leaving the stale files would serve
+      // erased rows forever, since later triggers' change sets never
+      // name them again. bloomCols ride every (re)build so a sketched
+      // store never silently loses its point-lookup column.
+      def rebuild(rows: DataFrame): Unit = {
+        t.fs.delete(new Path(storeDir), true): Unit
+        if (!rows.isEmpty)
+          Layout.writeLayout(Layout.zOrderLayout(rows, cols, bits,
+            nBuckets), storeDir, cols, "z", bits, nBuckets, bloomCols)
       }
-      .start()
-  }
+      if (t.built(s"$storeDir/_stats") && !t.midCrash) {
+        // deletes first (takedowns + old rows of re-adds), then the
+        // delta appends under the original anchors
+        Layout.deleteFromLayout(t.spark, storeDir,
+          dels.unionByName(adds.select(col(idCol))).distinct(), idCol)
+        // a batch that emptied the whole store leaves no anchors to
+        // append under — re-anchor from the delta
+        if (hasAdds) {
+          if (t.spark.read.parquet(s"$storeDir/_stats").isEmpty)
+            rebuild(adds)
+          else Layout.appendToLayout(t.spark, storeDir, adds, cols, bits,
+            nBuckets)
+        }
+      } else rebuild(latestWinsFold(t, addsDir, Some(delsDir), idCol,
+        cols, adds.limit(0)).localCheckpoint())
+    }
 
   /** Streaming CDC maintenance of a VERSIONED layout store — the
     * [[streamingLayout]] contract upgraded to snapshot isolation:
@@ -2526,15 +1982,15 @@ object StreamingIngest {
     * place).
     *
     * Crash recovery is MECHANICAL, not a rebuild (contrast
-    * [[streamingLayout]]'s cold-rebuild path): on a started-marker
+    * [[streamingLayout]]'s cold-rebuild path): on a mid-crash
     * redelivery the trigger runs
     * [[graft.operators.Layout.recoverLayoutVersions]] (uncommitted
     * residue rolls back — the pointer never moved) and simply
     * re-runs both ops, which are idempotent at the content level: a
     * delete whose ids are already gone publishes nothing, and a
     * delete-then-append of the same rows reproduces the same live
-    * content even when the crash fell between the two commits. The
-    * two-phase `_batches/` marker still gates reordering (a
+    * content even when the crash fell between the two commits.
+    * [[markerGuarded]]'s final marker still gates reordering (a
     * redelivered takedown must not erase a LATER trigger's re-add).
     * The store never needs re-anchoring: the normalization anchors
     * live in the immutable `_meta`, so even a trigger that empties
@@ -2551,70 +2007,25 @@ object StreamingIngest {
   def streamingLayoutVersioned(events: DataFrame, addsDir: String,
       delsDir: String, storeDir: String, checkpointDir: String,
       cols: Seq[String], bits: Int, nBuckets: Int,
-      idCol: String = "id", opCol: String = "op")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val layoutChecked =
-      new java.util.concurrent.atomic.AtomicBoolean(false)
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.Layout
-        val b = batch.select(col(opCol).cast("string").as("_op") +:
-          col(idCol) +: cols.map(col): _*).localCheckpoint()
-        if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$addsDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true)) {
-            requireBatchLayout(fs, addsDir, "streamingLayoutVersioned")
-            requireBatchLayout(fs, delsDir, "streamingLayoutVersioned")
-          }
-          if (!fs.exists(marker)) {
-            val started = new org.apache.hadoop.fs.Path(
-              s"$addsDir/_batches/$batchId.started")
-            if (fs.exists(started))
-              // mid-crash redelivery: drop uncommitted residue (the
-              // pointer never moved past a commit) and re-run — both
-              // ops below are content-idempotent
-              Layout.recoverLayoutVersions(spark, storeDir)
-            else fs.mkdirs(started): Unit
-            val dels = b.filter(col("_op") === "del")
-              .select(col(idCol)).distinct().localCheckpoint()
-            // same-trigger duplicates fold deterministically;
-            // same-batch del beats add (the grid fold)
-            val adds = b.filter(col("_op") === "add")
-              .groupBy(col(idCol))
-              .agg(max(struct(cols.map(col): _*)).as("_s"))
-              .select(col(idCol) +:
-                cols.map(c => col(s"_s.$c").as(c)): _*)
-              .join(dels, Seq(idCol), "left_anti")
-              .localCheckpoint()
-            if (!adds.isEmpty)
-              adds.write.mode("overwrite")
-                .parquet(s"$addsDir/batch=$batchId")
-            if (!dels.isEmpty)
-              dels.write.mode("overwrite")
-                .parquet(s"$delsDir/batch=$batchId")
-            // takedowns + the old rows of re-adds leave first, then
-            // the delta lands — tagged, so the commit chain records
-            // which batch produced each snapshot
-            val changed = dels
-              .unionByName(adds.select(col(idCol))).distinct()
-            Layout.deleteFromLayoutVersioned(spark, storeDir,
-              changed, idCol): Unit
-            if (!adds.isEmpty)
-              Layout.appendToLayoutVersioned(spark, storeDir, adds,
-                cols, bits, nBuckets, tag = s"b$batchId"): Unit
-            fs.mkdirs(marker): Unit
-            fs.delete(started, true): Unit
-          }
-        }
-      }
-      .start()
-  }
+      idCol: String = "id", opCol: String = "op"): StreamingQuery =
+    markerGuarded(events, checkpointDir, addsDir,
+        "streamingLayoutVersioned", Seq(addsDir, delsDir))(
+        withOp(opCol, idCol +: cols)) { (b, t) =>
+      // drop uncommitted residue (the pointer never moved past a
+      // commit) and re-run — both ops below are content-idempotent
+      if (t.midCrash) Layout.recoverLayoutVersions(t.spark, storeDir): Unit
+      val (adds, dels) = idOps(b, idCol, cols)
+      val hasAdds = t.record(adds, addsDir)
+      t.record(dels, delsDir): Unit
+      // takedowns + the old rows of re-adds leave first, then the delta
+      // lands — tagged, so the commit chain records which batch
+      // produced each snapshot
+      Layout.deleteFromLayoutVersioned(t.spark, storeDir,
+        dels.unionByName(adds.select(col(idCol))).distinct(), idCol): Unit
+      if (hasAdds)
+        Layout.appendToLayoutVersioned(t.spark, storeDir, adds, cols, bits,
+          nBuckets, tag = s"b${t.batchId}"): Unit
+    }
 
   /** Streaming span-level decontamination — the production shape of
     * [[graft.operators.Decontaminate.scrubContaminatedSpans]]: corpus
@@ -2629,22 +2040,20 @@ object StreamingIngest {
     *
     * After every completed trigger the clean store is bit-equal to
     * the batch `scrubContaminatedSpans(live docs, all bench rows)`:
-    * docs fold latest-wins per id (a re-sent id REPLACES its text
-    * and re-scrubs; same-trigger duplicates fold to one
-    * deterministic row first), while the bench store is a SET UNION
-    * of every eval row ever delivered (decontamination only grows —
-    * there is no benchmark-takedown path, and no doc-takedown either:
-    * erasure is the dedup twin's job).
+    * docs fold latest-wins per id ([[latestWinsFold]] without a
+    * takedown store — a re-sent id REPLACES its text and re-scrubs;
+    * same-trigger duplicates fold to one deterministic row first),
+    * while the bench store is a SET UNION of every eval row ever
+    * delivered (decontamination only grows — there is no
+    * benchmark-takedown path, and no doc-takedown either: erasure is
+    * the dedup twin's job).
     *
-    * Ground truth = two batchId-keyed op stores (`docsDir/batch=`,
-    * `benchDir/batch=`; idempotent overwrites, the
-    * [[streamingIntervals]] layout discipline, marker tree under the
-    * docs op store). The whole fold is IDEMPOTENT given the op
-    * stores — the clean-store rewrite replaces exactly the recomputed
-    * ids with rows that are functions of ground truth alone — so a
-    * crash between the clean-store overwrite and the marker
-    * redelivers into the identical state; no two-phase marker needed,
-    * unlike the absorb-based intervals twin.
+    * Ground truth = two op stores (`docsDir/batch=`, `benchDir/batch=`)
+    * under [[markerGuarded]], markers under `docsDir`. The whole fold
+    * is IDEMPOTENT given the op stores — the clean-store rewrite
+    * replaces exactly the recomputed ids with rows that are functions
+    * of ground truth alone — so a mid-crash redelivery re-runs it
+    * unchanged, unlike the absorb-based intervals twin.
     *
     * Scale notes (100 TB): an add-only trigger scrubs the DELTA docs
     * only, against broadcast bench shingle hashes (the
@@ -2658,92 +2067,47 @@ object StreamingIngest {
   def streamingDecontaminate(events: DataFrame, docsDir: String,
       benchDir: String, cleanDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      shingleSize: Int = 3, opCol: String = "op")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val layoutChecked =
-      new java.util.concurrent.atomic.AtomicBoolean(false)
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col(opCol).cast("string").as("_op"),
-          col(idCol), col(textCol)).localCheckpoint()
-        if (!b.isEmpty) {
-          val marker = new org.apache.hadoop.fs.Path(
-            s"$docsDir/_batches/$batchId")
-          val fs = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (layoutChecked.compareAndSet(false, true)) {
-            requireBatchLayout(fs, docsDir, "streamingDecontaminate")
-            requireBatchLayout(fs, benchDir, "streamingDecontaminate")
-          }
-          if (!fs.exists(marker)) {
-            // same-trigger duplicate doc ids fold to one deterministic
-            // row — a trigger batch has no client-visible row order
-            val docs = b.filter(col("_op") === "doc")
-              .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-              .localCheckpoint()
-            val bench = b.filter(col("_op") === "bench")
-              .select(col(idCol), col(textCol)).distinct()
-              .localCheckpoint()
-            if (!docs.isEmpty)
-              docs.write.mode("overwrite")
-                .parquet(s"$docsDir/batch=$batchId")
-            if (!bench.isEmpty)
-              bench.write.mode("overwrite")
-                .parquet(s"$benchDir/batch=$batchId")
-            // latest-wins doc ground truth (re-sent ids replace)
-            def liveDocs(): DataFrame =
-              if (hasBatchData(fs, docsDir)) {
-                val w = org.apache.spark.sql.expressions.Window
-                  .partitionBy(col(idCol))
-                  .orderBy(col("batch").cast("long").desc)
-                spark.read.parquet(docsDir)
-                  .withColumn("_rn", row_number().over(w))
-                  .filter(col("_rn") === 1)
-                  .select(col(idCol), col(textCol))
-              } else docs.limit(0)
-            val benchAll =
-              if (hasBatchData(fs, benchDir))
-                spark.read.parquet(benchDir)
-                  .select(col(idCol), col(textCol))
-              else bench.limit(0)
-            val sMark =
-              new org.apache.hadoop.fs.Path(s"$cleanDir/_SUCCESS")
-            val clean =
-              if (fs.exists(sMark)) {
-                val live = liveDocs().localCheckpoint()
-                // stored docs the NEW bench shingles touch: their
-                // clean text is stale — re-scrub from ground truth
-                // against the FULL bench store
-                val affected =
-                  if (bench.isEmpty) live.select(col(idCol)).limit(0)
-                  else graft.operators.Decontaminate
-                    .contaminationPairs(live, textCol, idCol, bench,
-                      textCol, idCol, shingleSize)
-                    .select(col("doc_id").as(idCol)).distinct()
-                val redo = docs.select(col(idCol))
-                  .unionByName(affected).distinct().localCheckpoint()
-                val rescrubbed = graft.operators.Decontaminate
-                  .scrubContaminatedSpans(
-                    live.join(broadcast(redo), Seq(idCol), "left_semi"),
-                    textCol, idCol, benchAll, textCol, shingleSize)
-                spark.read.parquet(cleanDir)
-                  .join(broadcast(redo), Seq(idCol), "left_anti")
-                  .select(col(idCol), col("clean_text"),
-                    col("n_tokens"), col("n_removed"))
-                  .unionByName(rescrubbed)
-              } else
-                graft.operators.Decontaminate.scrubContaminatedSpans(
-                  liveDocs(), textCol, idCol, benchAll, textCol,
-                  shingleSize)
-            clean.localCheckpoint()
-              .write.mode("overwrite").parquet(cleanDir)
-            fs.mkdirs(marker): Unit
-          }
-        }
-      }
-      .start()
-  }
+      shingleSize: Int = 3, opCol: String = "op"): StreamingQuery =
+    markerGuarded(events, checkpointDir, docsDir, "streamingDecontaminate",
+        Seq(docsDir, benchDir))(withOp(opCol, Seq(idCol, textCol))) {
+      (b, t) =>
+        // same-trigger duplicate doc ids fold to one deterministic row
+        // — a trigger batch has no client-visible row order
+        val docs = b.filter(col("_op") === "doc")
+          .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
+          .localCheckpoint()
+        val bench = b.filter(col("_op") === "bench")
+          .select(col(idCol), col(textCol)).distinct().localCheckpoint()
+        t.record(docs, docsDir): Unit
+        val hasBench = t.record(bench, benchDir)
+        def liveDocs() = latestWinsFold(t, docsDir, None, idCol,
+          Seq(textCol), docs.limit(0))
+        val benchAll =
+          if (t.hasData(benchDir))
+            t.spark.read.parquet(benchDir).select(col(idCol), col(textCol))
+          else bench.limit(0)
+        replace((
+          if (t.built(cleanDir)) {
+            val live = liveDocs().localCheckpoint()
+            // stored docs the NEW bench shingles touch: their clean text
+            // is stale — re-scrub from ground truth against the FULL
+            // bench store
+            val affected =
+              if (!hasBench) live.select(col(idCol)).limit(0)
+              else Decontaminate.contaminationPairs(live, textCol, idCol,
+                  bench, textCol, idCol, shingleSize)
+                .select(col("doc_id").as(idCol)).distinct()
+            val redo = docs.select(col(idCol))
+              .unionByName(affected).distinct().localCheckpoint()
+            val rescrubbed = Decontaminate.scrubContaminatedSpans(
+              live.join(broadcast(redo), Seq(idCol), "left_semi"),
+              textCol, idCol, benchAll, textCol, shingleSize)
+            t.spark.read.parquet(cleanDir)
+              .join(broadcast(redo), Seq(idCol), "left_anti")
+              .select(col(idCol), col("clean_text"), col("n_tokens"),
+                col("n_removed"))
+              .unionByName(rescrubbed)
+          } else Decontaminate.scrubContaminatedSpans(liveDocs(), textCol,
+            idCol, benchAll, textCol, shingleSize)) -> cleanDir)
+    }
 }
