@@ -268,12 +268,9 @@ private[graft] object AnalyzeMore {
       import graft.operators.GraphOps
       val rmEdges = spark.read.parquet(args.docs)
         .select("start_id", "end_id")
-      val rmFs = new org.apache.hadoop.fs.Path(args.target)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val rmCold = !rmFs.exists(
-        new org.apache.hadoop.fs.Path(s"${args.target}/meta"))
       val rmScores =
-        if (rmCold) {
+        if (graft.operators.FrameVersions.current(spark,
+            args.target) == 0L) {
           val d = args.thresholdOpt.getOrElse(0.85)
           val s0 = GraphOps.pageRank(rmEdges, d,
             if (args.budgetSet) args.budget.toInt else 10)
@@ -336,8 +333,8 @@ private[graft] object AnalyzeMore {
       // first run, identity persisted beside the signatures), --delta
       // <new batch dir> runs the increment; omitted --delta
       // builds OR REFRESHES the store — an existing index re-signs
-      // the CURRENT --docs under its own stored identity and
-      // overwrites, so docs appended to the corpus after the first
+      // the CURRENT --docs under its own stored identity and commits
+      // the next version, so docs appended to the corpus after the first
       // run can never silently miss signatures (the coverage half of
       // the silent-miss class the SigIndex closes for identity);
       // --shingle-size L and --hash-seed S apply at BUILD time only —
@@ -349,10 +346,8 @@ private[graft] object AnalyzeMore {
           "--threshold T (default 0.8), --shingle-size L, " +
           "--hash-seed S (build-time only)")
       val idCorpus = spark.read.parquet(args.docs)
-      val idMeta = new org.apache.hadoop.fs.Path(s"${args.target}/meta")
-      val idFs = idMeta
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val idExists = idFs.exists(idMeta)
+      val idExists = graft.operators.FrameVersions
+        .latest(spark, args.target).has("meta")
       val sigIx =
         if (idExists)
           graft.operators.Dedup.loadSigIndex(spark, args.target)
@@ -363,15 +358,16 @@ private[graft] object AnalyzeMore {
               args.shingleSize, args.hashSeed),
             numHashes = 16, shingleSize = args.shingleSize,
             seed = args.hashSeed, portable = true)
-          graft.operators.Dedup.saveSigIndex(built, args.target)
+          graft.operators.Dedup.saveSigIndex(built, args.target): Unit
           built
         }
       Some(
         if (args.delta.isEmpty) {
           // refresh: an existing store re-signs the CURRENT corpus
           // under its stored identity (seed/shingle/hash family ride
-          // the meta, not the argv) and overwrites — the first build
-          // above already covers the fresh-store case
+          // the meta, not the argv) and commits it as the next
+          // version — the first build above already covers the
+          // fresh-store case
           val refreshed =
             if (!idExists) sigIx
             else {
@@ -384,7 +380,7 @@ private[graft] object AnalyzeMore {
                   graft.operators.Dedup.minhashSignatures(
                     idCorpus, args.textCol, args.idCol, sigIx.numHashes,
                     sigIx.shingleSize))
-              graft.operators.Dedup.saveSigIndex(re, args.target)
+              graft.operators.Dedup.saveSigIndex(re, args.target): Unit
               re
             }
           import spark.implicits._

@@ -804,7 +804,7 @@ private[graft] object EntryData {
         numHashes = 16, shingleSize = 3, seed = 42L, portable = true)
       val ixDir = annScratchRoot + "/sigindex_" +
         dir.split('/').filter(_.nonEmpty).last
-      Dedup.saveSigIndex(ix, ixDir)
+      Dedup.saveSigIndex(ix, ixDir): Unit
       ixDir
     })
 

@@ -572,9 +572,9 @@ private[graft] object QueriesText {
 
     // ---- X9j: the lexical store round-trip through the ATOMIC
     // commit — the q_x2t/q_g3e stored-path discipline on the
-    // four-frame index: maintain exactly q_x9h's index, persist it
-    // via the FrameVersions commit (all four frames + ONE marker —
-    // the non-atomic in-place overwrite's fix), load, serve. SHARES
+    // four-frame index: maintain exactly q_x9h's index, commit it
+    // through saveLexIndex (all four frames + ONE marker), load,
+    // serve. SHARES
     // q_x9h's oracle verbatim: any loss or drift through the
     // versioned store hash-mismatches. ----
     "q_x9j_lex_store_versioned" -> ((s, dir) => {
@@ -585,7 +585,7 @@ private[graft] object QueriesText {
       val m = Relevance.maintainLexIndex(x9fBaseIndex(s, dir), adds,
         dels, "doc_id", "text")
       val storeDir = freshStoreDir("lexstore")
-      Relevance.saveLexIndexVersioned(m, storeDir): Unit
+      Relevance.saveLexIndex(m, storeDir): Unit
       Relevance.searchBm25FromIndex(
           Relevance.loadLexIndex(s, storeDir), "data model the",
           k = 100000)

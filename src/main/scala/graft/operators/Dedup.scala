@@ -1202,38 +1202,26 @@ object Dedup {
   final case class SigIndex(sigs: DataFrame, numHashes: Int,
       shingleSize: Int, seed: Long, portable: Boolean)
 
-  /** Persist / load a [[SigIndex]] (`sigs/`, `meta/`) — the
-    * identity-beside-the-data discipline of the sibling stores.
-    * [[loadSigIndex]] cross-checks the meta against the frame (a
-    * hand-swapped sigs directory fails fast). */
-  def saveSigIndex(ix: SigIndex, dir: String): Unit = {
-    val s = ix.sigs.localCheckpoint()
-    val spark = s.sparkSession
-    s.write.mode("overwrite").parquet(s"$dir/sigs")
-    import spark.implicits._
-    Seq((ix.numHashes.toLong, ix.shingleSize.toLong, ix.seed,
-        ix.portable))
-      .toDF("num_hashes", "shingle_size", "seed", "portable")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** [[saveSigIndex]] with the ATOMIC commit ([[FrameVersions]] —
-    * the saveLexIndexVersioned discipline): signatures and their
-    * derivation identity commit together or not at all. */
-  def saveSigIndexVersioned(ix: SigIndex, dir: String): Long = {
+  /** Commit / load a [[SigIndex]] (`sigs/`, `meta/`) — the
+    * [[Relevance.saveLexIndex]] commit, so the signatures and their
+    * derivation identity commit together or not at all, and its
+    * one-version load. [[loadSigIndex]] cross-checks the meta against
+    * the frame (a hand-swapped sigs directory fails fast). */
+  def saveSigIndex(ix: SigIndex, dir: String, tag: String = "-"): Long = {
     val spark = ix.sigs.sparkSession
     import spark.implicits._
     FrameVersions.commit(spark, dir, Seq(
       "sigs" -> ix.sigs,
       "meta" -> Seq((ix.numHashes.toLong, ix.shingleSize.toLong,
           ix.seed, ix.portable))
-        .toDF("num_hashes", "shingle_size", "seed", "portable")))
+        .toDF("num_hashes", "shingle_size", "seed", "portable")), tag)
   }
 
   def loadSigIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): SigIndex = {
-    val meta = FrameVersions.read(spark, dir, "meta").head()
-    val sigs = FrameVersions.read(spark, dir, "sigs")
+    val v = FrameVersions.latest(spark, dir)
+    val meta = v.read("meta").head()
+    val sigs = v.read("sigs")
     val n = meta.getAs[Long]("num_hashes").toInt
     val mh = sigs.columns.count(_.startsWith("mh_"))
     require(mh == n,

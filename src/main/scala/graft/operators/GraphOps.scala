@@ -232,28 +232,40 @@ object GraphOps {
 
   /** A persisted PageRank score store — the serving-store discipline
     * applied to the rank vector (the grid standard: every maintained
-    * store carries its derivation IDENTITY and commits atomically):
+    * store carries its derivation IDENTITY and commits atomically).
+    * It is a [[FrameVersions]] store:
     *
-    *   `<dir>/meta`              one row: the damping factor
-    *   `<dir>/scores/v<n>/`      immutable per-version (id, rank) sets
-    *   `<dir>/_commits/<n>_<tag>` empty marker — the COMMIT point
+    *   `<dir>/_v<n>/scores`        immutable per-version (id, rank) set
+    *   `<dir>/_v<n>/meta`          one row: the damping factor
+    *   `<dir>/_commits/<n>_<tag>`  empty marker — the COMMIT point
     *
     * The identity matters because a warm start under a different
     * damping silently converges to the WRONG fixed point — same class
     * as serving a rotated ANN index without its basis record:
     * [[saveRankStore]] refuses a damping that disagrees with the
-    * persisted meta, and [[incrementalPageRankFromStore]] takes its
-    * damping FROM the store, so a caller cannot misalign it.
+    * latest committed meta, and [[incrementalPageRankFromStore]] takes
+    * its damping FROM the store, so a caller cannot misalign it.
     *
-    * Versions are immutable: a save writes `scores/v<n+1>` (overwrite
-    * mode — a crashed attempt's partial directory rewrites
-    * idempotently) and only then creates the commit marker, so a
-    * reader never observes a partial score set and a crash anywhere
-    * before the marker leaves the store at v<n> exactly. `tag` carries
-    * the streaming twin's batch id (batch-mode saves use "-"), which
-    * is what makes its redelivery check exact. */
+    * A crash anywhere before the marker leaves the store at v<n>
+    * exactly; a partial `_v<n+1>` is invisible and rewrites
+    * idempotently. `tag` carries the streaming twin's batch id
+    * (batch-mode saves use "-"), which is what makes its redelivery
+    * check exact. */
   case class RankStore(scores: DataFrame, damping: Double,
       version: Long, tag: String)
+
+  /** The latest version of the rank store at `dir`, refusing the
+    * per-version `scores/v<n>` layout that rank stores used before
+    * they committed through [[FrameVersions]]. */
+  private def rankVersion(spark: org.apache.spark.sql.SparkSession,
+      dir: String): FrameVersions.Version = {
+    val v = FrameVersions.latest(spark, dir)
+    require(v.n == 0L || v.has("meta"),
+      s"the rank store at $dir is in the scores/v<n> layout; rank " +
+        "stores now commit scores and meta together under _v<n>/ — " +
+        "rebuild it with saveRankStore into a fresh directory")
+    v
+  }
 
   /** Commit `scores` as the next version of the rank store at `dir`.
     * Returns the committed version number. */
@@ -261,40 +273,20 @@ object GraphOps {
       dir: String, scores: DataFrame, damping: Double,
       tag: String = "-"): Long = {
     require(damping >= 0 && damping < 1, "damping must be in [0, 1)")
-    require(!tag.contains("_") && tag.nonEmpty,
-      s"rank-store tags must be _-free and nonempty (got '$tag')")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    if (fs.exists(metaPath)) {
-      val stored = spark.read.parquet(s"$dir/meta")
-        .head().getAs[Double]("damping")
+    val prev = rankVersion(spark, dir)
+    if (prev.n >= 1) {
+      val stored = prev.read("meta").head().getAs[Double]("damping")
       require(stored == damping,
         s"saveRankStore: the store at $dir carries damping=$stored " +
           s"but the save declared damping=$damping — a mixed-damping " +
           "chain would warm-start toward the wrong fixed point; " +
           "build a fresh store for a new damping")
-    } else
-      spark.range(1).select(lit(damping).as("damping"))
-        .write.mode("overwrite").parquet(s"$dir/meta")
-    val n = currentRankVersion(fs, dir) + 1
-    val pinned = scores
-      .select(col(scores.columns.head).cast("long").as("id"),
-        col(scores.columns(1)).cast("double").as("rank"))
-      .localCheckpoint() // pin before any filesystem mutation
-    pinned.write.mode("overwrite").parquet(s"$dir/scores/v$n")
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$dir/_commits/${n}_$tag"), true).close()
-    n
-  }
-
-  private def currentRankVersion(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/_commits")
-    if (!fs.exists(root)) 0L
-    else fs.listStatus(root).filter(_.isFile)
-      .map(_.getPath.getName.split("_").head.toLong)
-      .foldLeft(0L)(math.max)
+    }
+    FrameVersions.commit(spark, dir, Seq(
+      "scores" -> scores.select(
+        col(scores.columns.head).cast("long").as("id"),
+        col(scores.columns(1)).cast("double").as("rank")),
+      "meta" -> spark.range(1).select(lit(damping).as("damping"))), tag)
   }
 
   /** Latest committed version of the rank store — fails fast on a
@@ -302,22 +294,12 @@ object GraphOps {
     * identity exists to prevent). */
   def loadRankStore(spark: org.apache.spark.sql.SparkSession,
       dir: String): RankStore = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")),
-      s"loadRankStore: no rank store at $dir (meta missing) — " +
+    val v = rankVersion(spark, dir)
+    require(v.n >= 1,
+      s"loadRankStore: no rank store at $dir (no committed version) — " +
         "saveRankStore a converged pageRank first")
-    val n = currentRankVersion(fs, dir)
-    require(n >= 1,
-      s"loadRankStore: the store at $dir has no committed version")
-    val tag = fs.listStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/_commits"))
-      .map(_.getPath.getName)
-      .filter(_.split("_").head.toLong == n)
-      .head.split("_", 2).last
-    RankStore(spark.read.parquet(s"$dir/scores/v$n"),
-      spark.read.parquet(s"$dir/meta").head().getAs[Double]("damping"),
-      n, tag)
+    RankStore(v.read("scores"),
+      v.read("meta").head().getAs[Double]("damping"), v.n, v.tag)
   }
 
   /** [[incrementalPageRank]] off the persisted store: load the latest

@@ -254,44 +254,26 @@ object Relevance {
       dfreq = newDf)
   }
 
-  /** Persist a [[LexIndex]] as four parquet stores under `dir`
-    * (`docs/`, `postings/`, `lens/`, `dfreq/`). Each frame is
-    * localCheckpoint-pinned BEFORE any write so a read-modify-write
-    * cycle (maintain the index, overwrite the same layout — the
-    * streaming twin's trigger shape) never reads the directories it
-    * is replacing. */
-  def saveLexIndex(ix: LexIndex, dir: String): Unit = {
-    val d = ix.docs.localCheckpoint()
-    val p = ix.postings.localCheckpoint()
-    val l = ix.lens.localCheckpoint()
-    val f = ix.dfreq.localCheckpoint()
-    d.write.mode("overwrite").parquet(s"$dir/docs")
-    p.write.mode("overwrite").parquet(s"$dir/postings")
-    l.write.mode("overwrite").parquet(s"$dir/lens")
-    f.write.mode("overwrite").parquet(s"$dir/dfreq")
-  }
-
-  /** [[saveLexIndex]] with the ATOMIC commit ([[FrameVersions]]): all
-    * four frames land under an immutable `_v<n>/` and one marker
-    * create commits — a crash mid-save can never leave the index
-    * half-overwritten (the in-place save's documented weakness), and
-    * no localCheckpoint pin is needed (nothing the frames derive from
-    * is replaced). [[loadLexIndex]] resolves either layout. */
-  def saveLexIndexVersioned(ix: LexIndex, dir: String): Long =
+  /** Commit a [[LexIndex]] as the next version of the store at `dir`
+    * ([[FrameVersions]]: `docs/`, `postings/`, `lens/`, `dfreq/` under
+    * `_v<n>/`, then one marker tagged `tag`) and return the version.
+    * A crash mid-save leaves the previous version serving, and a
+    * read-modify-write cycle needs no pin: the new frames never
+    * replace the directories they were derived from. */
+  def saveLexIndex(ix: LexIndex, dir: String, tag: String = "-"): Long =
     FrameVersions.commit(ix.docs.sparkSession, dir, Seq(
       "docs" -> ix.docs, "postings" -> ix.postings,
-      "lens" -> ix.lens, "dfreq" -> ix.dfreq))
+      "lens" -> ix.lens, "dfreq" -> ix.dfreq), tag)
 
-  /** Load a [[saveLexIndex]] / [[saveLexIndexVersioned]] layout (the
-    * latest committed version when one exists, the legacy root
-    * otherwise). */
+  /** Load the latest committed [[LexIndex]] at `dir` — every frame
+    * from the same version — or, with nothing committed, the frames a
+    * former in-place save left at the root. */
   def loadLexIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): LexIndex =
-    LexIndex(
-      docs = FrameVersions.read(spark, dir, "docs"),
-      postings = FrameVersions.read(spark, dir, "postings"),
-      lens = FrameVersions.read(spark, dir, "lens"),
-      dfreq = FrameVersions.read(spark, dir, "dfreq"))
+      dir: String): LexIndex = {
+    val v = FrameVersions.latest(spark, dir)
+    LexIndex(docs = v.read("docs"), postings = v.read("postings"),
+      lens = v.read("lens"), dfreq = v.read("dfreq"))
+  }
 
   /** Render per-(doc, token) BM25 from a [[LexIndex]] — the exact
     * expression chain of the one-shot [[bm25]] (which routes through
@@ -720,30 +702,18 @@ object Relevance {
       model = merged.crossJoin(broadcast(guard)).drop("_ok"))
   }
 
-  /** Persist a [[TrigramLm]] as two parquet stores under `dir`
-    * (`docs/`, `model/`), localCheckpoint-pinned BEFORE any write so a
-    * read-modify-write cycle (maintain, overwrite the same layout —
-    * the streaming twin's trigger shape) never reads the directories
-    * it is replacing. */
-  def saveTrigramLm(lm: TrigramLm, dir: String): Unit = {
-    val d = lm.docs.localCheckpoint()
-    val m = lm.model.localCheckpoint()
-    d.write.mode("overwrite").parquet(s"$dir/docs")
-    m.write.mode("overwrite").parquet(s"$dir/model")
-  }
-
-  /** [[saveTrigramLm]] with the ATOMIC commit ([[FrameVersions]] —
-    * the saveLexIndexVersioned discipline). */
-  def saveTrigramLmVersioned(lm: TrigramLm, dir: String): Long =
+  /** Commit a [[TrigramLm]] (`docs/`, `model/`) as the next version
+    * of the store at `dir` — the [[saveLexIndex]] commit. */
+  def saveTrigramLm(lm: TrigramLm, dir: String, tag: String = "-"): Long =
     FrameVersions.commit(lm.docs.sparkSession, dir, Seq(
-      "docs" -> lm.docs, "model" -> lm.model))
+      "docs" -> lm.docs, "model" -> lm.model), tag)
 
-  /** Load a [[saveTrigramLm]] / [[saveTrigramLmVersioned]] layout. */
+  /** Load a [[TrigramLm]] — the [[loadLexIndex]] resolution. */
   def loadTrigramLm(spark: org.apache.spark.sql.SparkSession,
-      dir: String): TrigramLm =
-    TrigramLm(
-      docs = FrameVersions.read(spark, dir, "docs"),
-      model = FrameVersions.read(spark, dir, "model"))
+      dir: String): TrigramLm = {
+    val v = FrameVersions.latest(spark, dir)
+    TrigramLm(docs = v.read("docs"), model = v.read("model"))
+  }
 
   /** MODIFIED Kneser–Ney trigram perplexity — [[knTrigramPerplexity]]
     * with the production discount estimator (Chen & Goodman 1998 §3;

@@ -2002,27 +2002,18 @@ object Similarity {
       moments = merged.crossJoin(broadcast(guard)).drop("_ok"))
   }
 
-  /** Persist / load a [[MomentsStore]] (`docs/`, `moments/`) — the
-    * localCheckpoint-before-write discipline of the sibling stores. */
-  def saveMomentsStore(store: MomentsStore, dir: String): Unit = {
-    val d = store.docs.localCheckpoint()
-    val m = store.moments.localCheckpoint()
-    d.write.mode("overwrite").parquet(s"$dir/docs")
-    m.write.mode("overwrite").parquet(s"$dir/moments")
-  }
-
-  /** [[saveMomentsStore]] with the ATOMIC commit ([[FrameVersions]] —
-    * the saveLexIndexVersioned discipline). */
-  def saveMomentsStoreVersioned(store: MomentsStore,
-      dir: String): Long =
+  /** Commit / load a [[MomentsStore]] (`docs/`, `moments/`) — the
+    * [[Relevance.saveLexIndex]] commit and its one-version load. */
+  def saveMomentsStore(store: MomentsStore, dir: String,
+      tag: String = "-"): Long =
     FrameVersions.commit(store.docs.sparkSession, dir, Seq(
-      "docs" -> store.docs, "moments" -> store.moments))
+      "docs" -> store.docs, "moments" -> store.moments), tag)
 
   def loadMomentsStore(spark: SparkSession,
-      dir: String): MomentsStore =
-    MomentsStore(
-      docs = FrameVersions.read(spark, dir, "docs"),
-      moments = FrameVersions.read(spark, dir, "moments"))
+      dir: String): MomentsStore = {
+    val v = FrameVersions.latest(spark, dir)
+    MomentsStore(docs = v.read("docs"), moments = v.read("moments"))
+  }
 
   /** A fitted PCA model: per-dimension means (of the e6-quantized
     * components, descaled), the top-k components (rows, orthonormal),

@@ -138,27 +138,19 @@ object Tokenizer {
       words = merged.crossJoin(broadcast(guard)).drop("_ok"))
   }
 
-  /** Persist / load a [[WordStore]] (`docs/`, `words/`) — the
-    * localCheckpoint-before-write discipline of the sibling stores. */
-  def saveWordStore(store: WordStore, dir: String): Unit = {
-    val d = store.docs.localCheckpoint()
-    val w = store.words.localCheckpoint()
-    d.write.mode("overwrite").parquet(s"$dir/docs")
-    w.write.mode("overwrite").parquet(s"$dir/words")
-  }
-
-  /** [[saveWordStore]] with the ATOMIC commit
-    * ([[graft.operators.FrameVersions]] — the saveLexIndexVersioned
-    * discipline). */
-  def saveWordStoreVersioned(store: WordStore, dir: String): Long =
+  /** Commit / load a [[WordStore]] (`docs/`, `words/`) — the
+    * [[graft.operators.Relevance.saveLexIndex]] commit and its
+    * one-version load. */
+  def saveWordStore(store: WordStore, dir: String,
+      tag: String = "-"): Long =
     FrameVersions.commit(store.docs.sparkSession, dir, Seq(
-      "docs" -> store.docs, "words" -> store.words))
+      "docs" -> store.docs, "words" -> store.words), tag)
 
   def loadWordStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String): WordStore =
-    WordStore(
-      docs = FrameVersions.read(spark, dir, "docs"),
-      words = FrameVersions.read(spark, dir, "words"))
+      dir: String): WordStore = {
+    val v = FrameVersions.latest(spark, dir)
+    WordStore(docs = v.read("docs"), words = v.read("words"))
+  }
 
   /** Learn `numMerges` BPE merges over `docs(textCol)`.
     *

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.operators.{Decontaminate, Dedup, Funnel, GraphOps, Layout, Relevance, Similarity, Tokenizer}
+import graft.operators.{Decontaminate, Dedup, FrameVersions, Funnel, GraphOps, Layout, Relevance, Similarity, Tokenizer}
 
 /** Input/output rows for the stateful per-user accumulator (ST1 variant). */
 case class UserEvent(user_id: Long, value: Double)
@@ -709,7 +709,11 @@ object StreamingIngest {
     * neighborhood, never the accumulated graph (see the primitive's
     * scale notes); the labels rewrite is labels-sized. Periodic full
     * [[graft.operators.GraphOps.leiden]] consolidation remains the
-    * compaction story. */
+    * compaction story.
+    *
+    * The edge append writes loose parquet files into `edgesDir`, so
+    * [[streamingCommunitiesCdc]] refuses that directory until its files
+    * move into a `batch=-1/` subdirectory. */
   def streamingCommunities(edges: DataFrame, edgesDir: String,
       labelsDir: String, checkpointDir: String, rounds: Int = 4,
       hops: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
@@ -883,7 +887,23 @@ object StreamingIngest {
       if (any) rows.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
       any
     }
+
+    /** True iff this batch already committed to the
+      * [[graft.operators.FrameVersions]] store at `dir`
+      * ([[committedBy]]). */
+    def committed(dir: String): Boolean = committedBy(spark, dir, batchId)
   }
+
+  /** True iff the latest commit of the
+    * [[graft.operators.FrameVersions]] store at `dir` carries the tag
+    * of batch `batchId` or of a later batch. The streaming runtime
+    * redelivers only its last batch, so within one checkpoint this is
+    * "the batch's commit landed"; the `>=` also keeps an older batch
+    * redelivered under a replaced checkpoint from applying twice. A
+    * batch-mode commit (tag `-`) never counts. */
+  private def committedBy(spark: SparkSession, dir: String,
+      batchId: Long): Boolean =
+    FrameVersions.latest(spark, dir).tag.toLongOption.exists(_ >= batchId)
 
   /** The exactly-once trigger every marker-guarded twin runs on.
     *
@@ -902,10 +922,14 @@ object StreamingIngest {
     *    started marker is deleted;
     *  - a started marker already present means an earlier attempt died
     *    after any subset of the body's writes. The body is told so
-    *    (`midCrash`): a twin whose maintain step reads the store it
-    *    then overwrites takes its cold-rebuild or self-heal branch; a
-    *    twin whose fold is idempotent given the op stores re-runs as
-    *    on a first delivery.
+    *    (`midCrash`): a twin whose maintain step reads a store it then
+    *    overwrites in place takes its cold-rebuild branch; a twin whose
+    *    fold is idempotent given the op stores re-runs as on a first
+    *    delivery. The twins whose store commits through
+    *    [[graft.operators.FrameVersions]] never ask: their commit's
+    *    batch tag ([[Trigger.committed]]) says whether the batch
+    *    applied, and the latest commit otherwise still holds the
+    *    pre-batch state.
     *
     * Op-store writes go through [[Trigger.record]], so a redelivered
     * batch replaces its own rows. */
@@ -1516,7 +1540,7 @@ object StreamingIngest {
     * share: a per-id CDC stream of (`idCol`, `payloadCol`) rows kept in
     * two op stores (`docsDir/batch=`, `delsDir/batch=`) under
     * [[markerGuarded]], markers under `docsDir`, and one maintained
-    * store whose `_SUCCESS` lives under `builtDir`.
+    * [[graft.operators.FrameVersions]] store at `storeDir`.
     *
     * Fold contract (the CDC-grid standard, [[latestWinsFold]]): a doc
     * is live iff its latest add batch is strictly newer than its
@@ -1526,20 +1550,25 @@ object StreamingIngest {
     * Same-trigger duplicate adds fold to one deterministic row.
     *
     * Each trigger runs `maintain(load(), adds, dels, leaving)` on the
-    * stored state and `save`s the result. `leaving` yields the rows
-    * that leave the store — takedowns and the old rows of live
+    * latest committed version and `save`s the result as the next one,
+    * tagged with the batch id; a store with no committed version is
+    * `build` from the fold of every batch instead. `leaving` yields the
+    * rows that leave the store — takedowns and the old rows of live
     * re-adds — recovered from the op-store fold AS OF THE PREVIOUS
     * BATCH, since a store that keeps no per-document rows cannot
     * subtract what it cannot see; it is computed only when a twin asks
-    * for it. `maintain` READS the store `save` then overwrites, so it
-    * is not idempotent: a cold start and a mid-crash redelivery both
-    * `build` from the fold of every batch instead. */
+    * for it. Then every older version is vacuumed.
+    *
+    * Crash recovery needs no branch: a redelivery whose commit already
+    * landed skips the save ([[Trigger.committed]]), and one whose
+    * commit did not land maintains from the latest committed version,
+    * which is still the pre-batch state. */
   private def maintainedDocStore[S](events: DataFrame, docsDir: String,
-      delsDir: String, builtDir: String, checkpointDir: String,
+      delsDir: String, storeDir: String, checkpointDir: String,
       idCol: String, payloadCol: String, opCol: String, who: String)(
       load: SparkSession => S,
       maintain: (S, DataFrame, DataFrame, () => DataFrame) => S,
-      build: DataFrame => S, save: S => Unit): StreamingQuery =
+      build: DataFrame => S, save: (S, String) => Long): StreamingQuery =
     markerGuarded(events, checkpointDir, docsDir, who,
         Seq(docsDir, delsDir))(withOp(opCol, Seq(idCol, payloadCol))) {
       (b, t) =>
@@ -1548,15 +1577,16 @@ object StreamingIngest {
         t.record(dels, delsDir): Unit
         def live(limit: Long) = latestWinsFold(t, docsDir, Some(delsDir),
           idCol, Seq(payloadCol), adds.limit(0), limit)
-        save(
-          if (t.built(builtDir) && !t.midCrash) {
+        if (!t.committed(storeDir)) save(
+          if (FrameVersions.current(t.spark, storeDir) >= 1) {
             // this trigger's own writes are excluded by the < filter
             lazy val leaving = live(t.batchId)
               .join(broadcast(dels.unionByName(adds.select(col(idCol)))
                 .distinct()), Seq(idCol), "left_semi")
               .localCheckpoint()
             maintain(load(t.spark), adds, dels, () => leaving)
-          } else build(live(Long.MaxValue)))
+          } else build(live(Long.MaxValue)), t.batchId.toString): Unit
+        FrameVersions.vacuum(t.spark, storeDir): Unit
     }
 
   /** Lexical (BM25/TF-IDF) index maintenance under a CDC document
@@ -1566,8 +1596,8 @@ object StreamingIngest {
     * decontamination — already has one): each trigger applies its
     * batch through ONE
     * [[graft.operators.Relevance.maintainLexIndex]] call and
-    * persists the refreshed four-frame layout
-    * ([[graft.operators.Relevance.saveLexIndex]]), so after every
+    * commits the refreshed four-frame index as the store's next
+    * version ([[graft.operators.Relevance.saveLexIndex]]), so after every
     * completed trigger the served BM25/TF-IDF weights are bit-equal
     * to a full [[graft.operators.Relevance.buildLexIndex]] over the
     * EFFECTIVE corpus.
@@ -1581,8 +1611,8 @@ object StreamingIngest {
     * Scale notes (100 TB): per trigger the corpus-scale posting store
     * is scanned once inside `maintainLexIndex` (broadcast anti/semi
     * joins on the change-batch ids); added text tokenizes
-    * delta-sized; the df merge is vocabulary-sized. The full-layout
-    * rewrite is the store's own size — partitioning `postings/` by a
+    * delta-sized; the df merge is vocabulary-sized. Each commit
+    * writes the whole store — partitioning `postings/` by a
     * doc-id bucket and rewriting only touched buckets is the
     * documented step-up at real scale (the [[streamingDecontaminate]]
     * caveat, same shape). */
@@ -1591,20 +1621,20 @@ object StreamingIngest {
       idCol: String = "doc_id", textCol: String = "text",
       opCol: String = "op"): StreamingQuery =
     maintainedDocStore[Relevance.LexIndex](events, docsDir, delsDir,
-        s"$indexDir/docs", checkpointDir, idCol, textCol, opCol,
+        indexDir, checkpointDir, idCol, textCol, opCol,
         "streamingLexIndex")(
       Relevance.loadLexIndex(_, indexDir),
       (ix, adds, dels, _) =>
         Relevance.maintainLexIndex(ix, adds, dels, idCol, textCol),
       Relevance.buildLexIndex(_, idCol, textCol),
-      Relevance.saveLexIndex(_, indexDir))
+      Relevance.saveLexIndex(_, indexDir, _))
 
   /** Trigram-LM count-store maintenance under a CDC document stream —
     * the n-gram model's serving-store twin (the [[streamingLexIndex]]
     * shape for [[graft.operators.Relevance.TrigramLm]]): each trigger
     * applies its batch through ONE
-    * [[graft.operators.Relevance.maintainTrigramLm]] call and persists
-    * the refreshed two-frame layout
+    * [[graft.operators.Relevance.maintainTrigramLm]] call and commits
+    * the refreshed two-frame store as its next version
     * ([[graft.operators.Relevance.saveTrigramLm]]), so after every
     * completed trigger the stored counts — and every Kneser–Ney table
     * derived from them — are bit-equal to a full
@@ -1625,29 +1655,30 @@ object StreamingIngest {
     * full joins); changed-doc trigram extraction is delta-sized (the
     * prev-live lookup prunes the op store to batches < this one and
     * semi-joins on the change ids); the corpus is never rescanned.
-    * The full-layout rewrite is the store's own size — bucketing
-    * `model/` by a trigram hash and rewriting only touched buckets is
+    * Each commit writes the whole store — bucketing `model/` by a
+    * trigram hash and rewriting only touched buckets is
     * the documented step-up at real scale. */
   def streamingTrigramLm(events: DataFrame, docsDir: String,
       delsDir: String, lmDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       opCol: String = "op"): StreamingQuery =
     maintainedDocStore[Relevance.TrigramLm](events, docsDir, delsDir,
-        s"$lmDir/model", checkpointDir, idCol, textCol, opCol,
+        lmDir, checkpointDir, idCol, textCol, opCol,
         "streamingTrigramLm")(
       Relevance.loadTrigramLm(_, lmDir),
       (lm, adds, _, leaving) =>
         Relevance.maintainTrigramLm(lm, adds, leaving(), idCol, textCol),
       Relevance.buildTrigramLm(_, idCol, textCol),
-      Relevance.saveTrigramLm(_, lmDir))
+      Relevance.saveTrigramLm(_, lmDir, _))
 
   /** Tokenizer word-store maintenance under a CDC document stream —
     * the [[streamingTrigramLm]] shape for
     * [[graft.operators.Tokenizer.WordStore]] (the store both subword
     * inducers derive from): each trigger applies its batch through ONE
-    * [[graft.operators.Tokenizer.maintainWordStore]] call and persists
-    * the two-frame layout, so after every completed trigger the stored
-    * (word, wc) table — and any BPE merge table or unigram candidate
+    * [[graft.operators.Tokenizer.maintainWordStore]] call and commits
+    * the two-frame store as its next version, so after every completed
+    * trigger the stored (word, wc) table — and any BPE merge table or
+    * unigram candidate
     * vocabulary re-induced from it — is bit-equal to a full
     * [[graft.operators.Tokenizer.buildWordStore]] over the effective
     * corpus. Fold contract, op stores, the prev-batch erasure-text
@@ -1660,13 +1691,13 @@ object StreamingIngest {
       idCol: String = "doc_id", textCol: String = "text",
       opCol: String = "op"): StreamingQuery =
     maintainedDocStore[Tokenizer.WordStore](events, docsDir, delsDir,
-        s"$storeDir/words", checkpointDir, idCol, textCol, opCol,
+        storeDir, checkpointDir, idCol, textCol, opCol,
         "streamingWordStore")(
       Tokenizer.loadWordStore(_, storeDir),
       (st, adds, _, leaving) =>
         Tokenizer.maintainWordStore(st, adds, leaving(), idCol, textCol),
       Tokenizer.buildWordStore(_, idCol, textCol),
-      Tokenizer.saveWordStore(_, storeDir))
+      Tokenizer.saveWordStore(_, storeDir, _))
 
   /** PCA-moment maintenance under a CDC embedding stream — the
     * [[streamingWordStore]] shape for
@@ -1674,7 +1705,8 @@ object StreamingIngest {
     * second-moment table the rotation/whitening fits ride): each
     * trigger applies its batch through ONE
     * [[graft.operators.Similarity.maintainPcaMoments]] call and
-    * persists the two-frame layout, so after every completed trigger
+    * commits the two-frame store as its next version, so after every
+    * completed trigger
     * the stored moments — and any [[graft.operators.Similarity
     * .givensCascadeFitFromMoments]] /
     * [[graft.operators.Similarity.pcaFitFromMoments]] refit off them
@@ -1689,13 +1721,13 @@ object StreamingIngest {
       idCol: String = "vec_id", vecCol: String = "embedding",
       opCol: String = "op"): StreamingQuery =
     maintainedDocStore[Similarity.MomentsStore](events, docsDir, delsDir,
-        s"$storeDir/moments", checkpointDir, idCol, vecCol, opCol,
+        storeDir, checkpointDir, idCol, vecCol, opCol,
         "streamingPcaMoments")(
       Similarity.loadMomentsStore(_, storeDir),
       (st, adds, _, leaving) =>
         Similarity.maintainPcaMoments(st, adds, leaving(), idCol, vecCol),
       Similarity.buildMomentsStore(_, idCol, vecCol),
-      Similarity.saveMomentsStore(_, storeDir))
+      Similarity.saveMomentsStore(_, storeDir, _))
 
   /** Daily-increment near-dedup under a STREAM of new documents — the
     * [[graft.operators.Dedup.SigIndex]]'s CDC twin, the last serving
@@ -1714,22 +1746,22 @@ object StreamingIngest {
     * Same-batch duplicate ids fold deterministically (max text — the
     * CDC fold), matching the one-id-space corpus contract.
     *
-    * Exactly-once via [[markerGuarded]], markers under `storeDir`. On
-    * a mid-crash redelivery the sigs store may hold a PARTIAL
-    * roll-forward that would poison candidate generation (this batch's
-    * ids already banded as "old"), so the trigger self-heals by
-    * RE-SIGNING the ground-truth corpus (batches before this one)
-    * under the stored identity and overwriting the store, then
-    * re-running the increment cleanly.
+    * Exactly-once via [[markerGuarded]], markers under `storeDir`. The
+    * roll-forward commits as the next [[graft.operators.FrameVersions]]
+    * version tagged with the batch id, after the verdicts and kept docs
+    * are recorded, and older versions are then vacuumed. A redelivery
+    * whose commit landed does nothing more ([[Trigger.committed]]); one
+    * whose commit did not land re-runs the increment against the
+    * latest committed index, which is still the pre-batch state — a
+    * partial roll-forward is never visible, so no re-sign pass is
+    * needed.
     *
     * Caller seeds `docsDir/batch=-1/` with the base corpus and
     * [[graft.operators.Dedup.saveSigIndex]]es its signatures once.
     *
-    * Scale notes (100 TB): steady state is batch-sized — the corpus
+    * Scale notes (100 TB): every trigger is batch-sized — the corpus
     * is reached only through its stored signatures and id-targeted
-    * text fetches, never re-shingled; the crash-heal is the one full
-    * re-sign pass, paid only on an actual mid-batch redelivery (the
-    * same rebuild cost the word/LM twins accept). */
+    * text fetches, never re-shingled. */
   def streamingSigIndexDedup(newDocs: DataFrame, docsDir: String,
       storeDir: String, reportDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -1745,33 +1777,30 @@ object StreamingIngest {
               ix.numHashes, ix.shingleSize, ix.seed)
           else Dedup.minhashSignatures(docs, textCol, idCol,
             ix.numHashes, ix.shingleSize)
-        def corpusBefore(): DataFrame = t.spark.read.parquet(docsDir)
-          .filter(col("batch").cast("long") < t.batchId)
-          .select(col(idCol), col(textCol))
-        if (t.midCrash) {
-          // restore the store to the pre-batch state from ground truth:
-          // the identity rides the meta, the signatures re-derive from
-          // the completed batches only
-          val ix0 = Dedup.loadSigIndex(t.spark, storeDir)
-          Dedup.saveSigIndex(
-            ix0.copy(sigs = sign(ix0, corpusBefore())), storeDir)
+        if (!t.committed(storeDir)) {
+          val ix = Dedup.loadSigIndex(t.spark, storeDir)
+          val corpus = t.spark.read.parquet(docsDir)
+            .filter(col("batch").cast("long") < t.batchId)
+            .select(col(idCol), col(textCol))
+          val rep = Dedup.incrementalDedupFromIndex(ix,
+              corpus.localCheckpoint(), b, textCol, idCol, threshold,
+              bands, maxBucketSize)
+            .localCheckpoint()
+          t.record(rep, reportDir): Unit
+          val kept = b.join(rep.filter(col("reason") === "kept")
+              .select(col("doc_id").as(idCol)), Seq(idCol))
+            .localCheckpoint()
+          // roll forward: the kept docs' signatures (derived under the
+          // store identity) union onto the store as its next version
+          if (t.record(kept, docsDir))
+            Dedup.saveSigIndex(
+              ix.copy(sigs = ix.sigs.unionByName(sign(ix, kept))),
+              storeDir, t.batchId.toString): Unit
         }
-        val ix = Dedup.loadSigIndex(t.spark, storeDir)
-        val rep = Dedup.incrementalDedupFromIndex(ix,
-            corpusBefore().localCheckpoint(), b, textCol, idCol, threshold,
-            bands, maxBucketSize)
-          .localCheckpoint()
-        t.record(rep, reportDir): Unit
-        val kept = b.join(rep.filter(col("reason") === "kept")
-            .select(col("doc_id").as(idCol)), Seq(idCol))
-          .localCheckpoint()
-        // roll forward: the kept docs' signatures (derived under the
-        // store identity) union onto the store — saveSigIndex's
-        // localCheckpoint pins the union before the overwrite touches
-        // the files it read
-        if (t.record(kept, docsDir))
-          Dedup.saveSigIndex(
-            ix.copy(sigs = ix.sigs.unionByName(sign(ix, kept))), storeDir)
+        // also on a redelivery that found its commit; a batch that kept
+        // no doc committed nothing
+        if (t.committed(storeDir))
+          FrameVersions.vacuum(t.spark, storeDir): Unit
     }
 
   /** PageRank under a STREAM of edge deltas — the
@@ -1790,15 +1819,14 @@ object StreamingIngest {
     * with ROUND(8); the spec asserts per-node agreement at 1e-12).
     *
     * Exactly-once WITHOUT a separate marker store: the rank store's
-    * own commit tags carry the batch id — a committed version tagged
-    * with this batch means the batch fully applied (its edges wrote
-    * BEFORE the commit), so redelivery is a no-op; an uncommitted
-    * crash leaves the store at the previous version exactly (score
-    * versions are immutable, a partial `v<n+1>` is invisible and
-    * rewrites idempotently), so redelivery recomputes from the
-    * pre-batch scores — never from a half-applied state. No
-    * self-heal pass is needed anywhere: the per-version layout
-    * removed the read-modify-write window entirely.
+    * own commit tags carry the batch id — a latest commit tagged with
+    * this batch means the batch fully applied (its edges wrote BEFORE
+    * the commit), so redelivery is a no-op ([[committedBy]], the check
+    * the marker-guarded twins share); an uncommitted crash leaves the
+    * store at the previous version exactly (versions are immutable, a
+    * partial `_v<n+1>` is invisible and rewrites idempotently), so
+    * redelivery recomputes from the pre-batch scores — never from a
+    * half-applied state. Versions are kept; the caller vacuums.
     *
     * Caller seeds `edgesDir/batch=-1/` with the base edge table and
     * `saveRankStore`s a converged base run once.
@@ -1827,16 +1855,11 @@ object StreamingIngest {
             col(dstCol).cast("long").as("end_id"))
           .localCheckpoint()
         if (!b.isEmpty) {
-          val commits = new org.apache.hadoop.fs.Path(
-            s"$scoresDir/_commits")
-          val fs = commits
+          val fs = new Path(edgesDir)
             .getFileSystem(spark.sparkContext.hadoopConfiguration)
           if (layoutChecked.compareAndSet(false, true))
             requireBatchLayout(fs, edgesDir, "streamingPageRank")
-          val applied = fs.exists(commits) && fs.listStatus(commits)
-            .exists(_.getPath.getName.split("_", 2).last ==
-              batchId.toString)
-          if (!applied) {
+          if (!committedBy(spark, scoresDir, batchId)) {
             b.write.mode("overwrite")
               .parquet(s"$edgesDir/batch=$batchId")
             val edges = spark.read.parquet(edgesDir)

@@ -1252,6 +1252,17 @@ class AnalyzeSpec extends SparkSpec {
       "--delta", s"$dir/batch", "--threshold", "0.5")), spark)
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(rep(20L) == "corpus" && rep(24L) == "kept")
+    // the increment found the stored index: it kept seed 7 and
+    // committed nothing (a missed probe would rebuild under seed 42)
+    def stored() = (graft.operators.Dedup.loadSigIndex(spark,
+      s"$dir/ix").seed, graft.operators.FrameVersions.current(spark,
+      s"$dir/ix"))
+    assert(stored() == ((7L, 1L)))
+    // refresh: re-signs under the stored seed as the next version
+    val refreshed = Analyze.run(parse(List("incrdedup",
+      "--docs", s"$dir/corpus", "--target", s"$dir/ix")), spark).head()
+    assert(refreshed.getLong(0) == 2L && refreshed.getLong(3) == 7L)
+    assert(stored() == ((7L, 2L)))
     intercept[IllegalArgumentException](
       Analyze.run(parse(List("incrdedup", "--docs", s"$dir/corpus")),
         spark))

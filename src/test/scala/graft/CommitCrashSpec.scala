@@ -1,0 +1,276 @@
+package graft
+
+import java.io.File
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+
+import graft.operators.{Dedup, FrameVersions, GraphOps, Relevance,
+  Similarity, Tokenizer}
+import graft.streaming.StreamingIngest
+
+/** Crash injection for every store that commits through
+  * [[graft.operators.FrameVersions]], each driven through its
+  * streaming twin. Batch 0 applies cleanly; batch k (k = 1, 2, 3) is
+  * killed at kill point k, then redelivered under the same checkpoint:
+  *
+  *  1. after the first frame of the new version is written;
+  *  2. after every frame is written, before the commit marker;
+  *  3. after the commit marker, before the trigger completes (for the
+  *     marker-guarded twins, before the final `_batches/<id>` marker).
+  *
+  * After kills 1 and 2 a load serves the previous version exactly.
+  * After every redelivery the store equals the full rebuild (PageRank:
+  * the batch warm-start fold), the batch committed exactly once, and a
+  * twin that vacuums keeps one committed version. Stores live on the
+  * `inject:` file system ([[InjectingFs]]), which throws at the kill
+  * point. */
+class CommitCrashSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** The fault of kill point `k` for a store whose second frame is
+    * `second`; it fires once. */
+  private def kill(k: Int, second: String)
+      : (InjectingFs.Op, Path) => Unit = {
+    val fired = new AtomicBoolean(false)
+    (op, p) => {
+      val hit =
+        if (k == 1) op != InjectingFs.Listing &&
+          p.toString.matches(s".*/_v[0-9]+/$second(/.*)?")
+        else op == InjectingFs.Create && p.getParent.getName == "_commits"
+      if (hit && fired.compareAndSet(false, true)) {
+        if (k == 3) new File(p.toUri.getPath).createNewFile(): Unit
+        throw new java.io.IOException(s"injected crash at kill point $k")
+      }
+    }
+  }
+
+  /** Runs `batches` through the twin `start`ed on a memory stream and a
+    * local checkpoint: batch 0 cleanly, batch k killed at kill point k
+    * and redelivered. `frames` loads the store's frames; `converged(k)`
+    * asserts the store after batch k. */
+  private def crashEachPoint[A: Encoder](store: String, second: String,
+      batches: Seq[Seq[A]], vacuums: Boolean = true)(
+      start: (DataFrame, String) => StreamingQuery)(
+      frames: () => Seq[DataFrame], converged: Int => Unit): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[A]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_crash_ckpt")
+      .toString
+    def run(): Unit = {
+      val q = start(mem.toDF(), ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def snapshot() = frames().map(_.collect().map(_.toString).toSet)
+    def entries(dir: String): Seq[String] =
+      Option(new File(InjectingFs.local(dir)).list()).toSeq.flatten
+        .filterNot(_.startsWith("."))
+    mem.addData(batches.head: _*)
+    run()
+    converged(0)
+    batches.indices.tail.foreach { k =>
+      val before = snapshot()
+      val version = FrameVersions.current(spark, store)
+      mem.addData(batches(k): _*)
+      InjectingFs.withHook(kill(k, second)) {
+        intercept[StreamingQueryException](run())
+      }
+      if (k < 3) {
+        assert(FrameVersions.current(spark, store) == version &&
+          snapshot() == before,
+          s"kill point $k: a load serves the previous version exactly")
+      }
+      run()
+      converged(k)
+      val latest = FrameVersions.latest(spark, store)
+      assert(latest.n == version + 1 && latest.tag == k.toString,
+        s"kill point $k: batch $k committed exactly once")
+      if (vacuums)
+        assert(entries(s"$store/_commits").size == 1 &&
+          entries(store).count(_.matches("_v[0-9]+")) == 1,
+          s"kill point $k: one committed version left")
+    }
+  }
+
+  /** The live (id → payload) set after batches 0..k of a CDC stream:
+    * a later batch replaces, a same-batch takedown beats the add. */
+  private def liveAfter[V](batches: Seq[Seq[(String, Long, V)]],
+      k: Int): Seq[(Long, V)] =
+    batches.take(k + 1).foldLeft(Map.empty[Long, V]) { (m, b) =>
+      val dels = b.collect { case ("del", id, _) => id }.toSet
+      (m -- dels) ++
+        b.collect { case ("add", id, v) if !dels(id) => id -> v }
+    }.toSeq.sortBy(_._1)
+
+  private val textBatches = Seq(
+    Seq(("add", 1L, "a b c d"), ("add", 2L, "b c d"),
+      ("add", 3L, "x y z x y")),
+    Seq(("del", 2L, null: String), ("add", 4L, "d b c a")),
+    Seq(("add", 2L, "c d e f"), ("add", 1L, "a b c")),
+    Seq(("del", 3L, null: String), ("add", 5L, "e a b c d")))
+
+  private def cdc(df: DataFrame, payload: String) =
+    df.toDF("op", "doc_id", payload)
+
+  test("streamingLexIndex: a crash at any commit point heals to the " +
+      "full rebuild on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_lex")
+    def bm25(ix: Relevance.LexIndex) = Relevance.bm25FromIndex(ix)
+      .collect().map(_.toString).toSet
+    crashEachPoint(s"$tmp/ix", "postings", textBatches)((s, c) =>
+      StreamingIngest.streamingLexIndex(cdc(s, "text"), s"$tmp/docs",
+        s"$tmp/dels", s"$tmp/ix", c))(
+      () => {
+        val ix = Relevance.loadLexIndex(spark, s"$tmp/ix")
+        Seq(ix.docs, ix.postings, ix.lens, ix.dfreq)
+      },
+      k => assert(bm25(Relevance.loadLexIndex(spark, s"$tmp/ix")) ==
+        bm25(Relevance.buildLexIndex(liveAfter(textBatches, k)
+          .toDF("doc_id", "text"), "doc_id", "text"))))
+  }
+
+  test("streamingTrigramLm: a crash at any commit point heals to the " +
+      "full rebuild on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_lm")
+    def rows(lm: Relevance.TrigramLm) =
+      (lm.docs.collect().map(_.toString).toSet,
+        lm.model.collect().map(_.toString).toSet)
+    crashEachPoint(s"$tmp/lm", "model", textBatches)((s, c) =>
+      StreamingIngest.streamingTrigramLm(cdc(s, "text"), s"$tmp/docs",
+        s"$tmp/dels", s"$tmp/lm", c))(
+      () => {
+        val lm = Relevance.loadTrigramLm(spark, s"$tmp/lm")
+        Seq(lm.docs, lm.model)
+      },
+      k => assert(rows(Relevance.loadTrigramLm(spark, s"$tmp/lm")) ==
+        rows(Relevance.buildTrigramLm(liveAfter(textBatches, k)
+          .toDF("doc_id", "text"), "doc_id", "text"))))
+  }
+
+  test("streamingWordStore: a crash at any commit point heals to the " +
+      "full rebuild on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_words")
+    def rows(ws: Tokenizer.WordStore) =
+      (ws.docs.collect().map(_.toString).toSet,
+        ws.words.collect().map(_.toString).toSet)
+    crashEachPoint(s"$tmp/store", "words", textBatches)((s, c) =>
+      StreamingIngest.streamingWordStore(cdc(s, "text"), s"$tmp/docs",
+        s"$tmp/dels", s"$tmp/store", c))(
+      () => {
+        val ws = Tokenizer.loadWordStore(spark, s"$tmp/store")
+        Seq(ws.docs, ws.words)
+      },
+      k => assert(rows(Tokenizer.loadWordStore(spark, s"$tmp/store")) ==
+        rows(Tokenizer.buildWordStore(liveAfter(textBatches, k)
+          .toDF("doc_id", "text"), "doc_id", "text"))))
+  }
+
+  test("streamingPcaMoments: a crash at any commit point heals to the " +
+      "one-shot moments on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_moments")
+    def vec(i: Long): Seq[Float] =
+      (0 until 4).map(d => ((i * 7 + d * 3) % 11).toFloat / 11f - 0.5f)
+    val batches = Seq(
+      Seq(("add", 1L, vec(1L)), ("add", 2L, vec(2L)),
+        ("add", 3L, vec(3L))),
+      Seq(("del", 3L, null: Seq[Float]), ("add", 4L, vec(4L))),
+      Seq(("add", 2L, vec(20L)), ("add", 5L, vec(5L))),
+      Seq(("del", 1L, null: Seq[Float]), ("add", 6L, vec(6L))))
+    def moments(df: DataFrame) = df
+      .select("i", "j", "n", "s_i", "s_j", "sp").collect()
+      .map(_.toString).toSet
+    crashEachPoint(s"$tmp/store", "moments", batches)((s, c) =>
+      StreamingIngest.streamingPcaMoments(s.toDF("op", "vec_id",
+        "embedding"), s"$tmp/docs", s"$tmp/dels", s"$tmp/store", c))(
+      () => {
+        val ms = Similarity.loadMomentsStore(spark, s"$tmp/store")
+        Seq(ms.docs, ms.moments)
+      },
+      k => assert(moments(Similarity.loadMomentsStore(spark,
+          s"$tmp/store").moments) ==
+        moments(Similarity.pcaMoments(liveAfter(batches, k)
+          .toDF("vec_id", "embedding"), "embedding"))))
+  }
+
+  test("streamingSigIndexDedup: a crash at any commit point heals to " +
+      "the batch-mode increment fold on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_sigix")
+    val base = Seq((0L, "aa bb cc dd"), (1L, "ee ff gg hh"))
+    base.toDF("doc_id", "text").write.parquet(s"$tmp/docs/batch=-1")
+    def sigsOf(rows: Seq[(Long, String)]) =
+      Dedup.minhashSignaturesPortable(rows.toDF("doc_id", "text"),
+        "text", "doc_id", 16, 1)
+    Dedup.saveSigIndex(Dedup.SigIndex(sigsOf(base), 16, 1, 42L,
+      portable = true), s"$tmp/store"): Unit
+    // each batch: a copy of the doc the previous batch kept, and a
+    // novel doc that rolls the index forward
+    val texts = Seq("mm nn oo pp", "qq rr ss tt", "uu vv ww xx",
+      "yy zz ab cd")
+    val batches = texts.indices.map(k => Seq(
+      (10L * k + 10L, if (k == 0) "aa bb cc dd" else texts(k - 1)),
+      (10L * k + 11L, texts(k))))
+    def corpusAfter(k: Int) = base ++ batches.take(k + 1).map(_(1))
+    def sigs(df: DataFrame) = df.collect().map(_.toString).toSet
+    crashEachPoint(s"$tmp/store", "meta", batches)((s, c) =>
+      StreamingIngest.streamingSigIndexDedup(s.toDF("doc_id", "text"),
+        s"$tmp/docs", s"$tmp/store", s"$tmp/rep", c, threshold = 0.5,
+        bands = 8))(
+      () => {
+        val ix = Dedup.loadSigIndex(spark, s"$tmp/store")
+        Seq(ix.sigs, Seq((ix.numHashes, ix.shingleSize, ix.seed,
+          ix.portable)).toDF())
+      },
+      k => {
+        val before = if (k == 0) base else corpusAfter(k - 1)
+        val expected = Dedup.incrementalDedupFromIndex(
+            Dedup.SigIndex(sigsOf(before), 16, 1, 42L, portable = true),
+            before.toDF("doc_id", "text"),
+            batches(k).toDF("doc_id", "text"), "text", "doc_id",
+            threshold = 0.5, bands = 8)
+          .collect().map(_.toString).toSet
+        assert(spark.read.parquet(s"$tmp/rep/batch=$k").collect()
+          .map(_.toString).toSet == expected)
+        assert(sigs(Dedup.loadSigIndex(spark, s"$tmp/store").sigs) ==
+          sigs(sigsOf(corpusAfter(k))))
+      })
+  }
+
+  test("streamingPageRank: a crash at any commit point heals to the " +
+      "batch warm-start fold on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_pr")
+    val baseEdges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L))
+    baseEdges.toDF("start_id", "end_id")
+      .write.parquet(s"$tmp/edges/batch=-1")
+    val seed = GraphOps.pageRank(baseEdges.toDF("start_id", "end_id"),
+      damping = 0.5, iterations = 20).localCheckpoint()
+    GraphOps.saveRankStore(spark, s"$tmp/scores", seed, 0.5): Unit
+    val batches = Seq(Seq((3L, 1L), (4L, 0L)), Seq((5L, 4L)),
+      Seq((6L, 5L)), Seq((7L, 6L), (2L, 7L)))
+    def m(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // PageRank sums doubles: per-node agreement to 1e-12 (the q_g3
+    // ROUND caveat)
+    val folds = batches.indices.scanLeft(m(seed)) { (prev, k) =>
+      m(GraphOps.incrementalPageRank(
+        (baseEdges ++ batches.take(k + 1).flatten).toDF("start_id",
+          "end_id"), prev.toSeq.toDF("id", "rank"), damping = 0.5,
+        iterations = 2))
+    }.tail
+    crashEachPoint(s"$tmp/scores", "meta", batches, vacuums = false)(
+      (s, c) => StreamingIngest.streamingPageRank(
+        s.toDF("start_id", "end_id"), s"$tmp/edges", s"$tmp/scores", c))(
+      () => {
+        val st = GraphOps.loadRankStore(spark, s"$tmp/scores")
+        Seq(st.scores, Seq(st.damping).toDF())
+      },
+      k => {
+        val served = m(GraphOps.loadRankStore(spark, s"$tmp/scores")
+          .scores)
+        assert(served.keySet == folds(k).keySet && served.forall {
+          case (id, r) => math.abs(r - folds(k)(id)) < 1e-12 })
+      })
+  }
+}

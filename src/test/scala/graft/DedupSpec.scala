@@ -406,7 +406,7 @@ class DedupSpec extends SparkSpec {
     // refuses at load instead of serving garbage candidates
     Dedup.minhashSignaturesPortable(corpus, "text", "doc_id",
         numHashes = 8, shingleSize = 3, seed = 7L)
-      .write.mode("overwrite").parquet(s"$dir/sigs")
+      .write.mode("overwrite").parquet(s"$dir/_v1/sigs")
     intercept[IllegalArgumentException](Dedup.loadSigIndex(spark, dir))
   }
 

@@ -203,12 +203,22 @@ class GraphOpsSpec extends SparkSpec {
     assert(st2.version == 2L && st2.tag == "7" &&
       m(st2.scores) == inMem)
     // v1 is still on disk, untouched — immutability
-    assert(m(spark.read.parquet(s"$dir/scores/v1")) == m(scores))
+    assert(m(spark.read.parquet(s"$dir/_v1/scores")) == m(scores))
     val boom = intercept[IllegalArgumentException](
       GraphOps.saveRankStore(spark, dir, scores, 0.85))
     assert(boom.getMessage.contains("damping"))
     intercept[IllegalArgumentException](
       GraphOps.saveRankStore(spark, dir, scores, 0.5, tag = "a_b"))
+    // a store in the older scores/v<n> layout (meta at the root) is
+    // refused with a message naming the layout change
+    val old = dir + "_old"
+    spark.range(1).select(lit(0.5).as("damping")).write.parquet(s"$old/meta")
+    scores.write.parquet(s"$old/scores/v1")
+    assert(new java.io.File(s"$old/_commits/1_-").getParentFile.mkdirs() &&
+      new java.io.File(s"$old/_commits/1_-").createNewFile())
+    assert(intercept[IllegalArgumentException](
+      GraphOps.loadRankStore(spark, old)).getMessage
+      .contains("scores/v<n> layout"))
   }
 
   test("hits: star graph — center is the sole authority, leaves the " +

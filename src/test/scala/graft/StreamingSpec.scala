@@ -1355,7 +1355,8 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
     assert(served() == before, "redelivered batch absorbed once")
     // mid-crash redelivery: started without final marker — the
-    // maintain path would double-apply; the twin must cold-rebuild
+    // store's latest commit carries a later batch's tag, so the
+    // redelivered batch must not be applied again
     assert(new java.io.File(s"$tmp/docs/_batches/0").delete(),
       "fixture: drop batch 0's final marker")
     assert(new java.io.File(s"$tmp/docs/_batches/0.started").mkdirs())
@@ -1389,11 +1390,11 @@ class StreamingSpec extends SparkSpec {
       mem.toDF().toDF("op", "doc_id", "text"),
       s"$tmp/docs", s"$tmp/dels", s"$tmp/lm", s"$tmp/ckpt")
     def stored(): Map[(String, String, String), Long] =
-      spark.read.parquet(s"$tmp/lm/model").collect()
+      Relevance.loadTrigramLm(spark, s"$tmp/lm").model.collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
           r.getLong(3)).toMap
     def registry(): Set[Long] =
-      spark.read.parquet(s"$tmp/lm/docs").collect()
+      Relevance.loadTrigramLm(spark, s"$tmp/lm").docs.collect()
         .map(_.getLong(0)).toSet
     def full(docs: Seq[(Long, String)]): Map[(String, String, String), Long] =
       Relevance.buildTrigramLm(docs.toDF("doc_id", "text"),
@@ -1454,7 +1455,8 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
     assert(stored() == before, "redelivered batch absorbed once")
     // mid-crash redelivery: started without final marker — the
-    // maintain path would double-apply; the twin must cold-rebuild
+    // store's latest commit carries a later batch's tag, so the
+    // redelivered batch must not be applied again
     assert(new java.io.File(s"$tmp/docs/_batches/0").delete(),
       "fixture: drop batch 0's final marker")
     assert(new java.io.File(s"$tmp/docs/_batches/0.started").mkdirs())
@@ -1488,7 +1490,7 @@ class StreamingSpec extends SparkSpec {
       mem.toDF().toDF("op", "doc_id", "text"),
       s"$tmp/docs", s"$tmp/dels", s"$tmp/store", s"$tmp/ckpt")
     def stored(): Map[String, Long] =
-      spark.read.parquet(s"$tmp/store/words").collect()
+      Tokenizer.loadWordStore(spark, s"$tmp/store").words.collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     def full(docs: Seq[(Long, String)]): Map[String, Long] =
       Tokenizer.buildWordStore(docs.toDF("doc_id", "text"),
@@ -1539,7 +1541,8 @@ class StreamingSpec extends SparkSpec {
       q2.processAllAvailable()
     } finally q2.stop()
     assert(stored() == before, "redelivered batch absorbed once")
-    // mid-crash redelivery: started without final marker → cold rebuild
+    // mid-crash redelivery: started without final marker — a later
+    // batch's tag is committed, so the store must stay as it is
     assert(new java.io.File(s"$tmp/docs/_batches/0").delete())
     assert(new java.io.File(s"$tmp/docs/_batches/0.started").mkdirs())
     val mem3 = MemoryStream[(String, Long, String)]
@@ -1575,7 +1578,7 @@ class StreamingSpec extends SparkSpec {
       mem.toDF().toDF("op", "vec_id", "embedding"),
       s"$tmp/docs", s"$tmp/dels", s"$tmp/store", s"$tmp/ckpt")
     def stored(): Map[(Long, Long), (Long, Long, Long, Long)] =
-      spark.read.parquet(s"$tmp/store/moments").collect()
+      Similarity.loadMomentsStore(spark, s"$tmp/store").moments.collect()
         .map(r => (r.getAs[Long]("i"), r.getAs[Long]("j")) ->
           ((r.getAs[Long]("n"), r.getAs[Long]("s_i"),
             r.getAs[Long]("s_j"), r.getAs[Long]("sp")))).toMap
@@ -1660,7 +1663,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.getString(2))).toSet
     def storedSigs(): Set[Seq[Long]] =
-      spark.read.parquet(s"$tmp/store/sigs").collect()
+      Dedup.loadSigIndex(spark, s"$tmp/store").sigs.collect()
         .map(r => r.schema.fieldNames.sorted.toSeq
           .map(f => r.getAs[Long](f))).toSet
     def freshSigs(rows: Seq[(Long, String)]): Set[Seq[Long]] =
@@ -1694,9 +1697,9 @@ class StreamingSpec extends SparkSpec {
       } finally q2.stop()
       assert(storedSigs() == afterT1 && report(0L) == expected(base, b1),
         "redelivered batch absorbed once")
-      // mid-crash redelivery: started-without-final → the store heals
-      // from ground truth (re-sign batches < 0: the base corpus),
-      // then the batch re-applies — same end state
+      // mid-crash redelivery: started-without-final, but the store's
+      // latest commit carries batch 0's tag — the batch is not
+      // applied again, same end state
       assert(new java.io.File(s"$tmp/store/_batches/0").delete())
       assert(
         new java.io.File(s"$tmp/store/_batches/0.started").mkdirs())
@@ -1793,7 +1796,7 @@ class StreamingSpec extends SparkSpec {
       // a crashed publisher left a PARTIAL uncommitted v4: invisible
       // to loads, and the next real trigger rewrites it idempotently
       Seq((99L, 123.456)).toDF("id", "rank")
-        .write.parquet(s"$tmp/scores/scores/v4")
+        .write.parquet(s"$tmp/scores/_v4/scores")
       assert(served().version == 3L &&
         !m(served().scores).contains(99L),
         "an uncommitted version is invisible")
