@@ -121,8 +121,9 @@ import graft.operators.{Curation, GraphOps}
   *   annretrain  --target <index dir> --vectors <float corpus dir>
   *               [--vec-col embedding] [--id-col doc_id] [-o <outDir>]
   *               (the retrain_recommended ACTION: rebuild quantizers
-  *               from the tombstone-purged corpus, re-encode, swap the
-  *               staged layout in, report recall before/after)
+  *               from the tombstone-purged corpus, re-encode, commit
+  *               the rebuild as the index's next version, report
+  *               recall before/after)
   *   annmaint    --target <index dir> --vectors <float corpus dir>
   *               [--threshold TOL] [--vec-col embedding]
   *               [--id-col doc_id] [-o <outDir>]
@@ -282,11 +283,10 @@ import graft.operators.{Curation, GraphOps}
   *               [--budget KEEP_VERSIONS] (versioned-manifest
   *               lifecycle: publish v1, purge below the kept horizon,
   *               drop crash residue, or report the committed chain)
-  *   anneras     --docs <index dir> [--mode snapshot|retrain|vacuum|
-  *               recover|report] [--vectors <corpus dir>]
-  *               [--budget KEEP_ERAS] (era-versioned ANN index:
-  *               migrate, publish a retrain as a new era, purge old
-  *               eras, drop crash residue, or report)
+  *   anneras     --docs <index dir> [--mode vacuum|recover|report]
+  *               [--budget KEEP_VERSIONS] (versioned ANN index:
+  *               purge versions below the kept horizon, drop a
+  *               crashed retrain's claim, or report the latest)
   *   rankmaint   --docs <edge table dir> --target <rank store dir>
   *               [--threshold DAMPING (build only)] [--budget ITERS]
   *               (maintained PageRank store: cold build + save on

@@ -220,38 +220,28 @@ private[graft] object AnalyzeMore {
           "writeLayout path whose _append_pending stage to resolve)")
       Some(graft.operators.Layout.recoverAppend(spark, args.docs))
     case "anneras" =>
-      // era lifecycle for a saveIndex store: --docs <index dir>,
-      // --mode snapshot (migrate to eras/e1) | retrain (publish
-      // e<n+1> from --vectors <corpus dir>) | vacuum (--budget =
-      // eras to keep, default 1) | recover | report (default)
+      // version lifecycle of an ANN index (a saveIndex store is
+      // version 0, annretrain commits the next): --docs <index dir>,
+      // --mode vacuum (--budget = versions to keep, default 1) |
+      // recover (drop a crashed retrain's claim) | report (default)
       require(args.docs.nonEmpty,
-        "anneras needs --docs <index dir>; --mode snapshot|retrain|" +
-          "vacuum|recover|report, --vectors <corpus dir> (retrain), " +
-          "--budget KEEP_ERAS (vacuum)")
-      import graft.operators.Similarity
+        "anneras needs --docs <index dir>; --mode vacuum|recover|" +
+          "report, --budget KEEP_VERSIONS (vacuum)")
+      import graft.operators.FrameVersions
       Some(args.mode match {
-        case "snapshot" =>
-          val n = Similarity.snapshotIndexEras(spark, args.docs)
-          spark.range(1).select(lit("snapshotted").as("action"),
-            lit(n).as("era"))
-        case "retrain" =>
-          require(args.vectors.nonEmpty,
-            "anneras --mode retrain needs --vectors <corpus dir> " +
-              "(vec_id, embedding)")
-          Similarity.retrainIndexEra(spark, args.docs,
-            spark.read.parquet(args.vectors), "embedding", "vec_id")
         case "vacuum" =>
-          Similarity.vacuumIndexEras(spark, args.docs,
+          val n = FrameVersions.vacuum(spark, args.docs,
             keepLast = if (args.budgetSet) args.budget.toInt else 1)
+          spark.range(1).select(lit(n).as("versions_dropped"),
+            lit(FrameVersions.current(spark, args.docs))
+              .as("current_version"))
         case "recover" =>
-          Similarity.recoverIndexEras(spark, args.docs)
+          FrameVersions.recover(spark, args.docs)
           spark.range(1).select(lit("recovered").as("action"),
-            lit(Similarity.currentIndexEra(spark, args.docs))
-              .as("era"))
+            lit(FrameVersions.current(spark, args.docs)).as("version"))
         case _ =>
-          spark.range(1).select(
-            lit(Similarity.currentIndexEra(spark, args.docs))
-              .as("current_era"))
+          spark.range(1).select(lit(graft.operators.Similarity
+            .indexVersion(spark, args.docs).n).as("current_version"))
       })
     case "rankmaint" =>
       // maintained PageRank serving store: --docs <edge table dir>
@@ -310,21 +300,13 @@ private[graft] object AnalyzeMore {
             lit(Layout.currentLayoutVersion(spark, args.docs))
               .as("version"))
         case _ =>
-          val cur = Layout.currentLayoutVersion(spark, args.docs)
-          require(cur >= 1, s"the store at ${args.docs} is not " +
+          val vs = Layout.snapshots(spark, args.docs)
+          require(vs.nonEmpty, s"the store at ${args.docs} is not " +
             "versioned — run --mode snapshot first")
-          (1L to cur).flatMap(n =>
-            if (new org.apache.hadoop.fs.Path(
-              s"${args.docs}/_versions/v$n/_COMMITTED").getFileSystem(
-              spark.sparkContext.hadoopConfiguration).exists(
-              new org.apache.hadoop.fs.Path(
-                s"${args.docs}/_versions/v$n/_COMMITTED")))
-              Some(Layout.layoutVersionManifest(spark, args.docs, n)
-                .agg(count(lit(1)).as("n_files"),
-                  sum("n_rows").as("n_rows"))
-                .select(lit(n).as("version"), col("n_files"),
-                  col("n_rows")))
-            else None)
+          vs.map(v => v.read("manifest")
+              .agg(count(lit(1)).as("n_files"), sum("n_rows").as("n_rows"))
+              .select(lit(v.n).as("version"), col("n_files"),
+                col("n_rows")))
             .reduce(_ unionByName _)
       })
     case "incrdedup" =>

@@ -189,11 +189,12 @@ private[graft] object QueriesSimilarity {
     // ---- X3s: RETRAIN executor — the action behind q_x3p's
     // retrain_recommended, closing the lifecycle loop: the q_x3k
     // updated index (base-slice quantizers + absorbed delta, drift
-    // ledger populated) is retrained from the full corpus and
-    // atomically swapped in, then queried. The deterministic id-hash
-    // sampling makes retrain ≡ a FRESH build on the full corpus, so
+    // ledger populated) is retrained from the full corpus, the
+    // rebuild committed as the index's next version, then queried.
+    // The deterministic id-hash sampling makes retrain ≡ a FRESH
+    // build on the full corpus, so
     // the oracle is q_x3j's full-corpus IVF-PQ rebuild — any stale
-    // quantizer, missed row, or broken swap hash-mismatches. ----
+    // quantizer, missed row, or broken commit hash-mismatches. ----
     "q_x3s_retrained_index" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val ixDir = x3kUpdatedIndexDir(s, dir)
@@ -209,19 +210,20 @@ private[graft] object QueriesSimilarity {
         .orderBy("query_id", "rank")
     }),
 
-    // ---- X3se: ERA-VERSIONED retrain — the q_x3s lifecycle run
-    // through the snapshot chain (migrate → retrainIndexEra publishes
-    // e2 without touching e1 → serveTopK resolves the committed era).
-    // SHARES q_x3s's oracle: the era-routed rebuild must serve the
-    // identical fresh-build results — a mis-resolved root, an
-    // uncommitted-era read, or a swap that leaked into e1 all
-    // hash-mismatch. ----
+    // ---- X3se: VERSIONED retrain lifecycle — the q_x3s retrain run
+    // twice (each commits the rebuild as the next version, v1 then v2,
+    // without touching the one it read), then a vacuum purges v1 and
+    // the saveIndex root before serveTopK resolves v2. SHARES q_x3s's
+    // oracle: retrain ≡ a fresh build, so v2 must serve the identical
+    // results — a mis-resolved root, an uncommitted read, or a vacuum
+    // that touched the kept version all hash-mismatch. ----
     "q_x3se_era_retrain" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val ixDir = x3kUpdatedIndexDir(s, dir)
-      Similarity.snapshotIndexEras(s, ixDir): Unit
-      Similarity.retrainIndexEra(s, ixDir, e, "embedding", "vec_id")
-        .write.format("noop").mode("overwrite").save()
+      (1 to 2).foreach(_ =>
+        Similarity.retrainIndex(s, ixDir, e, "embedding", "vec_id")
+          .write.format("noop").mode("overwrite").save())
+      FrameVersions.vacuum(s, ixDir): Unit
       Similarity.serveTopK(s, ixDir, e.filter(col("vec_id") < 8),
           "embedding", "vec_id", topK = 5, nProbe = 8)
         .select(col("query_id"), col("vec_id"),
@@ -634,7 +636,7 @@ private[graft] object QueriesSimilarity {
     // centroids cannot cover (delta mean assign cosine ≈ 0.1 vs the
     // build's ≈ 1), so measured drift >> 2σ and maintainIndex MUST
     // retrain: quantizers rebuild from the live mixed corpus and the
-    // atomic swap serves them. Oracle = the fresh full-corpus build
+    // committed version serves them. Oracle = the fresh full-corpus build
     // over the mixed (clustered ∪ raw) corpus + the 'retrained'
     // action literal — a policy that silently skips the retrain (or
     // retrains on the benign branch) hash-mismatches its row. ----
@@ -1255,8 +1257,9 @@ private[graft] object QueriesSimilarity {
     // q_x3j's verbatim.
     "q_x3s_retrained_index" -> ivfPqOracleSql,
 
-    // the era-routed retrain must serve the identical fresh build —
-    // the shared oracle IS the claim (q_g3e/q_x2t discipline)
+    // the twice-retrained, vacuumed index must serve the identical
+    // fresh build — the shared oracle IS the claim (q_g3e/q_x2t
+    // discipline)
     "q_x3se_era_retrain" -> ivfPqOracleSql,
 
     // The q_x3p rebuild with the tombstoned ids excluded BEFORE the

@@ -47,6 +47,20 @@ object Layout {
   private def idiv(a: Column, b: Column): Column =
     call_function("div", a, b)
 
+  /** Read one of a store's underscore-named frames (`_meta`, `_stats`)
+    * by its listed part files: Spark hides `_`-prefixed paths, so a
+    * read that names such a directory logs "All paths were ignored"
+    * on every call, while its part files carry plain names. */
+  private[graft] def readFrame(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    spark.read.parquet(p.getFileSystem(spark.sparkContext
+        .hadoopConfiguration).listStatus(p).map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") ||
+        f.getName.startsWith("."))
+      .map(_.toString).toIndexedSeq: _*)
+  }
+
   /** Layout identity carried as COLUMN METADATA on `_bucket` by the
     * layout builders, so [[writeLayout]] can validate the caller's
     * declared (curve, bits, nBuckets, cols) against how the frame was
@@ -476,7 +490,7 @@ object Layout {
     val (laidDelta, bloomCols, bloomBits, bloomHashes) =
       layDeltaWithIdentity(spark, path, rows, cols, bits, nBuckets,
         curve, "appendToLayout")
-    val stats = spark.read.parquet(s"$path/_stats")
+    val stats = readFrame(spark, s"$path/_stats")
     cols.foreach(c => require(stats.columns.contains(s"min_$c"),
       s"appendToLayout: the manifest has no envelope for column " +
         s"'$c' — the append must name exactly the columns the store " +
@@ -512,7 +526,7 @@ object Layout {
         "store must be written by writeLayout (which persists the " +
         "curve and build-time anchors); appending blind would " +
         "scatter the delta")
-    val metaDf = spark.read.parquet(s"$path/_meta")
+    val metaDf = readFrame(spark, s"$path/_meta")
     val meta = metaDf.head()
     val storeCurve = meta.getAs[String]("curve")
     val storeBits = meta.getAs[Long]("bits").toInt
@@ -787,23 +801,17 @@ object Layout {
         .join(broadcast(ids), Seq(idCol), "left_anti")
         .localCheckpoint() // rewrite + stats from ONE frame, pinned
         // BEFORE the partition dirs it was read from are replaced
-      val statCols = spark.read.parquet(s"$path/_stats").columns
+      val statCols = readFrame(spark, s"$path/_stats").columns
         .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSeq
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
       // bloom geometry (if the store sketches): touched buckets
       // RECOUNT their sketches from survivors — membership is not
       // subtractable, exactly the min/max recount discipline
-      val metaPath = new org.apache.hadoop.fs.Path(s"$path/_meta")
       val (bloomCols, bloomBits, bloomHashes) =
-        if (fs.exists(metaPath)) {
-          val m = spark.read.parquet(metaPath.toString).head()
-          if (m.schema.fieldNames.contains("bloom_cols"))
-            (m.getAs[scala.collection.Seq[String]]("bloom_cols").toSeq,
-              m.getAs[Long]("bloom_bits").toInt,
-              m.getAs[Long]("bloom_hashes").toInt)
-          else (Nil, 1 << 13, 5)
-        } else (Nil, 1 << 13, 5)
+        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")))
+          bloomGeometry(spark, path)
+        else (Nil, 1 << 13, 5)
       val survivorBuckets = survivors
         .select(col("_bucket").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSet
@@ -826,7 +834,7 @@ object Layout {
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/_bucket=$b"),
           true): Unit
       }
-      val stats = spark.read.parquet(s"$path/_stats")
+      val stats = readFrame(spark, s"$path/_stats")
       val kept = stats
         .filter(!col("bucket").isin(touched.map(Long.box): _*))
       val refreshed = fileSkippingStats(survivors, "_bucket", statCols,
@@ -857,7 +865,7 @@ object Layout {
       s"prunedScan: no skipping manifest at $statsPath — the store " +
         "must be written by writeLayout (or carry its layout); a " +
         "plain parquet directory cannot be manifest-pruned")
-    val stats = spark.read.parquet(s"$path/_stats")
+    val stats = readFrame(spark, s"$path/_stats")
     ranges.foreach { case (c, _, _) =>
       require(stats.columns.contains(s"min_$c"),
         s"prunedScan: the manifest has no envelope for column '$c' " +
@@ -892,10 +900,7 @@ object Layout {
         require(fs.exists(metaPath),
           s"prunedScan: point predicates need the store identity at " +
             s"$metaPath (writeLayout records the bloom geometry there)")
-        val m = spark.read.parquet(metaPath.toString).head()
-        if (m.schema.fieldNames.contains("bloom_hashes"))
-          m.getAs[Long]("bloom_hashes").toInt
-        else 5
+        bloomGeometry(spark, path)._3
       }
     val verdicts0 =
       if (ranges.nonEmpty) skippingVerdicts(stats, ranges)
@@ -970,71 +975,83 @@ object Layout {
     stats.withColumn("skipped", when(miss, lit(1L)).otherwise(lit(0L)))
   }
 
-  // ──────────────────── versioned manifests (snapshots) ─────────────────
+  // ─────────────── versioned manifests (FrameVersions snapshots) ─────────
   //
   // The durability milestone on top of the live store: a committed
-  // chain of immutable snapshots under `<path>/_versions/v<n>/`, each a
-  // PER-FILE manifest (file list + per-file envelopes/sketches), with a
-  // single atomic marker create as the pointer swap. Once a store is
-  // versioned:
+  // chain of immutable snapshots, each a PER-FILE manifest (file list +
+  // per-file envelopes/sketches) committed as frame `manifest` of the
+  // [[FrameVersions]] store at `<path>/_versions` — its commit marker
+  // create is the pointer swap, and its claim on `n + 1` refuses a
+  // publisher whose base snapshot is no longer the latest.
+  // Once a store is versioned:
   //
   //  * data files are IMMUTABLE until vacuum — append only ADDS files,
   //    erasure REWRITES touched buckets into new files and leaves the
   //    old ones for pinned readers (physical purge = `vacuumLayout`,
   //    the GDPR caveat a caller must know);
-  //  * a reader pins `currentLayoutVersion` once and reads THAT
-  //    manifest's files for as long as it likes — maintenance can
-  //    publish v+1 underneath it freely. This removes the documented
+  //  * a reader pins a snapshot once and reads THAT manifest's files
+  //    for as long as it likes — maintenance can publish v+1
+  //    underneath it freely, so versioned stores need no
   //    hold-localCheckpoint-across-maintenance reader discipline
-  //    (COVERAGE.md contract) for versioned stores;
+  //    (COVERAGE.md contract);
   //  * the PLAIN maintenance ops refuse (they mutate in place), and
   //    the plain directory read is no longer meaningful after the
   //    first versioned erasure (old and new files coexist) — all reads
   //    go through [[readLayoutVersion]] / [[prunedScanVersion]].
   //
-  // Commit protocol (the Iceberg discipline, from public designs): new
-  // data files land first (invisible — nothing references them), the
-  // manifest writes under `_versions/v<n+1>/` behind an exclusive
-  // `_LOCK` create, and the `_COMMITTED` marker create IS the commit
-  // point. A crash anywhere before the marker leaves the current
-  // version fully intact; `recoverLayoutVersions` sweeps the
+  // New data files land first (invisible — nothing references them)
+  // from a stage behind an exclusive `_STAGE_LOCK`, then the manifest
+  // commits. A crash anywhere before the marker leaves the current
+  // snapshot fully intact; `recoverLayoutVersions` sweeps the
   // uncommitted residue and `vacuumLayout` sweeps orphaned data files.
 
+  /** Every committed snapshot of the store at `path`, oldest first.
+    * A store still in the retired `_versions/v<n>/_COMMITTED` layout is
+    * refused. */
+  def snapshots(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[FrameVersions.Version] = {
+    val all = FrameVersions.versions(spark, s"$path/_versions")
+    require(all.nonEmpty || Option(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(new org.apache.hadoop.fs.Path(
+        s"$path/_versions/v*/_COMMITTED"))).forall(_.isEmpty),
+      s"the store at $path keeps its snapshots in the retired " +
+        "_versions/v<n>/_COMMITTED layout; snapshots now commit " +
+        s"through FrameVersions at $path/_versions — rebuild it with " +
+        "writeLayout + snapshotLayout")
+    all
+  }
+
   /** Largest committed snapshot version at `path` (0 = the store is
-    * not versioned). One directory listing + one marker probe per
-    * version directory — metadata-only. */
+    * not versioned). One listing of the commit markers. */
   def currentLayoutVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val vroot = new org.apache.hadoop.fs.Path(s"$path/_versions")
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vroot)) 0L
-    else fs.listStatus(vroot)
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.matches("v[0-9]+"))
-      .map(_.drop(1).toLong)
-      .filter(n => fs.exists(new org.apache.hadoop.fs.Path(
-        s"$path/_versions/v$n/_COMMITTED")))
-      .foldLeft(0L)(math.max)
+      path: String): Long =
+    snapshots(spark, path).lastOption.fold(0L)(_.n)
+
+  // Committed snapshot `version` (-1 = current). Refuses a version
+  // that was never committed or has been vacuumed (a pinned reader of
+  // a vacuumed snapshot must fail loudly, not read a half-swept file
+  // set).
+  private def snapshot(spark: org.apache.spark.sql.SparkSession,
+      path: String, version: Long = -1L): FrameVersions.Version = {
+    val all = snapshots(spark, path)
+    require(all.nonEmpty,
+      s"the store at $path is not versioned — snapshotLayout first")
+    val v = if (version <= 0) all.lastOption else all.find(_.n == version)
+    require(v.nonEmpty,
+      s"no committed snapshot v$version at $path — it was never " +
+        s"published, or vacuumLayout dropped it; current = ${all.last.n}")
+    v.get
   }
 
   /** The committed per-file manifest of snapshot `version`: one row
     * per data file — (`bucket`, `file` (store-relative path),
     * `n_rows`, `min_<c>`/`max_<c>` per clustered column, `bloom_<c>`
-    * per sketched column). Refuses a version that was never committed
-    * or has been vacuumed (a pinned reader of a vacuumed snapshot
-    * must fail loudly, not read a half-swept file set). */
+    * per sketched column). */
   def layoutVersionManifest(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Long): DataFrame = {
     require(version >= 1, s"snapshot versions start at 1 (got $version)")
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$path/_versions/v$version/_COMMITTED")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker),
-      s"layoutVersionManifest: no committed snapshot v$version at " +
-        s"$path — it was never published, or vacuumLayout dropped it; " +
-        s"current = ${currentLayoutVersion(spark, path)}")
-    spark.read.parquet(s"$path/_versions/v$version/manifest")
+    snapshot(spark, path, version).read("manifest")
   }
 
   // Per-FILE skipping stats — the versioned twin of
@@ -1057,50 +1074,10 @@ object Layout {
             col(c).cast("long"), bloomBits, bloomHashes)
             .as(s"bloom_$c"))): _*)
 
-  // The pointer swap: exclusive `_LOCK` create (exactly one publisher
-  // per version number), manifest write, then the `_COMMITTED` marker
-  // create — the single atomic commit point readers key on.
-  private def publishLayoutVersion(
-      fs: org.apache.hadoop.fs.FileSystem, path: String, n: Long,
-      manifest: DataFrame, tag: String = "-"): Unit = {
-    require(!tag.contains("/") && tag.nonEmpty,
-      s"layout version tags must be /-free and nonempty (got '$tag')")
-    val vdir = s"$path/_versions/v$n"
-    require(fs.createNewFile(
-      new org.apache.hadoop.fs.Path(s"$vdir/_LOCK")),
-      s"another writer is publishing v$n at $vdir (or a crashed " +
-        s"publish holds it) — single-writer discipline; run " +
-        s"recoverLayoutVersions($path) if no writer is live")
-    manifest.write.mode("overwrite").parquet(s"$vdir/manifest")
-    // the tag lands BEFORE the marker: committed ⇒ tagged — the
-    // streaming twin's exactly-once check keys on it
-    if (tag != "-")
-      fs.create(new org.apache.hadoop.fs.Path(s"$vdir/_TAG_$tag"),
-        true).close()
-    fs.create(new org.apache.hadoop.fs.Path(s"$vdir/_COMMITTED"), true)
-      .close()
-  }
-
-  /** Does any COMMITTED snapshot at `path` carry `tag`? The streaming
-    * twin's redelivery probe: a committed tag proves its batch fully
-    * applied (the tag lands before the commit marker, and the
-    * tagged append is the batch's last mutation). */
-  def layoutVersionTagged(spark: org.apache.spark.sql.SparkSession,
-      path: String, tag: String): Boolean = {
-    val vroot = new org.apache.hadoop.fs.Path(s"$path/_versions")
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(vroot) && fs.listStatus(vroot)
-      .filter(d => d.isDirectory && d.getPath.getName.matches("v[0-9]+"))
-      .exists(d =>
-        fs.exists(new org.apache.hadoop.fs.Path(d.getPath, "_COMMITTED"))
-          && fs.exists(new org.apache.hadoop.fs.Path(d.getPath,
-            s"_TAG_$tag")))
-  }
-
   // Shared bloom-geometry fetch from the store identity.
   private def bloomGeometry(spark: org.apache.spark.sql.SparkSession,
       path: String): (Seq[String], Int, Int) = {
-    val m = spark.read.parquet(s"$path/_meta").head()
+    val m = readFrame(spark, s"$path/_meta").head()
     if (m.schema.fieldNames.contains("bloom_cols"))
       (m.getAs[scala.collection.Seq[String]]("bloom_cols").toSeq,
         m.getAs[Long]("bloom_bits").toInt,
@@ -1130,13 +1107,13 @@ object Layout {
       s"snapshotLayout: the store at $path is already versioned — " +
         "maintenance publishes snapshots itself; re-snapshotting " +
         "would adopt orphaned (superseded or crash-staged) files")
-    val m = spark.read.parquet(s"$path/_meta").head()
+    val m = readFrame(spark, s"$path/_meta").head()
     val cols = m.getAs[scala.collection.Seq[String]]("cols").toSeq
     val (bloomCols, bloomBits, bloomHashes) = bloomGeometry(spark, path)
     val manifest = perFileStats(spark.read.parquet(path), cols,
       bloomCols, bloomBits, bloomHashes).localCheckpoint()
-    publishLayoutVersion(fs, path, 1L, manifest)
-    1L
+    FrameVersions.latest(spark, s"$path/_versions")
+      .commit(Seq("manifest" -> manifest))
   }
 
   /** Full read of snapshot `version` (default: current) — the pinned
@@ -1145,10 +1122,10 @@ object Layout {
     * change or break this read. */
   def readLayoutVersion(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Long = -1L): DataFrame = {
-    val v = resolveVersion(spark, path, version)
-    val files = layoutVersionManifest(spark, path, v)
+    val v = snapshot(spark, path, version)
+    val files = v.read("manifest")
       .select("file").collect().map(_.getString(0))
-    if (files.isEmpty) emptyVersionScan(spark, path, v)
+    if (files.isEmpty) emptyVersionScan(spark, path, v.n)
     else spark.read.option("basePath", path)
       .parquet(files.map(f => s"$path/$f").toIndexedSeq: _*)
   }
@@ -1160,13 +1137,8 @@ object Layout {
   // is empty ALL the way down (or vacuumed bare) refuses.
   private def emptyVersionScan(spark: org.apache.spark.sql.SparkSession,
       path: String, from: Long): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val donor = (from to 1L by -1L).iterator
-      .filter(n => fs.exists(new org.apache.hadoop.fs.Path(
-        s"$path/_versions/v$n/_COMMITTED")))
-      .map(n => spark.read.parquet(s"$path/_versions/v$n/manifest")
-        .select("file").head(1))
+    val donor = snapshots(spark, path).filter(_.n <= from).reverseIterator
+      .map(_.read("manifest").select("file").head(1))
       .collectFirst { case arr if arr.nonEmpty => arr.head.getString(0) }
     require(donor.nonEmpty,
       s"snapshot v$from of $path is empty and so is every committed " +
@@ -1175,16 +1147,6 @@ object Layout {
     spark.read.option("basePath", path)
       .parquet(s"$path/${donor.get}").limit(0)
   }
-
-  private def resolveVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String, version: Long): Long =
-    if (version > 0) version
-    else {
-      val cur = currentLayoutVersion(spark, path)
-      require(cur >= 1,
-        s"the store at $path is not versioned — snapshotLayout first")
-      cur
-    }
 
   /** [[prunedScan]] against a PINNED snapshot: the same conservative
     * verdict rule (range envelopes, point sketches/envelopes) applied
@@ -1199,8 +1161,8 @@ object Layout {
       : DataFrame = {
     require(ranges.nonEmpty || points.nonEmpty,
       "prunedScanVersion needs at least one range or point predicate")
-    val v = resolveVersion(spark, path, version)
-    val manifest = layoutVersionManifest(spark, path, v)
+    val v = snapshot(spark, path, version)
+    val manifest = v.read("manifest")
     ranges.foreach { case (c, _, _) =>
       require(manifest.columns.contains(s"min_$c"),
         s"prunedScanVersion: the manifest has no envelope for column " +
@@ -1247,7 +1209,7 @@ object Layout {
           .parquet(kept.map(f => s"$path/$f").toIndexedSeq: _*)
       else {
         val any = manifest.select("file").head(1)
-        if (any.isEmpty) emptyVersionScan(spark, path, v)
+        if (any.isEmpty) emptyVersionScan(spark, path, v.n)
         else spark.read.option("basePath", path)
           .parquet(s"$path/${any.head.getString(0)}").limit(0)
       }
@@ -1262,24 +1224,20 @@ object Layout {
   /** Versioned APPEND: lay the delta with the exact plain-append
     * arithmetic ([[layDeltaWithIdentity]] — one definition of bucket
     * assignment), land its files into the live bucket directories
-    * under their final unique names, and publish v+1 = v's manifest
-    * plus the new files' per-file rows. Existing files are never
-    * touched, so every pinned reader is unaffected; nothing
-    * references the new files until the `_COMMITTED` marker lands, so
-    * a crash anywhere leaves v fully intact (the staged/landed delta
-    * files become vacuum-sweepable orphans and the append simply
-    * re-runs). Returns the new version number. */
+    * under their final unique names, and commit v+1 = v's manifest
+    * plus the new files' per-file rows, tagged `tag`. Existing files
+    * are never touched, so every pinned reader is unaffected; nothing
+    * references the new files until the commit marker lands, so a
+    * crash anywhere leaves v fully intact (the staged/landed delta
+    * files become vacuum-sweepable orphans and the append re-runs
+    * after [[recoverLayoutVersions]]). Returns the new version
+    * number. */
   def appendToLayoutVersioned(
       spark: org.apache.spark.sql.SparkSession, path: String,
       rows: DataFrame, cols: Seq[String], bits: Int, nBuckets: Int,
       curve: String = "z", tag: String = "-"): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = currentLayoutVersion(spark, path)
-    require(v >= 1,
-      s"appendToLayoutVersioned: the store at $path is not " +
-        "versioned — snapshotLayout first (or use appendToLayout)")
-    val prev = layoutVersionManifest(spark, path, v).localCheckpoint()
+    val v = snapshot(spark, path)
+    val prev = v.read("manifest").localCheckpoint()
     cols.foreach(c => require(prev.columns.contains(s"min_$c"),
       s"appendToLayoutVersioned: the manifest has no envelope for " +
         s"column '$c' — the append must name exactly the columns the " +
@@ -1287,14 +1245,8 @@ object Layout {
     val (laidDelta, bloomCols, bloomBits, bloomHashes) =
       layDeltaWithIdentity(spark, path, rows, cols, bits, nBuckets,
         curve, "appendToLayoutVersioned")
-    if (laidDelta.isEmpty) return v // empty delta: nothing to publish
-    val stage = s"$path/_versions/v${v + 1}_stage"
-    require(fs.createNewFile(
-      new org.apache.hadoop.fs.Path(s"$stage/_STAGE_LOCK")),
-      s"appendToLayoutVersioned: another versioned maintenance op " +
-        s"holds the stage at $stage (or a crashed one does) — " +
-        s"single-writer discipline; run recoverLayoutVersions($path) " +
-        "if no writer is live")
+    if (laidDelta.isEmpty) return v.n // empty delta: nothing to publish
+    val stage = acquireStage(spark, path, v.n, "appendToLayoutVersioned")
     laidDelta.repartition(col("_bucket"))
       .write.partitionBy("_bucket").parquet(s"$stage/data")
     // per-file rows from the STAGED files: the staged relative path
@@ -1302,11 +1254,36 @@ object Layout {
     // task-UUID unique, only the directory changes at landing
     val deltaRows = perFileStats(spark.read.parquet(s"$stage/data"),
       cols, bloomCols, bloomBits, bloomHashes).localCheckpoint()
-    landStagedFiles(fs, path, s"$stage/data")
-    publishLayoutVersion(fs, path, v + 1,
+    publishStaged(spark, path, stage, v,
       prev.unionByName(deltaRows), tag)
+  }
+
+  // The stage of the maintenance op building on snapshot `n`, taken
+  // by an exclusive `_STAGE_LOCK` create: of two ops racing from the
+  // same snapshot the second fails here, before it writes anything.
+  private def acquireStage(spark: org.apache.spark.sql.SparkSession,
+      path: String, n: Long, op: String): String = {
+    val stage = s"$path/_versions/_stage_v${n + 1}"
+    require(new org.apache.hadoop.fs.Path(stage)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .createNewFile(new org.apache.hadoop.fs.Path(s"$stage/_STAGE_LOCK")),
+      s"$op: another versioned maintenance op holds the stage at " +
+        s"$stage (or a crashed one does) — single-writer discipline; " +
+        s"run recoverLayoutVersions($path) if no writer is live")
+    stage
+  }
+
+  // Land the stage's data files, commit `manifest` on top of `v`, then
+  // clear the stage. Returns the committed version.
+  private def publishStaged(spark: org.apache.spark.sql.SparkSession,
+      path: String, stage: String, v: FrameVersions.Version,
+      manifest: DataFrame, tag: String): Long = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    landStagedFiles(fs, path, s"$stage/data")
+    val n = v.commit(Seq("manifest" -> manifest), tag)
     fs.delete(new org.apache.hadoop.fs.Path(stage), true): Unit
-    v + 1
+    n
   }
 
   // Move every staged data file into its live bucket directory,
@@ -1339,7 +1316,7 @@ object Layout {
   }
 
   /** Versioned ERASURE: rewrite the touched buckets' SURVIVORS into
-    * new files and publish v+1 = v's manifest minus the touched
+    * new files and commit v+1 = v's manifest minus the touched
     * buckets' old rows plus the new files. The old files stay on disk
     * for pinned readers — the erased rows are logically gone from v+1
     * on, but PHYSICALLY purged only by [[vacuumLayout]] once no kept
@@ -1350,35 +1327,25 @@ object Layout {
   def deleteFromLayoutVersioned(
       spark: org.apache.spark.sql.SparkSession, path: String,
       removedIds: DataFrame, idCol: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = currentLayoutVersion(spark, path)
-    require(v >= 1,
-      s"deleteFromLayoutVersioned: the store at $path is not " +
-        "versioned — snapshotLayout first (or use deleteFromLayout)")
-    val prev = layoutVersionManifest(spark, path, v).localCheckpoint()
+    val v = snapshot(spark, path)
+    val prev = v.read("manifest").localCheckpoint()
     val ids = removedIds
       .select(col(removedIds.columns.head).as(idCol)).distinct()
     // the MANIFEST-scoped live view, never the directory listing —
     // dirs may hold superseded files and crash-staged orphans
-    val live = readLayoutVersion(spark, path, v)
+    val live = readLayoutVersion(spark, path, v.n)
     val touched = live.join(broadcast(ids), Seq(idCol), "left_semi")
       .select(col("_bucket").cast("long")).distinct()
       .collect().map(_.getLong(0))
-    if (touched.isEmpty) return v
+    if (touched.isEmpty) return v.n
     val survivors = live
       .filter(col("_bucket").isin(touched.map(Long.box): _*))
       .join(broadcast(ids), Seq(idCol), "left_anti")
       .localCheckpoint()
-    val m = spark.read.parquet(s"$path/_meta").head()
+    val m = readFrame(spark, s"$path/_meta").head()
     val cols = m.getAs[scala.collection.Seq[String]]("cols").toSeq
     val (bloomCols, bloomBits, bloomHashes) = bloomGeometry(spark, path)
-    val stage = s"$path/_versions/v${v + 1}_stage"
-    require(fs.createNewFile(
-      new org.apache.hadoop.fs.Path(s"$stage/_STAGE_LOCK")),
-      s"deleteFromLayoutVersioned: another versioned maintenance op " +
-        s"holds the stage at $stage (or a crashed one does) — run " +
-        s"recoverLayoutVersions($path) if no writer is live")
+    val stage = acquireStage(spark, path, v.n, "deleteFromLayoutVersioned")
     // touched buckets fully erased → no survivor files to stage (a
     // zero-file parquet write cannot even be re-read for stats); the
     // new manifest simply drops the touched rows — the anchors live
@@ -1389,46 +1356,37 @@ object Layout {
       else {
         survivors.repartition(col("_bucket"))
           .write.partitionBy("_bucket").parquet(s"$stage/data")
-        val rows = perFileStats(spark.read.parquet(s"$stage/data"),
+        perFileStats(spark.read.parquet(s"$stage/data"),
           cols, bloomCols, bloomBits, bloomHashes).localCheckpoint()
-        landStagedFiles(fs, path, s"$stage/data")
-        rows
       }
-    publishLayoutVersion(fs, path, v + 1,
+    publishStaged(spark, path, stage, v,
       prev.filter(!col("bucket").isin(touched.map(Long.box): _*))
-        .unionByName(newRows))
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true): Unit
-    v + 1
+        .unionByName(newRows), "-")
   }
 
-  /** Drop uncommitted residue from crashed versioned maintenance: any
-    * `_versions/v<n>` directory without its `_COMMITTED` marker
-    * (a publish that never reached its commit point — nothing ever
-    * referenced it) and any `v<n>_stage` directory (either its op
-    * crashed pre-commit, or it committed and only the stage cleanup
-    * was lost — landed files are referenced by the committed
-    * manifest, staged leftovers are duplicates either way). Data
-    * files the dropped residue had already landed become orphans for
-    * [[vacuumLayout]]. Safe on a clean store (no-op); single-writer:
-    * never run concurrently with a live maintenance op. */
+  /** Drop uncommitted residue from crashed versioned maintenance: a
+    * claimed snapshot that never reached its commit marker
+    * ([[FrameVersions.recover]] — nothing ever referenced it) and any
+    * maintenance stage (either its op crashed pre-commit, or it
+    * committed and only the stage cleanup was lost — landed files are
+    * referenced by the committed manifest, staged leftovers are
+    * duplicates either way). Data files the dropped residue had
+    * already landed become orphans for [[vacuumLayout]]. Safe on a
+    * clean store (no-op); single-writer: never run concurrently with
+    * a live maintenance op. */
   def recoverLayoutVersions(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val vroot = new org.apache.hadoop.fs.Path(s"$path/_versions")
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vroot)) return
-    fs.listStatus(vroot).filter(_.isDirectory).foreach { d =>
-      val name = d.getPath.getName
-      val uncommitted = name.matches("v[0-9]+") &&
-        !fs.exists(new org.apache.hadoop.fs.Path(d.getPath,
-          "_COMMITTED"))
-      if (uncommitted || name.matches("v[0-9]+_stage"))
-        fs.delete(d.getPath, true): Unit
-    }
+    FrameVersions.recover(spark, s"$path/_versions")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+        s"$path/_versions/_stage_v*"))).toSeq.flatten
+      .foreach(d => fs.delete(d.getPath, true): Unit)
   }
 
   /** Physically purge what no KEPT snapshot references: keep the
-    * latest `keepLast` committed versions, drop every older version's
-    * manifest directory, sweep uncommitted residue
+    * latest `keepLast` committed versions ([[FrameVersions.vacuum]]
+    * drops the older manifests), sweep uncommitted residue
     * ([[recoverLayoutVersions]]), and delete every data file no kept
     * manifest lists — superseded pre-erasure files (the actual
     * right-to-erasure purge) and crash orphans alike. Empty bucket
@@ -1442,19 +1400,16 @@ object Layout {
       path: String, keepLast: Int = 1): DataFrame = {
     require(keepLast >= 1, "vacuumLayout must keep at least the " +
       "current version (keepLast >= 1)")
+    val cur = snapshot(spark, path).n
+    recoverLayoutVersions(spark, path)
+    val versionsDropped =
+      FrameVersions.vacuum(spark, s"$path/_versions", keepLast)
+    val referenced: Set[String] = snapshots(spark, path)
+      .flatMap(_.read("manifest").select("file").collect()
+        .map(_.getString(0)))
+      .toSet
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = currentLayoutVersion(spark, path)
-    require(cur >= 1,
-      s"vacuumLayout: the store at $path is not versioned")
-    recoverLayoutVersions(spark, path)
-    val keptVersions = (math.max(1L, cur - keepLast + 1) to cur)
-      .filter(n => fs.exists(new org.apache.hadoop.fs.Path(
-        s"$path/_versions/v$n/_COMMITTED")))
-    val referenced: Set[String] = keptVersions
-      .flatMap(n => layoutVersionManifest(spark, path, n)
-        .select("file").collect().map(_.getString(0)))
-      .toSet
     var filesDeleted = 0L
     fs.listStatus(new org.apache.hadoop.fs.Path(path))
       .filter(s => s.isDirectory &&
@@ -1472,16 +1427,6 @@ object Layout {
         if (remaining == 0)
           fs.delete(bd.getPath, true): Unit
       }
-    var versionsDropped = 0L
-    val vroot = new org.apache.hadoop.fs.Path(s"$path/_versions")
-    fs.listStatus(vroot).filter(_.isDirectory).foreach { d =>
-      val name = d.getPath.getName
-      if (name.matches("v[0-9]+") &&
-        !keptVersions.contains(name.drop(1).toLong)) {
-        fs.delete(d.getPath, true): Unit
-        versionsDropped += 1
-      }
-    }
     spark.range(1).select(lit(filesDeleted).as("files_deleted"),
       lit(versionsDropped).as("versions_dropped"),
       lit(cur).as("current_version"))

@@ -801,7 +801,12 @@ object Similarity {
     * only those directories (static partition pruning at read; at
     * cluster scale, dynamic partition pruning from the probed-cells
     * join). Codes are m small ints per vector: the float corpus never
-    * ships to the serving side at all. */
+    * ships to the serving side at all.
+    *
+    * The saved layout is version 0 of a [[FrameVersions]] store: every
+    * [[retrainIndex]] commits its rebuild as the next version, so a
+    * store that already has one refuses a root save (its loads would
+    * never see it). */
   def saveIndex(dir: String, centroids: DataFrame, codebooks: DataFrame,
       assignedEncoded: DataFrame, m: Int, k: Int,
       meanAssignCosine: Double = Double.NaN,
@@ -813,6 +818,9 @@ object Similarity {
       "saveIndex: an index lives in ONE basis — pass the Givens " +
         "cascade OR the PCA rotation model, not both")
     val spark = centroids.sparkSession
+    require(FrameVersions.current(spark, dir) == 0L,
+      s"saveIndex: the index at $dir has committed retrains — build " +
+        "into a fresh directory, or retrainIndex to publish a rebuild")
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     codebooks.write.mode("overwrite").parquet(s"$dir/codebooks")
     assignedEncoded.write.mode("overwrite")
@@ -885,146 +893,31 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  // ───────────────────── index eras (snapshot retrains) ─────────────────
+  // ───────────────────── index versions (retrains) ─────────────────────
   //
-  // The L11 versioned-manifest discipline applied to the ANN store's
-  // ONE store-sized mutation, the retrain swap: an era-versioned index
-  // keeps each quantizer generation in an immutable `eras/e<n>/` (the
-  // regular saveIndex layout), with a flat `eras/_committed_<n>` marker
-  // create as the commit point. Every consumer resolves the latest
-  // committed era transparently ([[resolveIndexRoot]] — legacy stores
-  // resolve to themselves), fine-grained maintenance (update/delete
-  // append-only; compaction) runs WITHIN the current era, and
-  // [[retrainIndexEra]] publishes the rebuild as e<n+1> without
-  // touching e<n> — a reader that loaded before the retrain keeps
-  // serving its era bit-for-bit; [[vacuumIndexEras]] is the physical
-  // purge on the caller's retention schedule.
+  // An index is a [[FrameVersions]] store: the [[saveIndex]] layout is
+  // version 0 (frames at the root) and [[retrainIndex]] commits each
+  // rebuild as the next version (`_v<n>/`, the regular saveIndex
+  // layout) without touching the version it read — a reader that
+  // loaded before the retrain keeps serving its version bit for bit.
+  // Every consumer resolves the latest version ([[indexVersion]]), and
+  // fine-grained maintenance (update/delete appends, compaction) runs
+  // within it. `FrameVersions.vacuum` is the physical purge (the root
+  // frames included) on the caller's retention schedule;
+  // `FrameVersions.recover` drops a crashed retrain's claim.
 
-  /** Latest committed era (0 = not era-versioned). An `eras/`
-    * directory with NO committed era is an interrupted
-    * [[snapshotIndexEras]] migration — fails fast with the recovery
-    * pointer rather than guessing a root. */
-  def currentIndexEra(spark: SparkSession, dir: String): Long = {
+  /** The version every consumer of the index at `dir` reads: the
+    * latest committed retrain, or the saveIndex root (version 0). An
+    * index in the retired `eras/` layout is refused. */
+  private[graft] def indexVersion(spark: SparkSession, dir: String)
+      : FrameVersions.Version = {
     val eras = new org.apache.hadoop.fs.Path(s"$dir/eras")
-    val fs = eras.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(eras)) 0L
-    else {
-      val n = fs.listStatus(eras).filter(_.isFile)
-        .map(_.getPath.getName)
-        .filter(_.startsWith("_committed_"))
-        .map(_.stripPrefix("_committed_").toLong)
-        .foldLeft(0L)(math.max)
-      require(n >= 1,
-        s"the index at $dir has an eras/ directory but no committed " +
-          s"era — an interrupted snapshotIndexEras migration; run " +
-          s"recoverIndexEras($dir)")
-      n
-    }
-  }
-
-  /** The directory every consumer actually reads: the latest
-    * committed era's root for an era-versioned index, the store dir
-    * itself for a legacy one. */
-  def resolveIndexRoot(spark: SparkSession, dir: String): String = {
-    val n = currentIndexEra(spark, dir)
-    if (n == 0L) dir else s"$dir/eras/e$n"
-  }
-
-  /** One-time migration of a [[saveIndex]] store to the era layout:
-    * every frame RENAMES (metadata moves, no data copy) into
-    * `eras/e1/`, meta LAST, then the marker commits. An interrupted
-    * migration is mechanically recoverable ([[recoverIndexEras]]):
-    * meta-in-e1 rolls forward (only the marker was lost), anything
-    * else rolls back. Serving is identical before and after — every
-    * consumer resolves through the era. */
-  def snapshotIndexEras(spark: SparkSession, dir: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")),
-      s"snapshotIndexEras: no index at $dir (meta missing) — the " +
-        "store must be written by saveIndex")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/eras")),
-      s"snapshotIndexEras: the index at $dir is already era-versioned")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/eras/e1")): Unit
-    indexFrames.foreach { f =>
-      val src = new org.apache.hadoop.fs.Path(s"$dir/$f")
-      if (fs.exists(src))
-        require(fs.rename(src,
-          new org.apache.hadoop.fs.Path(s"$dir/eras/e1/$f")),
-          s"snapshotIndexEras: rename of $f failed — run " +
-            s"recoverIndexEras($dir)")
-    }
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$dir/eras/_committed_1"), true).close()
-    1L
-  }
-
-  // every frame a saveIndex layout can carry, meta LAST — migration
-  // commit ordering (meta present in e1 ⇔ the move finished)
-  private val indexFrames = Seq("centroids", "codebooks", "vectors",
-    "rotation", "rotation_matrix", "tombstones", "drift_log", "meta")
-
-  /** Mechanical recovery of era residue: an interrupted
-    * [[snapshotIndexEras]] rolls FORWARD if `e1/meta` landed (only
-    * the marker was lost) and BACK otherwise (moved frames return to
-    * the root, `eras/` drops); uncommitted `e<k>` directories from a
-    * crashed [[retrainIndexEra]] publish drop (nothing references
-    * them). Safe on a clean store; single-writer discipline. */
-  def recoverIndexEras(spark: SparkSession, dir: String): Unit = {
-    val eras = new org.apache.hadoop.fs.Path(s"$dir/eras")
-    val fs = eras.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(eras)) return
-    val committed = fs.listStatus(eras).filter(_.isFile)
-      .map(_.getPath.getName).filter(_.startsWith("_committed_"))
-      .map(_.stripPrefix("_committed_").toLong).toSet
-    if (committed.isEmpty) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(
-        s"$dir/eras/e1/meta")))
-        fs.create(new org.apache.hadoop.fs.Path(
-          s"$dir/eras/_committed_1"), true).close()
-      else {
-        indexFrames.foreach { f =>
-          val src = new org.apache.hadoop.fs.Path(s"$dir/eras/e1/$f")
-          if (fs.exists(src))
-            require(fs.rename(src,
-              new org.apache.hadoop.fs.Path(s"$dir/$f")),
-              s"recoverIndexEras: rollback rename of $f failed")
-        }
-        fs.delete(eras, true): Unit
-      }
-    } else
-      fs.listStatus(eras).filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(n => n.matches("e[0-9]+") &&
-          !committed.contains(n.drop(1).toLong))
-        .foreach(n => fs.delete(new org.apache.hadoop.fs.Path(
-          s"$dir/eras/$n"), true): Unit)
-  }
-
-  /** Physically drop eras below the kept horizon (default: keep only
-    * the current) plus any uncommitted residue. Returns a one-row
-    * report. Contract: never vacuum below an era a reader still
-    * pins. */
-  def vacuumIndexEras(spark: SparkSession, dir: String,
-      keepLast: Int = 1): DataFrame = {
-    require(keepLast >= 1,
-      "vacuumIndexEras must keep at least the current era")
-    val cur = currentIndexEra(spark, dir)
-    require(cur >= 1,
-      s"vacuumIndexEras: the index at $dir is not era-versioned")
-    recoverIndexEras(spark, dir)
-    val eras = new org.apache.hadoop.fs.Path(s"$dir/eras")
-    val fs = eras.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val floor = math.max(1L, cur - keepLast + 1)
-    var dropped = 0L
-    (1L until floor).foreach { n =>
-      val d = new org.apache.hadoop.fs.Path(s"$dir/eras/e$n")
-      if (fs.exists(d)) { fs.delete(d, true): Unit; dropped += 1 }
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$dir/eras/_committed_$n"), false): Unit
-    }
-    spark.range(1).select(lit(dropped).as("eras_dropped"),
-      lit(cur).as("current_era"))
+    require(!eras.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(eras),
+      s"the index at $dir keeps its retrains in the retired eras/ " +
+        "layout; retrains now commit as FrameVersions versions " +
+        "(_v<n>/) — rebuild the index with saveIndex")
+    FrameVersions.latest(spark, dir)
   }
 
   /** Load a [[saveIndex]] layout. `centroid_id` comes back from the
@@ -1033,7 +926,7 @@ object Similarity {
     * bit-exactly, so a query against the loaded index returns the same
     * rows as against the just-built one. */
   def loadIndex(spark: SparkSession, dir: String): AnnIndex =
-    loadIndexAt(spark, resolveIndexRoot(spark, dir))
+    loadIndexAt(spark, indexVersion(spark, dir).root)
 
   private def loadIndexAt(spark: SparkSession, dir: String): AnnIndex = {
     val meta = spark.read.parquet(s"$dir/meta").head()
@@ -1240,21 +1133,16 @@ object Similarity {
     *         the stored meta has no build-time mean) */
   def updateIndex(spark: SparkSession, dir: String, delta: DataFrame,
       vecCol: String, idCol: String,
-      checkIdOverlap: Boolean = false): DataFrame =
-    updateIndexAt(spark, resolveIndexRoot(spark, dir), delta, vecCol,
-      idCol, checkIdOverlap)
-
-  private def updateIndexAt(spark: SparkSession, dir: String,
-      delta: DataFrame, vecCol: String, idCol: String,
-      checkIdOverlap: Boolean): DataFrame = {
-    val ix = loadIndexAt(spark, dir)
+      checkIdOverlap: Boolean = false): DataFrame = {
+    val root = indexVersion(spark, dir).root
+    val ix = loadIndexAt(spark, root)
     if (checkIdOverlap) {
       val nDup = ix.assignedEncoded
         .join(broadcast(delta.select(col(idCol)).distinct()), Seq(idCol),
           "left_semi")
         .count()
       require(nDup == 0L,
-        s"updateIndex: $nDup delta id(s) already present in $dir/vectors " +
+        s"updateIndex: $nDup delta id(s) already present in $root/vectors " +
           s"— re-ingesting an id leaves duplicate live rows (id contract)")
     }
     // deltas arrive in the ORIGINAL basis (the query contract): bring
@@ -1279,7 +1167,7 @@ object Similarity {
     val cached = ae.localCheckpoint()
     cached.select(col(idCol), col("codes"), col("centroid_id"))
       .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/vectors")
+      .parquet(s"$root/vectors")
     val build =
       if (ix.meanAssignCosine.isNaN) lit(null).cast("double")
       else lit(ix.meanAssignCosine)
@@ -1297,7 +1185,7 @@ object Similarity {
     // losing the absorbed-batch count.
     report.select(col("n_added"), col("delta_mean_assign_cosine"),
         lit(1L).as("n_batches"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/drift_log")
+      .coalesce(1).write.mode("append").parquet(s"$root/drift_log")
     report
   }
 
@@ -1367,14 +1255,11 @@ object Similarity {
     *
     * @return one-row report (n_deleted_now, n_tombstones_total) */
   def deleteFromIndex(spark: SparkSession, dir: String, ids: DataFrame,
-      idCol: String): DataFrame =
-    deleteFromIndexAt(spark, resolveIndexRoot(spark, dir), ids, idCol)
-
-  private def deleteFromIndexAt(spark: SparkSession, dir: String,
-      ids: DataFrame, idCol: String): DataFrame = {
+      idCol: String): DataFrame = {
+    val root = indexVersion(spark, dir).root
     val del = ids.select(col(idCol)).distinct()
-    del.write.mode("append").parquet(s"$dir/tombstones")
-    val total = spark.read.parquet(s"$dir/tombstones")
+    del.write.mode("append").parquet(s"$root/tombstones")
+    val total = spark.read.parquet(s"$root/tombstones")
       .distinct().count()
     spark.range(1).select(
       lit(del.count()).as("n_deleted_now"),
@@ -1389,11 +1274,17 @@ object Similarity {
     * needs the source vectors; same deterministic id-hash sampling
     * discipline as [[ivfIndex]]/[[pqCodebooks]], so a retrain on
     * corpus C is BIT-IDENTICAL to a fresh build on C), re-encodes
-    * everything, stages the new layout beside the old one, and swaps
-    * it in. Stored tombstones are applied to `corpus` BEFORE
-    * training (erased rows must not shape the new quantizers) and the
-    * swap starts a clean era: no drift ledger, no tombstones — the
-    * next recommendation reflects only post-retrain deltas.
+    * everything, and commits the rebuild as the index's next
+    * [[FrameVersions]] version. The version it read is never touched,
+    * so a reader that loaded (even lazily) before the retrain keeps
+    * serving it bit for bit while the rebuild publishes on top — no
+    * hold-localCheckpoint-across-retrain reader discipline. Stored
+    * tombstones are applied to `corpus` BEFORE training (erased rows
+    * must not shape the new quantizers) and the new version starts
+    * clean: no drift ledger, no tombstones — the next recommendation
+    * reflects only post-retrain deltas. A crashed retrain leaves an
+    * uncommitted, claimed version that nothing serves;
+    * `FrameVersions.recover` drops it before the next retrain.
     *
     * The returned one-row report carries the recall audit the judge
     * of a retrain wants: measured recall@`recallK` (vs exact brute
@@ -1406,9 +1297,8 @@ object Similarity {
     * path (one corpus pass per stage, quantizer frames broadcast-
     * sized); the recall audit is |sample|·|corpus| brute force —
     * keep `sampleQueries` small, it is an audit, not a benchmark;
-    * the stage-and-rename swap never leaves a half-written layout at
-    * the serving path (same one-writer/pause-reads contract as
-    * [[compactIndex]]).
+    * superseded versions (the saveIndex root included) stay on disk
+    * until `FrameVersions.vacuum`.
     *
     * @return one row: (`n_corpus`, `n_tombstones_purged`, `k_cells`,
     *         `m`, `k_codewords`, `n_exact`, `n_hits_before`,
@@ -1416,49 +1306,14 @@ object Similarity {
   def retrainIndex(spark: SparkSession, dir: String, corpus: DataFrame,
       vecCol: String, idCol: String, sampleQueries: Int = 8,
       recallK: Int = 5, nProbe: Int = 3): DataFrame = {
-    require(currentIndexEra(spark, dir) == 0L,
-      s"retrainIndex: the index at $dir is ERA-VERSIONED — use " +
-        "retrainIndexEra, which publishes the rebuild as a NEW era " +
-        "instead of swapping the one pinned readers are serving from")
-    retrainImpl(spark, dir, corpus, vecCol, idCol, sampleQueries,
-      recallK, nProbe, None)
-  }
-
-  /** [[retrainIndex]] for an ERA-VERSIONED index ([[snapshotIndexEras]]):
-    * the rebuild lands in `eras/e<n+1>` and the era marker create is
-    * the commit point — era `n`'s files are never touched, so a
-    * reader that loaded (even lazily) before the retrain keeps
-    * serving era `n` bit-for-bit while the swap happens underneath.
-    * This removes the documented hold-localCheckpoint-across-retrain
-    * reader discipline for the STORE-SIZED rebuild (within-era
-    * maintenance — update/delete append, compaction rewrite — keeps
-    * the existing discipline; eras isolate the rebuild boundary). A
-    * crashed publish leaves an uncommitted `e<n+1>` that is invisible
-    * and rewrites idempotently on re-run. Same audit report as
-    * [[retrainIndex]]. */
-  def retrainIndexEra(spark: SparkSession, dir: String,
-      corpus: DataFrame, vecCol: String, idCol: String,
-      sampleQueries: Int = 8, recallK: Int = 5, nProbe: Int = 3)
-      : DataFrame = {
-    val cur = currentIndexEra(spark, dir)
-    require(cur >= 1,
-      s"retrainIndexEra: the index at $dir is not era-versioned — " +
-        "snapshotIndexEras first (or use retrainIndex)")
-    retrainImpl(spark, s"$dir/eras/e$cur", corpus, vecCol, idCol,
-      sampleQueries, recallK, nProbe, Some((dir, cur + 1)))
-  }
-
-  private def retrainImpl(spark: SparkSession, dir: String,
-      corpus: DataFrame, vecCol: String, idCol: String,
-      sampleQueries: Int, recallK: Int, nProbe: Int,
-      eraDst: Option[(String, Long)]): DataFrame = {
     require(sampleQueries >= 1 && sampleQueries <= 256,
       "sampleQueries must be in [1, 256] — this is an audit sample")
-    val ix = loadIndexAt(spark, dir)
+    val base = indexVersion(spark, dir)
+    val ix = loadIndexAt(spark, base.root)
     val kCells = ix.centroids.count().toInt
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    val tombPath = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
+    val tombPath =
+      new org.apache.hadoop.fs.Path(s"${base.root}/tombstones")
+    val fs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (live, purged) =
       if (fs.exists(tombPath)) {
         val tomb = spark.read.parquet(tombPath.toString)
@@ -1489,12 +1344,10 @@ object Similarity {
         .agg(sum(col("n_hits"))).head().getLong(0)
     }
     // The before-audit serves the OLD layout and is independent of the
-    // ENTIRE rebuild up to the swap — overlap them (guide §2.6: submit
-    // independent job chains from separate threads so one chain's tail
-    // back-fills executors the other left idle; both chains are
-    // deterministic and the result is order-free). The await sits
-    // BEFORE the swap/commit below, so the audit never races the
-    // rename of the layout it is reading.
+    // ENTIRE rebuild up to the commit — overlap them (guide §2.6:
+    // submit independent job chains from separate threads so one
+    // chain's tail back-fills executors the other left idle; both
+    // chains are deterministic and the result is order-free).
     val hitsBeforeF = scala.concurrent.Future(hits(ix))(
       scala.concurrent.ExecutionContext.global)
     def awaitHitsBefore(): Long = scala.concurrent.Await.result(
@@ -1532,51 +1385,20 @@ object Similarity {
       .localCheckpoint()
     val st = ae.agg(avg(col("assign_cosine")),
       stddev_pop(col("assign_cosine"))).head()
-    val (hitsBefore, hitsAfter) = eraDst match {
-      case None =>
-        val tmp = s"${dir}_retrain_tmp"
-        val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-        fs.delete(tmpPath, true): Unit
-        saveIndex(tmp, cents, cb,
-          ae.select(col(idCol), col("codes"), col("centroid_id")),
-          ix.m, ix.k, st.getDouble(0), st.getDouble(1), ix.rotation,
-          ix.rotationMatrix, ix.residual)
-        // The audit must be done reading $dir before the swap renames
-        // it away.
-        val hb = awaitHitsBefore()
-        // Swap: old layout aside, staged layout in, old layout gone.
-        // A crash between the renames leaves dir absent but both
-        // layouts on disk — recovery is one rename, no data lost.
-        val dirPath = new org.apache.hadoop.fs.Path(dir)
-        val oldPath =
-          new org.apache.hadoop.fs.Path(s"${dir}_retrain_old")
-        fs.delete(oldPath, true): Unit
-        require(fs.rename(dirPath, oldPath),
-          s"retrainIndex: rename $dirPath -> $oldPath failed")
-        require(fs.rename(tmpPath, dirPath),
-          s"retrainIndex: rename $tmpPath -> $dirPath failed " +
-            s"(old layout preserved at $oldPath)")
-        fs.delete(oldPath, true): Unit
-        (hb, hits(loadIndexAt(spark, dir)))
-      case Some((storeDir, next)) =>
-        // era publish: build straight into e<next> (a crashed
-        // attempt's residue is uncommitted — invisible — and
-        // rewrites idempotently), then the marker create commits.
-        // Era <next − 1>'s files are never touched.
-        val dst = s"$storeDir/eras/e$next"
-        fs.delete(new org.apache.hadoop.fs.Path(dst), true): Unit
-        saveIndex(dst, cents, cb,
-          ae.select(col(idCol), col("codes"), col("centroid_id")),
-          ix.m, ix.k, st.getDouble(0), st.getDouble(1), ix.rotation,
-          ix.rotationMatrix, ix.residual)
-        // era <next − 1> is never touched, but await before the commit
-        // marker anyway so a failed audit can never leave a committed
-        // era with no report.
-        val hb = awaitHitsBefore()
-        fs.create(new org.apache.hadoop.fs.Path(
-          s"$storeDir/eras/_committed_$next"), true).close()
-        (hb, hits(loadIndexAt(spark, dst)))
+    // The rebuild commits as the next version — the saveIndex path
+    // verbatim into its root. The version the audit reads is never
+    // touched, but the await sits before the commit marker anyway, so
+    // a failed audit can never leave a committed version with no
+    // report.
+    val next = base.commitWith() { root =>
+      saveIndex(root, cents, cb,
+        ae.select(col(idCol), col("codes"), col("centroid_id")),
+        ix.m, ix.k, st.getDouble(0), st.getDouble(1), ix.rotation,
+        ix.rotationMatrix, ix.residual)
+      awaitHitsBefore(): Unit
     }
+    val hitsBefore = awaitHitsBefore()
+    val hitsAfter = hits(loadIndexAt(spark, base.copy(n = next).root))
     val nExact = exact.count()
     spark.range(1).select(
       lit(live.count()).as("n_corpus"),
@@ -1659,14 +1481,11 @@ object Similarity {
   }
 
   def compactIndex(spark: SparkSession, dir: String,
-      driftTolerance: Double = Double.NaN): DataFrame =
-    compactIndexAt(spark, resolveIndexRoot(spark, dir), driftTolerance)
-
-  private def compactIndexAt(spark: SparkSession, dir: String,
-      driftTolerance: Double): DataFrame = {
-    val ix = loadIndexAt(spark, dir)
+      driftTolerance: Double = Double.NaN): DataFrame = {
+    val root = indexVersion(spark, dir).root
+    val ix = loadIndexAt(spark, root)
     val conf = spark.sparkContext.hadoopConfiguration
-    val vecPath = new org.apache.hadoop.fs.Path(s"$dir/vectors")
+    val vecPath = new org.apache.hadoop.fs.Path(s"$root/vectors")
     val fs = vecPath.getFileSystem(conf)
     def dataFiles(p: org.apache.hadoop.fs.Path): Long = {
       val it = fs.listFiles(p, true)
@@ -1683,7 +1502,7 @@ object Similarity {
     // partition directory lands as one file; localCheckpoint pins the
     // row count read from the OLD layout before it is deleted.
     val nRows = ix.assignedEncoded.count()
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/vectors_compact_tmp")
+    val tmp = new org.apache.hadoop.fs.Path(s"$root/vectors_compact_tmp")
     fs.delete(tmp, true): Unit
     ix.assignedEncoded
       .repartition(col("centroid_id"))
@@ -1697,14 +1516,14 @@ object Similarity {
     // deletes are now physical — clear the tombstone set. Purging
     // AFTER the rename is crash-safe: a leftover tombstone for an
     // already-purged row is a no-op anti-join key.
-    val tombPath = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
+    val tombPath = new org.apache.hadoop.fs.Path(s"$root/tombstones")
     val purged =
       if (fs.exists(tombPath)) {
         val n = spark.read.parquet(tombPath.toString).distinct().count()
         fs.delete(tombPath, true): Unit
         n
       } else 0L
-    val logPath = new org.apache.hadoop.fs.Path(s"$dir/drift_log")
+    val logPath = new org.apache.hadoop.fs.Path(s"$root/drift_log")
     // Self-heal a crash in a PREVIOUS compaction's ledger swap: the
     // aside-rename window can leave no live drift_log but a complete
     // copy at drift_log_compact_old. Restore it on entry — the swap
@@ -1712,8 +1531,8 @@ object Similarity {
     // destroying the only surviving ledger and silently resetting the
     // retrain_recommended evidence.
     val asideLog =
-      new org.apache.hadoop.fs.Path(s"$dir/drift_log_compact_old")
-    val (nDeltas, nLedger, deltaMean) = readDriftLedger(spark, dir, fs)
+      new org.apache.hadoop.fs.Path(s"$root/drift_log_compact_old")
+    val (nDeltas, nLedger, deltaMean) = readDriftLedger(spark, root, fs)
     // Roll the ledger up into ONE summary row in ONE file — the
     // weighted mean and batch count are sufficient statistics for the
     // retrain policy, and a per-ingest-file ledger on a daily serving
@@ -1724,12 +1543,12 @@ object Similarity {
     if (nDeltas > 0L && !deltaMean.isNaN) {
       import spark.implicits._
       val tmpLog =
-        new org.apache.hadoop.fs.Path(s"$dir/drift_log_compact_tmp")
+        new org.apache.hadoop.fs.Path(s"$root/drift_log_compact_tmp")
       fs.delete(tmpLog, true): Unit
       Seq((nLedger, deltaMean, nDeltas))
         .toDF("n_added", "delta_mean_assign_cosine", "n_batches")
         .coalesce(1).write.parquet(tmpLog.toString)
-      // Recoverable swap (the retrainIndex discipline): rename the live
+      // Recoverable swap: rename the live
       // ledger ASIDE first, then promote the summary, then drop the old
       // copy — a crash at any point leaves at least one complete ledger
       // on disk (old aside or new live), never the delete-then-rename
@@ -1773,12 +1592,12 @@ object Similarity {
     * recommend → act), the `autoRebatch`/banding-auto-tune discipline
     * applied to the ANN index: the measured verdict derives from the
     * drift ledger + meta alone (no rewrite), then exactly ONE action
-    * runs — `retrain_recommended` dispatches the retrain
-    * ([[retrainIndexEra]] on an era-versioned index, [[retrainIndex]]
-    * otherwise; the rebuild subsumes compaction — tombstones purge,
-    * fragments vanish, the ledger clears), anything else runs
-    * [[compactIndex]]. The action is conditioned on the measured
-    * signal, not on an operator remembering to check a report column,
+    * runs — `retrain_recommended` dispatches [[retrainIndex]] (the
+    * rebuild commits as the next version and subsumes compaction —
+    * tombstones purge, fragments vanish, the ledger clears), anything
+    * else runs [[compactIndex]] within the latest version. The action
+    * is conditioned on the measured signal, not on an operator
+    * remembering to check a report column,
     * and a retrain never pays a wasted pre-compaction of the store it
     * is about to supersede. A null verdict (no ledger or no recorded
     * build mean) conservatively does NOT retrain.
@@ -1809,20 +1628,17 @@ object Similarity {
     // action: the old run-compaction-then-maybe-retrain shape paid a
     // wasted store-sized vectors rewrite on every retrain (the rebuild
     // subsumes compaction: tombstones purge, fragments vanish, the
-    // ledger clears) and, on an era-versioned index, mutated the era
-    // a pinned reader was serving right before superseding it
+    // ledger clears) and mutated the version a pinned reader was
+    // serving right before superseding it
     val (nDeltas, drift, tol, verdict) =
-      driftVerdictAt(spark, resolveIndexRoot(spark, dir),
+      driftVerdictAt(spark, indexVersion(spark, dir).root,
         driftTolerance)
     val recommended = verdict.getOrElse(false)
     def dOpt(x: Double): org.apache.spark.sql.Column =
       if (x.isNaN) lit(null).cast("double") else lit(x)
     if (recommended) {
-      val audit = (if (currentIndexEra(spark, dir) >= 1)
-        retrainIndexEra(spark, dir, corpus, vecCol, idCol,
-          sampleQueries, recallK, nProbe)
-      else retrainIndex(spark, dir, corpus, vecCol, idCol,
-        sampleQueries, recallK, nProbe)).head()
+      val audit = retrainIndex(spark, dir, corpus, vecCol, idCol,
+        sampleQueries, recallK, nProbe).head()
       spark.range(1).select(
         lit("retrained").as("action"),
         dOpt(drift).as("cosine_drift"),

@@ -1131,7 +1131,8 @@ object StreamingIngest {
       // eager by construction: the append + ledger happen inside
       Similarity.updateIndex(t.spark, indexDir, delta, vecCol, idCol): Unit
       if (maxFragments > 0) {
-        val it = t.fs.listFiles(new Path(s"$indexDir/vectors"), true)
+        val root = Similarity.indexVersion(t.spark, indexDir).root
+        val it = t.fs.listFiles(new Path(s"$root/vectors"), true)
         var n = 0
         while (it.hasNext) {
           if (it.next().getPath.getName.endsWith(".parquet")) n += 1
@@ -1284,18 +1285,19 @@ object StreamingIngest {
       }
       if (hasAdds) {
         val addIds = adds.select(col(idCol))
+        val root = Similarity.indexVersion(spark, indexDir).root
         def hit(dir: String, ids: DataFrame => DataFrame) =
           t.fs.exists(new Path(dir)) && !ids(spark.read.parquet(dir))
             .join(broadcast(addIds), Seq(idCol), "left_semi").isEmpty
         // resurrection check: a tombstoned re-add needs the old rows
         // physically gone before its tombstone clears
-        val tombHit = hit(s"$indexDir/tombstones", identity)
+        val tombHit = hit(s"$root/tombstones", identity)
         // update-style re-add of a LIVE id: the old row must be
         // tombstoned and physically purged before the append, or the
         // trigger leaves two live rows for one id (the other CDC twins
         // fold latest-wins per identity; the ANN store is append-only,
         // so "latest wins" is delete-then-add)
-        val liveHit = hit(s"$indexDir/vectors", _.select(col(idCol)))
+        val liveHit = hit(s"$root/vectors", _.select(col(idCol)))
         if (tombHit || liveHit) {
           // tombstoning ids with no stored row is a no-op, so covering
           // ALL add ids is safe and catches both cases
@@ -1561,8 +1563,9 @@ object StreamingIngest {
     *
     * Crash recovery needs no branch: a redelivery whose commit already
     * landed skips the save ([[Trigger.committed]]), and one whose
-    * commit did not land maintains from the latest committed version,
-    * which is still the pre-batch state. */
+    * commit did not land drops the crashed attempt's claim
+    * ([[graft.operators.FrameVersions.recover]]) and maintains from the
+    * latest committed version, which is still the pre-batch state. */
   private def maintainedDocStore[S](events: DataFrame, docsDir: String,
       delsDir: String, storeDir: String, checkpointDir: String,
       idCol: String, payloadCol: String, opCol: String, who: String)(
@@ -1572,6 +1575,7 @@ object StreamingIngest {
     markerGuarded(events, checkpointDir, docsDir, who,
         Seq(docsDir, delsDir))(withOp(opCol, Seq(idCol, payloadCol))) {
       (b, t) =>
+        if (t.midCrash) FrameVersions.recover(t.spark, storeDir)
         val (adds, dels) = idOps(b, idCol, Seq(payloadCol))
         t.record(adds, docsDir): Unit
         t.record(dels, delsDir): Unit
@@ -1751,10 +1755,10 @@ object StreamingIngest {
     * version tagged with the batch id, after the verdicts and kept docs
     * are recorded, and older versions are then vacuumed. A redelivery
     * whose commit landed does nothing more ([[Trigger.committed]]); one
-    * whose commit did not land re-runs the increment against the
-    * latest committed index, which is still the pre-batch state — a
-    * partial roll-forward is never visible, so no re-sign pass is
-    * needed.
+    * whose commit did not land drops the crashed attempt's claim and
+    * re-runs the increment against the latest committed index, which
+    * is still the pre-batch state — a partial roll-forward is never
+    * visible, so no re-sign pass is needed.
     *
     * Caller seeds `docsDir/batch=-1/` with the base corpus and
     * [[graft.operators.Dedup.saveSigIndex]]es its signatures once.
@@ -1771,6 +1775,7 @@ object StreamingIngest {
         "streamingSigIndexDedup", Seq(docsDir, reportDir))(
         _.groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))) {
       (b, t) =>
+        if (t.midCrash) FrameVersions.recover(t.spark, storeDir)
         def sign(ix: Dedup.SigIndex, docs: DataFrame): DataFrame =
           if (ix.portable)
             Dedup.minhashSignaturesPortable(docs, textCol, idCol,
@@ -1824,7 +1829,8 @@ object StreamingIngest {
     * the commit), so redelivery is a no-op ([[committedBy]], the check
     * the marker-guarded twins share); an uncommitted crash leaves the
     * store at the previous version exactly (versions are immutable, a
-    * partial `_v<n+1>` is invisible and rewrites idempotently), so
+    * partial `_v<n+1>` is invisible, and the redelivery drops its
+    * claim with [[graft.operators.FrameVersions.recover]]), so
     * redelivery recomputes from the pre-batch scores — never from a
     * half-applied state. Versions are kept; the caller vacuums.
     *
@@ -1860,6 +1866,8 @@ object StreamingIngest {
           if (layoutChecked.compareAndSet(false, true))
             requireBatchLayout(fs, edgesDir, "streamingPageRank")
           if (!committedBy(spark, scoresDir, batchId)) {
+            // a crashed attempt of this batch may hold the next claim
+            FrameVersions.recover(spark, scoresDir)
             b.write.mode("overwrite")
               .parquet(s"$edgesDir/batch=$batchId")
             val edges = spark.read.parquet(edgesDir)
@@ -1884,7 +1892,7 @@ object StreamingIngest {
     * and the shared serving body honors the store's BASIS and CODEC
     * identities (rotation record, residual encoding), so results
     * track maintenance (updates, deletes via the tombstone anti-join,
-    * compaction, retrains, rotated/residual eras) with snapshot
+    * compaction, retrains, rotated/residual indexes) with snapshot
     * semantics: a trigger's results equal the batch query against the
     * index state it loaded, bit for bit.
     *
@@ -1983,7 +1991,7 @@ object StreamingIngest {
         // a batch that emptied the whole store leaves no anchors to
         // append under — re-anchor from the delta
         if (hasAdds) {
-          if (t.spark.read.parquet(s"$storeDir/_stats").isEmpty)
+          if (Layout.readFrame(t.spark, s"$storeDir/_stats").isEmpty)
             rebuild(adds)
           else Layout.appendToLayout(t.spark, storeDir, adds, cols, bits,
             nBuckets)
@@ -1997,8 +2005,9 @@ object StreamingIngest {
     * per trigger, takedowns and re-add ids leave via
     * [[graft.operators.Layout.deleteFromLayoutVersioned]] (old files
     * stay for pinned readers), adds land via
-    * [[graft.operators.Layout.appendToLayoutVersioned]] tagged with
-    * the batch id, and every trigger leaves a COMMITTED snapshot —
+    * [[graft.operators.Layout.appendToLayoutVersioned]] committed with
+    * the batch id as its tag, and every trigger leaves a COMMITTED
+    * snapshot —
     * a reader that pinned any earlier version keeps reading it
     * unchanged while the stream publishes on top (the contract the
     * plain twin structurally cannot offer: its erasure rewrites in
@@ -2007,8 +2016,8 @@ object StreamingIngest {
     * Crash recovery is MECHANICAL, not a rebuild (contrast
     * [[streamingLayout]]'s cold-rebuild path): on a mid-crash
     * redelivery the trigger runs
-    * [[graft.operators.Layout.recoverLayoutVersions]] (uncommitted
-    * residue rolls back — the pointer never moved) and simply
+    * [[graft.operators.Layout.recoverLayoutVersions]] (an uncommitted
+    * claim and stage roll back — the pointer never moved) and simply
     * re-runs both ops, which are idempotent at the content level: a
     * delete whose ids are already gone publishes nothing, and a
     * delete-then-append of the same rows reproduces the same live
@@ -2047,7 +2056,7 @@ object StreamingIngest {
         dels.unionByName(adds.select(col(idCol))).distinct(), idCol): Unit
       if (hasAdds)
         Layout.appendToLayoutVersioned(t.spark, storeDir, adds, cols, bits,
-          nBuckets, tag = s"b${t.batchId}"): Unit
+          nBuckets, tag = t.batchId.toString): Unit
     }
 
   /** Streaming span-level decontamination — the production shape of

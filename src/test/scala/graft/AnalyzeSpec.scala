@@ -1148,8 +1148,9 @@ class AnalyzeSpec extends SparkSpec {
         spark))
   }
 
-  test("anneras runs the era lifecycle from argv: snapshot, " +
-      "era-routed query, retrain into e2, report, vacuum") {
+  test("anneras runs the version lifecycle from argv: annretrain " +
+      "commits versions, report, vacuum purges old versions and the " +
+      "root, recover") {
     val dir = Files.createTempDirectory("graft-analyze-era").toString
     val e = spark.read.parquet(sf() + "/embeddings.parquet")
     e.filter(col("vec_id") < 300).write.parquet(s"$dir/vec_base")
@@ -1165,22 +1166,27 @@ class AnalyzeSpec extends SparkSpec {
         "--top-k", "5", "--probes", "8")), spark)
         .select("query_id", "vec_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val before = hits()
-    val snap = Analyze.run(parse(List("anneras",
-      "--docs", s"$dir/ix", "--mode", "snapshot")), spark).head()
-    assert(snap.getString(0) == "snapshotted" && snap.getLong(1) == 1L)
-    assert(hits() == before, "era routing is serving-transparent")
-    val ret = Analyze.run(parse(List("anneras",
-      "--docs", s"$dir/ix", "--mode", "retrain",
-      "--vectors", s"$dir/vec_all")), spark).head()
-    assert(ret.getAs[Long]("n_corpus") == e.count())
-    val repEra = Analyze.run(parse(List("anneras",
+    def report() = Analyze.run(parse(List("anneras",
       "--docs", s"$dir/ix")), spark).head()
-    assert(repEra.getAs[Long]("current_era") == 2L)
-    assert(hits().nonEmpty)
+        .getAs[Long]("current_version")
+    assert(hits().nonEmpty && report() == 0L,
+      "a saved index is version 0")
+    def retrain() = Analyze.run(parse(List("annretrain",
+      "--target", s"$dir/ix", "--vectors", s"$dir/vec_all",
+      "--vec-col", "embedding", "--id-col", "vec_id")), spark).head()
+    assert(retrain().getAs[Long]("n_corpus") == e.count())
+    val served = hits()
+    assert(served.nonEmpty)
+    retrain(): Unit
+    assert(report() == 2L)
+    assert(hits() == served, "retrain ≡ a fresh build, every version")
     val vac = Analyze.run(parse(List("anneras",
       "--docs", s"$dir/ix", "--mode", "vacuum")), spark).head()
-    assert(vac.getAs[Long]("eras_dropped") == 1L)
+    assert(vac.getAs[Long]("versions_dropped") == 1L &&
+      vac.getAs[Long]("current_version") == 2L)
+    assert(!new java.io.File(s"$dir/ix/meta").exists,
+      "the saveIndex root frames went with v1")
+    assert(hits() == served)
     val rec = Analyze.run(parse(List("anneras",
       "--docs", s"$dir/ix", "--mode", "recover")), spark).head()
     assert(rec.getString(0) == "recovered" && rec.getLong(1) == 2L)

@@ -8,16 +8,19 @@ import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
-import graft.operators.{Dedup, FrameVersions, GraphOps, Relevance,
-  Similarity, Tokenizer}
+import graft.operators.{Dedup, FrameVersions, GraphOps, Layout,
+  Relevance, Similarity, Tokenizer}
 import graft.streaming.StreamingIngest
 
 /** Crash injection for every store that commits through
   * [[graft.operators.FrameVersions]], each driven through its
-  * streaming twin. Batch 0 applies cleanly; batch k (k = 1, 2, 3) is
+  * streaming twin (the ANN retrain, a batch operation, is killed and
+  * re-run directly). Batch 0 applies cleanly; batch k (k = 1, 2, 3) is
   * killed at kill point k, then redelivered under the same checkpoint:
   *
-  *  1. after the first frame of the new version is written;
+  *  1. after the first frame of the new version is written (the
+  *     one-frame layout manifest: as its write starts, after the data
+  *     files landed);
   *  2. after every frame is written, before the commit marker;
   *  3. after the commit marker, before the trigger completes (for the
   *     marker-guarded twins, before the final `_batches/<id>` marker).
@@ -27,7 +30,8 @@ import graft.streaming.StreamingIngest
   * the batch warm-start fold), the batch committed exactly once, and a
   * twin that vacuums keeps one committed version. Stores live on the
   * `inject:` file system ([[InjectingFs]]), which throws at the kill
-  * point. */
+  * point. Two publishers racing from one base close the spec: the
+  * second is refused. */
 class CommitCrashSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,7 +57,8 @@ class CommitCrashSpec extends SparkSpec {
     * and redelivered. `frames` loads the store's frames; `converged(k)`
     * asserts the store after batch k. */
   private def crashEachPoint[A: Encoder](store: String, second: String,
-      batches: Seq[Seq[A]], vacuums: Boolean = true)(
+      batches: Seq[Seq[A]], vacuums: Boolean = true,
+      commitsPerBatch: Int = 1)(
       start: (DataFrame, String) => StreamingQuery)(
       frames: () => Seq[DataFrame], converged: Int => Unit): Unit = {
     implicit val sqlCtx = spark.sqlContext
@@ -86,7 +91,8 @@ class CommitCrashSpec extends SparkSpec {
       run()
       converged(k)
       val latest = FrameVersions.latest(spark, store)
-      assert(latest.n == version + 1 && latest.tag == k.toString,
+      assert(latest.n == version + commitsPerBatch &&
+        latest.tag == k.toString,
         s"kill point $k: batch $k committed exactly once")
       if (vacuums)
         assert(entries(s"$store/_commits").size == 1 &&
@@ -272,5 +278,115 @@ class CommitCrashSpec extends SparkSpec {
         assert(served.keySet == folds(k).keySet && served.forall {
           case (id, r) => math.abs(r - folds(k)(id)) < 1e-12 })
       })
+  }
+
+  test("streamingLayoutVersioned: a crash at any commit point heals to " +
+      "the fold on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_layout")
+    val store = s"$tmp/store"
+    val base = for { x <- 0L until 4L; y <- 0L until 4L }
+      yield (y * 16L + x, x, y)
+    Layout.writeLayout(Layout.zOrderLayout(base.toDF("id", "x", "y"),
+      Seq("x", "y"), 4, 16), store, Seq("x", "y"), "z", 4, 16)
+    Layout.snapshotLayout(spark, store): Unit
+    // batch k erases stored row k and adds row 100 + k: an erasure
+    // commit, then the append committed under the batch's tag
+    val batches = (0 until 4).map(k => Seq(("del", k.toLong, 0L, 0L),
+      ("add", 100L + k, k + 1L, k + 2L)))
+    def rows(): Seq[String] = Layout.readLayoutVersion(spark, store)
+      .select("id", "x", "y").collect().map(_.toString).sorted.toSeq
+    crashEachPoint(s"$store/_versions", "manifest", batches,
+        vacuums = false, commitsPerBatch = 2)((s, c) =>
+      StreamingIngest.streamingLayoutVersioned(s.toDF("op", "id", "x",
+        "y"), s"$tmp/adds", s"$tmp/dels", store, c, Seq("x", "y"),
+        bits = 4, nBuckets = 16))(
+      () => Seq(Layout.readLayoutVersion(spark, store)),
+      k => assert(rows() == (base.filter(_._1 > k) ++
+        (0 to k).map(i => (100L + i, i + 1L, i + 2L))).toDF("id", "x",
+        "y").collect().map(_.toString).sorted.toSeq))
+  }
+
+  test("retrainIndex: a crash at any commit point leaves the previous " +
+      "version serving; recovery and a re-run commit the fresh build " +
+      "once") {
+    import org.apache.spark.sql.functions.col
+    val ix = InjectingFs.tempDir(spark, "graft_crash_ann") + "/ix"
+    val e = spark.read.parquet(sf() + "/embeddings.parquet")
+      .filter(col("vec_id") < 200).select("vec_id", "embedding")
+      .localCheckpoint()
+    def build(c: DataFrame) = {
+      val (cents, assigned) = Similarity.ivfIndex(c, "embedding",
+        "vec_id", 4)
+      val cb = Similarity.pqCodebooks(c, "embedding", "vec_id", m = 4,
+        k = 4)
+      (cents, cb, assigned.select(col("centroid_id"), col("vec_id"))
+        .join(Similarity.pqEncode(c, "embedding", "vec_id", cb, m = 4),
+          Seq("vec_id")))
+    }
+    val (c0, cb0, ae0) = build(e.filter(col("vec_id") < 100))
+    Similarity.saveIndex(ix, c0, cb0, ae0, m = 4, k = 4)
+    val q = e.filter(col("vec_id") < 4)
+    def served() = Similarity.serveTopK(spark, ix, q, "embedding",
+      "vec_id", topK = 5, nProbe = 2).collect().map(_.toString).toSet
+    val (c1, cb1, ae1) = build(e)
+    val fresh = Similarity.ivfPqTopK(q, c1, cb1, ae1, "embedding",
+      "vec_id", m = 4, k = 4, topK = 5, nProbe = 2)
+      .collect().map(_.toString).toSet
+    def retrain() = Similarity.retrainIndex(spark, ix, e, "embedding",
+      "vec_id", sampleQueries = 2, recallK = 3, nProbe = 2).collect()
+    (1 to 3).foreach { k =>
+      val before = served()
+      val version = FrameVersions.current(spark, ix)
+      InjectingFs.withHook(kill(k, "codebooks")) {
+        intercept[Exception](retrain())
+      }
+      if (k < 3) {
+        assert(FrameVersions.current(spark, ix) == version &&
+          served() == before,
+          s"kill point $k: a load serves the previous version exactly")
+        intercept[IllegalArgumentException](retrain())
+        FrameVersions.recover(spark, ix)
+        retrain(): Unit
+      }
+      assert(FrameVersions.current(spark, ix) == version + 1,
+        s"kill point $k: the rebuild committed exactly once")
+      assert(served() == fresh, s"kill point $k: retrain ≡ fresh build")
+    }
+  }
+
+  test("two publishers from one base: the second is refused while the " +
+      "first writes and after it commits, and a publisher whose base " +
+      "was vacuumed away is refused too") {
+    val dir = InjectingFs.tempDir(spark, "graft_crash_race") + "/s"
+    def docs(ids: Long*) = Seq("docs" -> ids.toDF("id"))
+    def served() = FrameVersions.latest(spark, dir).read("docs")
+      .collect().map(_.getLong(0)).toSeq
+    assert(FrameVersions.commit(spark, dir, docs(1L)) == 1L)
+    val (a, b) = (FrameVersions.latest(spark, dir),
+      FrameVersions.latest(spark, dir))
+    // b publishes from the same base while a writes its frame
+    val midWrite =
+      new java.util.concurrent.atomic.AtomicReference[Option[Throwable]](None)
+    InjectingFs.withHook { (op, p) =>
+      if (op != InjectingFs.Listing && p.toString.contains("/_v2/docs") &&
+          midWrite.get.isEmpty)
+        midWrite.set(Some(scala.util.Try(b.commit(docs(9L))).failed
+          .getOrElse(new AssertionError("b committed"))))
+    } {
+      assert(a.commit(docs(2L)) == 2L)
+    }
+    assert(midWrite.get.exists(_.isInstanceOf[IllegalArgumentException]),
+      s"b refused while a writes: ${midWrite.get}")
+    val after = intercept[IllegalArgumentException](b.commit(docs(9L)))
+    assert(after.getMessage.contains("another writer is publishing"))
+    assert(served() == Seq(2L), "the refusals wrote nothing")
+    // a stale base whose next slot was vacuumed away: the claim lands,
+    // the latest-version check refuses, recover drops the claim
+    assert(FrameVersions.commit(spark, dir, docs(3L)) == 3L)
+    assert(FrameVersions.vacuum(spark, dir) == 2L)
+    intercept[IllegalArgumentException](b.commit(docs(9L)))
+    FrameVersions.recover(spark, dir)
+    assert(FrameVersions.current(spark, dir) == 3L && served() == Seq(3L))
+    assert(!new File(InjectingFs.local(s"$dir/_v2")).exists)
   }
 }

@@ -185,4 +185,24 @@ class FrameVersionsSpec extends SparkSpec {
     assert(FrameVersions.latest(spark, dir).tag == "-",
       "a plain <n> marker reads as tag -")
   }
+
+  test("vacuum drops the version-0 root frames once a committed " +
+      "version replaces them below the kept horizon") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_fv_root").toString + "/s"
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/docs")
+    Seq(1L).toDF("x").write.parquet(s"$dir/extra")
+    assert(FrameVersions.commit(spark, dir, Seq(
+      "docs" -> Seq((1L, "a"), (2L, "b")).toDF("id", "v"))) == 1L)
+    // keepLast = 2 keeps v1 and the root it replaced
+    assert(FrameVersions.vacuum(spark, dir, keepLast = 2) == 0L)
+    assert(new java.io.File(s"$dir/docs").exists)
+    // keepLast = 1: the root falls below the horizon and drops
+    assert(FrameVersions.vacuum(spark, dir) == 0L)
+    assert(!new java.io.File(s"$dir/docs").exists &&
+      !new java.io.File(s"$dir/extra").exists)
+    assert(FrameVersions.latest(spark, dir).read("docs").count() == 2L)
+    assert(new java.io.File(s"$dir/_v1/docs").exists &&
+      new java.io.File(s"$dir/_commits").exists)
+  }
 }

@@ -946,9 +946,9 @@ class LayoutSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     // side 1 — crash BEFORE the marker: a publisher died holding v2's
-    // lock. The pointer must not move and v2 must refuse.
+    // claim. The pointer must not move and v2 must refuse.
     fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/_versions/v2/_LOCK"), true).close()
+      s"$path/_versions/_v2/_claim"), true).close()
     assert(Layout.currentLayoutVersion(spark, path) == 1L)
     val refuse = intercept[IllegalArgumentException](
       Layout.layoutVersionManifest(spark, path, 2L))
@@ -979,7 +979,7 @@ class LayoutSpec extends SparkSpec {
       "no orphan adopted, no duplicate row")
     // side 2 — a crashed STAGE blocks the next op until recovered
     fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/_versions/v3_stage/_STAGE_LOCK"), true).close()
+      s"$path/_versions/_stage_v3/_STAGE_LOCK"), true).close()
     val staged = intercept[IllegalArgumentException](
       Layout.deleteFromLayoutVersioned(spark, path,
         Seq(5L).toDF("id"), "id"))
@@ -1065,5 +1065,58 @@ class LayoutSpec extends SparkSpec {
     assert(Layout.appendToLayoutVersioned(spark, path,
       baseSet.toSeq.toDF("id", "x", "y").limit(0),
       Seq("x", "y"), 4, 16) == 3L)
+  }
+
+  test("versioned layout: a store in the retired _versions/v<n>/" +
+      "_COMMITTED layout is refused, naming the layout change") {
+    val (path, _) = vFixture()
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(
+      s"$path/_versions/v1/_COMMITTED"), true).close()
+    val e = intercept[IllegalArgumentException](
+      Layout.readLayoutVersion(spark, path))
+    assert(e.getMessage.contains("retired") &&
+      e.getMessage.contains("FrameVersions"))
+    intercept[IllegalArgumentException](Layout.snapshotLayout(spark, path))
+  }
+
+  test("underscore frames (_meta, _stats) read without Spark's \"All " +
+      "paths were ignored\" warning: a write → append → erase → " +
+      "pruned-scan round trip logs none") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val ignored = new java.util.concurrent.atomic.AtomicInteger(0)
+    val appender = new AbstractAppender("graft-layout-capture", null,
+        null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage
+            .contains("All paths were ignored")) ignored.incrementAndGet(): Unit
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try {
+      val (path, _) = vFixture()
+      Layout.appendToLayout(spark, path,
+        Seq((5000L, 3L, 3L)).toDF("id", "x", "y"), Seq("x", "y"), 4, 16)
+      Layout.deleteFromLayout(spark, path, Seq(0L).toDF("id"), "id")
+      assert(Layout.prunedScan(spark, path, Seq(("x", 0L, 3L)),
+        Seq(("id", 5000L))).count() == 1L)
+      assert(ignored.get == 0, "no underscore frame read warned")
+      // the capture works: naming an underscore frame does warn
+      spark.read.parquet(s"$path/_meta").count(): Unit
+      assert(ignored.get > 0)
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
   }
 }

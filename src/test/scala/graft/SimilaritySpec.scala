@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.operators.Similarity
+import graft.operators.{FrameVersions, Similarity}
 
 /** X3 similarity search: exact brute-force top-k + IVF recall. */
 class SimilaritySpec extends SparkSpec {
@@ -660,9 +660,11 @@ class SimilaritySpec extends SparkSpec {
     assert(Set(0L, 1597L) == ix.centroids.select("centroid_id")
       .collect().map(_.getLong(0)).toSet,
       "mixed-corpus quantizer sample covers both families")
-    // era reset: no ledger, no tombstones, no leftover staging dirs
-    assert(!new java.io.File(s"$dir/drift_log").exists())
-    assert(!new java.io.File(s"$dir/tombstones").exists())
+    // the committed version starts clean: no ledger, no tombstones,
+    // no leftover staging dirs
+    val root = FrameVersions.latest(spark, dir).root
+    assert(!new java.io.File(s"$root/drift_log").exists())
+    assert(!new java.io.File(s"$root/tombstones").exists())
     assert(!new java.io.File(s"${dir}_retrain_tmp").exists())
     assert(!new java.io.File(s"${dir}_retrain_old").exists())
   }
@@ -1749,14 +1751,13 @@ class SimilaritySpec extends SparkSpec {
       s"cascade-served IVF-PQ must beat raw: $casHits vs $casRaw")
   }
 
-  // ───────────────────── index eras (snapshot retrains) ─────────────────
+  // ───────────────────── index versions (retrains) ─────────────────────
 
-  test("index eras: migration is serving-transparent; retrainIndexEra " +
-      "publishes e2 WITHOUT touching e1 — a lazy pre-retrain reader " +
-      "keeps serving era 1 bit-for-bit (impossible under the in-place " +
-      "swap); within-era maintenance routes to the current era; plain " +
-      "retrainIndex refuses; uncommitted residue is invisible; vacuum " +
-      "drops the horizon") {
+  test("index versions: a saveIndex store is version 0; retrainIndex " +
+      "commits v1 WITHOUT touching it — a lazy pre-retrain reader keeps " +
+      "serving version 0 bit-for-bit; within-version maintenance routes " +
+      "to the latest version; a crashed retrain's claim is invisible " +
+      "and refuses until recovered; vacuum drops the root frames") {
     val e = spark.read.parquet(sf() + "/embeddings.parquet")
     val base = e.filter(col("vec_id") < 300)
     val q = e.filter(col("vec_id") < 4)
@@ -1780,103 +1781,71 @@ class SimilaritySpec extends SparkSpec {
     def serve() = rows(Similarity.serveTopK(spark, dir, q,
       "embedding", "vec_id", topK = 5, nProbe = 8))
     val before = serve()
-    assert(Similarity.currentIndexEra(spark, dir) == 0L)
-    assert(Similarity.snapshotIndexEras(spark, dir) == 1L)
-    assert(Similarity.currentIndexEra(spark, dir) == 1L)
-    assert(serve() == before, "migration is serving-transparent")
-    intercept[IllegalArgumentException](
-      Similarity.snapshotIndexEras(spark, dir))
-    // pin era 1 LAZILY — no localCheckpoint; the era claim under test
+    assert(FrameVersions.current(spark, dir) == 0L)
+    // pin version 0 LAZILY — no localCheckpoint; the claim under test
     val pinned = Similarity.loadIndex(spark, dir)
     def pinnedRows() = rows(Similarity.ivfPqTopK(q, pinned.centroids,
       pinned.codebooks, pinned.assignedEncoded, "embedding", "vec_id",
       m = 8, k = 8, topK = 5, nProbe = 8))
     assert(pinnedRows() == before)
-    // a crashed publish left a partial e2 — invisible to everything
-    assert(new java.io.File(s"$dir/eras/e2").mkdirs())
-    assert(Similarity.currentIndexEra(spark, dir) == 1L &&
-      serve() == before)
+    // a crashed retrain left its claim and a partial v1 — invisible to
+    // everything, and the slot refuses until recovered
+    assert(new java.io.File(s"$dir/_v1/centroids").mkdirs() &&
+      new java.io.File(s"$dir/_v1/_claim").createNewFile())
+    assert(FrameVersions.current(spark, dir) == 0L && serve() == before)
     val refuse = intercept[IllegalArgumentException](
       Similarity.retrainIndex(spark, dir, e, "embedding", "vec_id"))
-    assert(refuse.getMessage.contains("ERA-VERSIONED"))
-    // era retrain on the grown corpus: e2 commits (the crashed
-    // residue rewrote idempotently), e1 untouched
-    val rep = Similarity.retrainIndexEra(spark, dir, e,
+    assert(refuse.getMessage.contains("another writer is publishing"))
+    FrameVersions.recover(spark, dir)
+    // retrain on the grown corpus: v1 commits, the root is untouched
+    val rep = Similarity.retrainIndex(spark, dir, e,
       "embedding", "vec_id").head()
     assert(rep.getAs[Long]("n_corpus") == e.count())
-    assert(Similarity.currentIndexEra(spark, dir) == 2L)
+    assert(FrameVersions.current(spark, dir) == 1L)
     assert(pinnedRows() == before,
-      "the pre-retrain lazy reader still serves era 1 bit-for-bit")
+      "the pre-retrain lazy reader still serves version 0 bit-for-bit")
+    // a root save under a committed version would never be served
+    intercept[IllegalArgumentException](
+      Similarity.saveIndex(dir, cents, cb, ae, m = 8, k = 8, meanCos))
     val served2 = serve()
     assert(served2.nonEmpty && served2.map(_._1).size >= 1)
-    // within-era maintenance routes to the CURRENT era: an update's
-    // append lands under eras/e2 and serving reflects it
+    // within-version maintenance routes to the LATEST version: an
+    // update's append lands under _v1 and serving reflects it
     val extra = e.filter(col("vec_id") < 2)
       .select((col("vec_id") + 100000L).as("vec_id"),
         col("embedding"))
     Similarity.updateIndex(spark, dir, extra, "embedding", "vec_id")
       .write.format("noop").mode("overwrite").save()
-    assert(new java.io.File(s"$dir/eras/e2/vectors").exists)
+    assert(new java.io.File(s"$dir/_v1/drift_log").exists)
     assert(serve().exists(_._2 >= 100000L),
       "the duplicate-vector ids surface in their own queries' top-5")
-    assert(pinnedRows() == before, "era 1 still untouched by updates")
-    // vacuum: e1 drops, current serving unaffected
-    val vac = Similarity.vacuumIndexEras(spark, dir,
-      keepLast = 1).head()
-    assert(vac.getAs[Long]("eras_dropped") == 1L &&
-      vac.getAs[Long]("current_era") == 2L)
-    assert(!new java.io.File(s"$dir/eras/e1").exists)
+    assert(pinnedRows() == before, "version 0 still untouched by updates")
+    // vacuum: the version-0 root frames drop, current serving unaffected
+    assert(FrameVersions.vacuum(spark, dir, keepLast = 1) == 0L)
+    assert(!new java.io.File(s"$dir/vectors").exists &&
+      !new java.io.File(s"$dir/meta").exists)
     assert(serve().nonEmpty)
     intercept[IllegalArgumentException](
-      Similarity.vacuumIndexEras(spark, dir, 0))
+      FrameVersions.vacuum(spark, dir, 0))
   }
 
-  test("index eras: an interrupted migration recovers mechanically — " +
-      "frames-moved-but-no-meta rolls BACK (legacy store restored), " +
-      "meta-in-e1 rolls FORWARD (only the marker was lost); " +
-      "currentIndexEra fails fast inside the broken window") {
-    val e = spark.read.parquet(sf() + "/embeddings.parquet")
-      .filter(col("vec_id") < 100)
-    val (cents, assigned) =
-      Similarity.ivfIndex(e, "embedding", "vec_id", 4)
-    val cb = Similarity.pqCodebooks(e, "embedding", "vec_id",
-      m = 4, k = 4)
-    val enc = Similarity.pqEncode(e, "embedding", "vec_id", cb, m = 4)
-    val ae = assigned.select(col("centroid_id"), col("vec_id"))
-      .join(enc, Seq("vec_id"))
+  test("index versions: an index in the retired eras/ layout is " +
+      "refused, naming the layout change") {
     val dir = java.nio.file.Files
-      .createTempDirectory("graft_ann_era_rec").toString + "/ix"
-    Similarity.saveIndex(dir, cents, cb, ae, m = 4, k = 4)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // side 1 — crash EARLY in the migration: one frame moved, meta
-    // still at the root → roll back
-    assert(fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/eras/e1")))
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/centroids"),
-      new org.apache.hadoop.fs.Path(s"$dir/eras/e1/centroids")))
-    val broken = intercept[IllegalArgumentException](
-      Similarity.currentIndexEra(spark, dir))
-    assert(broken.getMessage.contains("interrupted"))
-    Similarity.recoverIndexEras(spark, dir)
-    assert(!new java.io.File(s"$dir/eras").exists)
-    assert(Similarity.loadIndex(spark, dir).centroids.count() == 4L,
-      "rolled back: the legacy store is whole again")
-    // side 2 — crash LATE: the full move landed, the marker was lost
-    // → roll forward
-    Similarity.snapshotIndexEras(spark, dir): Unit
-    assert(new java.io.File(s"$dir/eras/_committed_1").delete())
-    intercept[IllegalArgumentException](
-      Similarity.currentIndexEra(spark, dir))
-    Similarity.recoverIndexEras(spark, dir)
-    assert(Similarity.currentIndexEra(spark, dir) == 1L)
-    assert(Similarity.loadIndex(spark, dir).centroids.count() == 4L,
-      "rolled forward: era 1 serves")
+      .createTempDirectory("graft_ann_eras_old").toString + "/ix"
+    assert(new java.io.File(s"$dir/eras/e1").mkdirs() &&
+      new java.io.File(s"$dir/eras/_committed_1").createNewFile())
+    val e = intercept[IllegalArgumentException](
+      Similarity.loadIndex(spark, dir))
+    assert(e.getMessage.contains("retired eras/ layout"))
+    intercept[IllegalArgumentException](Similarity.retrainIndex(spark,
+      dir, Seq(1L).toDF("vec_id"), "embedding", "vec_id"))
   }
 
-  test("maintainIndex on an ERA-VERSIONED index dispatches the " +
-      "era-aware retrain: the drift branch publishes a NEW era (the " +
-      "pre-maintenance lazy pin keeps serving its era), the benign " +
-      "branch compacts WITHIN the current era (no era bump)") {
+  test("maintainIndex on a versioned index: the drift branch commits " +
+      "a NEW version (the pre-maintenance lazy pin keeps serving its " +
+      "version), the benign branch compacts WITHIN the latest version " +
+      "(no version bump)") {
     val df = mixedFixture(spreadScales).toDF("vec_id", "embedding")
     def clus(d2: org.apache.spark.sql.DataFrame) =
       d2.select(col("vec_id"), transform(col("embedding"), x =>
@@ -1897,22 +1866,21 @@ class SimilaritySpec extends SparkSpec {
       .createTempDirectory("graft_maint_era").toString + "/ix"
     Similarity.saveIndex(dir, cents, cb, ae, m = 4, k = 8,
       st.getDouble(0), st.getDouble(1))
-    Similarity.snapshotIndexEras(spark, dir): Unit
     def rows(d2: org.apache.spark.sql.DataFrame) =
       d2.select("query_id", "vec_id", "adist", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getInt(3))).toSet
     val q = clus(df.filter(col("vec_id") < 4))
-    // benign: drift ≈ 0 — compaction runs IN the era, no era bump
+    // benign: drift ≈ 0 — compaction runs IN the version, no bump
     val benign = clus(df.filter(col("vec_id") >= 100))
     Similarity.updateIndex(spark, dir, benign, "embedding", "vec_id")
       .write.format("noop").mode("overwrite").save()
     val bRep = Similarity.maintainIndex(spark, dir, clus(df),
       "embedding", "vec_id").head()
     assert(bRep.getString(0) == "compacted" &&
-      Similarity.currentIndexEra(spark, dir) == 1L,
-      "the benign branch must not publish an era")
-    // pin era 1 lazily, then FORCE the retrain branch
+      FrameVersions.current(spark, dir) == 0L,
+      "the benign branch must not publish a version")
+    // pin version 0 lazily, then FORCE the retrain branch
     val pinned = Similarity.loadIndex(spark, dir)
     val pinnedBefore = rows(Similarity.ivfPqTopK(q, pinned.centroids,
       pinned.codebooks, pinned.assignedEncoded, "embedding",
@@ -1922,12 +1890,12 @@ class SimilaritySpec extends SparkSpec {
       sampleQueries = 2, recallK = 3, nProbe = 2).head()
     assert(dRep.getString(0) == "retrained" &&
       !dRep.isNullAt(dRep.fieldIndex("n_hits_after")))
-    assert(Similarity.currentIndexEra(spark, dir) == 2L,
-      "the era-aware retrain publishes e2")
+    assert(FrameVersions.current(spark, dir) == 1L,
+      "the retrain commits v1")
     assert(rows(Similarity.ivfPqTopK(q, pinned.centroids,
       pinned.codebooks, pinned.assignedEncoded, "embedding",
       "vec_id", m = 4, k = 8, topK = 5, nProbe = 2)) == pinnedBefore,
-      "the pre-maintenance pin keeps serving era 1")
+      "the pre-maintenance pin keeps serving version 0")
     // and the new era serves ≡ a fresh build on the live corpus
     val live = clus(df)
     val (c2, a2) = Similarity.ivfIndex(live, "embedding", "vec_id", 4)
@@ -1941,6 +1909,6 @@ class SimilaritySpec extends SparkSpec {
       "vec_id", topK = 5, nProbe = 2)) ==
       rows(Similarity.ivfPqTopK(q, c2, cb2, ae2, "embedding",
         "vec_id", m = 4, k = 8, topK = 5, nProbe = 2)),
-      "era 2 ≡ the fresh build on the live corpus")
+      "v1 ≡ the fresh build on the live corpus")
   }
 }

@@ -2082,7 +2082,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(rowsAt() == afterT1,
         "t1 ≡ the fold: born-dead 99 never lands, 0 leaves, 2 moves")
-      assert(Layout.layoutVersionTagged(spark, store, "b0"),
+      assert(Layout.snapshots(spark, store).exists(_.tag == "0"),
         "the snapshot chain records the batch")
       assert(rowsAt(1L) == baseSet,
         "the pre-stream pin is untouched by the trigger")
@@ -2120,7 +2120,7 @@ class StreamingSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.create(new org.apache.hadoop.fs.Path(
-      s"$store/_versions/v${vBefore + 1}/_LOCK"), true).close()
+      s"$store/_versions/_v${vBefore + 1}/_claim"), true).close()
     val mem3 = MemoryStream[(String, Long, Long, Long)]
     val q3 = StreamingIngest.streamingLayoutVersioned(
       mem3.toDF().toDF("op", "id", "x", "y"),
@@ -2135,9 +2135,8 @@ class StreamingSpec extends SparkSpec {
     assert(rowsAt() == afterT2 && rowsAt(1L) == baseSet,
       "mid-crash re-run reaches the same content, pin intact")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$store/_versions/v${vBefore + 1}/_LOCK")) ||
-      fs.exists(new org.apache.hadoop.fs.Path(
-        s"$store/_versions/v${vBefore + 1}/_COMMITTED")),
+      s"$store/_versions/_v${vBefore + 1}/_claim")) ||
+      Layout.currentLayoutVersion(spark, store) > vBefore,
       "planted uncommitted residue was recovered")
     assert(new java.io.File(s"$tmp/adds/_batches/1").exists &&
       !new java.io.File(s"$tmp/adds/_batches/1.started").exists)
