@@ -275,14 +275,11 @@ import graft.operators.{Curation, GraphOps}
   *               [--budget CANDIDATE_PAIRS] [--threshold T]
   *               (measured banding auto-tune, then serve near-dups at
   *               the winner)
-  *   layoutrecover --docs <layout store dir>
-  *               (resolve an interrupted appendToLayout stage: roll
-  *               back or forward, mechanically)
   *   layoutversions --docs <layout store dir>
-  *               [--mode snapshot|vacuum|recover|report]
-  *               [--budget KEEP_VERSIONS] (versioned-manifest
-  *               lifecycle: publish v1, purge below the kept horizon,
-  *               drop crash residue, or report the committed chain)
+  *               [--mode vacuum|recover|report]
+  *               [--budget KEEP_VERSIONS] (layout snapshot lifecycle:
+  *               purge below the kept horizon, drop a crashed
+  *               publisher's snapshot, or report the committed chain)
   *   anneras     --docs <index dir> [--mode vacuum|recover|report]
   *               [--budget KEEP_VERSIONS] (versioned ANN index:
   *               purge versions below the kept horizon, drop a

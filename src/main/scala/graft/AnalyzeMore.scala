@@ -211,14 +211,6 @@ private[graft] object AnalyzeMore {
         spark.read.parquet(args.docs), args.textCol, args.idCol,
         args.thresholdOpt.getOrElse(0.2),
         args.colsList.map(_.trim.toInt), args.budget))
-    case "layoutrecover" =>
-      // mechanical append-ledger recovery: --docs <layout store dir>;
-      // prints (action, n_staged_files) — clean | rolled_back |
-      // completed
-      require(args.docs.nonEmpty,
-        "layoutrecover needs --docs <layout store dir> (the " +
-          "writeLayout path whose _append_pending stage to resolve)")
-      Some(graft.operators.Layout.recoverAppend(spark, args.docs))
     case "anneras" =>
       // version lifecycle of an ANN index (a saveIndex store is
       // version 0, annretrain commits the next): --docs <index dir>,
@@ -276,21 +268,16 @@ private[graft] object AnalyzeMore {
         }
       Some(rmScores.orderBy("id"))
     case "layoutversions" =>
-      // the versioned-manifest lifecycle: --docs <layout store dir>,
-      // --mode snapshot (publish v1) | vacuum (purge below the kept
-      // horizon; --budget = versions to keep, default 1) | recover
-      // (drop uncommitted residue) | report (default: the committed
-      // chain as (version, n_files, n_rows))
+      // the snapshot lifecycle of a writeLayout store: --docs <layout
+      // store dir>, --mode vacuum (purge below the kept horizon;
+      // --budget = versions to keep, default 1) | recover (drop a
+      // crashed publisher's uncommitted snapshot) | report (default:
+      // the committed chain as (version, n_files, n_rows))
       require(args.docs.nonEmpty,
         "layoutversions needs --docs <layout store dir>; --mode " +
-          "snapshot|vacuum|recover|report, --budget KEEP_VERSIONS " +
-          "(vacuum only)")
+          "vacuum|recover|report, --budget KEEP_VERSIONS (vacuum only)")
       import graft.operators.Layout
       Some(args.mode match {
-        case "snapshot" =>
-          val v = Layout.snapshotLayout(spark, args.docs)
-          spark.range(1).select(lit("snapshotted").as("action"),
-            lit(v).as("version"))
         case "vacuum" =>
           Layout.vacuumLayout(spark, args.docs,
             keepLast = args.budget.toInt)
@@ -301,8 +288,8 @@ private[graft] object AnalyzeMore {
               .as("version"))
         case _ =>
           val vs = Layout.snapshots(spark, args.docs)
-          require(vs.nonEmpty, s"the store at ${args.docs} is not " +
-            "versioned — run --mode snapshot first")
+          require(vs.nonEmpty, s"the store at ${args.docs} has no " +
+            "committed snapshot — write it with writeLayout")
           vs.map(v => v.read("manifest")
               .agg(count(lit(1)).as("n_files"), sum("n_rows").as("n_rows"))
               .select(lit(v.n).as("version"), col("n_files"),

@@ -366,13 +366,6 @@ private[graft] object EntryData {
       path
     })
 
-  /** q_l12's fixture: the l10 bloom store run through the versioned
-    * lifecycle — copy (the shared fixture must not version itself),
-    * snapshot v1, versioned ERASURE of order 7 (v2). The row then
-    * point-probes `l_orderkey = 7` at BOTH versions: v1 must still
-    * serve the erased order off its immutable files, v2 must prove
-    * absence (the touched bucket's rewritten file recounts its
-    * sketch). Fresh copy per invocation — erasure mutates. */
   /** Parallel local directory copy for the per-invocation store
     * fixtures: a store is hundreds of SMALL parquet files (one per
     * partition dir per append), so the sequential FileUtil.copy the
@@ -402,14 +395,21 @@ private[graft] object EntryData {
     }.foreach(_.get())
     finally pool.shutdown()
   }
+
   private val l12Invocation =
     new java.util.concurrent.atomic.AtomicLong(0L)
+  /** q_l12's fixture: a copy of the l10 bloom store (its build
+    * committed snapshot v1; the shared fixture must not be mutated)
+    * takes the ERASURE of order 7 (v2). The row then point-probes
+    * `l_orderkey = 7` at BOTH versions: v1 must still serve the erased
+    * order off its immutable files, v2 must prove absence (the touched
+    * bucket's rewritten file recounts its sketch). Fresh copy per
+    * invocation — erasure publishes. */
   def l12VersionedBloomDir(s: SparkSession, dir: String): String = {
     val base = l10BloomLayoutDir(s, dir)
     val dst = base + "_ver" + l12Invocation.incrementAndGet()
     copyDirParallel(base, dst)
-    Layout.snapshotLayout(s, dst): Unit
-    Layout.deleteFromLayoutVersioned(s, dst,
+    Layout.deleteFromLayout(s, dst,
       t(s, dir, "lineitem").filter(col("l_orderkey") === 7)
         .select("l_orderkey"), "l_orderkey"): Unit
     dst
@@ -453,21 +453,20 @@ private[graft] object EntryData {
     dst
   }
 
-  /** q_l11's fixture: the l5 base store run through the VERSIONED
-    * lifecycle — snapshot v1, versioned append of the held-out third
-    * (v2), versioned erasure of every l_orderkey%10==7 row (v3). The
-    * row reads v1 AND v3 afterward, so a green oracle proves the v1
-    * snapshot still serves its exact pre-maintenance row set even
-    * though the erasure rewrote its buckets' live row set. */
+  /** q_l11's fixture: a copy of the l5 base store (snapshot v1, from
+    * its build) takes the append of the held-out third (v2) and the
+    * erasure of every l_orderkey%10==7 row (v3). The row reads v1 AND
+    * v3 afterward, so a green oracle proves the v1 snapshot still
+    * serves its exact pre-maintenance row set even though the erasure
+    * rewrote its buckets' live row set. */
   private val l11Invocation =
     new java.util.concurrent.atomic.AtomicLong(0L)
   def l11VersionedLayoutDir(s: SparkSession, dir: String): String = {
     val dst = l5BaseCopy(s, dir, "_ver", l11Invocation.incrementAndGet())
-    Layout.snapshotLayout(s, dst): Unit
-    Layout.appendToLayoutVersioned(s, dst,
+    Layout.appendToLayout(s, dst,
       t(s, dir, "lineitem").filter(col("l_orderkey") % 3 === 0),
       Seq("l_partkey", "l_suppkey"), bits = 8, nBuckets = 16): Unit
-    Layout.deleteFromLayoutVersioned(s, dst,
+    Layout.deleteFromLayout(s, dst,
       t(s, dir, "lineitem").filter(col("l_orderkey") % 10 === 7)
         .select("l_orderkey"), "l_orderkey"): Unit
     dst

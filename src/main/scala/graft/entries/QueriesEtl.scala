@@ -458,9 +458,9 @@ private[graft] object QueriesEtl {
 
     // ---- L4: manifest-driven pruned scan — the layout loop CLOSED:
     // the z-ordered store is written bucket-partitioned with its
-    // co-located stats manifest (cached fixture — this row times the
-    // serving path), the box predicate prunes buckets from the
-    // manifest, and only surviving partition dirs are read. A green
+    // per-file stats manifest as snapshot v1 (cached fixture — this
+    // row times the serving path), the box predicate prunes files from
+    // the manifest, and only surviving files are read. A green
     // row certifies the pruning rule is lossless end to end: the
     // pruned read equals the oracle's full-table filter. ----
     "q_l4_pruned_scan" -> ((s, dir) =>
@@ -476,8 +476,8 @@ private[graft] object QueriesEtl {
     // discipline for the layout store: the base store (the
     // l_orderkey%3≠0 two-thirds, cached fixture) is copied and the
     // held-out third appended with the STORE'S ORIGINAL anchors
-    // (recovered from the manifest), manifest refreshed by exact
-    // stats algebra. The pruned scan over the appended store must
+    // (persisted in `_meta`) as snapshot v2, whose manifest adds the
+    // new files' stats. The pruned scan over the appended store must
     // return the full-table filter — losslessness survives
     // maintenance. Bucket assignment for EVERY row replays in the
     // oracle with base-subset anchors + clamping. ----
@@ -493,8 +493,8 @@ private[graft] object QueriesEtl {
     // ---- L6: layout ERASURE maintenance — the right-to-erasure path
     // composed onto the append row (the g25g batch-composition
     // discipline): the appended store takes down every l_orderkey
-    // %10==7 row (only touched buckets rewrite, the manifest
-    // recounts), then the pruned scan must return the full-table
+    // %10==7 row (only touched buckets rewrite, their manifest rows
+    // recount), then the pruned scan must return the full-table
     // filter minus the erased orders. ----
     "q_l6_layout_erasure" -> ((s, dir) => {
       val store = l5AppendedLayoutDir(s, dir)
@@ -547,9 +547,9 @@ private[graft] object QueriesEtl {
     // ---- L10: POINT-LOOKUP pruning via the manifest's membership
     // sketch — the commonest lakehouse read a min/max manifest can't
     // serve: find one id in a store clustered on OTHER columns. The
-    // store records a per-bucket bloom on l_orderkey (writeLayout
+    // store records a per-file bloom on l_orderkey (writeLayout
     // bloomCols); prunedScan's equality predicate probes it and opens
-    // only maybe-present buckets (a negative probe is a PROOF of
+    // only maybe-present files (a negative probe is a PROOF of
     // absence — skips stay lossless). The oracle is the full-table
     // filter: pruning must be semantically invisible. LayoutSpec
     // asserts the bucket-open count actually collapses. ----
@@ -563,9 +563,9 @@ private[graft] object QueriesEtl {
           "l_suppkey")),
 
     // ---- L11: VERSIONED manifests — the snapshot-isolation
-    // milestone: the base store snapshots to v1, a versioned append
-    // publishes v2, a versioned erasure publishes v3, and THEN the
-    // row reads BOTH v1 and v3 through per-file pruned scans. v1's
+    // milestone: the base store's build committed v1, an append
+    // publishes v2, an erasure publishes v3, and THEN the row reads
+    // BOTH v1 and v3 through per-file pruned scans. v1's
     // leg must equal the pre-maintenance corpus filter (the erasure
     // rewrote its buckets' live rows, but v1's files are immutable —
     // pinned readers need no localCheckpoint discipline); v3's leg
@@ -573,7 +573,7 @@ private[graft] object QueriesEtl {
     "q_l11_versioned_scan" -> ((s, dir) => {
       val store = l11VersionedLayoutDir(s, dir)
       def leg(v: Long, tag: String) =
-        Layout.prunedScanVersion(s, store,
+        Layout.prunedScan(s, store,
           Seq(("l_partkey", 10L, 50L), ("l_suppkey", 2L, 5L)),
           version = v)
           .select(lit(tag).as("ver"), col("l_orderkey"),
@@ -593,7 +593,7 @@ private[graft] object QueriesEtl {
     "q_l12_versioned_point" -> ((s, dir) => {
       val store = l12VersionedBloomDir(s, dir)
       def leg(v: Long, tag: String) =
-        Layout.prunedScanVersion(s, store, Nil,
+        Layout.prunedScan(s, store, Nil,
           points = Seq(("l_orderkey", 7L)), version = v)
           .select(lit(tag).as("ver"), col("l_orderkey"),
             col("l_linenumber"), col("l_partkey"), col("l_suppkey"))

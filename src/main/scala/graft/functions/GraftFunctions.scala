@@ -57,13 +57,6 @@ object GraftFunctions {
       ColumnShim.expression(bloom), ColumnShim.expression(v), numHashes))
   }
 
-  /** Bitwise-OR union of two equal-geometry sketches. */
-  def bloom_or(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftshim.ColumnShim
-    ColumnShim.column(BloomOr(
-      ColumnShim.expression(a), ColumnShim.expression(b)))
-  }
-
   /** Heavy hitters with bounded state (Misra–Gries; see [[TopKFreq]]):
     * top `k` items as `array<struct(item, min_count)>`. Counts are lower
     * bounds, off by at most n/(capacity+1); exact when `capacity` covers

@@ -90,22 +90,6 @@ object BloomKernel {
     true
   }
 
-  /** Union of two serialized sketches (same geometry): bitwise OR —
-    * the append-maintenance algebra (no rescan: the union of a
-    * bucket's old and delta sketches covers exactly old ∪ delta). */
-  def orBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    require(a.length == b.length,
-      s"bloom OR: mismatched sketch sizes ${a.length} vs ${b.length} " +
-        "— the store and the delta must use the same bloom geometry")
-    val out = new Array[Byte](a.length)
-    var i = 0
-    while (i < a.length) {
-      out(i) = (a(i) | b(i)).toByte
-      i += 1
-    }
-    out
-  }
-
   /** Number of `s`'s shingles whose k probe bits are ALL set in `bloom`
     * (probe side; bloom is the serialized little-endian long array the
     * aggregate emits). 0 ⇒ certainly no shingle overlap with the build
@@ -365,35 +349,3 @@ case class BloomMightContainLong(
     copy(left = newLeft, right = newRight)
 }
 
-/** Bitwise-OR union of two equal-geometry sketches — the manifest
-  * merge's bloom algebra (append: old ∪ delta without a rescan). */
-case class BloomOr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "bloom_or"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bloom_or needs (binary, binary), got " +
-            s"(${l.catalogString}, ${r.catalogString})")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    BloomKernel.orBytes(a.asInstanceOf[Array[Byte]],
-      b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.BloomKernel.orBytes($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomOr =
-    copy(left = newLeft, right = newRight)
-}

@@ -47,11 +47,11 @@ object Layout {
   private def idiv(a: Column, b: Column): Column =
     call_function("div", a, b)
 
-  /** Read one of a store's underscore-named frames (`_meta`, `_stats`)
-    * by its listed part files: Spark hides `_`-prefixed paths, so a
-    * read that names such a directory logs "All paths were ignored"
-    * on every call, while its part files carry plain names. */
-  private[graft] def readFrame(spark: org.apache.spark.sql.SparkSession,
+  /** Read a store's underscore-named `_meta` frame by its listed part
+    * files: Spark hides `_`-prefixed paths, so a read that names such
+    * a directory logs "All paths were ignored" on every call, while
+    * its part files carry plain names. */
+  private def readFrame(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(dir)
     spark.read.parquet(p.getFileSystem(spark.sparkContext
@@ -337,14 +337,34 @@ object Layout {
   def fileSkippingStats(laid: DataFrame, bucketCol: String,
       cols: Seq[String], bloomCols: Seq[String] = Nil,
       bloomBits: Int = 1 << 13, bloomHashes: Int = 5): DataFrame =
-    laid.groupBy(col(bucketCol).cast("long").as("bucket"))
+    skippingStats(laid, Seq(col(bucketCol).cast("long").as("bucket")),
+      cols, bloomCols, bloomBits, bloomHashes)
+
+  // Per-FILE skipping stats of a store read, keyed by (bucket,
+  // store-relative file path) — the rows of a snapshot manifest, so a
+  // snapshot lists exactly the files it covers and pruning gets file
+  // granularity.
+  private def perFileStats(storeRows: DataFrame, cols: Seq[String],
+      bloomCols: Seq[String], bloomBits: Int, bloomHashes: Int)
+      : DataFrame =
+    skippingStats(storeRows.withColumn("file", regexp_extract(
+        input_file_name(), "(_bucket=[0-9]+/[^/]+)$", 1)),
+      Seq(col("_bucket").cast("long").as("bucket"), col("file")),
+      cols, bloomCols, bloomBits, bloomHashes)
+
+  // The one skipping aggregate per group of `keys`: `n_rows`, the
+  // `min_`/`max_` envelope per column, and a membership sketch `bloom_`
+  // per point-lookup column — the Delta/Iceberg file-level bloom: an
+  // equality probe on a high-cardinality id prunes files min/max
+  // never could.
+  private def skippingStats(rows: DataFrame, keys: Seq[Column],
+      cols: Seq[String], bloomCols: Seq[String], bloomBits: Int,
+      bloomHashes: Int): DataFrame =
+    rows.groupBy(keys: _*)
       .agg(count(lit(1)).as("n_rows"),
         (cols.flatMap(c => Seq(
           min(col(c)).cast("long").as(s"min_$c"),
           max(col(c)).cast("long").as(s"max_$c"))) ++
-          // membership sketch per named point-lookup column — the
-          // Delta/Iceberg file-level bloom: an equality probe on a
-          // high-cardinality id prunes buckets min/max never could
           bloomCols.map(c => graft.functions.GraftFunctions.bloom_long(
             col(c).cast("long"), bloomBits, bloomHashes)
             .as(s"bloom_$c"))): _*)
@@ -356,25 +376,29 @@ object Layout {
   val curves: Set[String] = Set("z", "hilbert", "hilbertk")
 
   /** Persist a laid-out frame as a `_bucket`-partitioned parquet store
-    * with its skipping manifest co-located at `<path>/_stats` (an
-    * underscore-prefixed dir — hidden from the store's own file
-    * discovery, the `_SUCCESS` convention): ONE exchange
-    * (repartition on the partition column so each bucket writes as
-    * one file set), then the manifest derives from a RE-READ of the
-    * written store — stats can never disagree with the files they
-    * describe, which is the whole pruning contract.
+    * and commit its snapshot v1: ONE exchange (repartition on the
+    * partition column so each bucket writes as one file set), then the
+    * per-file skipping manifest derives from a RE-READ of the written
+    * store — stats can never disagree with the files they describe,
+    * which is the whole pruning contract — and commits as frame
+    * `manifest` of the [[FrameVersions]] store at `<path>/_versions`
+    * (an underscore-prefixed dir — hidden from the store's own file
+    * discovery, the `_SUCCESS` convention).
     *
-    * A one-row `<path>/_meta` records the store's IDENTITY: the curve
-    * name, bits, bucket count, the ordered clustered columns, and the
-    * BUILD-TIME normalization anchors (corpus min/max per clustered
-    * column). [[appendToLayout]] validates its arguments against the
-    * identity and normalizes deltas against the PERSISTED anchors —
-    * the manifest's envelopes widen and shrink with maintenance, so
+    * A one-row `<path>/_meta`, written before the commit, records the
+    * store's IDENTITY: the curve name, bits, bucket count, the ordered
+    * clustered columns, the bloom geometry, and the BUILD-TIME
+    * normalization anchors (corpus min/max per clustered column: the
+    * min of the manifest's mins and the max of its maxes).
+    * [[appendToLayout]] validates its arguments against the identity
+    * and normalizes deltas against the PERSISTED anchors — the
+    * manifest's envelopes widen and shrink with maintenance, so
     * re-deriving anchors from them would drift the curve for every
     * later append (anchor stability is the append contract).
     *
     * `statCols` must be the clustered columns in clustering order —
-    * the columns the `_z`/`_h` index was computed over. */
+    * the columns the `_z`/`_h` index was computed over. The write
+    * replaces whatever `path` held, snapshots included. */
   def writeLayout(laid: DataFrame, path: String, statCols: Seq[String],
       curve: String, bits: Int, nBuckets: Int,
       bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 13,
@@ -403,20 +427,17 @@ object Layout {
       }
     laid.repartition(col("_bucket"))
       .write.mode("overwrite").partitionBy("_bucket").parquet(path)
-    val store = laid.sparkSession.read.parquet(path)
-    val stats = fileSkippingStats(store, "_bucket", statCols,
+    val spark = laid.sparkSession
+    val manifest = perFileStats(spark.read.parquet(path), statCols,
         bloomCols, bloomBits, bloomHashes)
       .localCheckpoint()
-    stats.write.mode("overwrite").parquet(s"$path/_stats")
-    // build-time anchors: the manifest covers the full corpus here
-    // (and only here), so its envelope extrema ARE the build anchors;
     // the bloom geometry joins the identity so appends sketch their
-    // deltas with the SAME (bits, hashes) — the OR-merge algebra
-    // requires it
+    // files with the SAME (bits, hashes) — a point probe tests every
+    // file's sketch with the store's one hash count
     val anchorExprs = statCols.flatMap(c => Seq(
       min(col(s"min_$c")).as(s"anchor_min_$c"),
       max(col(s"max_$c")).as(s"anchor_max_$c")))
-    stats.agg(anchorExprs.head, anchorExprs.tail: _*)
+    manifest.agg(anchorExprs.head, anchorExprs.tail: _*)
       .withColumn("curve", lit(curve))
       .withColumn("bits", lit(bits.toLong))
       .withColumn("n_buckets", lit(nBuckets.toLong))
@@ -425,92 +446,272 @@ object Layout {
       .withColumn("bloom_bits", lit(bloomBits.toLong))
       .withColumn("bloom_hashes", lit(bloomHashes.toLong))
       .write.mode("overwrite").parquet(s"$path/_meta")
+    FrameVersions.latest(spark, s"$path/_versions")
+      .commit(Seq("manifest" -> manifest)): Unit
+  }
+
+  /** Mark which buckets a conjunctive box predicate
+    * `AND_i (lo_i <= col_i <= hi_i)` can SKIP from stats alone: a
+    * bucket is skippable iff ANY queried column's envelope misses its
+    * range (`max < lo` or `min > hi`) — the parquet row-group pruning
+    * rule. Returns the stats plus a 0/1 `skipped` verdict; the
+    * selectivity story is `sum(skipped·n_rows) / sum(n_rows)`. */
+  def skippingVerdicts(stats: DataFrame,
+      ranges: Seq[(String, Long, Long)]): DataFrame = {
+    require(ranges.nonEmpty, "skippingVerdicts needs at least one range")
+    val miss = ranges.map { case (c, lo, hi) =>
+      col(s"max_$c") < lit(lo) || col(s"min_$c") > lit(hi)
+    }.reduce(_ || _)
+    stats.withColumn("skipped", when(miss, lit(1L)).otherwise(lit(0L)))
+  }
+
+  // ─────────────── snapshots (FrameVersions manifests) ───────────────
+  //
+  // Every writeLayout store is a committed chain of immutable
+  // snapshots, each a PER-FILE manifest (file list + per-file
+  // envelopes/sketches) committed as frame `manifest` of the
+  // [[FrameVersions]] store at `<path>/_versions` — its commit marker
+  // create is the pointer swap, and its claim on `n + 1` is the one
+  // lock: it refuses a second publisher, and a publisher whose base
+  // snapshot is no longer the latest. Hence:
+  //
+  //  * data files are IMMUTABLE until vacuum — append only ADDS files,
+  //    erasure REWRITES touched buckets into new files and leaves the
+  //    old ones for pinned readers (physical purge = `vacuumLayout`,
+  //    the GDPR caveat a caller must know);
+  //  * a reader pins a snapshot once and reads THAT manifest's files
+  //    for as long as it likes — maintenance can publish v+1
+  //    underneath it freely, so layout stores need no
+  //    hold-localCheckpoint-across-maintenance reader discipline
+  //    (COVERAGE.md contract);
+  //  * the plain directory read is no longer meaningful after the
+  //    first erasure (old and new files coexist) — all reads go
+  //    through [[readLayoutVersion]] / [[prunedScan]].
+  //
+  // A crash anywhere before a commit marker leaves the current
+  // snapshot fully intact; `recoverLayoutVersions` drops the
+  // uncommitted version and `vacuumLayout` sweeps orphaned data files.
+
+  /** Every committed snapshot of the store at `path`, oldest first. A
+    * store with a layout identity but no commit is refused: it was
+    * written before [[writeLayout]] committed snapshot v1 (a root
+    * `_stats` manifest, or the retired `_versions/v<n>/_COMMITTED`
+    * chain), or its build never finished. */
+  def snapshots(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[FrameVersions.Version] = {
+    val all = FrameVersions.versions(spark, s"$path/_versions")
+    require(all.nonEmpty || !new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
+      s"the store at $path has a layout identity but no committed " +
+        "snapshot: it predates writeLayout committing snapshot v1 " +
+        "through FrameVersions (a root _stats manifest, or the " +
+        "retired _versions/v<n>/_COMMITTED chain), or its build never " +
+        "finished — rebuild it with writeLayout")
+    all
+  }
+
+  /** Largest committed snapshot version at `path` (0 = no
+    * [[writeLayout]] store). One listing of the commit markers. */
+  def currentLayoutVersion(spark: org.apache.spark.sql.SparkSession,
+      path: String): Long =
+    snapshots(spark, path).lastOption.fold(0L)(_.n)
+
+  // Committed snapshot `version` (-1 = current). Refuses a version
+  // that was never committed or has been vacuumed (a pinned reader of
+  // a vacuumed snapshot must fail loudly, not read a half-swept file
+  // set).
+  private def snapshot(spark: org.apache.spark.sql.SparkSession,
+      path: String, version: Long = -1L): FrameVersions.Version = {
+    val all = snapshots(spark, path)
+    require(all.nonEmpty,
+      s"the store at $path has no layout identity and no skipping " +
+        "manifest — write it with writeLayout")
+    val v = if (version <= 0) all.lastOption else all.find(_.n == version)
+    require(v.nonEmpty,
+      s"no committed snapshot v$version at $path — it was never " +
+        s"published, or vacuumLayout dropped it; current = ${all.last.n}")
+    v.get
+  }
+
+  /** The committed per-file manifest of snapshot `version`: one row
+    * per data file — (`bucket`, `file` (store-relative path),
+    * `n_rows`, `min_<c>`/`max_<c>` per clustered column, `bloom_<c>`
+    * per sketched column). */
+  def layoutVersionManifest(spark: org.apache.spark.sql.SparkSession,
+      path: String, version: Long): DataFrame = {
+    require(version >= 1, s"snapshot versions start at 1 (got $version)")
+    snapshot(spark, path, version).read("manifest")
+  }
+
+  // The store's clustered columns and bloom geometry (sketched
+  // columns, bits, hashes), from its `_meta` identity row.
+  private def geometry(spark: org.apache.spark.sql.SparkSession,
+      path: String): (Seq[String], Seq[String], Int, Int) = {
+    val m = readFrame(spark, s"$path/_meta").head()
+    (m.getAs[scala.collection.Seq[String]]("cols").toSeq,
+      m.getAs[scala.collection.Seq[String]]("bloom_cols").toSeq,
+      m.getAs[Long]("bloom_bits").toInt,
+      m.getAs[Long]("bloom_hashes").toInt)
+  }
+
+  /** Full read of snapshot `version` (default: current) — the pinned
+    * view: exactly the manifest's files, by explicit path list, so
+    * later maintenance (which only ADDS files until vacuum) can never
+    * change or break this read. */
+  def readLayoutVersion(spark: org.apache.spark.sql.SparkSession,
+      path: String, version: Long = -1L): DataFrame = {
+    val v = snapshot(spark, path, version)
+    val files = v.read("manifest")
+      .select("file").collect().map(_.getString(0))
+    if (files.isEmpty) emptyVersionScan(spark, path, v.n)
+    else spark.read.option("basePath", path)
+      .parquet(files.map(f => s"$path/$f").toIndexedSeq: _*)
+  }
+
+  // Zero rows WITH the store's row schema, for an empty snapshot (all
+  // rows erased): borrow any file from the nearest committed version
+  // that still holds one — files are immutable until vacuum, so a
+  // non-empty ancestor's file is always readable. Only a chain that
+  // is empty ALL the way down (or vacuumed bare) refuses.
+  private def emptyVersionScan(spark: org.apache.spark.sql.SparkSession,
+      path: String, from: Long): DataFrame = {
+    val donor = snapshots(spark, path).filter(_.n <= from).reverseIterator
+      .map(_.read("manifest").select("file").head(1))
+      .collectFirst { case arr if arr.nonEmpty => arr.head.getString(0) }
+    require(donor.nonEmpty,
+      s"snapshot v$from of $path is empty and so is every committed " +
+        "ancestor — the row schema is gone; rebuild via writeLayout")
+    spark.read.option("basePath", path)
+      .parquet(s"$path/${donor.get}").limit(0)
+  }
+
+  /** Manifest-driven pruned read of snapshot `version` (default: the
+    * current one): apply the [[skippingVerdicts]] rule to the per-file
+    * manifest, fetch the kept files to the driver (BOUNDED — one row
+    * per file, the planning fetch every table format pays), and read
+    * ONLY those files before applying the exact row predicate. Result
+    * rows are EQUAL to filtering the snapshot (the pruning rule is
+    * conservative — it never skips a file that holds a matching row);
+    * what pruning buys is the scan: skipped files are never opened,
+    * never listed into tasks. Committed manifests reference immutable
+    * files (the vacuum contract is to never drop a still-pinned
+    * version), so no existence check is needed. */
+  def prunedScan(spark: org.apache.spark.sql.SparkSession, path: String,
+      ranges: Seq[(String, Long, Long)],
+      points: Seq[(String, Long)] = Nil, version: Long = -1L)
+      : DataFrame = {
+    require(ranges.nonEmpty || points.nonEmpty,
+      "prunedScan needs at least one range or point predicate")
+    val v = snapshot(spark, path, version)
+    val manifest = v.read("manifest")
+    ranges.foreach { case (c, _, _) =>
+      require(manifest.columns.contains(s"min_$c"),
+        s"prunedScan: the manifest has no envelope for column '$c' " +
+          s"(stat columns: ${manifest.columns.filter(_.startsWith("min_"))
+            .map(_.stripPrefix("min_")).mkString(", ")}) — only " +
+          "columns named at writeLayout can prune")
+    }
+    // point predicates prune by the per-file MEMBERSHIP sketch (the
+    // bloom column writeLayout records for `bloomCols`) — an equality
+    // probe on a high-cardinality non-clustered id is the commonest
+    // lakehouse read and min/max envelopes never help it; a negative
+    // probe is a PROOF of absence, so the skip stays lossless. A
+    // CLUSTERED stat column needs no sketch: its min/max envelope
+    // serves the equality losslessly (v outside [min, max] proves
+    // absence), so a point probe on it falls back to envelope-only
+    // pruning instead of being rejected. Only a column with NEITHER a
+    // bloom_<c> nor a min_<c>/max_<c> manifest column refuses.
+    points.foreach { case (c, _) =>
+      require(manifest.columns.contains(s"bloom_$c") ||
+        manifest.columns.contains(s"min_$c"),
+        s"prunedScan: the manifest has neither a membership sketch " +
+          s"nor a min/max envelope for column '$c' — name it in " +
+          "writeLayout's bloomCols (point lookups) or cols " +
+          "(clustering) to serve point predicates")
+    }
+    lazy val bloomHashes = geometry(spark, path)._4
+    val verdicts0 =
+      if (ranges.nonEmpty) skippingVerdicts(manifest, ranges)
+      else manifest.withColumn("skipped", lit(0L))
+    val verdicts = points.foldLeft(verdicts0) { case (d, (c, pv)) =>
+      val bloomMiss =
+        if (manifest.columns.contains(s"bloom_$c"))
+          !graft.functions.GraftFunctions.bloom_might_contain(
+            col(s"bloom_$c"), lit(pv), bloomHashes)
+        else lit(false)
+      val envMiss =
+        if (manifest.columns.contains(s"min_$c"))
+          col(s"max_$c") < lit(pv) || col(s"min_$c") > lit(pv)
+        else lit(false)
+      d.withColumn("skipped",
+        when(col("skipped") === 1L, lit(1L))
+          .when(bloomMiss || envMiss, lit(1L))
+          .otherwise(lit(0L)))
+    }
+    val kept = verdicts.filter(col("skipped") === 0L)
+      .select("file").collect().map(_.getString(0))
+    val scan =
+      if (kept.nonEmpty)
+        spark.read.option("basePath", path)
+          .parquet(kept.map(f => s"$path/$f").toIndexedSeq: _*)
+      else {
+        val any = manifest.select("file").head(1)
+        if (any.isEmpty) emptyVersionScan(spark, path, v.n)
+        else spark.read.option("basePath", path)
+          .parquet(s"$path/${any.head.getString(0)}").limit(0)
+      }
+    val ranged = ranges.foldLeft(scan) { case (d, (c, lo, hi)) =>
+      d.filter(col(c).between(lo, hi))
+    }
+    points.foldLeft(ranged) { case (d, (c, pv)) =>
+      d.filter(col(c) === lit(pv))
+    }
   }
 
   /** EXACT append maintenance of a [[writeLayout]] store — the layout
     * family's member of the maintenance grid: new rows are assigned
     * with the STORE'S ORIGINAL normalization anchors (read from the
     * persisted `_meta` — never re-derived from the manifest, whose
-    * envelopes drift with every out-of-domain append or erasure),
-    * appended into their partition directories, and the manifest
-    * refreshes by pure stats algebra — counts add, envelopes widen by
-    * least/greatest — WITHOUT rescanning a byte of the existing store.
+    * envelopes drift with every out-of-domain append or erasure) and
+    * commit as snapshot v+1 = v's manifest plus the new files'
+    * per-file rows, tagged `tag` ([[publish]]) — WITHOUT rescanning a
+    * byte of the existing store.
     *
     * Anchor stability is the contract (the production semantics:
     * appends never re-layout old files — re-clustering is an explicit
     * rewrite): values outside the original domain CLAMP into the
-    * boundary cells for assignment, while the refreshed envelopes
+    * boundary cells for assignment, while the new files' envelopes
     * track the ACTUAL values, so [[prunedScan]] stays conservative
     * and lossless over the appended store. The call's
     * curve/bits/nBuckets/cols are VALIDATED against the store's
     * `_meta` identity — an append under the wrong curve or column
     * order would silently scatter the delta across unrelated buckets.
-    *
-    * SELF-HEALING (the delta-ledger protocol): the laid-out delta and
-    * the merged manifest STAGE under `<path>/_append_pending/`
-    * (underscore-hidden from store reads) and a `_COMMIT` marker is
-    * the commit point — only then does the append publish: manifest
-    * overwrite FIRST (a crash here leaves envelopes wider than the
-    * files, conservative by [[skippingVerdicts]]' min/max-only rule —
-    * pruning only KEEPS extra buckets), then the staged files MOVE
-    * into their bucket directories (atomic renames; a re-run skips
-    * already-landed files, so completion is idempotent and rows can
-    * never double-land), then the stage is cleared. A crash at ANY
-    * point resolves mechanically via [[recoverAppend]]: no `_COMMIT`
-    * → roll BACK (nothing published — drop the stage); `_COMMIT`
-    * present → roll FORWARD (replay the publish from the pinned
-    * stage). The manifest merge itself can never double-apply — it
-    * replays from the staged copy, not by re-merging — so `n_rows`
-    * stays exact across crashes (the pre-ledger re-run recipe
-    * permanently inflated the touched buckets' counts). A fresh
-    * append REFUSES to start while a stage is pending (single-writer
-    * discipline; resolve first).
+    * Existing files are never touched, so every pinned reader is
+    * unaffected. An empty delta publishes nothing. Returns the serving
+    * version.
     *
     * Scale notes (100 TB): the `_meta` probe is one row; the delta
     * lays out and writes delta-sized (one exchange on `_bucket`); the
-    * stats merge is two bucket-count-sized frames full-joined; the
-    * publish is one rename per staged file (metadata moves — same
-    * filesystem by construction). Nothing touches existing files. */
+    * manifest grows by one row per new file, and landing is one
+    * rename per file (a metadata move — same filesystem by
+    * construction). */
   def appendToLayout(spark: org.apache.spark.sql.SparkSession,
       path: String, rows: DataFrame, cols: Seq[String], bits: Int,
-      nBuckets: Int, curve: String = "z"): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    require(currentLayoutVersion(spark, path) == 0L,
-      s"appendToLayout: the store at $path is VERSIONED — use " +
-        "appendToLayoutVersioned (the plain append publishes into " +
-        "the live manifest only, so the snapshot chain would " +
-        "silently stop covering the store)")
-    require(!fs.exists(
-      new org.apache.hadoop.fs.Path(s"$path/_append_pending")),
-      s"appendToLayout: an interrupted append is staged at " +
-        s"$path/_append_pending — run recoverAppend($path) to roll " +
-        "it back or forward before appending again (single-writer " +
-        "discipline)")
-    val (laidDelta, bloomCols, bloomBits, bloomHashes) =
-      layDeltaWithIdentity(spark, path, rows, cols, bits, nBuckets,
-        curve, "appendToLayout")
-    val stats = readFrame(spark, s"$path/_stats")
-    cols.foreach(c => require(stats.columns.contains(s"min_$c"),
-      s"appendToLayout: the manifest has no envelope for column " +
-        s"'$c' — the append must name exactly the columns the store " +
-        "was written with"))
-    appendPublish(spark, path, fs, laidDelta, stats, cols, bloomCols,
-      bloomBits, bloomHashes)
+      nBuckets: Int, curve: String = "z", tag: String = "-"): Long = {
+    val v = snapshot(spark, path)
+    val laid = layDelta(spark, path, rows, cols, bits, nBuckets, curve)
+    if (laid.isEmpty) v.n
+    else publish(spark, path, v, v.read("manifest"), laid, tag)
   }
 
-  /** Shared delta-laying arithmetic of [[appendToLayout]] and
-    * [[appendToLayoutVersioned]]: validates the caller's declared
-    * identity against the persisted `_meta`, normalizes the delta
-    * under the BUILD-TIME anchors, assigns curve indexes and buckets,
-    * and pins the laid frame. One definition, so a versioned append
-    * can never assign buckets differently from the plain one. Returns
-    * (laid delta, bloom cols, bloom bits, bloom hashes). */
-  private def layDeltaWithIdentity(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      rows: DataFrame, cols: Seq[String], bits: Int, nBuckets: Int,
-      curve: String, op: String)
-      : (DataFrame, Seq[String], Int, Int) = {
+  // The append's bucket assignment: validates the caller's declared
+  // identity against the persisted `_meta`, normalizes the delta
+  // under the BUILD-TIME anchors, assigns curve indexes and buckets,
+  // and pins the laid frame.
+  private def layDelta(spark: org.apache.spark.sql.SparkSession,
+      path: String, rows: DataFrame, cols: Seq[String], bits: Int,
+      nBuckets: Int, curve: String): DataFrame = {
     val k = cols.size
     require(nBuckets >= 1 && k * bits <= 40,
       "k*bits must be <= 40 so bucket math stays in long range")
@@ -519,13 +720,6 @@ object Layout {
     require(curve != "hilbert" || k == 2,
       "curve 'hilbert' is the 2-D xy2d state machine — use " +
         "'hilbertk' (the Skilling transform) for k >= 3")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
-      s"$op: no layout identity at $path/_meta — the " +
-        "store must be written by writeLayout (which persists the " +
-        "curve and build-time anchors); appending blind would " +
-        "scatter the delta")
     val metaDf = readFrame(spark, s"$path/_meta")
     val meta = metaDf.head()
     val storeCurve = meta.getAs[String]("curve")
@@ -534,29 +728,16 @@ object Layout {
     val storeCols = meta.getAs[scala.collection.Seq[String]]("cols")
     require(storeCurve == curve && storeBits == bits &&
       storeN == nBuckets && storeCols.toSeq == cols,
-      s"$op: the store at $path was built with " +
+      s"appendToLayout: the store at $path was built with " +
         s"curve=$storeCurve, bits=$storeBits, nBuckets=$storeN, " +
         s"cols=${storeCols.mkString("(", ", ", ")")} — the append " +
         s"asked for curve=$curve, bits=$bits, nBuckets=$nBuckets, " +
         s"cols=${cols.mkString("(", ", ", ")")}; a mismatched append " +
         "would scatter the delta across unrelated buckets")
-    // bloom geometry from the identity — deltas must sketch with the
-    // store's own (bits, hashes) or the OR-merge would be garbage
-    val bloomCols: Seq[String] =
-      if (meta.schema.fieldNames.contains("bloom_cols"))
-        meta.getAs[scala.collection.Seq[String]]("bloom_cols").toSeq
-      else Nil
-    val bloomBits =
-      if (meta.schema.fieldNames.contains("bloom_bits"))
-        meta.getAs[Long]("bloom_bits").toInt
-      else 1 << 13
-    val bloomHashes =
-      if (meta.schema.fieldNames.contains("bloom_hashes"))
-        meta.getAs[Long]("bloom_hashes").toInt
-      else 5
-    bloomCols.foreach(c => require(rows.columns.contains(c),
-      s"$op: the store sketches column '$c' but the delta " +
-        "does not carry it"))
+    meta.getAs[scala.collection.Seq[String]]("bloom_cols").foreach(c =>
+      require(rows.columns.contains(c),
+        s"appendToLayout: the store sketches column '$c' but the " +
+          "delta does not carry it"))
     // the persisted BUILD-TIME anchors, as a 1-row broadcast frame
     val anchors = metaDf.select(cols.flatMap(c => Seq(
       col(s"anchor_min_$c").as(s"_min_$c"),
@@ -589,819 +770,130 @@ object Layout {
           .drop((0 until k).map(i => s"_cn$i"): _*)
     }
     val idxCol = if (curve == "z") "_z" else "_h"
-    val laidDelta = indexed
+    indexed
       .withColumn("_bucket",
         idiv(col(idxCol) * lit(nBuckets.toLong), lit(1L << (k * bits))))
       .drop(cols.flatMap(c => Seq(s"_min_$c", s"_max_$c")): _*)
-      .localCheckpoint() // appended files and manifest from ONE frame
-    (laidDelta, bloomCols, bloomBits, bloomHashes)
-  }
-
-  // The publish half of the PLAIN append: exact bucket-level stats
-  // algebra (counts add, envelopes widen, blooms OR-union), then the
-  // staged-commit ledger (`_append_pending` + `_COMMIT`) and the
-  // idempotent roll-forward.
-  private def appendPublish(spark: org.apache.spark.sql.SparkSession,
-      path: String, fs: org.apache.hadoop.fs.FileSystem,
-      laidDelta: DataFrame, stats: DataFrame, cols: Seq[String],
-      bloomCols: Seq[String], bloomBits: Int, bloomHashes: Int)
-      : Unit = {
-    val deltaStats = fileSkippingStats(laidDelta, "_bucket", cols,
-      bloomCols, bloomBits, bloomHashes)
-    val mergedCols = (col("bucket") +:
-      (coalesce(col("_n_old"), lit(0L)) +
-        coalesce(col("_n_new"), lit(0L))).as("n_rows") +:
-      cols.flatMap(c => Seq(
-        least(coalesce(col(s"_mn_old_$c"), col(s"_mn_new_$c")),
-          coalesce(col(s"_mn_new_$c"), col(s"_mn_old_$c")))
-          .as(s"min_$c"),
-        greatest(coalesce(col(s"_mx_old_$c"), col(s"_mx_new_$c")),
-          coalesce(col(s"_mx_new_$c"), col(s"_mx_old_$c")))
-          .as(s"max_$c")))) ++
-      // bloom union — pure algebra, no rescan: old ∪ delta per bucket
-      bloomCols.map(c =>
-        when(col(s"_bl_old_$c").isNull, col(s"_bl_new_$c"))
-          .when(col(s"_bl_new_$c").isNull, col(s"_bl_old_$c"))
-          .otherwise(graft.functions.GraftFunctions.bloom_or(
-            col(s"_bl_old_$c"), col(s"_bl_new_$c")))
-          .as(s"bloom_$c"))
-    def tag(df: DataFrame, sfx: String): DataFrame =
-      df.select((col("bucket") +:
-        col("n_rows").as(s"_n_$sfx") +:
-        cols.flatMap(c => Seq(
-          col(s"min_$c").as(s"_mn_${sfx}_$c"),
-          col(s"max_$c").as(s"_mx_${sfx}_$c")))) ++
-        bloomCols.map(c =>
-          col(s"bloom_$c").as(s"_bl_${sfx}_$c")): _*)
-    val merged = tag(stats, "old")
-      .join(tag(deltaStats, "new"), Seq("bucket"), "full")
-      .select(mergedCols: _*)
-    // STAGE: delta files + merged manifest land under the pending
-    // ledger (durable pins — no reader sees them: underscore dir),
-    // then the _COMMIT marker makes the publish decision durable
-    val pending = s"$path/_append_pending"
-    // Stage ACQUISITION is the mutex, not the exists-check above (two
-    // concurrent appends can both pass an exists-then-write probe and
-    // interleave files into one stage, leaving a stats_merged that
-    // reflects only one delta): an atomic exclusive create of the
-    // stage marker — exactly one racer wins; the loser fails before
-    // writing anything. A crash right after acquisition leaves a
-    // markerless-of-_COMMIT stage that recoverAppend rolls back.
-    require(fs.createNewFile(
-      new org.apache.hadoop.fs.Path(s"$pending/_STAGE_LOCK")),
-      s"appendToLayout: another append just acquired the stage at " +
-        s"$pending (or an interrupted one holds it) — single-writer " +
-        s"discipline; run recoverAppend($path) if no writer is live")
-    laidDelta.repartition(col("_bucket"))
-      .write.partitionBy("_bucket").parquet(s"$pending/data")
-    merged.write.parquet(s"$pending/stats_merged")
-    fs.create(new org.apache.hadoop.fs.Path(s"$pending/_COMMIT"), true)
-      .close()
-    // PUBLISH — replayable from the stage at any point (recoverAppend)
-    completeAppend(spark, path, fs)
-  }
-
-  // The roll-forward half of the append ledger: manifest from the
-  // pinned staged copy FIRST (the conservative window), then every
-  // staged file renames into its bucket directory (skip-if-landed —
-  // idempotent), then the stage clears. Callable any number of times.
-  private def completeAppend(spark: org.apache.spark.sql.SparkSession,
-      path: String, fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val pending = s"$path/_append_pending"
-    spark.read.parquet(s"$pending/stats_merged")
-      .write.mode("overwrite").parquet(s"$path/_stats")
-    val dataRoot = new org.apache.hadoop.fs.Path(s"$pending/data")
-    if (fs.exists(dataRoot)) {
-      fs.listStatus(dataRoot)
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("_bucket="))
-        .foreach { bd =>
-          val target =
-            new org.apache.hadoop.fs.Path(path, bd.getPath.getName)
-          if (!fs.exists(target)) fs.mkdirs(target): Unit
-          fs.listStatus(bd.getPath)
-            .filter(f => f.isFile &&
-              !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-            .foreach { f =>
-              val dst = new org.apache.hadoop.fs.Path(target,
-                f.getPath.getName)
-              // staged part names are unique (Spark task UUIDs); an
-              // existing dst means a previous publish attempt already
-              // landed this file — never rename over it
-              if (!fs.exists(dst))
-                require(fs.rename(f.getPath, dst),
-                  s"appendToLayout: publish rename ${f.getPath} -> " +
-                    s"$dst failed (stage intact — recoverAppend " +
-                    "resumes)")
-              else fs.delete(f.getPath, false): Unit
-            }
-        }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(pending), true): Unit
-  }
-
-  /** Mechanical recovery of an interrupted [[appendToLayout]] — the
-    * consumer of the delta ledger: inspects `<path>/_append_pending`
-    * and either rolls BACK (no `_COMMIT` marker: the append never
-    * decided to publish — nothing in the live store changed; the
-    * stage drops and the caller may simply re-append) or rolls
-    * FORWARD (`_COMMIT` present: the staged manifest and files are
-    * complete by construction — replay the publish, which is
-    * idempotent). Replaces the manual delete-then-retry recipe; safe
-    * to call on a clean store (no-op).
-    *
-    * @return one row: (`action` ∈ clean | rolled_back | completed,
-    *         `n_staged_files` — data files in the stage at entry) */
-  def recoverAppend(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val pendingPath =
-      new org.apache.hadoop.fs.Path(s"$path/_append_pending")
-    val fs = pendingPath.getFileSystem(conf)
-    def stagedFiles(): Long =
-      if (!fs.exists(pendingPath)) 0L
-      else {
-        val it = fs.listFiles(pendingPath, true)
-        var n = 0L
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet")) n += 1
-        }
-        n
-      }
-    val n = stagedFiles()
-    val action =
-      if (!fs.exists(pendingPath)) "clean"
-      else if (!fs.exists(new org.apache.hadoop.fs.Path(
-          s"$path/_append_pending/_COMMIT"))) {
-        fs.delete(pendingPath, true): Unit
-        "rolled_back"
-      } else {
-        completeAppend(spark, path, fs)
-        "completed"
-      }
-    Seq((action, n)).toDF("action", "n_staged_files")
+      .localCheckpoint() // written files and their stats from ONE frame
   }
 
   /** EXACT takedown maintenance of a [[writeLayout]] store — the
     * right-to-erasure path of the layout family (the [[appendToLayout]]
-    * counterpart): one store scan finds the rows to erase and their
-    * buckets (deleted ids broadcast into a semi-join), then ONLY the
-    * touched partition directories rewrite with their survivors
-    * (dynamic partition overwrite — untouched buckets' files are
-    * never opened for writing), buckets whose rows all die have their
-    * directories removed, and the manifest refreshes exactly:
-    * touched-bucket envelopes RECOUNT from the survivors (min/max is
-    * not subtractable — the recount is touched-bucket-sized, not
-    * store-sized), untouched rows pass through verbatim, zero-row
-    * buckets leave. Envelopes can only SHRINK, so [[prunedScan]]
-    * stays conservative and lossless; append anchors are unaffected
-    * (they live in `_meta`, pinned at build time).
+    * counterpart): one scan of the current snapshot finds the rows to
+    * erase and their buckets (deleted ids broadcast into a semi-join),
+    * then ONLY the touched buckets' SURVIVORS rewrite into new files,
+    * committed as snapshot v+1 = v's manifest minus the touched
+    * buckets' rows plus the new files ([[publish]]). Untouched
+    * buckets' files are never opened for writing; touched buckets'
+    * envelopes and sketches RECOUNT from the survivors (min/max and
+    * membership are not subtractable — the recount is
+    * touched-bucket-sized, not store-sized). Envelopes can only
+    * SHRINK, so [[prunedScan]] stays conservative and lossless; append
+    * anchors live in `_meta`, pinned at build time, so even a fully
+    * emptied store re-grows correctly on a later append.
     *
-    * Crash window: a crash after the survivor rewrite but before the
-    * manifest overwrite leaves envelopes wider than the files — which
-    * is conservative (pruning only keeps extra buckets); a crash
-    * between an emptied directory's delete and the manifest overwrite
-    * leaves the manifest naming a directory that is gone — which
-    * [[prunedScan]] existence-filters (the bucket holds no rows by
-    * construction, so the filter is exact). Either way readers stay
-    * lossless and the erasure can simply re-run.
+    * The old files stay on disk for pinned readers — the erased rows
+    * are logically gone from v+1 on, but PHYSICALLY purged only by
+    * [[vacuumLayout]] once no kept snapshot references them (the
+    * right-to-erasure caller runs vacuum after the pinned horizon
+    * passes). A no-op (no touched bucket) publishes nothing. Returns
+    * the serving version.
     *
-    * Scale notes (100 TB): one store scan (the probe), one
-    * touched-bucket-sized rewrite, one bucket-count-sized manifest
-    * merge; the touched-bucket id list is a BOUNDED driver fetch
-    * (≤ nBuckets rows). */
+    * Scale notes (100 TB): one snapshot scan (the probe), one
+    * touched-bucket-sized rewrite, one manifest-sized filter; the
+    * touched-bucket id list is a BOUNDED driver fetch (≤ nBuckets
+    * rows). */
   def deleteFromLayout(spark: org.apache.spark.sql.SparkSession,
-      path: String, removedIds: DataFrame, idCol: String): Unit = {
-    val fsGuard = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(currentLayoutVersion(spark, path) == 0L,
-      s"deleteFromLayout: the store at $path is VERSIONED — use " +
-        "deleteFromLayoutVersioned (the plain erasure rewrites " +
-        "bucket files IN PLACE, which would yank files out from " +
-        "under every pinned snapshot)")
-    require(!fsGuard.exists(
-      new org.apache.hadoop.fs.Path(s"$path/_append_pending")),
-      s"deleteFromLayout: an interrupted append is staged at " +
-        s"$path/_append_pending — run recoverAppend($path) first; an " +
-        "erasure interleaved with a pending publish would let the " +
-        "staged manifest overwrite the recounted one")
-    val ids = removedIds
-      .select(col(removedIds.columns.head).as(idCol)).distinct()
-    val store = spark.read.parquet(path)
-    val touched = store.join(broadcast(ids), Seq(idCol), "left_semi")
-      .select(col("_bucket").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.nonEmpty) {
-      val touchedRows = store
-        .filter(col("_bucket").isin(touched.map(Long.box): _*))
-      val survivors = touchedRows
-        .join(broadcast(ids), Seq(idCol), "left_anti")
-        .localCheckpoint() // rewrite + stats from ONE frame, pinned
-        // BEFORE the partition dirs it was read from are replaced
-      val statCols = readFrame(spark, s"$path/_stats").columns
-        .filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSeq
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-      // bloom geometry (if the store sketches): touched buckets
-      // RECOUNT their sketches from survivors — membership is not
-      // subtractable, exactly the min/max recount discipline
-      val (bloomCols, bloomBits, bloomHashes) =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")))
-          bloomGeometry(spark, path)
-        else (Nil, 1 << 13, 5)
-      val survivorBuckets = survivors
-        .select(col("_bucket").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val prevMode = spark.conf
-        .getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-        "dynamic")
-      try
-        survivors.repartition(col("_bucket"))
-          .write.mode("overwrite").partitionBy("_bucket").parquet(path)
-      finally prevMode match {
-        case Some(m) => spark.conf
-          .set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf
-          .unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      // a fully-erased bucket writes no files under dynamic overwrite
-      // — its old directory must go explicitly
-      touched.filterNot(survivorBuckets).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/_bucket=$b"),
-          true): Unit
-      }
-      val stats = readFrame(spark, s"$path/_stats")
-      val kept = stats
-        .filter(!col("bucket").isin(touched.map(Long.box): _*))
-      val refreshed = fileSkippingStats(survivors, "_bucket", statCols,
-        bloomCols, bloomBits, bloomHashes)
-      val merged = kept.unionByName(refreshed).localCheckpoint()
-      merged.write.mode("overwrite").parquet(s"$path/_stats")
-    }
-  }
-
-  /** Manifest-driven pruned read of a [[writeLayout]] store: apply the
-    * [[skippingVerdicts]] rule to the co-located stats, fetch the kept
-    * bucket ids to the driver (BOUNDED — one row per bucket, the
-    * landmark-fetch discipline, thousands not billions), and read ONLY
-    * those partition directories before applying the exact row
-    * predicate. Result rows are EQUAL to filtering the full store (the
-    * pruning rule is conservative — it never skips a bucket that
-    * holds a matching row); what pruning buys is the scan: untouched
-    * buckets' files are never opened, never listed into tasks. */
-  def prunedScan(spark: org.apache.spark.sql.SparkSession, path: String,
-      ranges: Seq[(String, Long, Long)],
-      points: Seq[(String, Long)] = Nil): DataFrame = {
-    require(ranges.nonEmpty || points.nonEmpty,
-      "prunedScan needs at least one range or point predicate")
-    val statsPath = new org.apache.hadoop.fs.Path(s"$path/_stats")
-    val fs = statsPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(statsPath),
-      s"prunedScan: no skipping manifest at $statsPath — the store " +
-        "must be written by writeLayout (or carry its layout); a " +
-        "plain parquet directory cannot be manifest-pruned")
-    val stats = readFrame(spark, s"$path/_stats")
-    ranges.foreach { case (c, _, _) =>
-      require(stats.columns.contains(s"min_$c"),
-        s"prunedScan: the manifest has no envelope for column '$c' " +
-          s"(stat columns: ${stats.columns.filter(_.startsWith("min_"))
-            .map(_.stripPrefix("min_")).mkString(", ")}) — only " +
-          "columns named at writeLayout can prune")
-    }
-    // point predicates prune by the per-bucket MEMBERSHIP sketch (the
-    // bloom column writeLayout records for `bloomCols`) — an equality
-    // probe on a high-cardinality non-clustered id is the commonest
-    // lakehouse read and min/max envelopes never help it; a negative
-    // probe is a PROOF of absence, so the skip stays lossless. A
-    // CLUSTERED stat column needs no sketch: its min/max envelope
-    // serves the equality losslessly (v outside [min, max] proves
-    // absence), so a point probe on it falls back to envelope-only
-    // pruning instead of being rejected. Only a column with NEITHER a
-    // bloom_<c> nor a min_<c>/max_<c> manifest column refuses.
-    points.foreach { case (c, _) =>
-      require(stats.columns.contains(s"bloom_$c") ||
-        stats.columns.contains(s"min_$c"),
-        s"prunedScan: the manifest has neither a membership sketch " +
-          s"nor a min/max envelope for column '$c' — name it in " +
-          "writeLayout's bloomCols (point lookups) or cols " +
-          "(clustering) to serve point predicates")
-    }
-    val sketchedPoints =
-      points.filter { case (c, _) => stats.columns.contains(s"bloom_$c") }
-    val bloomHashes: Int =
-      if (sketchedPoints.isEmpty) 5
-      else {
-        val metaPath = new org.apache.hadoop.fs.Path(s"$path/_meta")
-        require(fs.exists(metaPath),
-          s"prunedScan: point predicates need the store identity at " +
-            s"$metaPath (writeLayout records the bloom geometry there)")
-        bloomGeometry(spark, path)._3
-      }
-    val verdicts0 =
-      if (ranges.nonEmpty) skippingVerdicts(stats, ranges)
-      else stats.withColumn("skipped", lit(0L))
-    val verdicts = points.foldLeft(verdicts0) { case (d, (c, v)) =>
-      val bloomMiss =
-        if (stats.columns.contains(s"bloom_$c"))
-          !graft.functions.GraftFunctions.bloom_might_contain(
-            col(s"bloom_$c"), lit(v), bloomHashes)
-        else lit(false)
-      val envMiss =
-        if (stats.columns.contains(s"min_$c"))
-          col(s"max_$c") < lit(v) || col(s"min_$c") > lit(v)
-        else lit(false)
-      d.withColumn("skipped",
-        when(col("skipped") === 1L, lit(1L))
-          .when(bloomMiss || envMiss, lit(1L))
-          .otherwise(lit(0L)))
-    }
-    // existence-filter the kept list (bounded: one probe per kept
-    // bucket): a manifest row whose directory is gone is
-    // deleteFromLayout's crash window (emptied dirs delete before the
-    // manifest rewrites) — the bucket holds no rows by construction,
-    // so skipping it is EXACT, and the scan never hard-fails on a
-    // path the manifest still names
-    val kept = verdicts
-      .filter(col("skipped") === 0L)
-      .select(col("bucket")).collect().map(_.getLong(0))
-      .filter(b => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$path/_bucket=$b")))
-    val scan =
-      if (kept.nonEmpty)
-        spark.read.option("basePath", path)
-          .parquet(kept.map(b => s"$path/_bucket=$b"): _*)
-      else {
-        // zero kept buckets: read SOME existing bucket dir just for
-        // the schema (underscore dirs hide _stats/_meta from a plain
-        // read, so a fully-pruned store would otherwise die with
-        // UNABLE_TO_INFER_SCHEMA); a store with NO bucket dirs at all
-        // (every row erased) has no recoverable row schema — refuse
-        // with the recovery path instead of an inference crash
-        val any = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-          .map(_.getPath).find(_.getName.startsWith("_bucket="))
-        require(any.nonEmpty,
-          s"prunedScan: the store at $path has no bucket directories " +
-            "left (every row erased) — its row schema is gone with " +
-            "them; rebuild via writeLayout before serving reads " +
-            "(the streaming twin does exactly this)")
-        spark.read.option("basePath", path)
-          .parquet(any.get.toString).limit(0)
-      }
-    val ranged = ranges.foldLeft(scan) { case (d, (c, lo, hi)) =>
-      d.filter(col(c).between(lo, hi))
-    }
-    points.foldLeft(ranged) { case (d, (c, v)) =>
-      d.filter(col(c) === lit(v))
-    }
-  }
-
-  /** Mark which buckets a conjunctive box predicate
-    * `AND_i (lo_i <= col_i <= hi_i)` can SKIP from stats alone: a
-    * bucket is skippable iff ANY queried column's envelope misses its
-    * range (`max < lo` or `min > hi`) — the parquet row-group pruning
-    * rule. Returns the stats plus a 0/1 `skipped` verdict; the
-    * selectivity story is `sum(skipped·n_rows) / sum(n_rows)`. */
-  def skippingVerdicts(stats: DataFrame,
-      ranges: Seq[(String, Long, Long)]): DataFrame = {
-    require(ranges.nonEmpty, "skippingVerdicts needs at least one range")
-    val miss = ranges.map { case (c, lo, hi) =>
-      col(s"max_$c") < lit(lo) || col(s"min_$c") > lit(hi)
-    }.reduce(_ || _)
-    stats.withColumn("skipped", when(miss, lit(1L)).otherwise(lit(0L)))
-  }
-
-  // ─────────────── versioned manifests (FrameVersions snapshots) ─────────
-  //
-  // The durability milestone on top of the live store: a committed
-  // chain of immutable snapshots, each a PER-FILE manifest (file list +
-  // per-file envelopes/sketches) committed as frame `manifest` of the
-  // [[FrameVersions]] store at `<path>/_versions` — its commit marker
-  // create is the pointer swap, and its claim on `n + 1` refuses a
-  // publisher whose base snapshot is no longer the latest.
-  // Once a store is versioned:
-  //
-  //  * data files are IMMUTABLE until vacuum — append only ADDS files,
-  //    erasure REWRITES touched buckets into new files and leaves the
-  //    old ones for pinned readers (physical purge = `vacuumLayout`,
-  //    the GDPR caveat a caller must know);
-  //  * a reader pins a snapshot once and reads THAT manifest's files
-  //    for as long as it likes — maintenance can publish v+1
-  //    underneath it freely, so versioned stores need no
-  //    hold-localCheckpoint-across-maintenance reader discipline
-  //    (COVERAGE.md contract);
-  //  * the PLAIN maintenance ops refuse (they mutate in place), and
-  //    the plain directory read is no longer meaningful after the
-  //    first versioned erasure (old and new files coexist) — all reads
-  //    go through [[readLayoutVersion]] / [[prunedScanVersion]].
-  //
-  // New data files land first (invisible — nothing references them)
-  // from a stage behind an exclusive `_STAGE_LOCK`, then the manifest
-  // commits. A crash anywhere before the marker leaves the current
-  // snapshot fully intact; `recoverLayoutVersions` sweeps the
-  // uncommitted residue and `vacuumLayout` sweeps orphaned data files.
-
-  /** Every committed snapshot of the store at `path`, oldest first.
-    * A store still in the retired `_versions/v<n>/_COMMITTED` layout is
-    * refused. */
-  def snapshots(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[FrameVersions.Version] = {
-    val all = FrameVersions.versions(spark, s"$path/_versions")
-    require(all.nonEmpty || Option(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .globStatus(new org.apache.hadoop.fs.Path(
-        s"$path/_versions/v*/_COMMITTED"))).forall(_.isEmpty),
-      s"the store at $path keeps its snapshots in the retired " +
-        "_versions/v<n>/_COMMITTED layout; snapshots now commit " +
-        s"through FrameVersions at $path/_versions — rebuild it with " +
-        "writeLayout + snapshotLayout")
-    all
-  }
-
-  /** Largest committed snapshot version at `path` (0 = the store is
-    * not versioned). One listing of the commit markers. */
-  def currentLayoutVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long =
-    snapshots(spark, path).lastOption.fold(0L)(_.n)
-
-  // Committed snapshot `version` (-1 = current). Refuses a version
-  // that was never committed or has been vacuumed (a pinned reader of
-  // a vacuumed snapshot must fail loudly, not read a half-swept file
-  // set).
-  private def snapshot(spark: org.apache.spark.sql.SparkSession,
-      path: String, version: Long = -1L): FrameVersions.Version = {
-    val all = snapshots(spark, path)
-    require(all.nonEmpty,
-      s"the store at $path is not versioned — snapshotLayout first")
-    val v = if (version <= 0) all.lastOption else all.find(_.n == version)
-    require(v.nonEmpty,
-      s"no committed snapshot v$version at $path — it was never " +
-        s"published, or vacuumLayout dropped it; current = ${all.last.n}")
-    v.get
-  }
-
-  /** The committed per-file manifest of snapshot `version`: one row
-    * per data file — (`bucket`, `file` (store-relative path),
-    * `n_rows`, `min_<c>`/`max_<c>` per clustered column, `bloom_<c>`
-    * per sketched column). */
-  def layoutVersionManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, version: Long): DataFrame = {
-    require(version >= 1, s"snapshot versions start at 1 (got $version)")
-    snapshot(spark, path, version).read("manifest")
-  }
-
-  // Per-FILE skipping stats — the versioned twin of
-  // [[fileSkippingStats]], keyed by (bucket, store-relative file path)
-  // so a snapshot lists exactly the files it covers and pruning gets
-  // file granularity (strictly finer than the live manifest's
-  // bucket granularity).
-  private def perFileStats(storeRows: DataFrame, cols: Seq[String],
-      bloomCols: Seq[String], bloomBits: Int, bloomHashes: Int)
-      : DataFrame =
-    storeRows
-      .withColumn("file", regexp_extract(input_file_name(),
-        "(_bucket=[0-9]+/[^/]+)$", 1))
-      .groupBy(col("_bucket").cast("long").as("bucket"), col("file"))
-      .agg(count(lit(1)).as("n_rows"),
-        (cols.flatMap(c => Seq(
-          min(col(c)).cast("long").as(s"min_$c"),
-          max(col(c)).cast("long").as(s"max_$c"))) ++
-          bloomCols.map(c => graft.functions.GraftFunctions.bloom_long(
-            col(c).cast("long"), bloomBits, bloomHashes)
-            .as(s"bloom_$c"))): _*)
-
-  // Shared bloom-geometry fetch from the store identity.
-  private def bloomGeometry(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Seq[String], Int, Int) = {
-    val m = readFrame(spark, s"$path/_meta").head()
-    if (m.schema.fieldNames.contains("bloom_cols"))
-      (m.getAs[scala.collection.Seq[String]]("bloom_cols").toSeq,
-        m.getAs[Long]("bloom_bits").toInt,
-        m.getAs[Long]("bloom_hashes").toInt)
-    else (Nil, 1 << 13, 5)
-  }
-
-  /** Turn a [[writeLayout]] store into a VERSIONED store: publish
-    * snapshot v1 covering exactly the files on disk. One store scan
-    * (the per-file stats derive from a re-read, the writeLayout
-    * can-never-disagree contract); after this call all maintenance
-    * goes through the `*Versioned` ops and all reads through
-    * [[readLayoutVersion]] / [[prunedScanVersion]]. */
-  def snapshotLayout(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_meta")),
-      s"snapshotLayout: no layout identity at $path/_meta — the " +
-        "store must be written by writeLayout first")
-    require(!fs.exists(
-      new org.apache.hadoop.fs.Path(s"$path/_append_pending")),
-      s"snapshotLayout: an interrupted plain append is staged at " +
-        s"$path/_append_pending — run recoverAppend($path) first so " +
-        "v1 covers a settled file set")
-    require(currentLayoutVersion(spark, path) == 0L,
-      s"snapshotLayout: the store at $path is already versioned — " +
-        "maintenance publishes snapshots itself; re-snapshotting " +
-        "would adopt orphaned (superseded or crash-staged) files")
-    val m = readFrame(spark, s"$path/_meta").head()
-    val cols = m.getAs[scala.collection.Seq[String]]("cols").toSeq
-    val (bloomCols, bloomBits, bloomHashes) = bloomGeometry(spark, path)
-    val manifest = perFileStats(spark.read.parquet(path), cols,
-      bloomCols, bloomBits, bloomHashes).localCheckpoint()
-    FrameVersions.latest(spark, s"$path/_versions")
-      .commit(Seq("manifest" -> manifest))
-  }
-
-  /** Full read of snapshot `version` (default: current) — the pinned
-    * view: exactly the manifest's files, by explicit path list, so
-    * later maintenance (which only ADDS files until vacuum) can never
-    * change or break this read. */
-  def readLayoutVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String, version: Long = -1L): DataFrame = {
-    val v = snapshot(spark, path, version)
-    val files = v.read("manifest")
-      .select("file").collect().map(_.getString(0))
-    if (files.isEmpty) emptyVersionScan(spark, path, v.n)
-    else spark.read.option("basePath", path)
-      .parquet(files.map(f => s"$path/$f").toIndexedSeq: _*)
-  }
-
-  // Zero rows WITH the store's row schema, for an empty snapshot (all
-  // rows erased): borrow any file from the nearest committed version
-  // that still holds one — files are immutable until vacuum, so a
-  // non-empty ancestor's file is always readable. Only a chain that
-  // is empty ALL the way down (or vacuumed bare) refuses.
-  private def emptyVersionScan(spark: org.apache.spark.sql.SparkSession,
-      path: String, from: Long): DataFrame = {
-    val donor = snapshots(spark, path).filter(_.n <= from).reverseIterator
-      .map(_.read("manifest").select("file").head(1))
-      .collectFirst { case arr if arr.nonEmpty => arr.head.getString(0) }
-    require(donor.nonEmpty,
-      s"snapshot v$from of $path is empty and so is every committed " +
-        "ancestor — the row schema is gone; rebuild via writeLayout " +
-        "+ snapshotLayout")
-    spark.read.option("basePath", path)
-      .parquet(s"$path/${donor.get}").limit(0)
-  }
-
-  /** [[prunedScan]] against a PINNED snapshot: the same conservative
-    * verdict rule (range envelopes, point sketches/envelopes) applied
-    * to the per-file manifest — file granularity, strictly finer than
-    * the live manifest's bucket granularity — then an explicit-path
-    * read of only the kept files. No existence-filter is needed:
-    * committed manifests reference immutable files (the vacuum
-    * contract is to never drop a still-pinned version). */
-  def prunedScanVersion(spark: org.apache.spark.sql.SparkSession,
-      path: String, ranges: Seq[(String, Long, Long)],
-      points: Seq[(String, Long)] = Nil, version: Long = -1L)
-      : DataFrame = {
-    require(ranges.nonEmpty || points.nonEmpty,
-      "prunedScanVersion needs at least one range or point predicate")
-    val v = snapshot(spark, path, version)
-    val manifest = v.read("manifest")
-    ranges.foreach { case (c, _, _) =>
-      require(manifest.columns.contains(s"min_$c"),
-        s"prunedScanVersion: the manifest has no envelope for column " +
-          s"'$c' — only columns named at writeLayout can prune")
-    }
-    points.foreach { case (c, _) =>
-      require(manifest.columns.contains(s"bloom_$c") ||
-        manifest.columns.contains(s"min_$c"),
-        s"prunedScanVersion: the manifest has neither a membership " +
-          s"sketch nor a min/max envelope for column '$c' — name it " +
-          "in writeLayout's bloomCols (point lookups) or cols " +
-          "(clustering) to serve point predicates")
-    }
-    val (_, _, bloomHashes) =
-      if (points.exists { case (c, _) =>
-        manifest.columns.contains(s"bloom_$c") })
-        bloomGeometry(spark, path)
-      else (Nil, 0, 5)
-    val verdicts0 =
-      if (ranges.nonEmpty) skippingVerdicts(manifest, ranges)
-      else manifest.withColumn("skipped", lit(0L))
-    val verdicts = points.foldLeft(verdicts0) { case (d, (c, pv)) =>
-      val bloomMiss =
-        if (manifest.columns.contains(s"bloom_$c"))
-          !graft.functions.GraftFunctions.bloom_might_contain(
-            col(s"bloom_$c"), lit(pv), bloomHashes)
-        else lit(false)
-      val envMiss =
-        if (manifest.columns.contains(s"min_$c"))
-          col(s"max_$c") < lit(pv) || col(s"min_$c") > lit(pv)
-        else lit(false)
-      d.withColumn("skipped",
-        when(col("skipped") === 1L, lit(1L))
-          .when(bloomMiss || envMiss, lit(1L))
-          .otherwise(lit(0L)))
-    }
-    // kept FILES to the driver — manifest-sized (one row per file),
-    // the same bounded planning fetch every table format pays
-    val kept = verdicts.filter(col("skipped") === 0L)
-      .select("file").collect().map(_.getString(0))
-    val scan =
-      if (kept.nonEmpty)
-        spark.read.option("basePath", path)
-          .parquet(kept.map(f => s"$path/$f").toIndexedSeq: _*)
-      else {
-        val any = manifest.select("file").head(1)
-        if (any.isEmpty) emptyVersionScan(spark, path, v.n)
-        else spark.read.option("basePath", path)
-          .parquet(s"$path/${any.head.getString(0)}").limit(0)
-      }
-    val ranged = ranges.foldLeft(scan) { case (d, (c, lo, hi)) =>
-      d.filter(col(c).between(lo, hi))
-    }
-    points.foldLeft(ranged) { case (d, (c, pv)) =>
-      d.filter(col(c) === lit(pv))
-    }
-  }
-
-  /** Versioned APPEND: lay the delta with the exact plain-append
-    * arithmetic ([[layDeltaWithIdentity]] — one definition of bucket
-    * assignment), land its files into the live bucket directories
-    * under their final unique names, and commit v+1 = v's manifest
-    * plus the new files' per-file rows, tagged `tag`. Existing files
-    * are never touched, so every pinned reader is unaffected; nothing
-    * references the new files until the commit marker lands, so a
-    * crash anywhere leaves v fully intact (the staged/landed delta
-    * files become vacuum-sweepable orphans and the append re-runs
-    * after [[recoverLayoutVersions]]). Returns the new version
-    * number. */
-  def appendToLayoutVersioned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      rows: DataFrame, cols: Seq[String], bits: Int, nBuckets: Int,
-      curve: String = "z", tag: String = "-"): Long = {
+      path: String, removedIds: DataFrame, idCol: String): Long = {
     val v = snapshot(spark, path)
-    val prev = v.read("manifest").localCheckpoint()
-    cols.foreach(c => require(prev.columns.contains(s"min_$c"),
-      s"appendToLayoutVersioned: the manifest has no envelope for " +
-        s"column '$c' — the append must name exactly the columns the " +
-        "store was written with"))
-    val (laidDelta, bloomCols, bloomBits, bloomHashes) =
-      layDeltaWithIdentity(spark, path, rows, cols, bits, nBuckets,
-        curve, "appendToLayoutVersioned")
-    if (laidDelta.isEmpty) return v.n // empty delta: nothing to publish
-    val stage = acquireStage(spark, path, v.n, "appendToLayoutVersioned")
-    laidDelta.repartition(col("_bucket"))
-      .write.partitionBy("_bucket").parquet(s"$stage/data")
-    // per-file rows from the STAGED files: the staged relative path
-    // (_bucket=<b>/<name>) IS the final relative path — names are
-    // task-UUID unique, only the directory changes at landing
-    val deltaRows = perFileStats(spark.read.parquet(s"$stage/data"),
-      cols, bloomCols, bloomBits, bloomHashes).localCheckpoint()
-    publishStaged(spark, path, stage, v,
-      prev.unionByName(deltaRows), tag)
-  }
-
-  // The stage of the maintenance op building on snapshot `n`, taken
-  // by an exclusive `_STAGE_LOCK` create: of two ops racing from the
-  // same snapshot the second fails here, before it writes anything.
-  private def acquireStage(spark: org.apache.spark.sql.SparkSession,
-      path: String, n: Long, op: String): String = {
-    val stage = s"$path/_versions/_stage_v${n + 1}"
-    require(new org.apache.hadoop.fs.Path(stage)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .createNewFile(new org.apache.hadoop.fs.Path(s"$stage/_STAGE_LOCK")),
-      s"$op: another versioned maintenance op holds the stage at " +
-        s"$stage (or a crashed one does) — single-writer discipline; " +
-        s"run recoverLayoutVersions($path) if no writer is live")
-    stage
-  }
-
-  // Land the stage's data files, commit `manifest` on top of `v`, then
-  // clear the stage. Returns the committed version.
-  private def publishStaged(spark: org.apache.spark.sql.SparkSession,
-      path: String, stage: String, v: FrameVersions.Version,
-      manifest: DataFrame, tag: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    landStagedFiles(fs, path, s"$stage/data")
-    val n = v.commit(Seq("manifest" -> manifest), tag)
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true): Unit
-    n
-  }
-
-  // Move every staged data file into its live bucket directory,
-  // skip-if-landed (idempotent — the completeAppend discipline).
-  private def landStagedFiles(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, dataRoot: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dataRoot)
-    if (!fs.exists(root)) return
-    fs.listStatus(root)
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("_bucket="))
-      .foreach { bd =>
-        val target =
-          new org.apache.hadoop.fs.Path(path, bd.getPath.getName)
-        if (!fs.exists(target)) fs.mkdirs(target): Unit
-        fs.listStatus(bd.getPath)
-          .filter(f => f.isFile &&
-            !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            val dst = new org.apache.hadoop.fs.Path(target,
-              f.getPath.getName)
-            if (!fs.exists(dst))
-              require(fs.rename(f.getPath, dst),
-                s"versioned publish rename ${f.getPath} -> $dst " +
-                  "failed (stage intact — re-run the op)")
-            else fs.delete(f.getPath, false): Unit
-          }
-      }
-  }
-
-  /** Versioned ERASURE: rewrite the touched buckets' SURVIVORS into
-    * new files and commit v+1 = v's manifest minus the touched
-    * buckets' old rows plus the new files. The old files stay on disk
-    * for pinned readers — the erased rows are logically gone from v+1
-    * on, but PHYSICALLY purged only by [[vacuumLayout]] once no kept
-    * snapshot references them (the right-to-erasure caller runs
-    * vacuum after the pinned horizon passes). A no-op (no touched
-    * bucket) publishes nothing and returns the current version.
-    * Returns the serving version number. */
-  def deleteFromLayoutVersioned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      removedIds: DataFrame, idCol: String): Long = {
-    val v = snapshot(spark, path)
-    val prev = v.read("manifest").localCheckpoint()
     val ids = removedIds
       .select(col(removedIds.columns.head).as(idCol)).distinct()
     // the MANIFEST-scoped live view, never the directory listing —
-    // dirs may hold superseded files and crash-staged orphans
+    // dirs may hold superseded files and crash orphans
     val live = readLayoutVersion(spark, path, v.n)
     val touched = live.join(broadcast(ids), Seq(idCol), "left_semi")
       .select(col("_bucket").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return v.n
-    val survivors = live
-      .filter(col("_bucket").isin(touched.map(Long.box): _*))
-      .join(broadcast(ids), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    val m = readFrame(spark, s"$path/_meta").head()
-    val cols = m.getAs[scala.collection.Seq[String]]("cols").toSeq
-    val (bloomCols, bloomBits, bloomHashes) = bloomGeometry(spark, path)
-    val stage = acquireStage(spark, path, v.n, "deleteFromLayoutVersioned")
-    // touched buckets fully erased → no survivor files to stage (a
-    // zero-file parquet write cannot even be re-read for stats); the
-    // new manifest simply drops the touched rows — the anchors live
-    // in _meta, so even a fully-emptied versioned store re-grows
-    // correctly on a later append
-    val newRows =
-      if (survivors.isEmpty) prev.filter(lit(false))
-      else {
-        survivors.repartition(col("_bucket"))
-          .write.partitionBy("_bucket").parquet(s"$stage/data")
-        perFileStats(spark.read.parquet(s"$stage/data"),
-          cols, bloomCols, bloomBits, bloomHashes).localCheckpoint()
-      }
-    publishStaged(spark, path, stage, v,
-      prev.filter(!col("bucket").isin(touched.map(Long.box): _*))
-        .unionByName(newRows), "-")
+      .collect().map(_.getLong(0)).toSeq
+    if (touched.isEmpty) v.n
+    else publish(spark, path, v,
+      v.read("manifest").filter(!col("bucket").isin(touched: _*)),
+      live.filter(col("_bucket").isin(touched: _*))
+        .join(broadcast(ids), Seq(idCol), "left_anti").localCheckpoint(),
+      "-")
   }
 
-  /** Drop uncommitted residue from crashed versioned maintenance: a
-    * claimed snapshot that never reached its commit marker
-    * ([[FrameVersions.recover]] — nothing ever referenced it) and any
-    * maintenance stage (either its op crashed pre-commit, or it
-    * committed and only the stage cleanup was lost — landed files are
-    * referenced by the committed manifest, staged leftovers are
-    * duplicates either way). Data files the dropped residue had
-    * already landed become orphans for [[vacuumLayout]]. Safe on a
-    * clean store (no-op); single-writer: never run concurrently with
-    * a live maintenance op. */
-  def recoverLayoutVersions(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    FrameVersions.recover(spark, s"$path/_versions")
+  // Commit snapshot v+1 = `kept` (rows of v's manifest) plus the
+  // per-file rows of `laid`'s new files, tagged `tag`. The claim of
+  // v+1 is the one lock: the files stage under the claimed version
+  // (`_versions/_v<n+1>/data`), move into their live bucket
+  // directories under their task-unique names, and only then does the
+  // manifest write and the marker commit. Nothing references a file
+  // before that marker, so a crash anywhere leaves v fully intact:
+  // [[recoverLayoutVersions]] drops the claimed version with whatever
+  // it still stages, and the files it had landed are orphans for
+  // [[vacuumLayout]].
+  private def publish(spark: org.apache.spark.sql.SparkSession,
+      path: String, v: FrameVersions.Version, kept: DataFrame,
+      laid: DataFrame, tag: String): Long = {
+    val (cols, bloomCols, bloomBits, bloomHashes) = geometry(spark, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        s"$path/_versions/_stage_v*"))).toSeq.flatten
-      .foreach(d => fs.delete(d.getPath, true): Unit)
+    v.commitWith(tag) { root =>
+      val stage = new org.apache.hadoop.fs.Path(s"$root/data")
+      // a fully erased touched set writes no files: the manifest just
+      // drops the touched rows
+      val manifest = if (laid.isEmpty) kept else {
+        laid.repartition(col("_bucket"))
+          .write.partitionBy("_bucket").parquet(stage.toString)
+        // the staged relative path (_bucket=<b>/<name>) IS the final
+        // one — only the directory changes at landing
+        val fresh = perFileStats(spark.read.parquet(stage.toString),
+          cols, bloomCols, bloomBits, bloomHashes).localCheckpoint()
+        fs.listStatus(stage).filter(_.getPath.getName
+            .startsWith("_bucket=")).foreach { bd =>
+          val target = new org.apache.hadoop.fs.Path(path,
+            bd.getPath.getName)
+          fs.mkdirs(target): Unit
+          fs.listStatus(bd.getPath).map(_.getPath)
+            .filterNot(f => f.getName.startsWith("_") ||
+              f.getName.startsWith("."))
+            .foreach(f => require(fs.rename(f,
+              new org.apache.hadoop.fs.Path(target, f.getName)),
+              s"layout publish: rename $f into $target failed"))
+        }
+        fs.delete(stage, true): Unit
+        kept.unionByName(fresh)
+      }
+      manifest.write.parquet(s"$root/manifest")
+    }
   }
+
+  /** Drop uncommitted residue from crashed maintenance: a claimed
+    * snapshot that never reached its commit marker, with whatever it
+    * still stages ([[FrameVersions.recover]] — nothing ever referenced
+    * it). Data files it had already landed become orphans for
+    * [[vacuumLayout]]. Safe on a clean store (no-op); single-writer:
+    * never run concurrently with a live maintenance op. */
+  def recoverLayoutVersions(spark: org.apache.spark.sql.SparkSession,
+      path: String): Unit =
+    FrameVersions.recover(spark, s"$path/_versions")
 
   /** Physically purge what no KEPT snapshot references: keep the
     * latest `keepLast` committed versions ([[FrameVersions.vacuum]]
-    * drops the older manifests), sweep uncommitted residue
-    * ([[recoverLayoutVersions]]), and delete every data file no kept
-    * manifest lists — superseded pre-erasure files (the actual
-    * right-to-erasure purge) and crash orphans alike. Empty bucket
-    * directories leave with their last file. The referenced-file set
-    * is a manifest-sized driver fetch (one path per live file — the
-    * same planning-scale metadata every table format holds). Returns
-    * a one-row report (files_deleted, versions_dropped,
-    * current_version). Contract: never vacuum below a version a
-    * reader still pins. */
+    * drops the older manifests and uncommitted residue), and delete
+    * every data file no kept manifest lists — superseded pre-erasure
+    * files (the actual right-to-erasure purge) and crash orphans
+    * alike. Empty bucket directories leave with their last file. The
+    * referenced-file set is a manifest-sized driver fetch (one path
+    * per live file — the same planning-scale metadata every table
+    * format holds). Returns a one-row report (files_deleted,
+    * versions_dropped, current_version). Contract: never vacuum below
+    * a version a reader still pins. */
   def vacuumLayout(spark: org.apache.spark.sql.SparkSession,
       path: String, keepLast: Int = 1): DataFrame = {
     require(keepLast >= 1, "vacuumLayout must keep at least the " +
       "current version (keepLast >= 1)")
     val cur = snapshot(spark, path).n
-    recoverLayoutVersions(spark, path)
     val versionsDropped =
       FrameVersions.vacuum(spark, s"$path/_versions", keepLast)
     val referenced: Set[String] = snapshots(spark, path)

@@ -922,14 +922,18 @@ object StreamingIngest {
     *    started marker is deleted;
     *  - a started marker already present means an earlier attempt died
     *    after any subset of the body's writes. The body is told so
-    *    (`midCrash`): a twin whose maintain step reads a store it then
-    *    overwrites in place takes its cold-rebuild branch; a twin whose
+    *    (`midCrash`). The twins whose maintain step reads a store they
+    *    then overwrite in place take a cold-rebuild branch: the
+    *    intervals twins, [[streamingDupClustersCdc]],
+    *    [[streamingSccCdc]] and [[streamingCommunitiesCdc]]; the ANN
+    *    twins purge the batch's partial append first. A twin whose
     *    fold is idempotent given the op stores re-runs as on a first
     *    delivery. The twins whose store commits through
-    *    [[graft.operators.FrameVersions]] never ask: their commit's
-    *    batch tag ([[Trigger.committed]]) says whether the batch
-    *    applied, and the latest commit otherwise still holds the
-    *    pre-batch state.
+    *    [[graft.operators.FrameVersions]] (the layout store included)
+    *    only drop the crashed attempt's uncommitted version: their
+    *    commit's batch tag ([[Trigger.committed]]) says whether the
+    *    batch applied, and the latest commit otherwise still holds
+    *    the pre-batch state.
     *
     * Op-store writes go through [[Trigger.record]], so a redelivered
     * batch replaces its own rows. */
@@ -1938,29 +1942,40 @@ object StreamingIngest {
     * layout family joins the CDC grid: `op = "add"` rows (carrying
     * the clustered value columns) land via
     * [[graft.operators.Layout.appendToLayout]] under the store's
-    * ORIGINAL anchors, `op = "del"` ids leave via
+    * ORIGINAL anchors, committed with the batch id as its tag;
+    * `op = "del"` ids leave first via
     * [[graft.operators.Layout.deleteFromLayout]]'s touched-bucket
-    * rewrite, and a re-sent id REPLACES its row (deletes first, adds
-    * win — the grid fold; same-batch del beats the add).
+    * rewrite, with the old rows of re-sent ids (a re-sent id REPLACES
+    * its row; a same-batch del beats the add — the grid fold). A store
+    * with no committed snapshot is built from the op-store fold
+    * ([[latestWinsFold]]) by [[graft.operators.Layout.writeLayout]]
+    * instead; `bloomCols` ride that build, and later appends sketch
+    * under the store's own geometry.
     *
-    * Contract: after every completed trigger the store's ROW SET
-    * equals the op-store fold's live rows ([[latestWinsFold]]), and
-    * [[graft.operators.Layout.prunedScan]] over it is lossless. Bucket
-    * ASSIGNMENT is anchor-history-dependent by design (the
-    * [[graft.operators.Layout.appendToLayout]] anchor-stability
-    * contract — appends never re-layout old files), so the store is
-    * content-equal, not file-equal, to a fresh build; a cold start or
-    * mid-crash redelivery re-anchors via a full
-    * [[graft.operators.Layout.writeLayout]] rebuild from the fold
-    * (re-clustering is always legal — it preserves row content and
-    * losslessness). The append step is NOT idempotent, which is why
-    * [[markerGuarded]]'s mid-crash redelivery takes that rebuild.
+    * Contract: every trigger leaves COMMITTED snapshots whose latest
+    * row set equals the fold's live rows, and
+    * [[graft.operators.Layout.prunedScan]] over it is lossless; a
+    * reader that pinned an earlier snapshot keeps reading it unchanged
+    * while the stream publishes on top. Bucket ASSIGNMENT is
+    * anchor-history-dependent by design (appends never re-layout old
+    * files), so the store is content-equal, not file-equal, to a
+    * fresh build.
     *
-    * Scale notes (100 TB): per trigger the delete probe scans the
-    * store once (broadcast semi-join on change ids) and rewrites
-    * only touched buckets; the append writes delta-sized; the
-    * manifest work is bucket-count-sized. The cold rebuild is the
-    * only store-sized write. */
+    * Crash recovery is mechanical, not a rebuild: a mid-crash
+    * redelivery drops the uncommitted snapshot
+    * ([[graft.operators.Layout.recoverLayoutVersions]]); a batch whose
+    * tagged append committed is skipped ([[Trigger.committed]]), and
+    * any other re-runs both ops, which are idempotent at the content
+    * level — a delete whose ids are already gone publishes nothing,
+    * and a delete-then-append of the same rows reproduces the same
+    * live content even when the crash fell between the two commits
+    * (or after a cold build's commit). Physical purge is
+    * `vacuumLayout` on the caller's retention schedule.
+    *
+    * Scale notes (100 TB): per trigger = one manifest-scoped semi-join
+    * probe + touched-bucket survivor rewrite + a delta-sized append,
+    * all file-additive. The cold build is the only store-sized
+    * write. */
   def streamingLayout(events: DataFrame, addsDir: String,
       delsDir: String, storeDir: String, checkpointDir: String,
       cols: Seq[String], bits: Int, nBuckets: Int,
@@ -1968,95 +1983,24 @@ object StreamingIngest {
       bloomCols: Seq[String] = Nil): StreamingQuery =
     markerGuarded(events, checkpointDir, addsDir, "streamingLayout",
         Seq(addsDir, delsDir))(withOp(opCol, idCol +: cols)) { (b, t) =>
+      if (t.midCrash) Layout.recoverLayoutVersions(t.spark, storeDir)
       val (adds, dels) = idOps(b, idCol, cols)
       val hasAdds = t.record(adds, addsDir)
       t.record(dels, delsDir): Unit
-      // re-anchor from `rows` alone. The old store clears
-      // UNCONDITIONALLY — if `rows` is empty (e.g. the crashed batch
-      // took everything down), leaving the stale files would serve
-      // erased rows forever, since later triggers' change sets never
-      // name them again. bloomCols ride every (re)build so a sketched
-      // store never silently loses its point-lookup column.
-      def rebuild(rows: DataFrame): Unit = {
-        t.fs.delete(new Path(storeDir), true): Unit
-        if (!rows.isEmpty)
-          Layout.writeLayout(Layout.zOrderLayout(rows, cols, bits,
+      val versions = s"$storeDir/_versions"
+      if (FrameVersions.current(t.spark, versions) == 0L) {
+        val live = latestWinsFold(t, addsDir, Some(delsDir), idCol, cols,
+          adds.limit(0)).localCheckpoint()
+        if (!live.isEmpty)
+          Layout.writeLayout(Layout.zOrderLayout(live, cols, bits,
             nBuckets), storeDir, cols, "z", bits, nBuckets, bloomCols)
-      }
-      if (t.built(s"$storeDir/_stats") && !t.midCrash) {
-        // deletes first (takedowns + old rows of re-adds), then the
-        // delta appends under the original anchors
+      } else if (!t.committed(versions)) {
         Layout.deleteFromLayout(t.spark, storeDir,
-          dels.unionByName(adds.select(col(idCol))).distinct(), idCol)
-        // a batch that emptied the whole store leaves no anchors to
-        // append under — re-anchor from the delta
-        if (hasAdds) {
-          if (Layout.readFrame(t.spark, s"$storeDir/_stats").isEmpty)
-            rebuild(adds)
-          else Layout.appendToLayout(t.spark, storeDir, adds, cols, bits,
-            nBuckets)
-        }
-      } else rebuild(latestWinsFold(t, addsDir, Some(delsDir), idCol,
-        cols, adds.limit(0)).localCheckpoint())
-    }
-
-  /** Streaming CDC maintenance of a VERSIONED layout store — the
-    * [[streamingLayout]] contract upgraded to snapshot isolation:
-    * per trigger, takedowns and re-add ids leave via
-    * [[graft.operators.Layout.deleteFromLayoutVersioned]] (old files
-    * stay for pinned readers), adds land via
-    * [[graft.operators.Layout.appendToLayoutVersioned]] committed with
-    * the batch id as its tag, and every trigger leaves a COMMITTED
-    * snapshot —
-    * a reader that pinned any earlier version keeps reading it
-    * unchanged while the stream publishes on top (the contract the
-    * plain twin structurally cannot offer: its erasure rewrites in
-    * place).
-    *
-    * Crash recovery is MECHANICAL, not a rebuild (contrast
-    * [[streamingLayout]]'s cold-rebuild path): on a mid-crash
-    * redelivery the trigger runs
-    * [[graft.operators.Layout.recoverLayoutVersions]] (an uncommitted
-    * claim and stage roll back — the pointer never moved) and simply
-    * re-runs both ops, which are idempotent at the content level: a
-    * delete whose ids are already gone publishes nothing, and a
-    * delete-then-append of the same rows reproduces the same live
-    * content even when the crash fell between the two commits.
-    * [[markerGuarded]]'s final marker still gates reordering (a
-    * redelivered takedown must not erase a LATER trigger's re-add).
-    * The store never needs re-anchoring: the normalization anchors
-    * live in the immutable `_meta`, so even a trigger that empties
-    * the store leaves a correctly-appendable (empty) snapshot.
-    *
-    * Caller seeds the store once: `writeLayout` + `snapshotLayout`
-    * (the versioned ops require a committed v1 — anchors and the
-    * snapshot chain both root there).
-    *
-    * Scale notes (100 TB): per trigger = one manifest-scoped
-    * semi-join probe + touched-bucket survivor rewrite + a
-    * delta-sized append, all file-additive; `vacuumLayout` runs on
-    * the caller's retention schedule, outside the hot path. */
-  def streamingLayoutVersioned(events: DataFrame, addsDir: String,
-      delsDir: String, storeDir: String, checkpointDir: String,
-      cols: Seq[String], bits: Int, nBuckets: Int,
-      idCol: String = "id", opCol: String = "op"): StreamingQuery =
-    markerGuarded(events, checkpointDir, addsDir,
-        "streamingLayoutVersioned", Seq(addsDir, delsDir))(
-        withOp(opCol, idCol +: cols)) { (b, t) =>
-      // drop uncommitted residue (the pointer never moved past a
-      // commit) and re-run — both ops below are content-idempotent
-      if (t.midCrash) Layout.recoverLayoutVersions(t.spark, storeDir): Unit
-      val (adds, dels) = idOps(b, idCol, cols)
-      val hasAdds = t.record(adds, addsDir)
-      t.record(dels, delsDir): Unit
-      // takedowns + the old rows of re-adds leave first, then the delta
-      // lands — tagged, so the commit chain records which batch
-      // produced each snapshot
-      Layout.deleteFromLayoutVersioned(t.spark, storeDir,
-        dels.unionByName(adds.select(col(idCol))).distinct(), idCol): Unit
-      if (hasAdds)
-        Layout.appendToLayoutVersioned(t.spark, storeDir, adds, cols, bits,
-          nBuckets, tag = t.batchId.toString): Unit
+          dels.unionByName(adds.select(col(idCol))).distinct(), idCol): Unit
+        if (hasAdds)
+          Layout.appendToLayout(t.spark, storeDir, adds, cols, bits,
+            nBuckets, tag = t.batchId.toString): Unit
+      }
     }
 
   /** Streaming span-level decontamination — the production shape of

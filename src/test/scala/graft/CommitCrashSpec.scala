@@ -30,8 +30,9 @@ import graft.streaming.StreamingIngest
   * the batch warm-start fold), the batch committed exactly once, and a
   * twin that vacuums keeps one committed version. Stores live on the
   * `inject:` file system ([[InjectingFs]]), which throws at the kill
-  * point. Two publishers racing from one base close the spec: the
-  * second is refused. */
+  * point. The layout twin's cold start, whose first trigger builds
+  * the store, is killed at each point as well. Two publishers racing
+  * from one base close the spec: the second is refused. */
 class CommitCrashSpec extends SparkSpec {
   import spark.implicits._
 
@@ -280,15 +281,14 @@ class CommitCrashSpec extends SparkSpec {
       })
   }
 
-  test("streamingLayoutVersioned: a crash at any commit point heals to " +
-      "the fold on redelivery") {
+  test("streamingLayout: a crash at any commit point heals to the fold " +
+      "on redelivery") {
     val tmp = InjectingFs.tempDir(spark, "graft_crash_layout")
     val store = s"$tmp/store"
     val base = for { x <- 0L until 4L; y <- 0L until 4L }
       yield (y * 16L + x, x, y)
     Layout.writeLayout(Layout.zOrderLayout(base.toDF("id", "x", "y"),
       Seq("x", "y"), 4, 16), store, Seq("x", "y"), "z", 4, 16)
-    Layout.snapshotLayout(spark, store): Unit
     // batch k erases stored row k and adds row 100 + k: an erasure
     // commit, then the append committed under the batch's tag
     val batches = (0 until 4).map(k => Seq(("del", k.toLong, 0L, 0L),
@@ -297,13 +297,57 @@ class CommitCrashSpec extends SparkSpec {
       .select("id", "x", "y").collect().map(_.toString).sorted.toSeq
     crashEachPoint(s"$store/_versions", "manifest", batches,
         vacuums = false, commitsPerBatch = 2)((s, c) =>
-      StreamingIngest.streamingLayoutVersioned(s.toDF("op", "id", "x",
-        "y"), s"$tmp/adds", s"$tmp/dels", store, c, Seq("x", "y"),
-        bits = 4, nBuckets = 16))(
+      StreamingIngest.streamingLayout(s.toDF("op", "id", "x", "y"),
+        s"$tmp/adds", s"$tmp/dels", store, c, Seq("x", "y"), bits = 4,
+        nBuckets = 16))(
       () => Seq(Layout.readLayoutVersion(spark, store)),
       k => assert(rows() == (base.filter(_._1 > k) ++
         (0 to k).map(i => (100L + i, i + 1L, i + 2L))).toDF("id", "x",
         "y").collect().map(_.toString).sorted.toSeq))
+  }
+
+  test("streamingLayout cold start: a crash at any commit point of the " +
+      "first trigger's build heals to the fold on redelivery, and point " +
+      "lookups serve") {
+    implicit val sqlCtx = spark.sqlContext
+    // one batch, built from the fold: a born-dead id, a same-batch
+    // takedown of nothing stored yet, a bloom-sketched id column
+    val batch = Seq(("add", 1L, 0L, 0L), ("add", 2L, 3L, 1L),
+      ("add", 3L, 7L, 7L), ("del", 3L, 0L, 0L), ("add", 4L, 15L, 2L),
+      ("del", 9L, 0L, 0L))
+    val fold = Set((1L, 0L, 0L), (2L, 3L, 1L), (4L, 15L, 2L))
+    (1 to 3).foreach { k =>
+      val tmp = InjectingFs.tempDir(spark, s"graft_crash_layout_cold$k")
+      val store = s"$tmp/store"
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_crash_ckpt")
+        .toString
+      val mem = MemoryStream[(String, Long, Long, Long)]
+      def run(): Unit = {
+        val q = StreamingIngest.streamingLayout(
+          mem.toDF().toDF("op", "id", "x", "y"), s"$tmp/adds",
+          s"$tmp/dels", store, ckpt, Seq("x", "y"), bits = 4,
+          nBuckets = 16, bloomCols = Seq("id"))
+        try q.processAllAvailable() finally q.stop()
+      }
+      def rows(df: DataFrame): Set[(Long, Long, Long)] =
+        df.select("id", "x", "y").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      mem.addData(batch: _*)
+      InjectingFs.withHook(kill(k, "manifest")) {
+        intercept[StreamingQueryException](run())
+      }
+      if (k < 3)
+        assert(FrameVersions.current(spark, s"$store/_versions") == 0L,
+          s"kill point $k: the build never committed")
+      run()
+      assert(rows(Layout.readLayoutVersion(spark, store)) == fold,
+        s"kill point $k: the redelivery heals to the fold")
+      assert(rows(Layout.prunedScan(spark, store, Nil,
+        points = Seq(("id", 2L)))) == Set((2L, 3L, 1L)),
+        s"kill point $k: point lookups serve off the sketch")
+      assert(Layout.prunedScan(spark, store, Nil,
+        points = Seq(("id", 3L))).isEmpty)
+    }
   }
 
   test("retrainIndex: a crash at any commit point leaves the previous " +

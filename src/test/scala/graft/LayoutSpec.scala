@@ -135,6 +135,23 @@ class LayoutSpec extends SparkSpec {
     assert(skipped == 240L, s"hilbert skipped $skipped of 256")
   }
 
+  // The current snapshot's manifest rolled up per bucket, and a fresh
+  // fileSkippingStats pass over the snapshot's rows: equal iff the
+  // manifest describes its files exactly.
+  private def manifestByBucket(path: String, cols: Seq[String])
+      : Map[Long, Seq[Any]] =
+    Layout.layoutVersionManifest(spark, path,
+        Layout.currentLayoutVersion(spark, path))
+      .groupBy("bucket").agg(sum("n_rows").as("n_rows"),
+        cols.flatMap(c => Seq(min(s"min_$c"), max(s"max_$c"))): _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
+
+  private def freshByBucket(path: String, cols: Seq[String])
+      : Map[Long, Seq[Any]] =
+    Layout.fileSkippingStats(Layout.readLayoutVersion(spark, path),
+        "_bucket", cols)
+      .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
+
   test("writeLayout + prunedScan: the pruned read equals the full " +
       "filter, opens only surviving buckets, an out-of-domain box " +
       "reads nothing, and stats agree with the written files") {
@@ -156,12 +173,19 @@ class LayoutSpec extends SparkSpec {
     val opened = pruned.select(col("_bucket").cast("long"))
       .distinct().collect().map(_.getLong(0)).toSet
     assert(opened == Set(0L), s"opened $opened")
-    // the manifest was derived from the written store: stats row
-    // count equals the store's bucket count
-    val statBuckets = spark.read.parquet(s"$path/_stats").count()
-    val storeBuckets = spark.read.parquet(path)
-      .select("_bucket").distinct().count()
-    assert(statBuckets == storeBuckets)
+    // the manifest was derived from the written store: snapshot v1
+    // lists exactly the data files on disk, with their exact stats
+    assert(Layout.currentLayoutVersion(spark, path) == 1L)
+    val listed = Layout.layoutVersionManifest(spark, path, 1L)
+      .select("file").collect().map(_.getString(0)).toSet
+    val onDisk = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("_bucket="))
+      .flatMap(d => d.listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet")).map(f => s"${d.getName}/$f"))
+      .toSet
+    assert(listed == onDisk)
+    assert(manifestByBucket(path, Seq("x", "y")) ==
+      freshByBucket(path, Seq("x", "y")))
     // out-of-domain box: every bucket skips, zero rows, schema intact
     val none = Layout.prunedScan(spark, path, Seq(("x", 100L, 200L)))
     assert(none.count() == 0L && none.columns.contains("y"))
@@ -196,16 +220,13 @@ class LayoutSpec extends SparkSpec {
     // an OUT-OF-DOMAIN point (x=100 clamps to cell 15 for assignment)
     val delta = Seq((2L, 2L), (15L, 15L), (100L, 3L)).toDF("x", "y")
     Layout.appendToLayout(spark, path, delta, Seq("x", "y"), 4, 16)
-    val store = spark.read.parquet(path)
+    val store = Layout.readLayoutVersion(spark, path)
     assert(store.count() == 259L)
     // the manifest must equal a from-scratch stats pass over the
-    // appended store — certifying the merge algebra is exact
-    val manifest = spark.read.parquet(s"$path/_stats").collect()
-      .map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
-    val fresh = Layout.fileSkippingStats(store, "_bucket",
-      Seq("x", "y")).collect()
-      .map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
-    assert(manifest == fresh, "manifest ≡ fresh stats over the store")
+    // appended store — certifying the new files' stats are exact
+    assert(manifestByBucket(path, Seq("x", "y")) ==
+      freshByBucket(path, Seq("x", "y")),
+      "manifest ≡ fresh stats over the store")
     // x=100 clamped into the max-x boundary cell's bucket, but the
     // envelope records the TRUE value — the box (90..200, 0..15)
     // must therefore still find it
@@ -246,20 +267,13 @@ class LayoutSpec extends SparkSpec {
     val doomed = ((for { x <- 0L until 4L; y <- 0L until 4L }
       yield y * 16L + x) :+ (1L * 16L + 5L) :+ 9999L).toDF("id")
     Layout.deleteFromLayout(spark, path, doomed, "id")
-    val store = spark.read.parquet(path)
+    val store = Layout.readLayoutVersion(spark, path)
     assert(store.count() == 256L - 17L)
-    assert(bucketFiles(0L).isEmpty &&
-      !new java.io.File(s"$path/_bucket=0").exists,
-      "fully erased bucket's directory must leave")
     assert(bucketFiles(15L) == untouchedBefore,
       "untouched buckets' files must not rewrite")
-    // manifest ≡ a fresh stats pass over the post-erasure store
-    val manifest = spark.read.parquet(s"$path/_stats").collect()
-      .map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
-    val fresh = Layout.fileSkippingStats(store, "_bucket",
-      Seq("x", "y")).collect()
-      .map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
-    assert(manifest == fresh)
+    // manifest ≡ a fresh stats pass over the post-erasure snapshot
+    val manifest = manifestByBucket(path, Seq("x", "y"))
+    assert(manifest == freshByBucket(path, Seq("x", "y")))
     assert(!manifest.contains(0L) && manifest(1L).head == 15L)
     // erased rows are gone from the pruned scan; survivors remain
     val box = Layout.prunedScan(spark, path,
@@ -269,14 +283,27 @@ class LayoutSpec extends SparkSpec {
     val expect = (for { x <- 0L to 5L; y <- 0L to 5L
       if !(x < 4 && y < 4) && !(x == 5 && y == 1) } yield (x, y)).toSet
     assert(box == expect)
-    // erase EVERYTHING: no bucket dir survives, so the row schema is
-    // gone with the files — prunedScan refuses with the recovery path
-    // instead of dying on schema inference
+    // the erased rows stay on disk for pinned readers until vacuum,
+    // which purges them: the fully erased bucket's directory leaves
+    assert(bucketFiles(0L).nonEmpty)
+    Layout.vacuumLayout(spark, path): Unit
+    assert(bucketFiles(0L).isEmpty &&
+      !new java.io.File(s"$path/_bucket=0").exists,
+      "fully erased bucket's directory must leave")
+    assert(bucketFiles(15L) == untouchedBefore)
+    // erase EVERYTHING: the empty snapshot serves zero rows with the
+    // row schema (a file of the ancestor snapshot lends it)...
     Layout.deleteFromLayout(spark, path,
       base.select("id"), "id")
+    val empty = Layout.prunedScan(spark, path, Seq(("x", 0L, 5L)))
+    assert(empty.count() == 0L && empty.columns.contains("y"))
+    // ...until vacuum drops that ancestor: the row schema is gone with
+    // the files, and prunedScan refuses with the recovery path instead
+    // of dying on schema inference
+    Layout.vacuumLayout(spark, path): Unit
     val gone = intercept[IllegalArgumentException](
       Layout.prunedScan(spark, path, Seq(("x", 0L, 5L))))
-    assert(gone.getMessage.contains("no bucket directories"))
+    assert(gone.getMessage.contains("row schema is gone"))
   }
 
   test("appendToLayout with curve=hilbert matches the store's curve " +
@@ -419,7 +446,7 @@ class LayoutSpec extends SparkSpec {
     // build-time layout put it — anchor stability survives drift
     Layout.appendToLayout(spark, path,
       Seq((2L, 2L)).toDF("x", "y"), Seq("x", "y"), 4, 16)
-    val zs = spark.read.parquet(path)
+    val zs = Layout.readLayoutVersion(spark, path)
       .filter(col("x") === 2L && col("y") === 2L)
       .select("_z").collect().map(_.getLong(0)).toSet
     assert(zs == Set(buildZ),
@@ -489,15 +516,11 @@ class LayoutSpec extends SparkSpec {
       Seq("x", "y", "z"), "hilbertk", 3, 8)
     Layout.appendToLayout(spark, path, held.toDF("x", "y", "z"),
       Seq("x", "y", "z"), 3, 8, curve = "hilbertk")
-    val store = spark.read.parquet(path)
+    val store = Layout.readLayoutVersion(spark, path)
     assert(store.count() == 512L)
-    // manifest ≡ fresh stats over the appended store (exact algebra)
-    val manifest = spark.read.parquet(s"$path/_stats").collect()
-      .map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
-    val fresh = Layout.fileSkippingStats(store, "_bucket",
-      Seq("x", "y", "z")).collect()
-      .map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
-    assert(manifest == fresh)
+    // manifest ≡ fresh stats over the appended store
+    assert(manifestByBucket(path, Seq("x", "y", "z")) ==
+      freshByBucket(path, Seq("x", "y", "z")))
     // every appended row carries the store's own curve value — the
     // Skilling index, not xy2d, not Morton
     store.filter(col("x") === 3L && col("y") === 4L && col("z") === 5L)
@@ -529,52 +552,6 @@ class LayoutSpec extends SparkSpec {
     assert(after.count() == 510L)
   }
 
-  test("append crash window: a crash between the widened manifest " +
-      "and the data files leaves a CONSERVATIVE store — pruned scans " +
-      "equal the pre-append filter, nothing is silently skipped") {
-    val base = (for { x <- 0L until 16L; y <- 0L until 16L }
-      yield (x, y)).toDF("x", "y")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_layout_crash_a").toString
-    val path = root + "/store"
-    Layout.writeLayout(
-      Layout.zOrderLayout(base, Seq("x", "y"), 4, 16), path,
-      Seq("x", "y"), "z", 4, 16)
-    // snapshot the pre-append data, run the full append, then build
-    // the crash state: pre-append data + POST-append manifest — the
-    // publish order (manifest first, then file moves) makes this the
-    // reader-visible window; the ledger spec covers the mechanical
-    // recovery, THIS spec proves the window itself is conservative
-    val crash = root + "/crash"
-    copyDir(path, crash)
-    Layout.appendToLayout(spark, path,
-      Seq((2L, 2L), (100L, 3L)).toDF("x", "y"), Seq("x", "y"), 4, 16)
-    copyDir(s"$path/_stats", s"$crash/_stats")
-    // in-domain box: the crash state serves the PRE-append rows — the
-    // appended duplicate of (2,2) is absent, every base row present
-    val box = Layout.prunedScan(spark, crash,
-      Seq(("x", 0L, 3L), ("y", 0L, 3L)))
-      .groupBy("x", "y").count().collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(box.size == 16 && box.values.forall(_ == 1L),
-      "crash state must equal the pre-append filter")
-    // the widened envelope (x up to 100) keeps extra buckets but the
-    // scan stays clean: no rows, no error
-    val far = Layout.prunedScan(spark, crash,
-      Seq(("x", 90L, 200L), ("y", 0L, 15L)))
-    assert(far.count() == 0L)
-    // and appending the same delta onto the window state converges
-    // row-wise (the pre-ledger recipe; recoverAppend is the exact
-    // path — this shows even the blunt re-run never loses rows)
-    Layout.appendToLayout(spark, crash,
-      Seq((2L, 2L), (100L, 3L)).toDF("x", "y"), Seq("x", "y"), 4, 16)
-    val healed = Layout.prunedScan(spark, crash,
-      Seq(("x", 90L, 200L), ("y", 0L, 15L)))
-      .select("x", "y").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(healed == Set((100L, 3L)))
-  }
-
   test("bloom point-lookup pruning: lossless, actually collapses the " +
       "open set, survives append (OR-merge) and erasure (recount); " +
       "guards refuse un-sketched columns and empty predicates") {
@@ -594,8 +571,8 @@ class LayoutSpec extends SparkSpec {
     assert(lookup(9999L).isEmpty, "absent key returns no rows")
     // the sketch actually prunes: probe the manifest exactly the way
     // prunedScan does — the id is non-clustered, min/max would keep
-    // every bucket, the bloom keeps almost none
-    val stats = spark.read.parquet(s"$path/_stats")
+    // every bucket's file, the bloom keeps almost none
+    val stats = Layout.layoutVersionManifest(spark, path, 1L)
       .select("bucket", "bloom_id").collect()
     val maybe = stats.count(r => graft.functions.BloomKernel
       .mightContainLong(r.getAs[Array[Byte]](1), 37L, 5))
@@ -610,8 +587,8 @@ class LayoutSpec extends SparkSpec {
     assert(opened.length == maybe,
       s"the point scan must open exactly the maybe-present bucket " +
         s"dirs, opened ${opened.mkString(",")}")
-    // append: the delta's keys OR into the touched buckets' sketches
-    // (no rescan) — new id findable, old ids unaffected
+    // append: the delta's new file carries its own sketch (no
+    // rescan) — new id findable, old ids unaffected
     Layout.appendToLayout(spark, path,
       Seq((1000L, 3L, 4L)).toDF("id", "x", "y"), Seq("x", "y"), 4, 16)
     assert(lookup(1000L) == Set((1000L, 3L, 4L)))
@@ -620,9 +597,10 @@ class LayoutSpec extends SparkSpec {
     Layout.deleteFromLayout(spark, path, Seq(37L).toDF("id"), "id")
     assert(lookup(37L).isEmpty)
     assert(lookup(38L) == Set((38L, 6L, 2L)))
-    // the recount is real: 37's probe goes negative again (the OR
-    // algebra could never un-set bits; only the recount can)
-    val statsAfter = spark.read.parquet(s"$path/_stats")
+    // the recount is real: 37's probe goes negative again (a sketch
+    // can never un-set bits; only the recount can)
+    val statsAfter = Layout.layoutVersionManifest(spark, path,
+        Layout.currentLayoutVersion(spark, path))
       .select("bucket", "bloom_id").collect()
     val maybeAfter = statsAfter.count(r => graft.functions.BloomKernel
       .mightContainLong(r.getAs[Array[Byte]](1), 37L, 5))
@@ -660,143 +638,6 @@ class LayoutSpec extends SparkSpec {
         Seq(("x", 0L, 7L)), points = Seq(("id", 38L)))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(boxed == Set(38L))
-  }
-
-  test("append ledger: an uncommitted stage rolls BACK, a committed " +
-      "stage rolls FORWARD (incl. partial publish), recovery is " +
-      "idempotent, a pending stage blocks writers, and n_rows stays " +
-      "EXACT across the crash") {
-    val base = (for { x <- 0L until 16L; y <- 0L until 16L }
-      yield (x, y)).toDF("x", "y")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_layout_ledger").toString
-    val path = root + "/store"
-    Layout.writeLayout(
-      Layout.zOrderLayout(base, Seq("x", "y"), 4, 16), path,
-      Seq("x", "y"), "z", 4, 16)
-    def statsOf(p: String): Set[(Long, Long, Long, Long, Long, Long)] =
-      spark.read.parquet(s"$p/_stats").collect().map(r =>
-        (r.getAs[Long]("bucket"), r.getAs[Long]("n_rows"),
-          r.getAs[Long]("min_x"), r.getAs[Long]("max_x"),
-          r.getAs[Long]("min_y"), r.getAs[Long]("max_y"))).toSet
-    def rowsOf(p: String): Seq[(Long, Long)] =
-      spark.read.parquet(p).select("x", "y").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val stats0 = statsOf(path)
-    // ---- uncommitted stage (crash before _COMMIT): writers refuse,
-    // recovery rolls back, the live store is untouched
-    val fakePending = new java.io.File(s"$path/_append_pending/data")
-    assert(fakePending.mkdirs())
-    intercept[IllegalArgumentException](Layout.appendToLayout(spark,
-      path, Seq((2L, 2L)).toDF("x", "y"), Seq("x", "y"), 4, 16))
-    intercept[IllegalArgumentException](Layout.deleteFromLayout(spark,
-      path, Seq(0L).toDF("id"), "x"))
-    val r1 = Layout.recoverAppend(spark, path).head()
-    assert(r1.getString(0) == "rolled_back")
-    assert(!new java.io.File(s"$path/_append_pending").exists)
-    assert(statsOf(path) == stats0, "rollback leaves the store as-was")
-    assert(Layout.recoverAppend(spark, path).head()
-      .getString(0) == "clean")
-    // ---- committed stage (crash after _COMMIT, before/mid publish):
-    // snapshot the pre-append store, run the REAL append (staged file
-    // names land verbatim), then rebuild the crash state = snapshot +
-    // a committed stage holding exactly the files the append landed
-    val snap = root + "/snap"
-    copyDir(path, snap)
-    def bucketFiles(p: String): Map[String, Set[String]] =
-      new java.io.File(p).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("_bucket="))
-        .map(d => d.getName -> d.listFiles()
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .map(_.getName).toSet).toMap
-    val before = bucketFiles(path)
-    Layout.appendToLayout(spark, path,
-      Seq((2L, 2L), (9L, 9L)).toDF("x", "y"), Seq("x", "y"), 4, 16)
-    assert(!new java.io.File(s"$path/_append_pending").exists,
-      "a completed append leaves no stage behind")
-    val after = bucketFiles(path)
-    val statsFinal = statsOf(path)
-    val rowsFinal = rowsOf(path)
-    // exact n_rows: 256 base + 2 delta (the pre-ledger re-run recipe
-    // inflated this)
-    assert(statsFinal.toSeq.map(_._2).sum == 258L)
-    def buildCrash(dst: String, landFirst: Boolean): Unit = {
-      copyDir(snap, dst)
-      copyDir(s"$path/_stats", s"$dst/_append_pending/stats_merged")
-      var landed = false
-      after.foreach { case (bucket, files) =>
-        val fresh = files -- before.getOrElse(bucket, Set())
-        fresh.foreach { name =>
-          val src = new java.io.File(s"$path/$bucket/$name")
-          if (landFirst && !landed) {
-            // simulate a crash MID-publish: this file already renamed
-            val d = new java.io.File(s"$dst/$bucket")
-            d.mkdirs()
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, name).toPath)
-            landed = true
-          } else {
-            val d = new java.io.File(s"$dst/_append_pending/data/$bucket")
-            d.mkdirs()
-            java.nio.file.Files.copy(src.toPath,
-              new java.io.File(d, name).toPath)
-          }
-        }
-      }
-      assert(new java.io.File(s"$dst/_append_pending/_COMMIT")
-        .createNewFile())
-    }
-    for (partial <- Seq(false, true)) {
-      val crash = root + s"/crash_$partial"
-      buildCrash(crash, landFirst = partial)
-      intercept[IllegalArgumentException](Layout.appendToLayout(spark,
-        crash, Seq((3L, 3L)).toDF("x", "y"), Seq("x", "y"), 4, 16))
-      val r = Layout.recoverAppend(spark, crash).head()
-      assert(r.getString(0) == "completed")
-      assert(!new java.io.File(s"$crash/_append_pending").exists)
-      assert(rowsOf(crash) == rowsFinal,
-        s"roll-forward (partial=$partial) must converge to the " +
-          "completed append's rows")
-      assert(statsOf(crash) == statsFinal,
-        s"roll-forward (partial=$partial) manifest must be the " +
-          "staged one — counts exact, no double-merge")
-      // and the healed store accepts new appends again
-      Layout.appendToLayout(spark, crash,
-        Seq((5L, 5L)).toDF("x", "y"), Seq("x", "y"), 4, 16)
-      assert(statsOf(crash).toSeq.map(_._2).sum == 259L)
-    }
-  }
-
-  test("delete crash window: a crash between an emptied bucket's " +
-      "directory delete and the manifest rewrite must not hard-fail " +
-      "readers — prunedScan existence-filters the stale manifest row") {
-    val base = (for { x <- 0L until 16L; y <- 0L until 16L }
-      yield (y * 16L + x, x, y)).toDF("id", "x", "y")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_layout_crash_d").toString
-    val path = root + "/store"
-    Layout.writeLayout(
-      Layout.zOrderLayout(base, Seq("x", "y"), 4, 16), path,
-      Seq("x", "y"), "z", 4, 16)
-    // snapshot the PRE-delete manifest, erase the whole origin 4×4
-    // (bucket 0 dies), then restore the stale manifest — the crash
-    // state: directory gone, manifest still naming it
-    copyDir(s"$path/_stats", s"$root/stats_before")
-    val doomed = (for { x <- 0L until 4L; y <- 0L until 4L }
-      yield y * 16L + x).toDF("id")
-    Layout.deleteFromLayout(spark, path, doomed, "id")
-    assert(!new java.io.File(s"$path/_bucket=0").exists)
-    copyDir(s"$root/stats_before", s"$path/_stats")
-    // the stale manifest keeps bucket 0 for the origin box; the scan
-    // must skip the missing directory (it holds no rows by
-    // construction) instead of failing with PATH_NOT_FOUND
-    val box = Layout.prunedScan(spark, path,
-      Seq(("x", 0L, 5L), ("y", 0L, 5L)))
-      .select("x", "y").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expect = (for { x <- 0L to 5L; y <- 0L to 5L
-      if !(x < 4 && y < 4) } yield (x, y)).toSet
-    assert(box == expect, "survivors only, no crash")
   }
 
   test("normalizeToBits: a domain too wide for the bit budget raises " +
@@ -885,22 +726,18 @@ class LayoutSpec extends SparkSpec {
   test("versioned layout: snapshots PIN — a v1 reader survives append " +
       "and erasure untouched, with no localCheckpoint discipline; " +
       "per-file pruned scans (ranges and bloom points) are lossless " +
-      "per version; plain maintenance and double snapshot refuse") {
+      "per version") {
     val (path, baseSet) = vFixture()
-    assert(Layout.currentLayoutVersion(spark, path) == 0L)
-    assert(Layout.snapshotLayout(spark, path) == 1L)
-    assert(Layout.currentLayoutVersion(spark, path) == 1L)
-    val again = intercept[IllegalArgumentException](
-      Layout.snapshotLayout(spark, path))
-    assert(again.getMessage.contains("already versioned"))
+    assert(Layout.currentLayoutVersion(spark, path) == 1L,
+      "writeLayout commits snapshot v1")
     assert(vRows(Layout.readLayoutVersion(spark, path)) == baseSet)
     val deltaSet = (for { x <- 0L until 4L; y <- 0L until 4L }
       yield (1000 + x * 4 + y, x, y)).toSet
     val delta = deltaSet.toSeq.toDF("id", "x", "y")
-    assert(Layout.appendToLayoutVersioned(spark, path, delta,
+    assert(Layout.appendToLayout(spark, path, delta,
       Seq("x", "y"), 4, 16) == 2L)
     val removed = (0L until 1100L).filter(_ % 5 == 0).toDF("id")
-    assert(Layout.deleteFromLayoutVersioned(spark, path, removed,
+    assert(Layout.deleteFromLayout(spark, path, removed,
       "id") == 3L)
     // the pinned v1 view is byte-identical AFTER both maintenance ops
     // — the claim that removes the reader discipline
@@ -913,27 +750,20 @@ class LayoutSpec extends SparkSpec {
     val box = Seq(("x", 0L, 3L), ("y", 0L, 3L))
     def inBox(t: (Long, Long, Long)) =
       t._2 <= 3L && t._3 <= 3L
-    assert(vRows(Layout.prunedScanVersion(spark, path, box,
+    assert(vRows(Layout.prunedScan(spark, path, box,
       version = 1L)) == baseSet.filter(inBox))
-    assert(vRows(Layout.prunedScanVersion(spark, path, box)) ==
+    assert(vRows(Layout.prunedScan(spark, path, box)) ==
       v3Set.filter(inBox))
     // bloom point probes on the non-clustered id: present, erased
     // (gone at v3, still served at v1), absent
-    assert(vRows(Layout.prunedScanVersion(spark, path, Nil,
+    assert(vRows(Layout.prunedScan(spark, path, Nil,
       Seq(("id", 7L)))) == Set((7L, 0L, 7L)))
-    assert(Layout.prunedScanVersion(spark, path, Nil,
+    assert(Layout.prunedScan(spark, path, Nil,
       Seq(("id", 5L))).count() == 0L)
-    assert(vRows(Layout.prunedScanVersion(spark, path, Nil,
+    assert(vRows(Layout.prunedScan(spark, path, Nil,
       Seq(("id", 5L)), version = 1L)) == Set((5L, 0L, 5L)))
-    assert(Layout.prunedScanVersion(spark, path, Nil,
+    assert(Layout.prunedScan(spark, path, Nil,
       Seq(("id", 999999L))).count() == 0L)
-    // the plain in-place ops refuse on a versioned store
-    val pa = intercept[IllegalArgumentException](
-      Layout.appendToLayout(spark, path, delta, Seq("x", "y"), 4, 16))
-    assert(pa.getMessage.contains("VERSIONED"))
-    val pd = intercept[IllegalArgumentException](
-      Layout.deleteFromLayout(spark, path, removed, "id"))
-    assert(pd.getMessage.contains("VERSIONED"))
   }
 
   test("versioned layout crash injection, both sides of the pointer " +
@@ -942,7 +772,6 @@ class LayoutSpec extends SparkSpec {
       "files are invisible to every versioned read; the marker create " +
       "IS the commit") {
     val (path, baseSet) = vFixture()
-    Layout.snapshotLayout(spark, path)
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     // side 1 — crash BEFORE the marker: a publisher died holding v2's
@@ -954,51 +783,54 @@ class LayoutSpec extends SparkSpec {
       Layout.layoutVersionManifest(spark, path, 2L))
     assert(refuse.getMessage.contains("no committed snapshot v2"))
     assert(vRows(Layout.readLayoutVersion(spark, path)) == baseSet)
-    // a live append now CRASHES at the publish gate (files already
-    // landed — exactly the mid-flight window): the pointer still
-    // must not move
+    // a live append is refused at the claim, before it stages a
+    // file: the pointer still must not move
     val deltaSet = (for { x <- 0L until 4L; y <- 0L until 4L }
       yield (1000 + x * 4 + y, x, y)).toSet
     val delta = deltaSet.toSeq.toDF("id", "x", "y")
     val blocked = intercept[IllegalArgumentException](
-      Layout.appendToLayoutVersioned(spark, path, delta,
+      Layout.appendToLayout(spark, path, delta,
         Seq("x", "y"), 4, 16))
     assert(blocked.getMessage.contains("another writer is publishing"))
     assert(Layout.currentLayoutVersion(spark, path) == 1L)
-    assert(vRows(Layout.readLayoutVersion(spark, path)) == baseSet,
-      "landed-but-unreferenced delta files are invisible")
+    assert(vRows(Layout.readLayoutVersion(spark, path)) == baseSet)
     // roll back the residue; the retried append commits v2 with no
-    // duplicates (the crashed attempt's landed files stay orphans —
-    // COUNT catches any adoption, a set compare would not)
+    // duplicates (COUNT catches any adoption, a set compare would not)
     Layout.recoverLayoutVersions(spark, path)
-    assert(Layout.appendToLayoutVersioned(spark, path, delta,
+    assert(Layout.appendToLayout(spark, path, delta,
       Seq("x", "y"), 4, 16) == 2L)
     val v2 = Layout.readLayoutVersion(spark, path)
     assert(vRows(v2) == baseSet ++ deltaSet)
     assert(v2.count() == (baseSet.size + deltaSet.size).toLong,
       "no orphan adopted, no duplicate row")
-    // side 2 — a crashed STAGE blocks the next op until recovered
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/_versions/_stage_v3/_STAGE_LOCK"), true).close()
-    val staged = intercept[IllegalArgumentException](
-      Layout.deleteFromLayoutVersioned(spark, path,
-        Seq(5L).toDF("id"), "id"))
-    assert(staged.getMessage.contains("holds the stage"))
-    Layout.recoverLayoutVersions(spark, path)
-    assert(Layout.deleteFromLayoutVersioned(spark, path,
-      Seq(5L).toDF("id"), "id") == 3L)
-    assert(vRows(Layout.readLayoutVersion(spark, path)) ==
-      (baseSet ++ deltaSet).filterNot(_._1 == 5L))
-    // a hand-planted orphan data file is invisible until vacuum
+    // side 2 — a publisher crashed mid-landing: its claimed v3 still
+    // stages one file and has landed another into a bucket directory.
+    // Landed-but-unreferenced files are invisible, and the next op is
+    // refused until recovery drops the claimed version with its stage
     val b0 = fs.listStatus(new org.apache.hadoop.fs.Path(
       s"$path/_bucket=0")).filter(_.isFile)
       .map(_.getPath).filterNot(_.getName.startsWith("_")).head
+    val staged = new org.apache.hadoop.fs.Path(
+      s"$path/_versions/_v3/data/_bucket=0/${b0.getName}")
     val orphan = new org.apache.hadoop.fs.Path(
       s"$path/_bucket=0/orphan-${b0.getName}")
-    org.apache.hadoop.fs.FileUtil.copy(fs, b0, fs, orphan, false,
-      spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(
+      s"$path/_versions/_v3/_claim"), true).close()
+    Seq(staged, orphan).foreach(f => org.apache.hadoop.fs.FileUtil.copy(
+      fs, b0, fs, f, false, spark.sparkContext.hadoopConfiguration): Unit)
+    assert(Layout.readLayoutVersion(spark, path).count() ==
+      (baseSet.size + deltaSet.size).toLong)
+    val claimed = intercept[IllegalArgumentException](
+      Layout.deleteFromLayout(spark, path, Seq(5L).toDF("id"), "id"))
+    assert(claimed.getMessage.contains("another writer is publishing"))
+    Layout.recoverLayoutVersions(spark, path)
+    assert(!fs.exists(staged.getParent.getParent.getParent),
+      "recovery dropped the crashed version with its stage")
+    assert(Layout.deleteFromLayout(spark, path,
+      Seq(5L).toDF("id"), "id") == 3L)
     assert(vRows(Layout.readLayoutVersion(spark, path)) ==
       (baseSet ++ deltaSet).filterNot(_._1 == 5L))
+    // the landed orphan stays invisible until vacuum sweeps it
     Layout.vacuumLayout(spark, path, keepLast = 1)
       .write.format("noop").mode("overwrite").save()
     assert(!fs.exists(orphan), "vacuum swept the orphan")
@@ -1009,12 +841,11 @@ class LayoutSpec extends SparkSpec {
       "purges erased rows — after vacuum(1) the directory equals the " +
       "current snapshot exactly") {
     val (path, baseSet) = vFixture()
-    Layout.snapshotLayout(spark, path)
     val deltaSet = (for { x <- 0L until 4L; y <- 0L until 4L }
       yield (1000 + x * 4 + y, x, y)).toSet
-    Layout.appendToLayoutVersioned(spark, path,
+    Layout.appendToLayout(spark, path,
       deltaSet.toSeq.toDF("id", "x", "y"), Seq("x", "y"), 4, 16)
-    Layout.deleteFromLayoutVersioned(spark, path,
+    Layout.deleteFromLayout(spark, path,
       (0L until 1100L).filter(_ % 5 == 0).toDF("id"), "id")
     val v3Set = (baseSet ++ deltaSet).filterNot(_._1 % 5 == 0)
     val rep = Layout.vacuumLayout(spark, path, keepLast = 1).head()
@@ -1040,19 +871,18 @@ class LayoutSpec extends SparkSpec {
       "re-grows under the ORIGINAL _meta anchors with unchanged " +
       "bucket assignment") {
     val (path, baseSet) = vFixture()
-    Layout.snapshotLayout(spark, path)
-    assert(Layout.deleteFromLayoutVersioned(spark, path,
+    assert(Layout.deleteFromLayout(spark, path,
       baseSet.map(_._1).toSeq.toDF("id"), "id") == 2L)
     val empty = Layout.readLayoutVersion(spark, path)
     assert(empty.count() == 0L && empty.columns.contains("x"),
       "empty snapshot serves zero rows WITH the row schema")
-    assert(Layout.prunedScanVersion(spark, path,
+    assert(Layout.prunedScan(spark, path,
       Seq(("x", 0L, 3L))).count() == 0L)
     // v1 pin still serves the full set
     assert(vRows(Layout.readLayoutVersion(spark, path, 1L)) == baseSet)
     // re-grow: the SAME rows append into the SAME buckets the
     // original build assigned (anchors from _meta, not re-derived)
-    assert(Layout.appendToLayoutVersioned(spark, path,
+    assert(Layout.appendToLayout(spark, path,
       baseSet.toSeq.toDF("id", "x", "y"), Seq("x", "y"), 4, 16) == 3L)
     val regrown = Layout.readLayoutVersion(spark, path)
       .select(col("id"), col("_bucket").cast("long")).collect()
@@ -1062,7 +892,7 @@ class LayoutSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(regrown == original, "bucket assignment is anchor-stable")
     // an EMPTY delta publishes nothing
-    assert(Layout.appendToLayoutVersioned(spark, path,
+    assert(Layout.appendToLayout(spark, path,
       baseSet.toSeq.toDF("id", "x", "y").limit(0),
       Seq("x", "y"), 4, 16) == 3L)
   }
@@ -1072,13 +902,21 @@ class LayoutSpec extends SparkSpec {
     val (path, _) = vFixture()
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
+    // a store from before writeLayout committed snapshot v1: root
+    // _stats + _meta, no commit
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_versions"), true)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_stats"))
+    val pre = intercept[IllegalArgumentException](
+      Layout.readLayoutVersion(spark, path))
+    assert(pre.getMessage.contains("rebuild it with writeLayout"))
     fs.create(new org.apache.hadoop.fs.Path(
       s"$path/_versions/v1/_COMMITTED"), true).close()
     val e = intercept[IllegalArgumentException](
       Layout.readLayoutVersion(spark, path))
     assert(e.getMessage.contains("retired") &&
       e.getMessage.contains("FrameVersions"))
-    intercept[IllegalArgumentException](Layout.snapshotLayout(spark, path))
+    intercept[IllegalArgumentException](
+      Layout.prunedScan(spark, path, Seq(("x", 0L, 3L))))
   }
 
   test("underscore frames (_meta, _stats) read without Spark's \"All " +

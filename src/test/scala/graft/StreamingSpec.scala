@@ -1961,7 +1961,7 @@ class StreamingSpec extends SparkSpec {
       Seq("x", "y"), bits = 4, nBuckets = 16,
       bloomCols = Seq("id"))
     def stored(): Map[Long, (Long, Long)] =
-      spark.read.parquet(s"$tmp/store")
+      Layout.readLayoutVersion(spark, s"$tmp/store")
         .select("id", "x", "y").collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     try {
@@ -2014,10 +2014,12 @@ class StreamingSpec extends SparkSpec {
       q2.processAllAvailable()
     } finally q2.stop()
     assert(stored() == before, "redelivered batch absorbed once")
-    // mid-crash redelivery: the append path would duplicate rows —
-    // the twin must rebuild from the FULL fold instead (the
-    // redelivered stream restarts at batch 0, so the marker surgery
-    // targets batch 0; the fold still carries batch 1's ops)
+    // mid-crash redelivery: re-running the append would duplicate rows
+    // (the redelivered stream restarts at batch 0, so the marker
+    // surgery targets batch 0, an OLDER batch than the store's latest
+    // tagged commit) — the twin must find the later tag and leave the
+    // store unchanged
+    val vBefore = Layout.currentLayoutVersion(spark, s"$tmp/store")
     assert(new java.io.File(s"$tmp/adds/_batches/0").delete())
     assert(new java.io.File(s"$tmp/adds/_batches/0.started").mkdirs())
     val mem3 = MemoryStream[(String, Long, Long, Long)]
@@ -2033,11 +2035,13 @@ class StreamingSpec extends SparkSpec {
         ("del", 99L, 0L, 0L): _*)
       q3.processAllAvailable()
     } finally q3.stop()
-    assert(stored() == before,
-      "mid-crash redelivery rebuilds from the fold, no duplicates")
+    assert(stored() == before &&
+      Layout.currentLayoutVersion(spark, s"$tmp/store") == vBefore,
+      "mid-crash redelivery of an applied batch: no duplicates, no commit")
     assert(new java.io.File(s"$tmp/adds/_batches/0").exists &&
       !new java.io.File(s"$tmp/adds/_batches/0.started").exists)
-    // the cold rebuild preserved the sketch — point lookups still serve
+    // the cold build's sketch survived maintenance — point lookups
+    // still serve
     assert(Layout.prunedScan(spark, s"$tmp/store", Nil,
         points = Seq(("id", 300L)))
       .select("x", "y").collect()
@@ -2060,14 +2064,13 @@ class StreamingSpec extends SparkSpec {
     Layout.writeLayout(
       Layout.zOrderLayout(baseRows.toDF("id", "x", "y"),
         Seq("x", "y"), 4, 16), store, Seq("x", "y"), "z", 4, 16)
-    Layout.snapshotLayout(spark, store): Unit
     val baseSet = baseRows.toSet
     def rowsAt(v: Long = -1L): Set[(Long, Long, Long)] =
       Layout.readLayoutVersion(spark, store, v)
         .select("id", "x", "y").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val mem = MemoryStream[(String, Long, Long, Long)]
-    val q = StreamingIngest.streamingLayoutVersioned(
+    val q = StreamingIngest.streamingLayout(
       mem.toDF().toDF("op", "id", "x", "y"),
       s"$tmp/adds", s"$tmp/dels", store, s"$tmp/ckpt",
       Seq("x", "y"), bits = 4, nBuckets = 16)
@@ -2090,7 +2093,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(rowsAt() == afterT2 && rowsAt(1L) == baseSet)
       // per-file pruned scan over the maintained current snapshot
-      assert(Layout.prunedScanVersion(spark, store,
+      assert(Layout.prunedScan(spark, store,
           Seq(("x", 0L, 3L), ("y", 0L, 3L)))
         .select("id").collect().map(_.getLong(0)).toSet ==
         afterT2.filter(t => t._2 <= 3 && t._3 <= 3).map(_._1))
@@ -2098,7 +2101,7 @@ class StreamingSpec extends SparkSpec {
     val vBefore = Layout.currentLayoutVersion(spark, store)
     // fresh-checkpoint redelivery: markers no-op, no new version
     val mem2 = MemoryStream[(String, Long, Long, Long)]
-    val q2 = StreamingIngest.streamingLayoutVersioned(
+    val q2 = StreamingIngest.streamingLayout(
       mem2.toDF().toDF("op", "id", "x", "y"),
       s"$tmp/adds", s"$tmp/dels", store, s"$tmp/ckpt2",
       Seq("x", "y"), bits = 4, nBuckets = 16)
@@ -2122,7 +2125,7 @@ class StreamingSpec extends SparkSpec {
     fs.create(new org.apache.hadoop.fs.Path(
       s"$store/_versions/_v${vBefore + 1}/_claim"), true).close()
     val mem3 = MemoryStream[(String, Long, Long, Long)]
-    val q3 = StreamingIngest.streamingLayoutVersioned(
+    val q3 = StreamingIngest.streamingLayout(
       mem3.toDF().toDF("op", "id", "x", "y"),
       s"$tmp/adds", s"$tmp/dels", store, s"$tmp/ckpt3",
       Seq("x", "y"), bits = 4, nBuckets = 16)
@@ -2144,9 +2147,9 @@ class StreamingSpec extends SparkSpec {
     // between-commits crash window): replaying a committed change
     // set reproduces the same live rows
     val adds = Seq((2L, 9L, 9L)).toDF("id", "x", "y")
-    Layout.deleteFromLayoutVersioned(spark, store,
+    Layout.deleteFromLayout(spark, store,
       Seq(2L).toDF("id"), "id"): Unit
-    Layout.appendToLayoutVersioned(spark, store, adds,
+    Layout.appendToLayout(spark, store, adds,
       Seq("x", "y"), 4, 16): Unit
     assert(rowsAt() == afterT2, "delete→append replay is content-idempotent")
   }
