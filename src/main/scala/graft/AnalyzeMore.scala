@@ -280,7 +280,7 @@ private[graft] object AnalyzeMore {
       Some(args.mode match {
         case "vacuum" =>
           Layout.vacuumLayout(spark, args.docs,
-            keepLast = args.budget.toInt)
+            keepLast = if (args.budgetSet) args.budget.toInt else 1)
         case "recover" =>
           Layout.recoverLayoutVersions(spark, args.docs)
           spark.range(1).select(lit("recovered").as("action"),

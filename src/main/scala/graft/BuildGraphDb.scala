@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.config.GraphConfig
-import graft.operators.GraphBuilder
+import graft.operators.{GraphBuilder, PropertyGraph}
 
 /** CLI entry point — the drop-in equivalent of the reference's
   * `bin/build-graph-db -f config.yml` (bin/build-graph-db:7-16): parse the
@@ -17,7 +17,9 @@ import graft.operators.GraphBuilder
   * `--upsert` merges node tables into existing staging (first-seen wins,
   * new ids append — [[GraphBuilder.upsertStagedNodes]]) instead of
   * overwriting, for scheduled incremental refreshes; relationship tables
-  * are always rebuilt (edges are derived data).
+  * are always rebuilt (edges are derived data). The CSV export and the
+  * stats report then read the merged staging tables, so they cover every
+  * node staged before the run too.
   */
 object BuildGraphDb {
 
@@ -53,22 +55,31 @@ object BuildGraphDb {
     val graph = GraphBuilder.build(spark, cfg, asciiFold = args.asciiFold)
     val idKeys = cfg.nodes.map(n =>
       n.label -> n.idKeyLabel.getOrElse(n.sources.head.idKey)).toMap
-    if (args.upsert) {
+    val base = s"${args.outDir}/${cfg.database.outputStem}"
+    val staged = if (args.upsert) {
       graph.nodes.foreach { case (label, df) =>
         GraphBuilder.upsertStagedNodes(spark, args.outDir, cfg.database,
           label, df, idKeys(label))
       }
       graph.relationships.foreach { case (label, df) =>
         GraphBuilder.replaceStagedTable(spark,
-          s"${args.outDir}/${cfg.database.outputStem}/relationships/$label", df)
+          s"$base/relationships/$label", df)
       }
-    } else graph.writeStaging(args.outDir)
-    if (args.csv) graph.exportNeo4jCsv(args.outDir, idKeys)
+      // the store now also holds every node staged before this run:
+      // export and report what it holds, not this run's build
+      def read(kind: String, labels: Iterable[String]) =
+        labels.map(l => l -> spark.read.parquet(s"$base/$kind/$l")).toMap
+      PropertyGraph(cfg.database, read("nodes", graph.nodes.keys),
+        read("relationships", graph.relationships.keys))
+    } else {
+      graph.writeStaging(args.outDir)
+      graph
+    }
+    if (args.csv) staged.exportNeo4jCsv(args.outDir, idKeys)
     println(s"[build-graph-db] staged ${graph.nodes.size} node tables and " +
-      s"${graph.relationships.size} relationship tables under " +
-      s"${args.outDir}/${cfg.database.outputStem}" +
+      s"${graph.relationships.size} relationship tables under $base" +
       (if (args.upsert) " (upsert)" else ""))
-    graph.stats(spark).show(100, truncate = false)
+    staged.stats(spark).show(100, truncate = false)
   }
 
   def main(argv: Array[String]): Unit = {

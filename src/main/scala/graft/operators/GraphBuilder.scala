@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config._
@@ -8,32 +10,62 @@ import graft.sources.SourceReader
 
 /** The built property graph: one DataFrame per node label and per
   * relationship type — the Spark equivalent of the reference's HDF5 groups
-  * `/nodes` and `/relationships` (graph_db_builder.py:152-155). */
+  * `/nodes` and `/relationships` (graph_db_builder.py:152-155).
+  *
+  * The frames are lazy plans (source scans → union → merge shuffle → FK
+  * joins). Once [[writeStaging]] has run, [[exportNeo4jCsv]] and [[stats]]
+  * serve the staged store instead of running those plans again — the
+  * reference's stage-once-then-serialize order
+  * (graph_db_builder.py:404-408). The memo lives in the class body, not
+  * in the fields, so a `copy` starts unstaged. */
 final case class PropertyGraph(
     meta: DatabaseMeta,
     nodes: Map[String, DataFrame],
     relationships: Map[String, DataFrame]) {
 
+  private var staged: Option[PropertyGraph.Staged] = None
+
   /** S5-equivalent staging store: parquet dirs `nodes/<Label>/`,
-    * `relationships/<TYPE>/` under `outDir/{name}-{version}`. */
+    * `relationships/<TYPE>/` under `outDir/{name}-{version}`. Each
+    * table's row count is observed on its own write job
+    * (`Dataset.observe`, no extra job); the graph then remembers the
+    * root and the counts for [[exportNeo4jCsv]] and [[stats]]. */
   def writeStaging(outDir: String): Unit = {
     val base = s"$outDir/${meta.outputStem}"
-    nodes.foreach { case (label, df) =>
-      df.write.mode("overwrite").parquet(s"$base/nodes/$label")
-    }
-    relationships.foreach { case (label, df) =>
-      df.write.mode("overwrite").parquet(s"$base/relationships/$label")
-    }
+    def write(kind: String, tables: Map[String, DataFrame]) =
+      tables.map { case (label, df) =>
+        val obs = Observation()
+        df.observe(obs, count(lit(1))).write.mode("overwrite")
+          .parquet(s"$base/$kind/$label")
+        // the metrics reach the driver with the execution's end event,
+        // which the listener bus may deliver just after the write returns
+        label -> scala.concurrent.Await.result(obs.future,
+          scala.concurrent.duration.Duration.Inf).getLong(0)
+      }
+    staged = None
+    staged = Some(PropertyGraph.Staged(base, write("nodes", nodes),
+      write("relationships", relationships)))
   }
 
   /** S7/S8: CSV export in Neo4j bulk-import layout (`neo4j-admin import`):
     * node files get `<idKey>:ID(<Label>)` + `:LABEL`; relationship files get
     * `:START_ID`, `:END_ID`, `:TYPE`. The reference declared this export and
     * never built it (serialize_data stub graph_db_builder.py:407-408;
-    * bin/build-graph-db:16). */
+    * bin/build-graph-db:16).
+    *
+    * After [[writeStaging]] every table is read back from the staged
+    * Parquet, as the store holds it when the export runs, under the
+    * frame's own schema (no footer-inference job); the build's scans,
+    * merge shuffle and joins do not run again. An unstaged graph exports
+    * its frames. */
   def exportNeo4jCsv(outDir: String, idKeys: Map[String, String]): Unit = {
     val base = s"$outDir/${meta.outputStem}-csv"
-    nodes.foreach { case (label, df0) =>
+    def served(kind: String, tables: Map[String, DataFrame]) =
+      staged.fold(tables)(s => tables.map { case (label, df) =>
+        label -> df.sparkSession.read.schema(df.schema)
+          .parquet(s"${s.base}/$kind/$label")
+      })
+    served("nodes", nodes).foreach { case (label, df0) =>
       val df = PropertyGraph.neo4jReady(df0)
       // uri_key contract (reference graph_db_builder.py:468-470: the uri_key
       // column "will be used to determine the URI of the node in the output
@@ -50,7 +82,7 @@ final case class PropertyGraph(
       }
       PropertyGraph.writeCsv(renamed, s"$base/nodes_$label")
     }
-    relationships.foreach { case (label, df) =>
+    served("relationships", relationships).foreach { case (label, df) =>
       val ready = PropertyGraph.neo4jReady(df)
         .withColumnRenamed(RelPipeline.StartId, ":START_ID")
         .withColumnRenamed(RelPipeline.EndId, ":END_ID")
@@ -60,21 +92,46 @@ final case class PropertyGraph(
   }
 
   /** A4: graph statistics — node/edge count per label, one deterministic
-    * report DataFrame. */
-  def stats(spark: SparkSession): DataFrame = {
-    val parts =
-      nodes.toSeq.sortBy(_._1).map { case (label, df) =>
-        df.select(lit("node").as("kind"), lit(label).as("label"),
-          count(lit(1)).as("n"))
-      } ++ relationships.toSeq.sortBy(_._1).map { case (label, df) =>
-        df.select(lit("rel").as("kind"), lit(label).as("label"),
-          count(lit(1)).as("n"))
-      }
-    parts.reduce(_.unionByName(_)).orderBy("kind", "label")
+    * report DataFrame `(kind, label, n)` ordered by kind and label. After
+    * [[writeStaging]] it is a local frame of the counts observed on the
+    * staging writes and runs no job (a later upsert into the same root
+    * does not move them); an unstaged graph counts its frames in one
+    * aggregate query. */
+  def stats(spark: SparkSession): DataFrame = staged match {
+    case Some(s) =>
+      def rows(kind: String, counts: Map[String, Long]) =
+        counts.toSeq.sortBy(_._1).map { case (l, n) => Row(kind, l, n) }
+      spark.createDataFrame(
+        (rows("node", s.nodeCounts) ++ rows("rel", s.relCounts)).asJava,
+        PropertyGraph.StatsSchema)
+    case None =>
+      val parts =
+        nodes.toSeq.sortBy(_._1).map { case (label, df) =>
+          df.select(lit("node").as("kind"), lit(label).as("label"),
+            count(lit(1)).as("n"))
+        } ++ relationships.toSeq.sortBy(_._1).map { case (label, df) =>
+          df.select(lit("rel").as("kind"), lit(label).as("label"),
+            count(lit(1)).as("n"))
+        }
+      parts.reduce(_.unionByName(_)).orderBy("kind", "label")
   }
 }
 
 object PropertyGraph {
+
+  /** What [[PropertyGraph.writeStaging]] left: the staging root and each
+    * table's observed row count. */
+  private final case class Staged(base: String,
+      nodeCounts: Map[String, Long], relCounts: Map[String, Long])
+
+  /** The schema of [[PropertyGraph.stats]] on both paths: literals and
+    * `count` are never null. */
+  private val StatsSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("kind", StringType, nullable = false),
+      StructField("label", StringType, nullable = false),
+      StructField("n", LongType, nullable = false)))
+  }
 
   /** Array-typed properties can't ride in a CSV cell as-is; `neo4j-admin
     * import` expects `;`-separated values under a `name:type[]` header.

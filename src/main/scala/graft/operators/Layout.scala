@@ -796,15 +796,17 @@ object Layout {
     * are logically gone from v+1 on, but PHYSICALLY purged only by
     * [[vacuumLayout]] once no kept snapshot references them (the
     * right-to-erasure caller runs vacuum after the pinned horizon
-    * passes). A no-op (no touched bucket) publishes nothing. Returns
-    * the serving version.
+    * passes). A no-op (no touched bucket) publishes nothing. The
+    * commit carries `tag` (a streaming batch id, or `-` for a batch
+    * caller). Returns the serving version.
     *
     * Scale notes (100 TB): one snapshot scan (the probe), one
     * touched-bucket-sized rewrite, one manifest-sized filter; the
     * touched-bucket id list is a BOUNDED driver fetch (≤ nBuckets
     * rows). */
   def deleteFromLayout(spark: org.apache.spark.sql.SparkSession,
-      path: String, removedIds: DataFrame, idCol: String): Long = {
+      path: String, removedIds: DataFrame, idCol: String,
+      tag: String = "-"): Long = {
     val v = snapshot(spark, path)
     val ids = removedIds
       .select(col(removedIds.columns.head).as(idCol)).distinct()
@@ -819,7 +821,7 @@ object Layout {
       v.read("manifest").filter(!col("bucket").isin(touched: _*)),
       live.filter(col("_bucket").isin(touched: _*))
         .join(broadcast(ids), Seq(idCol), "left_anti").localCheckpoint(),
-      "-")
+      tag)
   }
 
   // Commit snapshot v+1 = `kept` (rows of v's manifest) plus the

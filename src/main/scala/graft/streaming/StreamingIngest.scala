@@ -1964,7 +1964,8 @@ object StreamingIngest {
     * Crash recovery is mechanical, not a rebuild: a mid-crash
     * redelivery drops the uncommitted snapshot
     * ([[graft.operators.Layout.recoverLayoutVersions]]); a batch whose
-    * tagged append committed is skipped ([[Trigger.committed]]), and
+    * last commit landed is skipped ([[Trigger.committed]]) — the tagged
+    * append, or for a deletion-only batch its tagged erasure — and
     * any other re-runs both ops, which are idempotent at the content
     * level — a delete whose ids are already gone publishes nothing,
     * and a delete-then-append of the same rows reproduces the same
@@ -1995,8 +1996,12 @@ object StreamingIngest {
           Layout.writeLayout(Layout.zOrderLayout(live, cols, bits,
             nBuckets), storeDir, cols, "z", bits, nBuckets, bloomCols)
       } else if (!t.committed(versions)) {
+        // the erasure carries the batch tag only when it is the batch's
+        // last commit: with adds, a crash between the two commits must
+        // still re-run the append
         Layout.deleteFromLayout(t.spark, storeDir,
-          dels.unionByName(adds.select(col(idCol))).distinct(), idCol): Unit
+          dels.unionByName(adds.select(col(idCol))).distinct(), idCol,
+          tag = if (hasAdds) "-" else t.batchId.toString): Unit
         if (hasAdds)
           Layout.appendToLayout(t.spark, storeDir, adds, cols, bits,
             nBuckets, tag = t.batchId.toString): Unit

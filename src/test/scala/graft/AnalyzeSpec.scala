@@ -365,6 +365,25 @@ class AnalyzeSpec extends SparkSpec {
       Analyze.run(parse(List("layoutversions")), spark))
   }
 
+  test("layoutversions --mode vacuum without --budget keeps one version") {
+    import graft.operators.Layout
+    val dir = Files.createTempDirectory("graft-analyze-lvd").toString
+    val base = (for { x <- 0L until 8L; y <- 0L until 8L }
+      yield (x * 8 + y, x, y)).toDF("id", "x", "y")
+    Layout.writeLayout(Layout.zOrderLayout(base, Seq("x", "y"), 3, 8),
+      s"$dir/store", Seq("x", "y"), "z", 3, 8)
+    // v1 is the build; two erasures publish v2 and v3
+    Layout.deleteFromLayout(spark, s"$dir/store", Seq(0L).toDF("id"),
+      "id"): Unit
+    Layout.deleteFromLayout(spark, s"$dir/store", Seq(1L).toDF("id"),
+      "id"): Unit
+    val vac = Analyze.run(parse(List("layoutversions",
+      "--docs", s"$dir/store", "--mode", "vacuum")), spark).head()
+    assert(vac.getAs[Long]("versions_dropped") == 2L)
+    assert(Layout.snapshots(spark, s"$dir/store").map(_.n) == Seq(3L))
+    assert(Layout.readLayoutVersion(spark, s"$dir/store").count() == 62L)
+  }
+
   test("tokenbatch + autorebatch run from argv: budgeted batches, " +
       "padding audit, measured-argmin report") {
     val dir = Files.createTempDirectory("graft-analyze-tb").toString

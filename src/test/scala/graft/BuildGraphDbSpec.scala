@@ -53,10 +53,19 @@ class BuildGraphDbSpec extends SparkSpec {
          |    sources:
          |      P: { table: nation, id_key: n_nationkey }
          |""".stripMargin)
-    BuildGraphDb.run(Args(cfgPath, s"$tmp/out", upsert = true), spark)
+    val report = new java.io.ByteArrayOutputStream
+    Console.withOut(report)(BuildGraphDb.run(
+      Args(cfgPath, s"$tmp/out", csv = true, upsert = true), spark))
     // 25 seeded (shifted) ids + 25 fresh ids, all retained
     val staged = spark.read.parquet(s"$tmp/out/NGraph-1/nodes/Nation")
     assert(staged.count() == 50)
+    // the CSV export and the stats report cover the merged store, not
+    // just this run's build
+    assert(spark.read.option("header", "true").option("escape", "\"")
+      .option("multiLine", "true").csv(s"$tmp/out/NGraph-1-csv/nodes_Nation")
+      .count() == 50)
+    assert(raw"\|\s*node\s*\|\s*Nation\s*\|\s*50\s*\|".r
+      .findFirstIn(report.toString("UTF-8")).isDefined, report.toString)
     // without --upsert the same build clobbers back down to 25
     BuildGraphDb.run(Args(cfgPath, s"$tmp/out"), spark)
     assert(spark.read.parquet(s"$tmp/out/NGraph-1/nodes/Nation").count() == 25)

@@ -145,6 +145,95 @@ class GraphBuilderSpec extends SparkSpec {
     assert(header.contains(":LABEL"))
   }
 
+  /** A `_uri` label, an array property and an FK relationship table. */
+  private def stagedFixture() = GraphBuilder.build(spark, GraphConfig.fromYaml(
+    s"""Database: { name: Staged, version: "1" }
+       |Sources:
+       |  P: { source type: parquet, path: ${sf()} }
+       |Nodes:
+       |  Customer:
+       |    sources:
+       |      P: { table: customer, id_key: c_custkey, uri_key: c_name }
+       |  Nation:
+       |    sources:
+       |      P: { table: nation, id_key: n_nationkey }
+       |  Vector:
+       |    sources:
+       |      P: { table: embeddings, id_key: vec_id }
+       |Relationships:
+       |  CUSTOMER_IN_NATION:
+       |    sources:
+       |      P:
+       |        type: foreign_key
+       |        start: { node: Customer, table: customer, key: c_nationkey }
+       |        end: { node: Nation, table: nation, key: n_nationkey }
+       |""".stripMargin))
+
+  /** Per CSV table dir: the distinct header lines and the sorted data
+    * lines of its part files. */
+  private def csvTables(root: String): Map[String, (Set[String], Seq[String])] =
+    new java.io.File(root).listFiles().filter(_.isDirectory).map { dir =>
+      val parts = dir.listFiles().filter(_.getName.endsWith(".csv")).map { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().toList finally src.close()
+      }.filter(_.nonEmpty)
+      dir.getName -> ((parts.map(_.head).toSet, parts.flatMap(_.tail).sorted.toSeq))
+    }.toMap
+
+  test("a staged graph exports the same Neo4j CSV as an unstaged one") {
+    val a = Files.createTempDirectory("graft-staged-a").toString
+    val b = Files.createTempDirectory("graft-staged-b").toString
+    val g = stagedFixture()
+    g.writeStaging(a)
+    g.exportNeo4jCsv(a, Map.empty)
+    g.copy().exportNeo4jCsv(b, Map.empty)
+    val staged = csvTables(s"$a/Staged-1-csv")
+    val unstaged = csvTables(s"$b/Staged-1-csv")
+    assert(staged.keySet == Set("nodes_Customer", "nodes_Nation",
+      "nodes_Vector", "rels_CUSTOMER_IN_NATION"))
+    assert(staged == unstaged)
+    assert(staged("nodes_Customer")._1.head.contains("uri:ID(Customer)"))
+    assert(staged("nodes_Vector")._1.head.contains("embedding:float[]"))
+    assert(staged("rels_CUSTOMER_IN_NATION")._2.size == 150)
+  }
+
+  test("staged stats equal the aggregate stats, empty table included") {
+    val tmp = Files.createTempDirectory("graft-staged-stats").toString
+    val g0 = stagedFixture()
+    val g = g0.copy(nodes = g0.nodes +
+      ("Empty" -> spark.range(0).toDF("id")))
+    val unstaged = g.copy().stats(spark)
+    g.writeStaging(tmp)
+    val staged = g.stats(spark)
+    assert(staged.schema == unstaged.schema)
+    val rows = staged.collect().toSeq
+    assert(rows == unstaged.collect().toSeq)
+    assert(rows.exists(r => r.getString(1) == "Empty" && r.getLong(2) == 0L))
+  }
+
+  test("after writeStaging, stats runs no job and the export no shuffle") {
+    import org.apache.spark.sql.graft.SqlExecutions
+    val a = Files.createTempDirectory("graft-staged-plans-a").toString
+    val b = Files.createTempDirectory("graft-staged-plans-b").toString
+    val g = stagedFixture()
+    // the unstaged export re-runs the build's merge shuffle
+    val (unstagedPlans, _, _) = SqlExecutions.plansDuring(spark)(
+      g.copy().exportNeo4jCsv(b, Map.empty))
+    assert(unstagedPlans.exists(_.contains("Exchange")))
+    g.writeStaging(a)
+    val (statsExecs, statsJobs, rows) =
+      SqlExecutions.plansDuring(spark)(g.stats(spark).collect())
+    assert(statsJobs == 0 && rows.length == 4)
+    assert(statsExecs.forall(p => !p.contains("Scan parquet") &&
+      !p.contains("Exchange")), statsExecs.mkString("\n"))
+    val (built, _) = SqlExecutions.during(spark)(g.stats(spark))
+    assert(built.isEmpty)
+    val (plans, _, _) = SqlExecutions.plansDuring(spark)(
+      g.exportNeo4jCsv(a, Map.empty))
+    assert(plans.size == 4)
+    assert(plans.forall(!_.contains("Exchange")), plans.mkString("\n"))
+  }
+
   test("Neo4j CSV export round-trips RFC-4180 pathological values") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-rfc").toString
