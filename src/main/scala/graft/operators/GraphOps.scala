@@ -527,7 +527,8 @@ object GraphOps {
     * cost is bounded by the current core candidate, not the input; rounds
     * are bounded by the peeling depth (small on real graphs — hubs
     * survive, fringes fall off in the first rounds). The convergence
-    * probe is an exact count.
+    * probe is an exact count; a peel still shrinking after `maxIter`
+    * rounds fails rather than return a superset of the core.
     *
     * @return one-column DataFrame `id` of k-core members (empty when the
     *         graph has no k-core). */
@@ -555,11 +556,10 @@ object GraphOps {
       curEdges = n
       i += 1
     }
-    if (curEdges != prevEdges && curEdges > 0)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"kCore stopped at maxIter=$maxIter before the peeling fixpoint " +
-          "(long path-like fringes peel two nodes per round) — the " +
-          "result is a SUPERSET of the k-core. Raise maxIter.")
+    require(curEdges == prevEdges || curEdges == 0,
+      s"kCore did not reach the peeling fixpoint in $maxIter rounds " +
+        "(long path-like fringes peel two nodes per round) — raise " +
+        "maxIter")
     e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
       .distinct()
   }
@@ -587,7 +587,8 @@ object GraphOps {
     * itself removes fan-edges in the first rounds, collapsing hub
     * degrees exactly where wedges explode. Edge lineage is truncated
     * per round with the supplied [[graft.Checkpointer]]; the
-    * convergence probe is an exact count.
+    * convergence probe is an exact count, and a peel still shrinking
+    * after `maxIter` rounds fails rather than return a superset.
     *
     * @return surviving canonical edges (`a` < `b`), the k-truss edge
     *         set (empty when none). */
@@ -621,11 +622,9 @@ object GraphOps {
       curEdges = n
       i += 1
     }
-    if (curEdges != prevEdges && curEdges > 0)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"kTruss stopped at maxIter=$maxIter before the peeling " +
-          "fixpoint — the result is a SUPERSET of the k-truss. " +
-          "Raise maxIter.")
+    require(curEdges == prevEdges || curEdges == 0,
+      s"kTruss did not reach the peeling fixpoint in $maxIter rounds " +
+        "— raise maxIter")
     e
   }
 
@@ -1687,8 +1686,8 @@ object GraphOps {
     * membership joins; the stored labels frame is touched only by one
     * anti-join and one left join. This is the streaming-twin
     * discipline applied to community labels
-    * ([[graft.streaming.StreamingIngest.streamingCommunities]] is the
-    * foreachBatch loop over this primitive).
+    * ([[graft.streaming.StreamingIngest.streamingCommunitiesCdc]]'s
+    * per-trigger add step).
     *
     * @param allEdges   the FULL accumulated edge set (old ∪ delta)
     * @param deltaEdges the newly arrived edges (its endpoints seed

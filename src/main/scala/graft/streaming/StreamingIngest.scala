@@ -684,73 +684,11 @@ object StreamingIngest {
       }
   }
 
-  /** Incremental community maintenance on edge arrivals — the
-    * streaming-twin loop over
-    * [[graft.operators.GraphOps.incrementalCommunities]]: each
-    * micro-batch of (`start_id`, `end_id`) edges is appended to the
-    * accumulated edge store, then ONLY the delta's `hops`-neighborhood
-    * re-runs seeded gated Louvain moves against the stored labels, and
-    * the refreshed (`id`, `community`) table is rewritten. The first
-    * batch cold-starts with a plain [[graft.operators.GraphOps.louvain]]
-    * run. foreachBatch, not a stateful operator: community detection is
-    * iterative and global-per-round — the label store IS the state, and
-    * parquet is its honest representation (queryable mid-stream, shared
-    * with the batch path, restart-safe via the checkpointed source
-    * offsets + idempotent label overwrite; the edge append is
-    * at-least-once across restarts, which the simple-graph `distinct`
-    * inside the maintenance primitive absorbs).
-    *
-    * Twin contract (spec-pinned): after each batch the stored labels
-    * are BIT-EQUAL to folding the same batches through
-    * `incrementalCommunities` by hand — same seeds, same gated
-    * schedule, same region.
-    *
-    * Scale notes: per-trigger cost scales with the batch's
-    * neighborhood, never the accumulated graph (see the primitive's
-    * scale notes); the labels rewrite is labels-sized. Periodic full
-    * [[graft.operators.GraphOps.leiden]] consolidation remains the
-    * compaction story.
-    *
-    * The edge append writes loose parquet files into `edgesDir`, so
-    * [[streamingCommunitiesCdc]] refuses that directory until its files
-    * move into a `batch=-1/` subdirectory. */
-  def streamingCommunities(edges: DataFrame, edgesDir: String,
-      labelsDir: String, checkpointDir: String, rounds: Int = 4,
-      hops: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    edges
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.select(col("start_id"), col("end_id"))
-          .localCheckpoint()
-        if (!delta.isEmpty) {
-          delta.write.mode("append").parquet(edgesDir)
-          val all = spark.read.parquet(edgesDir)
-          val marker =
-            new org.apache.hadoop.fs.Path(s"$labelsDir/_SUCCESS")
-          val havePrev = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(marker)
-          val next =
-            if (havePrev) graft.operators.GraphOps.incrementalCommunities(
-              all, delta, spark.read.parquet(labelsDir),
-              rounds = rounds, hops = hops)
-            else graft.operators.GraphOps.louvain(all, rounds = rounds,
-              schedule = "g" * rounds)
-          // Materialize BEFORE overwriting: the plan reads the same
-          // labels parquet it is about to replace.
-          next.localCheckpoint()
-            .write.mode("overwrite").parquet(labelsDir)
-        }
-      }
-      .start()
-
-  /** Interval-island maintenance on interval arrivals — the
-    * [[streamingScc]] loop over
-    * [[graft.operators.Funnel.absorbIntervals]], and EXACT by the same
-    * append-only-merge theorem shape (new intervals only merge
-    * islands; stored islands preserve coverage AND carry their
+  /** Interval-island maintenance on interval arrivals — a loop over
+    * [[graft.operators.Funnel.absorbIntervals]], EXACT by the
+    * append-only-merge theorem shape of
+    * [[graft.operators.GraphOps.incrementalScc]] (new intervals only
+    * merge islands; stored islands preserve coverage AND carry their
     * original counts): after every completed trigger the islands
     * store is bit-equal to a full [[graft.operators.Funnel
     * .mergeIntervals]] over every interval ever seen. Cold start =
@@ -763,8 +701,11 @@ object StreamingIngest {
     * redelivery is a no-op, and the raw write overwrites its own
     * `rawDir/batch=<id>/`, so it never duplicates ground-truth rows.
     * The absorb is NOT idempotent — re-absorbing a delta inflates its
-    * island's `n_merged` — so a mid-crash redelivery cold-rebuilds the
-    * islands from the raw store instead.
+    * island's `n_merged` — so the islands commit as frame `islands` of
+    * a [[graft.operators.FrameVersions]] store at `islandsDir`
+    * ([[commitFrame]]): a redelivery whose commit landed skips it, and
+    * any other absorbs into the latest commit, still the pre-batch
+    * islands.
     *
     * LAYOUT (breaking change vs the pre-r11 flat append): the raw
     * store is `batch=<id>/` partition subdirectories. A pre-r11 FLAT
@@ -780,12 +721,11 @@ object StreamingIngest {
         Seq(rawDir))(_.select(col(keyCol), col(startCol), col(endCol))) {
       (delta, t) =>
         t.record(delta, rawDir): Unit
-        replace(
-          (if (t.built(islandsDir) && !t.midCrash)
-            Funnel.absorbIntervals(t.spark.read.parquet(islandsDir),
-              delta, keyCol, startCol, endCol, minGap)
-          else Funnel.mergeIntervals(t.spark.read.parquet(rawDir),
-            keyCol, startCol, endCol, minGap)) -> islandsDir)
+        commitFrame(t, islandsDir, "islands")(
+          Funnel.absorbIntervals(_, delta, keyCol, startCol, endCol,
+            minGap),
+          Funnel.mergeIntervals(t.spark.read.parquet(rawDir), keyCol,
+            startCol, endCol, minGap))
     }
 
   /** Interval-island maintenance under a CDC interval stream — adds
@@ -807,10 +747,9 @@ object StreamingIngest {
     * duplicates are deduplicated by the marker, not the store).
     *
     * Ground truth lives in two op stores (`rawDir/batch=<id>/`,
-    * `delsDir/batch=<id>/`) under [[markerGuarded]]. The absorb path
-    * is NOT idempotent (a re-absorbed interval would inflate its
-    * island's `n_merged`), so a mid-crash redelivery cold-rebuilds the
-    * islands store from the reconciled ground truth.
+    * `delsDir/batch=<id>/`) under [[markerGuarded]]; the islands are
+    * frame `islands` of the versioned store at `islandsDir`, committed
+    * once per batch ([[commitFrame]]).
     *
     * Scale notes (100 TB): add-only triggers are islands+delta-sized
     * after the reconciliation fold; the fold itself is one
@@ -832,8 +771,8 @@ object StreamingIngest {
       // keepPre = the PRE-batch live set
       def live(keepPre: Boolean) = setFold(t, rawDir, delsDir, keys,
         adds.limit(0), if (keepPre) col("_b") =!= t.batchId else lit(true))
-      replace((
-        if (t.built(islandsDir) && !t.midCrash) {
+      commitFrame(t, islandsDir, "islands")(
+        prev => {
           val now = live(keepPre = false).localCheckpoint()
           // the ADD delta the store hasn't absorbed yet: this batch's
           // adds that are live after the fold (a same-batch delete must
@@ -845,7 +784,6 @@ object StreamingIngest {
           val newLive = adds.join(now, keys, "left_semi")
             .join(live(keepPre = true), keys, "left_anti")
             .localCheckpoint()
-          val prev = t.spark.read.parquet(islandsDir)
           val st1 =
             if (newLive.isEmpty) prev
             else Funnel.absorbIntervals(prev, newLive, keyCol, startCol,
@@ -853,8 +791,9 @@ object StreamingIngest {
           if (!hasDels) st1
           else Funnel.deleteIntervals(st1, now, dels, keyCol, startCol,
             endCol, minGap)
-        } else Funnel.mergeIntervals(live(keepPre = false), keyCol,
-          startCol, endCol, minGap)) -> islandsDir)
+        },
+        Funnel.mergeIntervals(live(keepPre = false), keyCol, startCol,
+          endCol, minGap))
     }
   }
 
@@ -863,9 +802,6 @@ object StreamingIngest {
     * and never finished. */
   private final case class Trigger(spark: SparkSession, fs: FileSystem,
       batchId: Long, midCrash: Boolean) {
-
-    /** True iff the store rooted at `dir` was ever written. */
-    def built(dir: String): Boolean = fs.exists(new Path(s"$dir/_SUCCESS"))
 
     /** True iff op store `dir` holds at least one `batch=<id>/` data
       * subdirectory. The marker tree alone makes the directory EXIST,
@@ -912,8 +848,7 @@ object StreamingIngest {
     * write, every directory in `opStores` must pass
     * [[requireBatchLayout]]. Then the two-phase marker under
     * `markerDir/_batches/` — underscore-prefixed, so parquet readers
-    * never see it, and kept under an op store because the maintained
-    * stores are overwritten whole, which would wipe it:
+    * never see it and a vacuum leaves it alone:
     *
     *  - the final marker `<id>` present: the batch completed before,
     *    and its redelivery is a no-op;
@@ -922,18 +857,14 @@ object StreamingIngest {
     *    started marker is deleted;
     *  - a started marker already present means an earlier attempt died
     *    after any subset of the body's writes. The body is told so
-    *    (`midCrash`). The twins whose maintain step reads a store they
-    *    then overwrite in place take a cold-rebuild branch: the
-    *    intervals twins, [[streamingDupClustersCdc]],
-    *    [[streamingSccCdc]] and [[streamingCommunitiesCdc]]; the ANN
-    *    twins purge the batch's partial append first. A twin whose
-    *    fold is idempotent given the op stores re-runs as on a first
-    *    delivery. The twins whose store commits through
-    *    [[graft.operators.FrameVersions]] (the layout store included)
-    *    only drop the crashed attempt's uncommitted version: their
-    *    commit's batch tag ([[Trigger.committed]]) says whether the
-    *    batch applied, and the latest commit otherwise still holds
-    *    the pre-batch state.
+    *    (`midCrash`). Only the ANN twins, whose index takes in-place
+    *    appends, purge the batch's partial append first. Every other
+    *    store commits through [[graft.operators.FrameVersions]] with
+    *    the batch id as its tag ([[commitOnce]], the layout and
+    *    signature twins by hand), so the crashed attempt's uncommitted
+    *    version is dropped, the tag ([[Trigger.committed]]) says
+    *    whether the batch applied, and the latest commit otherwise
+    *    still holds the pre-batch state.
     *
     * Op-store writes go through [[Trigger.record]], so a redelivered
     * batch replaces its own rows. */
@@ -965,6 +896,43 @@ object StreamingIngest {
       }
       .start()
   }
+
+  /** The commit step of every twin that maintains a
+    * [[graft.operators.FrameVersions]] store at `dir`:
+    *
+    *  1. a mid-crash redelivery drops the crashed attempt's claim
+    *     ([[graft.operators.FrameVersions.recover]]);
+    *  2. a latest commit tagged with this batch or a later one
+    *     ([[Trigger.committed]]) means the batch applied, so nothing is
+    *     computed;
+    *  3. otherwise `maintain` runs on the latest committed version, or
+    *     `build` runs from the op-store fold when no commit exists, and
+    *     `save` commits the result as the next version, tagged with the
+    *     batch id;
+    *  4. every older version is vacuumed.
+    *
+    * The pre-batch state is therefore always the latest commit: a
+    * crash anywhere needs no rebuild, and a reader never finds the
+    * store missing or half-written. A store an in-place save left with
+    * no commit is built from the op stores, which hold the ground
+    * truth, and the vacuum then drops its root files. */
+  private def commitOnce[S](t: Trigger, dir: String)(
+      maintain: FrameVersions.Version => S, build: => S)(
+      save: (S, String) => Long): Unit = {
+    if (t.midCrash) FrameVersions.recover(t.spark, dir)
+    if (!t.committed(dir)) {
+      val v = FrameVersions.latest(t.spark, dir)
+      save(if (v.n >= 1) maintain(v) else build, t.batchId.toString): Unit
+    }
+    FrameVersions.vacuum(t.spark, dir): Unit
+  }
+
+  /** [[commitOnce]] for a one-frame store: `maintain` takes the latest
+    * committed frame `name`, and the result commits as `name`. */
+  private def commitFrame(t: Trigger, dir: String, name: String)(
+      maintain: DataFrame => DataFrame, build: => DataFrame): Unit =
+    commitOnce(t, dir)(v => maintain(v.read(name)), build)(
+      (df, tag) => FrameVersions.commit(t.spark, dir, Seq(name -> df), tag))
 
   /** A CDC twin's projection: the op column as the string `_op`, then
     * `cols`. */
@@ -1000,13 +968,6 @@ object StreamingIngest {
       .localCheckpoint()
     (adds, dels)
   }
-
-  /** Materializes every frame, then overwrites each store with its
-    * frame: the maintain plans read the very parquet they replace, so
-    * no store may be overwritten before all of them are computed. */
-  private def replace(stores: (DataFrame, String)*): Unit =
-    stores.map { case (df, dir) => (df.localCheckpoint(), dir) }
-      .foreach { case (df, dir) => df.write.mode("overwrite").parquet(dir) }
 
   /** Per-id latest-wins reconciliation of a batchId-keyed op store,
     * shared by the lexical, LM, word-store, PCA, layout and
@@ -1171,9 +1132,9 @@ object StreamingIngest {
     * recompute over the live pair graph (the spec asserts both).
     *
     * Ground truth = two op stores (`pairsDir/batch=`, `delsDir/batch=`)
-    * under [[markerGuarded]], markers under `pairsDir`. The
-    * incremental step reads the clusters store it then overwrites, so
-    * a mid-crash redelivery cold-rebuilds from the fold. */
+    * under [[markerGuarded]], markers under `pairsDir`. The clusters
+    * are frame `clusters` of the versioned store at `clustersDir`,
+    * committed once per batch ([[commitFrame]]). */
   def streamingDupClustersCdc(events: DataFrame, pairsDir: String,
       delsDir: String, clustersDir: String, checkpointDir: String,
       opCol: String = "op", maxIter: Int = 25): StreamingQuery =
@@ -1208,15 +1169,14 @@ object StreamingIngest {
         .filter((col("_da").isNull || col("_da") < col("_ab")) &&
           (col("_dbb").isNull || col("_dbb") < col("_ab")))
         .select("id_a", "id_b")
-      replace((
-        if (t.built(clustersDir) && !t.midCrash) {
-          val prev = spark.read.parquet(clustersDir)
+      commitFrame(t, clustersDir, "clusters")(
+        prev => {
           val l1 =
             if (!hasAdds) prev
             else Dedup.incrementalDupClusters(adds, prev, maxIter)
           if (!hasDels) l1
           else Dedup.decrementalDupClusters(livePairs(), dels, l1, maxIter)
-        } else {
+        }, {
           val live = livePairs().localCheckpoint()
           // vertex rule (matches the composed primitives): a doc has a
           // row iff its own latest takedown is older than the latest
@@ -1229,7 +1189,7 @@ object StreamingIngest {
             .filter(col("_db").isNull || col("_db") < col("_vb"))
             .select("id")
           Dedup.connectedComponents(verts, "id", live, maxIter)
-        }) -> clustersDir)
+        })
     }
 
   /** ANN index maintenance under a CDC vector stream — adds AND
@@ -1316,8 +1276,7 @@ object StreamingIngest {
     }
 
   /** EXACT SCC maintenance under a CDC edge stream — adds AND deletes
-    * interleaved, the takedown-complete upgrade of [[streamingScc]]:
-    * each trigger applies its additions through
+    * interleaved: each trigger applies its additions through
     * [[graft.operators.GraphOps.incrementalScc]] (exact: appends only
     * merge) and then its deletions through
     * [[graft.operators.GraphOps.decrementalScc]] (exact: deletes only
@@ -1327,36 +1286,39 @@ object StreamingIngest {
     * deletes win over adds of the same edge (the order the two
     * primitives apply); across batches the latest operation wins —
     * re-adding a previously deleted edge resurrects it ([[setFold]]).
+    * An add-only stream (every row `op = "add"`) is the append-only
+    * case: cold start = full SCC, then every trigger is the add step.
     *
     * Ground truth lives in two op stores (`edgesDir/batch=<id>/`,
     * `delsDir/batch=<id>/`) under [[markerGuarded]], markers under
-    * `edgesDir`. The labels and quotient stores are overwritten one
-    * after the other, so a crash between the two leaves them out of
-    * step; a mid-crash redelivery therefore cold-rebuilds both from the
-    * reconciled ground truth. An `edgesDir` that [[streamingScc]]
-    * appended loose files into is refused by the layout guard.
+    * `edgesDir`. The state is one versioned store at `stateDir` with
+    * frames `labels` (`id`, `scc`) and `quotient` (`src_scc`,
+    * `dst_scc`, the condensation), committed together once per batch
+    * ([[commitOnce]]), so the two never fall out of step. An
+    * `edgesDir` holding loose appended files is refused by the layout
+    * guard.
     *
     * Scale notes (100 TB): add-only triggers never read the
-    * accumulated stores (quotient+delta cost, exactly [[streamingScc]]);
-    * a delete-bearing trigger pays ONE latest-wins reconciliation
-    * groupBy over the op stores (edge-key rows — an scc/edge-bucketed
-    * store makes it partition-local) before the delta-proportional
-    * decremental step; takedowns are rare relative to appends, which
-    * is the asymmetry this design prices in. */
+    * accumulated edges — the quotient frame makes them
+    * condensation+delta-sized; a delete-bearing trigger pays ONE
+    * latest-wins reconciliation groupBy over the op stores (edge-key
+    * rows — an scc/edge-bucketed store makes it partition-local)
+    * before the delta-proportional decremental step; takedowns are
+    * rare relative to appends, which is the asymmetry this design
+    * prices in. */
   def streamingSccCdc(events: DataFrame, edgesDir: String,
-      delsDir: String, labelsDir: String, quotientDir: String,
-      checkpointDir: String, opCol: String = "op",
-      maxRounds: Int = 20, maxIter: Int = 25): StreamingQuery =
+      delsDir: String, stateDir: String, checkpointDir: String,
+      opCol: String = "op", maxRounds: Int = 20,
+      maxIter: Int = 25): StreamingQuery =
     markerGuarded(events, checkpointDir, edgesDir, "streamingSccCdc",
         Seq(edgesDir, delsDir))(withOp(opCol, edgeCols)) { (b, t) =>
       val (adds, dels) = split(b, edgeCols)
       val hasAdds = t.record(adds, edgesDir)
       val hasDels = t.record(dels, delsDir)
       def remaining() = setFold(t, edgesDir, delsDir, edgeCols, adds.limit(0))
-      val st =
-        if (t.built(labelsDir) && !t.midCrash) {
-          val prev = GraphOps.SccState(t.spark.read.parquet(labelsDir),
-            t.spark.read.parquet(quotientDir))
+      commitOnce(t, stateDir)(
+        v => {
+          val prev = GraphOps.SccState(v.read("labels"), v.read("quotient"))
           val st1 =
             if (!hasAdds) prev
             else GraphOps.incrementalScc(adds, prev.labels, prev.quotient,
@@ -1364,18 +1326,17 @@ object StreamingIngest {
           if (!hasDels) st1
           else GraphOps.decrementalScc(remaining(), dels, st1.labels,
             st1.quotient, maxRounds, maxIter)
-        } else {
+        }, {
           val all = remaining()
           val lb = GraphOps.stronglyConnectedComponents(all, maxRounds,
             maxIter)
           GraphOps.SccState(lb, GraphOps.condensation(all, lb))
-        }
-      replace(st.labels -> labelsDir, st.quotient -> quotientDir)
+        })((st, tag) => FrameVersions.commit(t.spark, stateDir,
+          Seq("labels" -> st.labels, "quotient" -> st.quotient), tag))
     }
 
   /** Community-label maintenance under a CDC edge stream — adds AND
-    * deletes interleaved, the takedown-complete upgrade of
-    * [[streamingCommunities]] and the community-side twin of
+    * deletes interleaved, the community-side twin of
     * [[streamingSccCdc]]: each trigger applies its additions through
     * [[graft.operators.GraphOps.incrementalCommunities]] (seeded
     * gated moves over the delta's hop-region) and then its deletions
@@ -1386,23 +1347,25 @@ object StreamingIngest {
     * application order — the add lands, then the delete-side rebuild
     * runs on ground truth that excludes it); across batches the
     * latest operation wins, so re-adding a deleted edge resurrects it
-    * and its region re-coalesces. Unlike the SCC twin there is no
-    * bit-equality theorem — community maintenance is the documented
-    * delta-local approximation on BOTH sides, with periodic full
+    * and its region re-coalesces. An add-only stream is the
+    * append-only case: cold start = plain gated
+    * [[graft.operators.GraphOps.louvain]], then every trigger is the
+    * add step. Unlike the SCC twin there is no bit-equality theorem —
+    * community maintenance is the documented delta-local
+    * approximation on BOTH sides, with periodic full
     * [[graft.operators.GraphOps.leiden]] runs as the consolidation
     * story.
     *
     * Ground truth lives in two op stores (`edgesDir/batch=<id>/`,
     * `delsDir/batch=<id>/`) under [[markerGuarded]], markers under
-    * `edgesDir`, reconciled per edge by [[setFold]]; the incremental
-    * step reads the labels store it then overwrites, so a mid-crash
-    * redelivery cold-rebuilds. The incremental step needs the full
-    * effective edge set (its hop-region induces from it), so every
-    * trigger pays one reconciliation fold over the op stores — the cost
-    * [[streamingCommunities]] already paid reading its accumulated
-    * append store, now delete-aware. The add-step reconciliation
-    * EXCLUDES the current batch's deletes (the world the adds land
-    * in); the delete step reconciles everything. */
+    * `edgesDir`, reconciled per edge by [[setFold]]; the labels are
+    * frame `labels` of the versioned store at `labelsDir`, committed
+    * once per batch ([[commitFrame]]). The incremental step needs the
+    * full effective edge set (its hop-region induces from it), so
+    * every trigger pays one reconciliation fold over the op stores.
+    * The add-step reconciliation EXCLUDES the current batch's deletes
+    * (the world the adds land in); the delete step reconciles
+    * everything. */
   def streamingCommunitiesCdc(events: DataFrame, edgesDir: String,
       delsDir: String, labelsDir: String, checkpointDir: String,
       opCol: String = "op", rounds: Int = 4,
@@ -1421,9 +1384,8 @@ object StreamingIngest {
         edgeCols, adds.limit(0),
         if (asOfAdds) col("_o") === 1 || col("_b") =!= t.batchId
         else lit(true))
-      replace((
-        if (t.built(labelsDir) && !t.midCrash) {
-          val prev = t.spark.read.parquet(labelsDir)
+      commitFrame(t, labelsDir, "labels")(
+        prev => {
           val l1 =
             if (!hasAdds) prev
             else GraphOps.incrementalCommunities(effective(asOfAdds = true),
@@ -1431,8 +1393,9 @@ object StreamingIngest {
           if (!hasDels) l1
           else GraphOps.decrementalCommunities(effective(asOfAdds = false),
             dels, l1, rounds = rounds)
-        } else GraphOps.louvain(effective(asOfAdds = false),
-          rounds = rounds, schedule = "g" * rounds)) -> labelsDir)
+        },
+        GraphOps.louvain(effective(asOfAdds = false), rounds = rounds,
+          schedule = "g" * rounds))
     }
 
   /** Message-passing feature store under a CDC edge stream — the
@@ -1450,13 +1413,13 @@ object StreamingIngest {
     * static base-feature frame (ground truth, re-read per trigger by
     * reference). Cold start = one full run.
     *
-    * Exactly-once via [[markerGuarded]], markers under `edgesDir`. The
-    * maintain step recomputes the changed neighborhoods from the op
-    * stores alone, so a mid-crash redelivery re-runs it unchanged.
+    * Exactly-once via [[markerGuarded]], markers under `edgesDir`; the
+    * aggregates are frame `agg` of the versioned store at `aggDir`,
+    * committed once per batch ([[commitFrame]]).
     *
     * Scale notes (100 TB): per trigger, one latest-wins fold over the
     * op stores plus the primitive's change-neighborhood-sized work;
-    * the stored aggregate frame is overwritten whole (node-sized, not
+    * each commit writes the whole aggregate frame (node-sized, not
     * edge-sized). */
   def streamingNeighborAgg(events: DataFrame, features: DataFrame,
       edgesDir: String, delsDir: String, aggDir: String,
@@ -1470,77 +1433,12 @@ object StreamingIngest {
       t.record(dels, delsDir): Unit
       val effective = setFold(t, edgesDir, delsDir, edgeCols, adds.limit(0))
         .localCheckpoint()
-      replace((
-        if (t.built(aggDir))
-          GraphOps.maintainNeighborAgg(effective, adds.unionByName(dels),
-            features, t.spark.read.parquet(aggDir), idCol, featCols, rounds,
-            direction, agg)
-        else GraphOps.neighborAgg(effective, features, idCol, featCols,
-          rounds, direction, agg)) -> aggDir)
+      commitFrame(t, aggDir, "agg")(
+        GraphOps.maintainNeighborAgg(effective, adds.unionByName(dels),
+          features, _, idCol, featCols, rounds, direction, agg),
+        GraphOps.neighborAgg(effective, features, idCol, featCols, rounds,
+          direction, agg))
     }
-
-  /** Incremental SCC maintenance on edge arrivals — the
-    * [[streamingCommunities]] loop over
-    * [[graft.operators.GraphOps.incrementalScc]], with one crucial
-    * upgrade: the incremental step is EXACT (append-only edges only
-    * merge SCCs — see the primitive's theorem note), so the stored
-    * labels are bit-equal to a full recompute after every trigger,
-    * not a local approximation needing periodic consolidation.
-    *
-    * Two parquet stores ARE the state: (`id`, `scc`) labels and the
-    * (`src_scc`, `dst_scc`) condensation — the quotient store is what
-    * makes each trigger condensation-sized + delta-sized instead of
-    * corpus-sized: after the cold-start batch (full
-    * [[graft.operators.GraphOps.stronglyConnectedComponents]] over the
-    * accumulated store), the accumulated edge table is NEVER re-read;
-    * the append to `edgesDir` is durability only (cold restart,
-    * audits). At-least-once batch redelivery is absorbed twice over:
-    * the quotient union runs `distinct`, and re-applying an already
-    * merged delta is a fixpoint (SCCs only merge once).
-    *
-    * Both stores localCheckpoint before either overwrite — the
-    * incremental plan reads the same parquet paths it replaces.
-    *
-    * The edge append writes loose parquet files into `edgesDir`, so
-    * [[streamingSccCdc]] refuses that directory until its files move
-    * into a `batch=-1/` subdirectory. */
-  def streamingScc(edges: DataFrame, edgesDir: String,
-      labelsDir: String, quotientDir: String, checkpointDir: String,
-      maxRounds: Int = 20,
-      maxIter: Int = 25): org.apache.spark.sql.streaming.StreamingQuery =
-    edges
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.select(col("start_id"), col("end_id"))
-          .localCheckpoint()
-        if (!delta.isEmpty) {
-          delta.write.mode("append").parquet(edgesDir)
-          val marker =
-            new org.apache.hadoop.fs.Path(s"$labelsDir/_SUCCESS")
-          val havePrev = marker
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(marker)
-          val (labels, quotient) =
-            if (havePrev) {
-              val st = graft.operators.GraphOps.incrementalScc(delta,
-                spark.read.parquet(labelsDir),
-                spark.read.parquet(quotientDir), maxRounds, maxIter)
-              (st.labels, st.quotient)
-            } else {
-              val all = spark.read.parquet(edgesDir)
-              val lb = graft.operators.GraphOps
-                .stronglyConnectedComponents(all, maxRounds, maxIter)
-              (lb, graft.operators.GraphOps.condensation(all, lb))
-            }
-          val lc = labels.localCheckpoint()
-          val qc = quotient.localCheckpoint()
-          lc.write.mode("overwrite").parquet(labelsDir)
-          qc.write.mode("overwrite").parquet(quotientDir)
-        }
-      }
-      .start()
 
   /** The body the lexical, trigram-LM, word-store and PCA-moment twins
     * share: a per-id CDC stream of (`idCol`, `payloadCol`) rows kept in
@@ -1556,20 +1454,14 @@ object StreamingIngest {
     * Same-trigger duplicate adds fold to one deterministic row.
     *
     * Each trigger runs `maintain(load(), adds, dels, leaving)` on the
-    * latest committed version and `save`s the result as the next one,
-    * tagged with the batch id; a store with no committed version is
-    * `build` from the fold of every batch instead. `leaving` yields the
-    * rows that leave the store — takedowns and the old rows of live
-    * re-adds — recovered from the op-store fold AS OF THE PREVIOUS
-    * BATCH, since a store that keeps no per-document rows cannot
-    * subtract what it cannot see; it is computed only when a twin asks
-    * for it. Then every older version is vacuumed.
-    *
-    * Crash recovery needs no branch: a redelivery whose commit already
-    * landed skips the save ([[Trigger.committed]]), and one whose
-    * commit did not land drops the crashed attempt's claim
-    * ([[graft.operators.FrameVersions.recover]]) and maintains from the
-    * latest committed version, which is still the pre-batch state. */
+    * latest committed version, or `build`s a store with no committed
+    * version from the fold of every batch, and `save`s the result as
+    * the next version — the [[commitOnce]] step, so crash recovery
+    * needs no branch. `leaving` yields the rows that leave the store —
+    * takedowns and the old rows of live re-adds — recovered from the
+    * op-store fold AS OF THE PREVIOUS BATCH, since a store that keeps
+    * no per-document rows cannot subtract what it cannot see; it is
+    * computed only when a twin asks for it. */
   private def maintainedDocStore[S](events: DataFrame, docsDir: String,
       delsDir: String, storeDir: String, checkpointDir: String,
       idCol: String, payloadCol: String, opCol: String, who: String)(
@@ -1579,22 +1471,19 @@ object StreamingIngest {
     markerGuarded(events, checkpointDir, docsDir, who,
         Seq(docsDir, delsDir))(withOp(opCol, Seq(idCol, payloadCol))) {
       (b, t) =>
-        if (t.midCrash) FrameVersions.recover(t.spark, storeDir)
         val (adds, dels) = idOps(b, idCol, Seq(payloadCol))
         t.record(adds, docsDir): Unit
         t.record(dels, delsDir): Unit
         def live(limit: Long) = latestWinsFold(t, docsDir, Some(delsDir),
           idCol, Seq(payloadCol), adds.limit(0), limit)
-        if (!t.committed(storeDir)) save(
-          if (FrameVersions.current(t.spark, storeDir) >= 1) {
-            // this trigger's own writes are excluded by the < filter
-            lazy val leaving = live(t.batchId)
-              .join(broadcast(dels.unionByName(adds.select(col(idCol)))
-                .distinct()), Seq(idCol), "left_semi")
-              .localCheckpoint()
-            maintain(load(t.spark), adds, dels, () => leaving)
-          } else build(live(Long.MaxValue)), t.batchId.toString): Unit
-        FrameVersions.vacuum(t.spark, storeDir): Unit
+        commitOnce(t, storeDir)(_ => {
+          // this trigger's own writes are excluded by the < filter
+          lazy val leaving = live(t.batchId)
+            .join(broadcast(dels.unionByName(adds.select(col(idCol)))
+              .distinct()), Seq(idCol), "left_semi")
+            .localCheckpoint()
+          maintain(load(t.spark), adds, dels, () => leaving)
+        }, build(live(Long.MaxValue)))(save)
     }
 
   /** Lexical (BM25/TF-IDF) index maintenance under a CDC document
@@ -2030,11 +1919,9 @@ object StreamingIngest {
     * the dedup twin's job).
     *
     * Ground truth = two op stores (`docsDir/batch=`, `benchDir/batch=`)
-    * under [[markerGuarded]], markers under `docsDir`. The whole fold
-    * is IDEMPOTENT given the op stores — the clean-store rewrite
-    * replaces exactly the recomputed ids with rows that are functions
-    * of ground truth alone — so a mid-crash redelivery re-runs it
-    * unchanged, unlike the absorb-based intervals twin.
+    * under [[markerGuarded]], markers under `docsDir`; the scrubbed
+    * docs are frame `clean` of the versioned store at `cleanDir`,
+    * committed once per batch ([[commitFrame]]).
     *
     * Scale notes (100 TB): an add-only trigger scrubs the DELTA docs
     * only, against broadcast bench shingle hashes (the
@@ -2067,8 +1954,8 @@ object StreamingIngest {
           if (t.hasData(benchDir))
             t.spark.read.parquet(benchDir).select(col(idCol), col(textCol))
           else bench.limit(0)
-        replace((
-          if (t.built(cleanDir)) {
+        commitFrame(t, cleanDir, "clean")(
+          prev => {
             val live = liveDocs().localCheckpoint()
             // stored docs the NEW bench shingles touch: their clean text
             // is stale — re-scrub from ground truth against the FULL
@@ -2083,12 +1970,12 @@ object StreamingIngest {
             val rescrubbed = Decontaminate.scrubContaminatedSpans(
               live.join(broadcast(redo), Seq(idCol), "left_semi"),
               textCol, idCol, benchAll, textCol, shingleSize)
-            t.spark.read.parquet(cleanDir)
-              .join(broadcast(redo), Seq(idCol), "left_anti")
+            prev.join(broadcast(redo), Seq(idCol), "left_anti")
               .select(col(idCol), col("clean_text"), col("n_tokens"),
                 col("n_removed"))
               .unionByName(rescrubbed)
-          } else Decontaminate.scrubContaminatedSpans(liveDocs(), textCol,
-            idCol, benchAll, textCol, shingleSize)) -> cleanDir)
+          },
+          Decontaminate.scrubContaminatedSpans(liveDocs(), textCol, idCol,
+            benchAll, textCol, shingleSize))
     }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
-import graft.operators.{Dedup, FrameVersions, GraphOps, Layout,
-  Relevance, Similarity, Tokenizer}
+import graft.operators.{Decontaminate, Dedup, FrameVersions, Funnel,
+  GraphOps, Layout, Relevance, Similarity, Tokenizer}
 import graft.streaming.StreamingIngest
 
 /** Crash injection for every store that commits through
@@ -27,8 +27,9 @@ import graft.streaming.StreamingIngest
   *
   * After kills 1 and 2 a load serves the previous version exactly.
   * After every redelivery the store equals the full rebuild (PageRank:
-  * the batch warm-start fold), the batch committed exactly once, and a
-  * twin that vacuums keeps one committed version. Stores live on the
+  * the batch warm-start fold; communities: the incremental-then-
+  * decremental fold), the batch committed exactly once, and a twin
+  * that vacuums keeps one committed version. Stores live on the
   * `inject:` file system ([[InjectingFs]]), which throws at the kill
   * point. The layout twin's cold start, whose first trigger builds
   * the store, is killed at each point as well. Two publishers racing
@@ -348,6 +349,190 @@ class CommitCrashSpec extends SparkSpec {
       assert(Layout.prunedScan(spark, store, Nil,
         points = Seq(("id", 3L))).isEmpty)
     }
+  }
+
+  /** The live identity set after batches 0..k of a set-semantics CDC
+    * stream: a later batch's operation wins, a same-batch delete beats
+    * the add. */
+  private def setAfter[T](batches: Seq[Seq[(String, T)]], k: Int): Set[T] =
+    batches.take(k + 1).foldLeft(Set.empty[T]) { (live, b) =>
+      (live ++ b.collect { case ("add", x) => x }) --
+        b.collect { case ("del", x) => x }
+    }
+
+  private def rowSet(df: DataFrame): Set[String] =
+    df.collect().map(_.toString).toSet
+
+  /** Frame `name` of the latest committed version of the store at `dir`. */
+  private def latestFrame(dir: String, name: String): DataFrame =
+    FrameVersions.latest(spark, dir).read(name)
+
+  /** An edge CDC stream over two SCCs {1,2,3} and {7,8}: batch 1
+    * closes 5→1, folding 4 and 5 into the first, and splits {7,8};
+    * batch 2 deletes 3→1 (the cycle through 4 and 5 keeps the SCC) and
+    * adds the 2-cycle {9,10}; batch 3 re-adds 3→1, splits {9,10} and
+    * hangs 7 off 6. */
+  private val edgeBatches = Seq(
+    Seq(("add", 1L, 2L), ("add", 2L, 3L), ("add", 3L, 1L),
+      ("add", 3L, 4L), ("add", 4L, 5L), ("add", 7L, 8L), ("add", 8L, 7L)),
+    Seq(("add", 5L, 1L), ("del", 8L, 7L)),
+    Seq(("del", 3L, 1L), ("add", 9L, 10L), ("add", 10L, 9L)),
+    Seq(("add", 3L, 1L), ("del", 9L, 10L), ("add", 6L, 7L)))
+
+  private def edgeOps(k: Int): Seq[(String, (Long, Long))] =
+    edgeBatches(k).map { case (op, a, b) => (op, (a, b)) }
+
+  /** The effective edge set after batches 0..k. */
+  private def edgesAfter(k: Int): DataFrame =
+    setAfter(edgeBatches.indices.map(edgeOps), k).toSeq
+      .toDF("start_id", "end_id")
+
+  private def edgeCdc(df: DataFrame) = df.toDF("op", "start_id", "end_id")
+
+  test("streamingIntervals: a crash at any commit point heals to the " +
+      "full merge on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_ivl")
+    val batches = Seq(
+      Seq(("a", 1L, 3L), ("a", 10L, 12L), ("b", 0L, 1L)),
+      Seq(("a", 5L, 9L), ("c", 7L, 8L)),
+      Seq(("b", 2L, 4L), ("a", 20L, 21L)),
+      Seq(("c", 9L, 9L), ("a", 15L, 18L)))
+    crashEachPoint(s"$tmp/islands", "islands", batches)((s, c) =>
+      StreamingIngest.streamingIntervals(s.toDF("k", "s", "e"),
+        s"$tmp/raw", s"$tmp/islands", c, "k", "s", "e", minGap = 2L))(
+      () => Seq(latestFrame(s"$tmp/islands", "islands")),
+      k => assert(rowSet(latestFrame(s"$tmp/islands", "islands")) ==
+        rowSet(Funnel.mergeIntervals(batches.take(k + 1).flatten
+          .toDF("k", "s", "e"), "k", "s", "e", minGap = 2L))))
+  }
+
+  test("streamingIntervalsCdc: a crash at any commit point heals to the " +
+      "full merge over the live set on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_ivlcdc")
+    val batches = Seq(
+      Seq(("add", "a", 1L, 3L), ("add", "a", 10L, 12L),
+        ("add", "b", 0L, 1L), ("add", "c", 7L, 8L), ("del", "c", 7L, 8L)),
+      Seq(("add", "a", 5L, 9L), ("del", "a", 10L, 12L),
+        ("add", "b", 0L, 1L)),
+      Seq(("add", "a", 10L, 12L), ("add", "c", 2L, 3L)),
+      Seq(("del", "a", 5L, 9L), ("del", "b", 0L, 1L)))
+    val ops = batches.map(_.map { case (op, k, st, e) => (op, (k, st, e)) })
+    crashEachPoint(s"$tmp/islands", "islands", batches)((s, c) =>
+      StreamingIngest.streamingIntervalsCdc(s.toDF("op", "k", "s", "e"),
+        s"$tmp/raw", s"$tmp/dels", s"$tmp/islands", c, "k", "s", "e",
+        minGap = 2L))(
+      () => Seq(latestFrame(s"$tmp/islands", "islands")),
+      k => assert(rowSet(latestFrame(s"$tmp/islands", "islands")) ==
+        rowSet(Funnel.mergeIntervals(setAfter(ops, k).toSeq
+          .toDF("k", "s", "e"), "k", "s", "e", minGap = 2L))))
+  }
+
+  test("streamingDupClustersCdc: a crash at any commit point heals to " +
+      "the clusters of the live pairs on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_dup")
+    // adds carry (id_a, id_b); a takedown carries its doc in id_a
+    val batches = Seq(
+      Seq(("add", 1L, 2L), ("add", 2L, 3L), ("add", 10L, 11L)),
+      Seq(("add", 3L, 4L), ("del", 11L, 0L)),
+      Seq(("del", 2L, 0L), ("add", 20L, 21L)),
+      Seq(("add", 2L, 5L), ("del", 20L, 0L)))
+    // the takedown splits a cluster exactly, its partner stays as a
+    // singleton, and a later pair resurrects the doc
+    val expected = Seq(
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L),
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L),
+      Map(1L -> 1L, 3L -> 3L, 4L -> 3L, 10L -> 10L, 20L -> 20L,
+        21L -> 20L),
+      Map(1L -> 1L, 2L -> 2L, 5L -> 2L, 3L -> 3L, 4L -> 3L, 10L -> 10L,
+        21L -> 21L))
+    def clusters() = latestFrame(s"$tmp/clusters", "clusters")
+    crashEachPoint(s"$tmp/clusters", "clusters", batches)((s, c) =>
+      StreamingIngest.streamingDupClustersCdc(s.toDF("op", "id_a", "id_b"),
+        s"$tmp/pairs", s"$tmp/dels", s"$tmp/clusters", c))(
+      () => Seq(clusters()),
+      k => assert(clusters().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap == expected(k)))
+  }
+
+  test("streamingSccCdc: a crash at any commit point heals to the full " +
+      "SCC and condensation on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_scc")
+    val state = s"$tmp/state"
+    crashEachPoint(state, "quotient", edgeBatches)((s, c) =>
+      StreamingIngest.streamingSccCdc(edgeCdc(s), s"$tmp/edges",
+        s"$tmp/dels", state, c))(
+      () => Seq(latestFrame(state, "labels"), latestFrame(state, "quotient")),
+      k => {
+        val eff = edgesAfter(k)
+        val labels = GraphOps.stronglyConnectedComponents(eff)
+        assert(rowSet(latestFrame(state, "labels")) == rowSet(labels))
+        assert(rowSet(latestFrame(state, "quotient")) ==
+          rowSet(GraphOps.condensation(eff, labels)))
+      })
+  }
+
+  test("streamingCommunitiesCdc: a crash at any commit point heals to " +
+      "the incremental-decremental fold on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_comm")
+    // batch 0 = gated Louvain; then per batch its adds land in the
+    // pre-delete world and its deletes rebuild from final ground truth
+    val folds = edgeBatches.indices.tail.scanLeft(
+      GraphOps.louvain(edgesAfter(0), rounds = 4, schedule = "gggg")
+        .localCheckpoint()) { (prev, k) =>
+      val ops = edgeOps(k)
+      def edges(op: String) = ops.collect { case (`op`, e) => e }
+        .toDF("start_id", "end_id")
+      val asOfAdds = (setAfter(edgeBatches.indices.map(edgeOps), k - 1) ++
+        ops.collect { case ("add", e) => e }).toSeq.toDF("start_id",
+        "end_id")
+      GraphOps.decrementalCommunities(edgesAfter(k), edges("del"),
+        GraphOps.incrementalCommunities(asOfAdds, edges("add"), prev))
+        .localCheckpoint()
+    }
+    crashEachPoint(s"$tmp/labels", "labels", edgeBatches)((s, c) =>
+      StreamingIngest.streamingCommunitiesCdc(edgeCdc(s), s"$tmp/edges",
+        s"$tmp/dels", s"$tmp/labels", c))(
+      () => Seq(latestFrame(s"$tmp/labels", "labels")),
+      k => assert(rowSet(latestFrame(s"$tmp/labels", "labels")) ==
+        rowSet(folds(k))))
+  }
+
+  test("streamingNeighborAgg: a crash at any commit point heals to the " +
+      "full aggregate over the effective edges on redelivery") {
+    import org.apache.spark.sql.functions.col
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_nagg")
+    val f = (1L to 10L).toDF("id").select(col("id"), col("id").as("fv"))
+    crashEachPoint(s"$tmp/agg", "agg", edgeBatches)((s, c) =>
+      StreamingIngest.streamingNeighborAgg(edgeCdc(s), f, s"$tmp/edges",
+        s"$tmp/dels", s"$tmp/agg", c, "id", Seq("fv"), rounds = 2))(
+      () => Seq(latestFrame(s"$tmp/agg", "agg")),
+      k => assert(rowSet(latestFrame(s"$tmp/agg", "agg")) ==
+        rowSet(GraphOps.neighborAgg(edgesAfter(k), f, "id", Seq("fv"),
+          rounds = 2))))
+  }
+
+  test("streamingDecontaminate: a crash at any commit point heals to " +
+      "the batch scrub on redelivery") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_decon")
+    val bx = "alpha beta gamma"
+    val by = "delta epsilon zeta"
+    // docs fold latest-wins per id; the bench rows only accumulate
+    val batches = Seq(
+      Seq(("doc", 1L, "intro alpha beta gamma outro end"),
+        ("doc", 2L, "totally clean text here now"), ("bench", 100L, bx)),
+      Seq(("doc", 3L, "delta epsilon zeta plus filler words")),
+      Seq(("bench", 101L, by)),
+      Seq(("doc", 1L, "delta epsilon zeta fresh tail words")))
+    def after(op: String, k: Int) = batches.take(k + 1).flatten
+      .collect { case (`op`, id, text) => id -> text }
+    crashEachPoint(s"$tmp/clean", "clean", batches)((s, c) =>
+      StreamingIngest.streamingDecontaminate(s.toDF("op", "doc_id", "text"),
+        s"$tmp/docs", s"$tmp/bench", s"$tmp/clean", c))(
+      () => Seq(latestFrame(s"$tmp/clean", "clean")),
+      k => assert(rowSet(latestFrame(s"$tmp/clean", "clean")) ==
+        rowSet(Decontaminate.scrubContaminatedSpans(
+          after("doc", k).toMap.toSeq.toDF("doc_id", "text"), "text",
+          "doc_id", after("bench", k).toDF("doc_id", "text"), "text"))))
   }
 
   test("retrainIndex: a crash at any commit point leaves the previous " +

@@ -385,6 +385,11 @@ class GraphOpsSpec extends SparkSpec {
     // 2-core of a pure path is empty — needs length/2 peeling rounds
     val path = (0L until 9L).map(i => (i, i + 1)).toDF("start_id", "end_id")
     assert(GraphOps.kCore(path, 2).isEmpty)
+    // ... five rounds: a peel cut short at maxIter fails, never a superset
+    val cut = intercept[IllegalArgumentException](
+      GraphOps.kCore(path, 2, maxIter = 2))
+    assert(cut.getMessage.contains("maxIter"), cut.getMessage)
+    assert(GraphOps.kCore(path, 2, maxIter = 5).isEmpty)
     // 2-core of a cycle is the whole cycle (nothing peels)
     val cyc = ((0L until 5L).map(i => (i, (i + 1) % 5))).toDF(
       "start_id", "end_id")
@@ -409,6 +414,12 @@ class GraphOpsSpec extends SparkSpec {
       .toDF("start_id", "end_id")
     assert(GraphOps.kTruss(bowtie, 3).count() == 5)
     assert(GraphOps.kTruss(bowtie, 4).isEmpty)
+    // the cascade takes two rounds: one round fails instead of
+    // returning the shared edge
+    val cut = intercept[IllegalArgumentException](
+      GraphOps.kTruss(bowtie, 4, maxIter = 1))
+    assert(cut.getMessage.contains("maxIter"), cut.getMessage)
+    assert(GraphOps.kTruss(bowtie, 4, maxIter = 2).isEmpty)
     // a path has no triangles → 3-truss already empty
     val path = (0L until 5L).map(i => (i, i + 1)).toDF("start_id", "end_id")
     assert(GraphOps.kTruss(path, 3).isEmpty)

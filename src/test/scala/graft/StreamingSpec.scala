@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.operators.FrameVersions
 import graft.streaming.{FunnelEvent, GroupedToken, GroupedValue, MeteredEvent, SessionEvent, StreamingIngest, TypedEvent, UserEvent}
 
 /** ST1 streaming dedup-by-id ingest + ST2 windowed aggregation — micro-batch
@@ -13,6 +14,10 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  /** Frame `name` of the latest committed version of the store at `dir`. */
+  private def latest(dir: String, name: String) =
+    FrameVersions.latest(spark, dir).read(name)
 
   test("ST1: dropDuplicatesWithinWatermark dedups ids across batches") {
     implicit val sqlCtx = spark.sqlContext
@@ -681,18 +686,20 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_stream_comm").toString
-    val mem = MemoryStream[(Long, Long)]
-    val stream = mem.toDF().toDF("start_id", "end_id")
-    val q = StreamingIngest.streamingCommunities(stream,
-      s"$tmp/edges", s"$tmp/labels", s"$tmp/ckpt")
+    // an add-only stream through the CDC twin
+    val mem = MemoryStream[(String, Long, Long)]
+    def add(es: Seq[(Long, Long)]) = es.map { case (a, b) => ("add", a, b) }
+    val stream = mem.toDF().toDF("op", "start_id", "end_id")
+    val q = StreamingIngest.streamingCommunitiesCdc(stream,
+      s"$tmp/edges", s"$tmp/dels", s"$tmp/labels", s"$tmp/ckpt")
     try {
       // batch 1: two triangles — cold start
       val b1 = Seq((1L, 2L), (1L, 3L), (2L, 3L),
         (10L, 11L), (10L, 12L), (11L, 12L))
-      mem.addData(b1: _*)
+      mem.addData(add(b1): _*)
       q.processAllAvailable()
       def labels(): Map[Long, Long] =
-        spark.read.parquet(s"$tmp/labels")
+        latest(s"$tmp/labels", "labels")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val l1 = labels()
       val cold = graft.operators.GraphOps.louvain(
@@ -704,7 +711,7 @@ class StreamingSpec extends SparkSpec {
       assert(l1(1L) != l1(10L))
       // batch 2: a new bridged triangle — incremental maintenance
       val b2 = Seq((20L, 21L), (20L, 22L), (21L, 22L), (3L, 20L))
-      mem.addData(b2: _*)
+      mem.addData(add(b2): _*)
       q.processAllAvailable()
       val l2 = labels()
       // twin: the batch primitive folded by hand over the same stores
@@ -735,9 +742,7 @@ class StreamingSpec extends SparkSpec {
       minGap = 2L)
     try {
       def store(): Map[(String, Long), (Long, Long, Long)] =
-        spark.read.parquet(s"$tmp/islands").collect()
-          .map(r => (r.getString(0), r.getLong(1)) ->
-            ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+        store2(s"$tmp/islands")
       def full(rows: Seq[(String, Long, Long)]) =
         graft.operators.Funnel.mergeIntervals(
             rows.toDF("k", "s", "e"), "k", "s", "e", minGap = 2L)
@@ -853,7 +858,7 @@ class StreamingSpec extends SparkSpec {
       s"$tmp/pairs", s"$tmp/dels", s"$tmp/clusters", s"$tmp/ckpt")
     try {
       def store(): Map[Long, Long] =
-        spark.read.parquet(s"$tmp/clusters").collect()
+        latest(s"$tmp/clusters", "clusters").collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // t1: chain + untouched pair + a same-batch add-and-takedown
       mem.addData(Seq(("add", 1L, 2L), ("add", 2L, 3L),
@@ -885,7 +890,7 @@ class StreamingSpec extends SparkSpec {
         s"got ${store()}")
     } finally q.stop()
     // redelivery under a fresh checkpoint: batch 0 re-sends — no-op
-    val before = spark.read.parquet(s"$tmp/clusters").collect()
+    val before = latest(s"$tmp/clusters", "clusters").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val mem2 = MemoryStream[(String, Long, Long)]
     val q2 = StreamingIngest.streamingDupClustersCdc(
@@ -895,7 +900,7 @@ class StreamingSpec extends SparkSpec {
       mem2.addData(("add", 1L, 2L))
       q2.processAllAvailable()
     } finally q2.stop()
-    assert(spark.read.parquet(s"$tmp/clusters").collect()
+    assert(latest(s"$tmp/clusters", "clusters").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap == before,
       "redelivered batch absorbed once")
   }
@@ -988,11 +993,10 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(String, Long, Long)]
     val q = StreamingIngest.streamingSccCdc(
       mem.toDF().toDF("op", "start_id", "end_id"),
-      s"$tmp/edges", s"$tmp/dels", s"$tmp/labels", s"$tmp/quotient",
-      s"$tmp/ckpt")
+      s"$tmp/edges", s"$tmp/dels", s"$tmp/state", s"$tmp/ckpt")
     try {
       def labels(): Map[Long, Long] =
-        spark.read.parquet(s"$tmp/labels").collect()
+        latest(s"$tmp/state", "labels").collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
       def full(edges: Seq[(Long, Long)]): Map[Long, Long] =
         graft.operators.GraphOps.stronglyConnectedComponents(
@@ -1029,7 +1033,7 @@ class StreamingSpec extends SparkSpec {
           eff3.toDF("start_id", "end_id").transform(df =>
             graft.operators.GraphOps.stronglyConnectedComponents(df)))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(spark.read.parquet(s"$tmp/quotient").collect()
+      assert(latest(s"$tmp/state", "quotient").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet == fullQ)
     } finally q.stop()
   }
@@ -1047,7 +1051,7 @@ class StreamingSpec extends SparkSpec {
       s"$tmp/edges", s"$tmp/dels", s"$tmp/labels", s"$tmp/ckpt")
     try {
       def labels(): Map[Long, Long] =
-        spark.read.parquet(s"$tmp/labels").collect()
+        latest(s"$tmp/labels", "labels").collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // batch 1: two triangles, plus an edge added AND deleted in the
       // SAME batch — cold start must run on the effective set
@@ -1115,9 +1119,7 @@ class StreamingSpec extends SparkSpec {
       "k", "s", "e", minGap = 2L)
     try {
       def store(): Map[(String, Long), (Long, Long, Long)] =
-        spark.read.parquet(s"$tmp/islands").collect()
-          .map(r => (r.getString(0), r.getLong(1)) ->
-            ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+        store2(s"$tmp/islands")
       def full(rows: Seq[(String, Long, Long)]) =
         graft.operators.Funnel.mergeIntervals(
             rows.toDF("k", "s", "e"), "k", "s", "e", minGap = 2L)
@@ -1165,11 +1167,11 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
     assert(store2(s"$tmp/islands") == before,
       "redelivered batch absorbed once")
-    // mid-batch crash: the previous attempt overwrote the islands
-    // store but died before the final marker (started left behind).
-    // Redelivery must COLD-REBUILD from the reconciled op stores —
-    // the absorb path would re-merge the same (already-absorbed)
-    // delta and inflate n_merged.
+    // mid-batch crash: the previous attempt committed the islands
+    // but died before the final marker (started left behind).
+    // Redelivery must see the batch's commit and skip it — the absorb
+    // path would re-merge the same (already-absorbed) delta and
+    // inflate n_merged.
     assert(new java.io.File(s"$tmp/raw/_batches/0").delete(),
       "fixture: drop batch 0's final marker")
     assert(new java.io.File(s"$tmp/raw/_batches/0.started").mkdirs())
@@ -1185,14 +1187,14 @@ class StreamingSpec extends SparkSpec {
       q3.processAllAvailable()
     } finally q3.stop()
     assert(store2(s"$tmp/islands") == before,
-      "mid-crash redelivery cold-rebuilds instead of re-absorbing")
+      "mid-crash redelivery skips the commit instead of re-absorbing")
     assert(new java.io.File(s"$tmp/raw/_batches/0").exists &&
       !new java.io.File(s"$tmp/raw/_batches/0.started").exists,
       "final marker restored, started cleared")
   }
 
   private def store2(dir: String): Map[(String, Long), (Long, Long, Long)] =
-    spark.read.parquet(dir).collect()
+    latest(dir, "islands").collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
 
@@ -1211,7 +1213,7 @@ class StreamingSpec extends SparkSpec {
       "id", Seq("fv"), rounds = 2)
     try {
       def store(): Map[Long, Option[Any]] =
-        spark.read.parquet(s"$tmp/agg").collect()
+        latest(s"$tmp/agg", "agg").collect()
           .map(r => r.getLong(0) -> Option(r.get(1))).toMap
       def full(edges: Seq[(Long, Long)]): Map[Long, Option[Any]] =
         graft.operators.GraphOps.neighborAgg(
@@ -1234,7 +1236,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     // redelivery under a fresh checkpoint: batch 0 re-sends — marker
     // makes it a no-op
-    val before = spark.read.parquet(s"$tmp/agg").collect()
+    val before = latest(s"$tmp/agg", "agg").collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap
     val mem2 = MemoryStream[(String, Long, Long)]
     val q2 = StreamingIngest.streamingNeighborAgg(
@@ -1245,7 +1247,7 @@ class StreamingSpec extends SparkSpec {
       mem2.addData(("add", 1L, 2L))
       q2.processAllAvailable()
     } finally q2.stop()
-    assert(spark.read.parquet(s"$tmp/agg").collect()
+    assert(latest(s"$tmp/agg", "agg").collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap == before,
       "redelivered batch absorbed once")
   }
@@ -1256,13 +1258,15 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_stream_scc").toString
-    val mem = MemoryStream[(Long, Long)]
-    val stream = mem.toDF().toDF("start_id", "end_id")
-    val q = StreamingIngest.streamingScc(stream,
-      s"$tmp/edges", s"$tmp/labels", s"$tmp/quotient", s"$tmp/ckpt")
+    // an add-only stream through the CDC twin
+    val mem = MemoryStream[(String, Long, Long)]
+    def add(es: Seq[(Long, Long)]) = es.map { case (a, b) => ("add", a, b) }
+    val stream = mem.toDF().toDF("op", "start_id", "end_id")
+    val q = StreamingIngest.streamingSccCdc(stream,
+      s"$tmp/edges", s"$tmp/dels", s"$tmp/state", s"$tmp/ckpt")
     try {
-      def store(dir: String): Map[Long, Long] =
-        spark.read.parquet(s"$tmp/$dir")
+      def store(frame: String): Map[Long, Long] =
+        latest(s"$tmp/state", frame)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       def fullScc(edges: Seq[(Long, Long)]): Map[Long, Long] =
         graft.operators.GraphOps.stronglyConnectedComponents(
@@ -1271,7 +1275,7 @@ class StreamingSpec extends SparkSpec {
       // batch 1: 3-cycle {1,2,3} -> path 4 -> 5, separate 2-cycle {7,8}
       val b1 = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
         (7L, 8L), (8L, 7L))
-      mem.addData(b1: _*)
+      mem.addData(add(b1): _*)
       q.processAllAvailable()
       val l1 = store("labels")
       assert(l1 == fullScc(b1)) // cold start IS the full SCC
@@ -1279,7 +1283,7 @@ class StreamingSpec extends SparkSpec {
       // batch 2: 5 -> 1 closes the big cycle {1,2,3,4,5}; a brand-new
       // node 9 hangs off the untouched {7,8} SCC
       val b2 = Seq((5L, 1L), (8L, 9L))
-      mem.addData(b2: _*)
+      mem.addData(add(b2): _*)
       q.processAllAvailable()
       val l2 = store("labels")
       assert(l2 == fullScc(b1 ++ b2),
@@ -1291,7 +1295,7 @@ class StreamingSpec extends SparkSpec {
           (b1 ++ b2).toDF("start_id", "end_id"),
           l2.toSeq.toDF("id", "scc"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val storedQ = spark.read.parquet(s"$tmp/quotient")
+      val storedQ = latest(s"$tmp/state", "quotient")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(storedQ == fullQ, s"stored=$storedQ full=$fullQ")
     } finally q.stop()
@@ -2172,7 +2176,7 @@ class StreamingSpec extends SparkSpec {
       s"$tmp/docs", s"$tmp/bench", s"$tmp/clean", s"$tmp/ckpt",
       shingleSize = 3)
     def store(): Map[Long, (String, Long, Long)] =
-      spark.read.parquet(s"$tmp/clean").collect()
+      latest(s"$tmp/clean", "clean").collect()
         .map(r => r.getLong(0) ->
           ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
     def full(docs: Seq[(Long, String)], bench: Seq[(Long, String)]) =
