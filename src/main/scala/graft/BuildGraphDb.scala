@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.config.GraphConfig
-import graft.operators.{GraphBuilder, PropertyGraph}
+import graft.operators.{Concurrently, GraphBuilder, PropertyGraph}
 
 /** CLI entry point — the drop-in equivalent of the reference's
   * `bin/build-graph-db -f config.yml` (bin/build-graph-db:7-16): parse the
@@ -57,14 +57,16 @@ object BuildGraphDb {
       n.label -> n.idKeyLabel.getOrElse(n.sources.head.idKey)).toMap
     val base = s"${args.outDir}/${cfg.database.outputStem}"
     val staged = if (args.upsert) {
-      graph.nodes.foreach { case (label, df) =>
+      // each refresh reads its sources and writes only its own staged
+      // dir — the edge frames come from the sources and the built node
+      // frames, never from the staged nodes — so they run concurrently
+      Concurrently.map(graph.nodes.toSeq.map { case (label, df) => () =>
         GraphBuilder.upsertStagedNodes(spark, args.outDir, cfg.database,
           label, df, idKeys(label))
-      }
-      graph.relationships.foreach { case (label, df) =>
+      } ++ graph.relationships.toSeq.map { case (label, df) => () =>
         GraphBuilder.replaceStagedTable(spark,
           s"$base/relationships/$label", df)
-      }
+      })(_()): Unit
       // the store now also holds every node staged before this run:
       // export and report what it holds, not this run's build
       def read(kind: String, labels: Iterable[String]) =

@@ -17,7 +17,14 @@ import graft.sources.SourceReader
   * serve the staged store instead of running those plans again — the
   * reference's stage-once-then-serialize order
   * (graph_db_builder.py:404-408). The memo lives in the class body, not
-  * in the fields, so a `copy` starts unstaged. */
+  * in the fields, so a `copy` starts unstaged.
+  *
+  * Scale note: [[writeStaging]] and [[exportNeo4jCsv]] submit one job per
+  * table from one driver thread each, so their concurrency is bounded by
+  * the table count. The jobs share the session's FIFO scheduler: the
+  * first-submitted job takes the cores it can use and the rest fill the
+  * ones it leaves idle. Each table goes to its own directory, so the
+  * output does not depend on the order the jobs finish in. */
 final case class PropertyGraph(
     meta: DatabaseMeta,
     nodes: Map[String, DataFrame],
@@ -29,22 +36,26 @@ final case class PropertyGraph(
     * `relationships/<TYPE>/` under `outDir/{name}-{version}`. Each
     * table's row count is observed on its own write job
     * (`Dataset.observe`, no extra job); the graph then remembers the
-    * root and the counts for [[exportNeo4jCsv]] and [[stats]]. */
+    * root and the counts for [[exportNeo4jCsv]] and [[stats]]. The
+    * tables' writes are submitted concurrently. */
   def writeStaging(outDir: String): Unit = {
     val base = s"$outDir/${meta.outputStem}"
-    def write(kind: String, tables: Map[String, DataFrame]) =
-      tables.map { case (label, df) =>
-        val obs = Observation()
-        df.observe(obs, count(lit(1))).write.mode("overwrite")
-          .parquet(s"$base/$kind/$label")
-        // the metrics reach the driver with the execution's end event,
-        // which the listener bus may deliver just after the write returns
-        label -> scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration.Inf).getLong(0)
-      }
+    val tables = PropertyGraph.tables(this)
+    val counts = Concurrently.map(tables) { case (kind, label, df) =>
+      val obs = Observation()
+      df.observe(obs, count(lit(1))).write.mode("overwrite")
+        .parquet(s"$base/$kind/$label")
+      // the metrics reach the driver with the execution's end event,
+      // which the listener bus may deliver just after the write returns
+      scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration.Inf).getLong(0)
+    }
+    def observed(kind: String) = tables.zip(counts).collect {
+      case ((`kind`, label, _), n) => label -> n
+    }.toMap
     staged = None
-    staged = Some(PropertyGraph.Staged(base, write("nodes", nodes),
-      write("relationships", relationships)))
+    staged = Some(PropertyGraph.Staged(base, observed("nodes"),
+      observed("relationships")))
   }
 
   /** S7/S8: CSV export in Neo4j bulk-import layout (`neo4j-admin import`):
@@ -57,38 +68,35 @@ final case class PropertyGraph(
     * Parquet, as the store holds it when the export runs, under the
     * frame's own schema (no footer-inference job); the build's scans,
     * merge shuffle and joins do not run again. An unstaged graph exports
-    * its frames. */
+    * its frames. The tables' files are written concurrently. */
   def exportNeo4jCsv(outDir: String, idKeys: Map[String, String]): Unit = {
     val base = s"$outDir/${meta.outputStem}-csv"
-    def served(kind: String, tables: Map[String, DataFrame]) =
-      staged.fold(tables)(s => tables.map { case (label, df) =>
-        label -> df.sparkSession.read.schema(df.schema)
-          .parquet(s"${s.base}/$kind/$label")
-      })
-    served("nodes", nodes).foreach { case (label, df0) =>
-      val df = PropertyGraph.neo4jReady(df0)
-      // uri_key contract (reference graph_db_builder.py:468-470: the uri_key
-      // column "will be used to determine the URI of the node in the output
-      // graph database"): a `_uri` column carried through the build becomes
-      // the node's :ID unless the caller names an id key explicitly.
-      val idKey = idKeys.get(label)
-        .orElse(if (df.columns.contains("_uri")) Some("_uri") else None)
-        .getOrElse(df.columns.head)
-      val idHeader =
-        if (idKey == "_uri") s"uri:ID($label)" else s"$idKey:ID($label)"
-      val renamed = df.columns.foldLeft(df.withColumn(":LABEL", lit(label))) {
-        case (d, c) if c == idKey => d.withColumnRenamed(c, idHeader)
-        case (d, _) => d
-      }
-      PropertyGraph.writeCsv(renamed, s"$base/nodes_$label")
-    }
-    served("relationships", relationships).foreach { case (label, df) =>
-      val ready = PropertyGraph.neo4jReady(df)
-        .withColumnRenamed(RelPipeline.StartId, ":START_ID")
-        .withColumnRenamed(RelPipeline.EndId, ":END_ID")
-        .withColumn(":TYPE", lit(label))
-      PropertyGraph.writeCsv(ready, s"$base/rels_$label")
-    }
+    Concurrently.map(PropertyGraph.tables(this)) { case (kind, label, df) =>
+      val ready = PropertyGraph.neo4jReady(staged.fold(df)(s =>
+        df.sparkSession.read.schema(df.schema)
+          .parquet(s"${s.base}/$kind/$label")))
+      if (kind == "nodes") {
+        // uri_key contract (reference graph_db_builder.py:468-470: the
+        // uri_key column "will be used to determine the URI of the node in
+        // the output graph database"): a `_uri` column carried through the
+        // build becomes the node's :ID unless the caller names an id key
+        // explicitly.
+        val idKey = idKeys.get(label)
+          .orElse(if (ready.columns.contains("_uri")) Some("_uri") else None)
+          .getOrElse(ready.columns.head)
+        val idHeader =
+          if (idKey == "_uri") s"uri:ID($label)" else s"$idKey:ID($label)"
+        val renamed =
+          ready.columns.foldLeft(ready.withColumn(":LABEL", lit(label))) {
+            case (d, c) if c == idKey => d.withColumnRenamed(c, idHeader)
+            case (d, _) => d
+          }
+        PropertyGraph.writeCsv(renamed, s"$base/nodes_$label")
+      } else PropertyGraph.writeCsv(ready
+          .withColumnRenamed(RelPipeline.StartId, ":START_ID")
+          .withColumnRenamed(RelPipeline.EndId, ":END_ID")
+          .withColumn(":TYPE", lit(label)), s"$base/rels_$label")
+    }: Unit
   }
 
   /** A4: graph statistics — node/edge count per label, one deterministic
@@ -123,6 +131,11 @@ object PropertyGraph {
     * table's observed row count. */
   private final case class Staged(base: String,
       nodeCounts: Map[String, Long], relCounts: Map[String, Long])
+
+  /** Every table of `g` as (staging kind, label, frame): nodes first. */
+  private def tables(g: PropertyGraph): Seq[(String, String, DataFrame)] =
+    g.nodes.toSeq.map { case (l, df) => ("nodes", l, df) } ++
+      g.relationships.toSeq.map { case (l, df) => ("relationships", l, df) }
 
   /** The schema of [[PropertyGraph.stats]] on both paths: literals and
     * `count` are never null. */
@@ -178,7 +191,14 @@ object GraphBuilder {
     * NFKD→ASCII-folds string values as they stream into staging
     * (graph_db_builder.py:521-527); `asciiFold = true` applies the same
     * normalization to every string property via the codegen'd AsciiFold
-    * expression (F1). */
+    * expression (F1).
+    *
+    * Scale note: each distinct (source, table) pair is read once, from a
+    * driver thread of its own, so the schema-inference jobs (Parquet
+    * footers, CSV and JSON scans) run concurrently; that concurrency is
+    * bounded by the table count. The jobs share the session's FIFO
+    * scheduler, and the frames returned do not depend on the order they
+    * finish in. */
   def build(spark: SparkSession, cfg0: GraphConfig,
       asciiFold: Boolean = false): PropertyGraph = {
     val cfg = cfg0.validated
@@ -192,6 +212,21 @@ object GraphBuilder {
         else col(f.name)
       }.toIndexedSeq: _*)
 
+    // --- sources: every (source, table) pair the spec names — node
+    // sources, FK start and end tables, join tables — is read once, all
+    // pairs concurrently, so each schema-inference job runs once and the
+    // jobs overlap. A table both a node and an FK side read is one frame.
+    val pairs = (cfg.nodes.flatMap(_.sources.map(s => (s.source, s.table))) ++
+      cfg.relationships.flatMap(_.sources.flatMap(rs => rs.mode match {
+        case fk: ForeignKeyMode =>
+          Seq((rs.source, fk.startTable), (rs.source, fk.endTable))
+        case jt: JoinTableMode => Seq((rs.source, jt.table))
+      }))).distinct
+    val tables: Map[(String, String), DataFrame] =
+      pairs.zip(Concurrently.map(pairs) { case (source, table) =>
+        SourceReader.readTable(spark, cfg.sources(source), table)
+      }).toMap
+
     // --- nodes: scan each source table, normalize the id column name to
     // the label's canonical id — `id_key_label` if declared (reference
     // config.yml:16-18: Gene's per-source `entrez` id surfaces as
@@ -204,8 +239,7 @@ object GraphBuilder {
     val nodes: Map[String, DataFrame] = cfg.nodes.map { n =>
       val canonicalId = nodeIdKey(n.label)
       val srcDfs = n.sources.map { s =>
-        val raw = normalized(
-          SourceReader.readTable(spark, cfg.sources(s.source), s.table))
+        val raw = normalized(tables((s.source, s.table)))
         // Each source names its id key independently (config.yml:20 vs :27);
         // align them onto the label's canonical id before the union.
         val aligned =
@@ -223,11 +257,10 @@ object GraphBuilder {
     // --- relationships: per declared mode (RelPipeline).
     val rels: Map[String, DataFrame] = cfg.relationships.map { r =>
       val parts = r.sources.map { rs =>
-        val srcConf = cfg.sources(rs.source)
         rs.mode match {
           case fk: ForeignKeyMode =>
-            val startDf = SourceReader.readTable(spark, srcConf, fk.startTable)
-            val endDf = SourceReader.readTable(spark, srcConf, fk.endTable)
+            val startDf = tables((rs.source, fk.startTable))
+            val endDf = tables((rs.source, fk.endTable))
             // J3: resolve BOTH endpoints to the owning node's id_key — the
             // join key may be a foreign key (CUSTOMER_IN_NATION joins on
             // c_nationkey; the Customer node's id is c_custkey), so emitting
@@ -259,7 +292,7 @@ object GraphBuilder {
               endDf, fk.endKey, endId,
               startProps = fk.startProps, endProps = fk.endProps)
           case jt: JoinTableMode =>
-            val edgeDf = SourceReader.readTable(spark, srcConf, jt.table)
+            val edgeDf = tables((rs.source, jt.table))
             // Endpoint inference (reference config.yml:48-54 names no nodes
             // for join_table mode — from_field/to_field implicitly match
             // node id_keys, e.g. aop_gene.AOP_id → AOP, .entrez → Gene).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1343,61 +1343,61 @@ object Similarity {
       recallAtK(exact, ap)
         .agg(sum(col("n_hits"))).head().getLong(0)
     }
-    // The before-audit serves the OLD layout and is independent of the
-    // ENTIRE rebuild up to the commit — overlap them (guide §2.6:
-    // submit independent job chains from separate threads so one
-    // chain's tail back-fills executors the other left idle; both
-    // chains are deterministic and the result is order-free).
-    val hitsBeforeF = scala.concurrent.Future(hits(ix))(
-      scala.concurrent.ExecutionContext.global)
-    def awaitHitsBefore(): Long = scala.concurrent.Await.result(
-      hitsBeforeF, scala.concurrent.duration.Duration.Inf)
     // Rebuild — the saveIndex path verbatim, so retrain ≡ fresh build.
     // A rotated index KEEPS its rotation across retrain: the corpus
     // (raw basis) rotates once, quantizers retrain on the rotated
     // vectors, and the record carries over — refitting the rotation
     // itself is the caller's choice (the pcaMoments-maintenance path),
     // not a side effect of a quantizer refresh.
-    val liveB =
-      if (ix.rotation.isEmpty && ix.rotationMatrix.isEmpty) live
-      else rotateQueries(ix, live, idCol, vecCol).localCheckpoint()
-    val (cents, assigned) = ivfIndex(liveB, vecCol, idCol, kCells)
-    val cb =
-      if (ix.residual)
-        pqCodebooksResidual(liveB, vecCol, idCol,
-          assigned.select(col(idCol), col("centroid_id")), cents,
-          ix.m, ix.k)
-      else pqCodebooks(liveB, vecCol, idCol, ix.m, ix.k)
-    // One checkpointed pass feeds BOTH the build-stats aggregate and
-    // the vectors write (the updateIndexAt discipline): unpinned, the
-    // st aggregate ran the full assignment pass and saveIndex's
-    // vectors write re-ran assignment + encode over the corpus again —
-    // two corpus passes for one result. Codes fuse onto the assignment
-    // frame as a column (assignment preserves the vector), so assign +
-    // encode is ONE projection — no corpus-scale (id ⋈ id)
-    // reattachment join (§2.4), and the aggregate still sees exactly
-    // the rows `assigned` held.
-    val ae = (if (ix.residual)
-        withPqCodesResidual(assigned, vecCol, cents, cb, ix.m)
-      else withPqCodes(assigned, vecCol, cb, ix.m))
-      .select(col(idCol), col("centroid_id"), col("assign_cosine"),
-        col("codes"))
-      .localCheckpoint()
-    val st = ae.agg(avg(col("assign_cosine")),
-      stddev_pop(col("assign_cosine"))).head()
+    def rebuild() = {
+      val liveB =
+        if (ix.rotation.isEmpty && ix.rotationMatrix.isEmpty) live
+        else rotateQueries(ix, live, idCol, vecCol).localCheckpoint()
+      val (cents, assigned) = ivfIndex(liveB, vecCol, idCol, kCells)
+      val cb =
+        if (ix.residual)
+          pqCodebooksResidual(liveB, vecCol, idCol,
+            assigned.select(col(idCol), col("centroid_id")), cents,
+            ix.m, ix.k)
+        else pqCodebooks(liveB, vecCol, idCol, ix.m, ix.k)
+      // One checkpointed pass feeds BOTH the build-stats aggregate and
+      // the vectors write (the updateIndexAt discipline): unpinned, the
+      // st aggregate ran the full assignment pass and saveIndex's
+      // vectors write re-ran assignment + encode over the corpus again
+      // — two corpus passes for one result. Codes fuse onto the
+      // assignment frame as a column (assignment preserves the vector),
+      // so assign + encode is ONE projection — no corpus-scale
+      // (id ⋈ id) reattachment join (§2.4), and the aggregate still
+      // sees exactly the rows `assigned` held.
+      val ae = (if (ix.residual)
+          withPqCodesResidual(assigned, vecCol, cents, cb, ix.m)
+        else withPqCodes(assigned, vecCol, cb, ix.m))
+        .select(col(idCol), col("centroid_id"), col("assign_cosine"),
+          col("codes"))
+        .localCheckpoint()
+      val st = ae.agg(avg(col("assign_cosine")),
+        stddev_pop(col("assign_cosine"))).head()
+      (cents, cb, ae, st)
+    }
+    // The before-audit serves the OLD layout and is independent of the
+    // rebuild — overlap them (guide §2.6: submit independent job chains
+    // from separate threads so one chain's tail back-fills executors
+    // the other left idle; both chains are deterministic and the result
+    // is order-free). Both finish before the claim, so a failed audit
+    // or rebuild leaves no claimed version, and a committed version
+    // always has its report.
+    val Seq(Left(hitsBefore), Right((cents, cb, ae, st))) =
+      Concurrently.map(Seq[() => Either[Long, (DataFrame, DataFrame,
+        DataFrame, Row)]](() => Left(hits(ix)), () => Right(rebuild())))(
+        _())
     // The rebuild commits as the next version — the saveIndex path
-    // verbatim into its root. The version the audit reads is never
-    // touched, but the await sits before the commit marker anyway, so
-    // a failed audit can never leave a committed version with no
-    // report.
+    // verbatim into its root.
     val next = base.commitWith() { root =>
       saveIndex(root, cents, cb,
         ae.select(col(idCol), col("codes"), col("centroid_id")),
         ix.m, ix.k, st.getDouble(0), st.getDouble(1), ix.rotation,
         ix.rotationMatrix, ix.residual)
-      awaitHitsBefore(): Unit
     }
-    val hitsBefore = awaitHitsBefore()
     val hitsAfter = hits(loadIndexAt(spark, base.copy(n = next).root))
     val nExact = exact.count()
     spark.range(1).select(

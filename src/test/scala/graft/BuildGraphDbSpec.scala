@@ -70,4 +70,27 @@ class BuildGraphDbSpec extends SparkSpec {
     BuildGraphDb.run(Args(cfgPath, s"$tmp/out"), spark)
     assert(spark.read.parquet(s"$tmp/out/NGraph-1/nodes/Nation").count() == 25)
   }
+
+  test("run --upsert into an empty store stages every table a plain run " +
+      "stages") {
+    val tmp = Files.createTempDirectory("graft-cli-up-all").toString
+    val cfgPath = s"$tmp/graph.yml"
+    Files.writeString(java.nio.file.Paths.get(cfgPath),
+      SparkEntry.fixtureYaml(sf()))
+    Console.withOut(new java.io.ByteArrayOutputStream) {
+      BuildGraphDb.run(Args(cfgPath, s"$tmp/plain"), spark)
+      BuildGraphDb.run(Args(cfgPath, s"$tmp/up", upsert = true), spark)
+    }
+    def tables(out: String) = {
+      val base = new java.io.File(s"$out/TpchGraph-0.1")
+      Seq("nodes", "relationships").flatMap(kind =>
+        new java.io.File(base, kind).listFiles().map(d =>
+          s"$kind/${d.getName}" -> spark.read.parquet(d.toString)
+            .collect().map(_.toString).sorted.toSeq))
+        .toMap
+    }
+    val plain = tables(s"$tmp/plain")
+    assert(plain.size == 7)
+    assert(tables(s"$tmp/up") == plain)
+  }
 }

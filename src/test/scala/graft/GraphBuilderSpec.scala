@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
+
 import graft.config._
 import graft.operators.GraphBuilder
 
@@ -395,6 +397,118 @@ class GraphBuilderSpec extends SparkSpec {
       .filter(org.apache.spark.sql.functions.col("vec_id") === 7)
       .select("embedding").head().getSeq[Float](0)
     assert(orig == merged)
+  }
+
+  test("a self-referential FK reads its table once and yields the edges " +
+      "two separate reads of it give") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-selffk").toString
+    val staff = Seq((1L, None, "ada", "ceo"), (2L, Some(1L), "bob", "cto"),
+      (3L, Some(1L), "cy", "cfo"), (4L, Some(2L), "di", "dev"),
+      (5L, Some(9L), "ed", "dev"))
+    staff.toDF("id", "manager_id", "name", "title")
+      .write.parquet(s"$tmp/employee.parquet")
+    val yaml =
+      s"""Database: { name: SelfFk, version: "1" }
+         |Sources:
+         |  P: { source type: parquet, path: $tmp }
+         |Nodes:
+         |  Employee:
+         |    sources:
+         |      P: { table: employee, id_key: id }
+         |Relationships:
+         |  REPORTS_TO:
+         |    sources:
+         |      P:
+         |        type: foreign_key
+         |        start:
+         |          { node: Employee, table: employee, key: manager_id,
+         |            props: [name] }
+         |        end: { node: Employee, table: employee, key: id,
+         |               props: [title] }
+         |""".stripMargin
+    val (_, jobs, g) = org.apache.spark.sql.graft.SqlExecutions.plansDuring(
+      spark)(GraphBuilder.build(spark, GraphConfig.fromYaml(yaml)))
+    assert(jobs == 1, "one footer-inference job for the one table")
+    val edges = g.relationships("REPORTS_TO")
+    assert(edges.columns.toSeq == Seq("start_id", "end_id", "name", "title"))
+    val got = edges.collect().map(_.toString).toSet
+    val title = staff.map(e => e._1 -> e._4).toMap
+    val want = staff.collect { case (id, Some(m), name, _)
+      if title.contains(m) => Row(id, m, name, title(m)).toString }.toSet
+    assert(got == want && got.size == 3)
+    // the parent's shape: the FK's start and end sides as separate reads
+    def read() = spark.read.parquet(s"$tmp/employee.parquet")
+    assert(operators.RelPipeline.foreignKeyEdges(
+      read().select("manager_id", "id", "name"), "manager_id", "id", read(),
+      "id", "id", startProps = Seq("name"), endProps = Seq("title"))
+      .collect().map(_.toString).toSet == got)
+    assert(g.nodes("Employee").count() == 5)
+  }
+
+  test("a spec naming a missing source table fails build with an " +
+      "AnalysisException") {
+    val yaml =
+      s"""Database: { name: Missing, version: "1" }
+         |Sources:
+         |  P: { source type: parquet, path: ${sf()} }
+         |Nodes:
+         |  Nation:
+         |    sources:
+         |      P: { table: nation, id_key: n_nationkey }
+         |  Ghost:
+         |    sources:
+         |      P: { table: no_such_table, id_key: g_id }
+         |""".stripMargin
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      GraphBuilder.build(spark, GraphConfig.fromYaml(yaml)))
+    assert(e.getMessage.contains("no_such_table"), e.getMessage)
+  }
+
+  test("build, writeStaging and exportNeo4jCsv run every job under the " +
+      "caller's job group") {
+    import org.apache.spark.sql.graft.SqlExecutions
+    val tmp = Files.createTempDirectory("graft-jobgroup").toString
+    val sc = spark.sparkContext
+    assert(spark.streams.active.isEmpty, "no other query may run jobs")
+    sc.setJobGroup("graft-build-group", "build under a group")
+    val (groups, _) = try SqlExecutions.jobGroupsDuring(spark) {
+      val g = stagedFixture()
+      g.writeStaging(tmp)
+      g.exportNeo4jCsv(tmp, Map.empty)
+    } finally sc.clearJobGroup()
+    // 3 footer inferences, 4 staging writes, 4 CSV writes at least
+    assert(groups.size >= 11, groups)
+    assert(groups.forall(_ == "graft-build-group"), groups)
+  }
+
+  test("build runs one inference job per distinct table when an FK reads " +
+      "its nodes' Parquet tables") {
+    import org.apache.spark.sql.graft.SqlExecutions
+    // customer and nation are read by both their node and the FK; with
+    // embeddings that is three distinct tables
+    val (_, jobs, g) = SqlExecutions.plansDuring(spark)(stagedFixture())
+    assert(jobs == 3)
+    assert(g.relationships("CUSTOMER_IN_NATION").count() == 150)
+  }
+
+  test("Concurrently.map keeps input order and rethrows the first failure " +
+      "as itself after every call finished") {
+    import operators.Concurrently
+    assert(Concurrently.map(Seq(3, 1, 2)) { i =>
+      Thread.sleep(10L * i); i * 10 } == Seq(30, 10, 20))
+    // call 3 fails first in time, call 2 first in input order, and call 4
+    // succeeds well after both
+    val finished = new java.util.concurrent.atomic.AtomicInteger
+    val e = intercept[IllegalStateException](
+      Concurrently.map(Seq(1, 2, 3, 4)) { i =>
+        Thread.sleep(Map(1 -> 0L, 2 -> 50L, 3 -> 0L, 4 -> 300L)(i))
+        finished.incrementAndGet()
+        if (i == 2 || i == 3) throw new IllegalStateException(s"call $i")
+        i
+      })
+    assert(e.getMessage == "call 2")
+    assert(finished.get == 4)
   }
 
   test("entry smoke: flagship stats >0 rows") {

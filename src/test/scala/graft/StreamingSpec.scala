@@ -1304,7 +1304,8 @@ class StreamingSpec extends SparkSpec {
   test("streamingLexIndex: served BM25 equals the full rebuild after " +
       "every trigger; same-batch takedown beats the add; takedown " +
       "re-weights df; re-add resurrects with new text only; re-send " +
-      "replaces; mid-crash redelivery cold-rebuilds; redelivery no-op") {
+      "replaces; mid-crash redelivery skips the committed batch; " +
+      "redelivery no-op") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Relevance
     val tmp = java.nio.file.Files
@@ -1375,7 +1376,7 @@ class StreamingSpec extends SparkSpec {
       q3.processAllAvailable()
     } finally q3.stop()
     assert(served() == before,
-      "mid-crash redelivery cold-rebuilds from the fold")
+      "mid-crash redelivery: the latest commit's tag skips the batch")
     assert(new java.io.File(s"$tmp/docs/_batches/0").exists &&
       !new java.io.File(s"$tmp/docs/_batches/0.started").exists)
   }
@@ -1384,7 +1385,8 @@ class StreamingSpec extends SparkSpec {
       "every trigger; same-batch takedown beats the add; takedown " +
       "subtracts from the op-store fold (no per-doc rows in the " +
       "store); re-add resurrects with new text only; re-send " +
-      "replaces; mid-crash redelivery cold-rebuilds; redelivery no-op") {
+      "replaces; mid-crash redelivery skips the committed batch; " +
+      "redelivery no-op") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Relevance
     val tmp = java.nio.file.Files
@@ -1475,7 +1477,7 @@ class StreamingSpec extends SparkSpec {
       q3.processAllAvailable()
     } finally q3.stop()
     assert(stored() == before,
-      "mid-crash redelivery cold-rebuilds from the fold")
+      "mid-crash redelivery: the latest commit's tag skips the batch")
     assert(new java.io.File(s"$tmp/docs/_batches/0").exists &&
       !new java.io.File(s"$tmp/docs/_batches/0.started").exists)
   }
@@ -1484,7 +1486,7 @@ class StreamingSpec extends SparkSpec {
       "after every trigger; same-batch takedown beats the add; " +
       "takedown subtracts from the op-store fold; re-send replaces; " +
       "BPE merges re-induced off the store equal fresh training; " +
-      "mid-crash redelivery cold-rebuilds; redelivery no-op") {
+      "mid-crash redelivery skips the committed batch; redelivery no-op") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Tokenizer
     val tmp = java.nio.file.Files
@@ -1560,7 +1562,7 @@ class StreamingSpec extends SparkSpec {
       q3.processAllAvailable()
     } finally q3.stop()
     assert(stored() == before,
-      "mid-crash redelivery cold-rebuilds from the fold")
+      "mid-crash redelivery: the latest commit's tag skips the batch")
     assert(new java.io.File(s"$tmp/docs/_batches/0").exists &&
       !new java.io.File(s"$tmp/docs/_batches/0.started").exists)
   }

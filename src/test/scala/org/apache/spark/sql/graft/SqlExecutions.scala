@@ -1,7 +1,6 @@
 package org.apache.spark.sql.graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -26,18 +25,30 @@ object SqlExecutions {
     * started (as explained at the execution's start, in start order), the
     * number of Spark jobs it ran, and its result. */
   def plansDuring[T](spark: SparkSession)(body: => T)
-      : (Seq[String], Int, T) =
-    record(spark, _.physicalPlanDescription)(body)
+      : (Seq[String], Int, T) = {
+    val (plans, jobGroups, out) = record(spark, _.physicalPlanDescription)(body)
+    (plans, jobGroups.size, out)
+  }
+
+  /** Run `body` and return the job group id of every Spark job it ran
+    * ("" for a job started outside any group), in start order, with its
+    * result. */
+  def jobGroupsDuring[T](spark: SparkSession)(body: => T): (Seq[String], T) = {
+    val (_, jobGroups, out) = record(spark, _.description)(body)
+    (jobGroups, out)
+  }
 
   private def record[A, T](spark: SparkSession,
       pick: SparkListenerSQLExecutionStart => A)(body: => T)
-      : (Seq[A], Int, T) = {
+      : (Seq[A], Seq[String], T) = {
     val bus = spark.sparkContext.listenerBus
     val seen = new ConcurrentLinkedQueue[A]
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
       override def onJobStart(event: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
+        jobs.add(Option(event.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("")): Unit
       override def onOtherEvent(event: SparkListenerEvent): Unit =
         event match {
           case e: SparkListenerSQLExecutionStart => seen.add(pick(e))
@@ -49,7 +60,7 @@ object SqlExecutions {
     try {
       val out = body
       bus.waitUntilEmpty()
-      (seen.asScala.toSeq, jobs.get, out)
+      (seen.asScala.toSeq, jobs.asScala.toSeq, out)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
