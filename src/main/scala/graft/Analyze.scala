@@ -95,8 +95,9 @@ import graft.operators.{Curation, GraphOps}
   *   annupdate   --vectors <delta dir> --target <index dir>
   *               [--vec-col embedding] [--id-col vec_id] [-o <outDir>]
   *               (absorb new vectors against the FROZEN quantizers —
-  *               delta-only encode + partitioned append; returns the
-  *               one-row drift report: retrain when cosine_drift grows)
+  *               delta-only encode committed as the next version;
+  *               returns the one-row drift report: retrain when
+  *               cosine_drift grows)
   *   annquery    --vectors <queries dir> --target <index dir>
   *               [--vec-col embedding] [--id-col vec_id] [--top-k K]
   *               [--probes N] [--rerank C --corpus <vectors dir>]
@@ -108,8 +109,8 @@ import graft.operators.{Curation, GraphOps}
   *               for just those |Q|*C rows and re-scored exactly —
   *               recall@k becomes recall@C of the code stage)
   *   anncompact  --target <index dir> [-o <outDir>]
-  *               (rewrite the fragmented vectors/ layout one file per
-  *               cell after repeated annupdate appends —
+  *               (commit the fragmented vectors rewritten one file
+  *               per cell after repeated annupdate commits —
   *               query-identical — and return the one-row maintenance
   *               report incl. the drift-ledger-driven
   *               retrain_recommended verdict)
@@ -1041,22 +1042,17 @@ object Analyze {
         require(args.vectors.nonEmpty && args.target.nonEmpty,
           "annbuild needs --vectors <dir> and --target <index dir>")
         val idc = if (args.idCol == "doc_id") "vec_id" else args.idCol
-        val corpus = spark.read.parquet(args.vectors)
-        val (cents, assigned) = graft.operators.Similarity.ivfIndex(
-          corpus, args.vecCol, idc, args.cells)
-        val cb = graft.operators.Similarity.pqCodebooks(
-          corpus, args.vecCol, idc, args.pqM, args.pqK)
-        val enc = graft.operators.Similarity.pqEncode(
-          corpus, args.vecCol, idc, cb, args.pqM)
-        val ae = assigned.select(col("centroid_id"), col(idc))
-          .join(enc, Seq(idc))
-        val meanCos = assigned.agg(avg(col("assign_cosine")))
-          .head().getDouble(0)
-        graft.operators.Similarity.saveIndex(args.target, cents, cb, ae,
-          args.pqM, args.pqK, meanCos)
+        // the retrainIndex build, so a retrain on the same corpus
+        // commits the same frames
+        val (cents, cb, ae, st) = graft.operators.Similarity.buildIndex(
+          spark.read.parquet(args.vectors), args.vecCol, idc, args.cells,
+          args.pqM, args.pqK, residual = false)
+        graft.operators.Similarity.saveIndex(args.target, cents, cb,
+          ae.select(col(idc), col("codes"), col("centroid_id")),
+          args.pqM, args.pqK, st.getDouble(0), st.getDouble(1))
         import spark.implicits._
-        Seq((corpus.count(), args.cells.toLong, args.pqM.toLong,
-            args.pqK.toLong, meanCos))
+        Seq((ae.count(), args.cells.toLong, args.pqM.toLong,
+            args.pqK.toLong, st.getDouble(0)))
           .toDF("n_vectors", "cells", "pq_m", "pq_k",
             "mean_assign_cosine")
       case "annupdate" =>
@@ -1074,19 +1070,12 @@ object Analyze {
         val annIdc = if (args.idCol == "doc_id") "vec_id" else args.idCol
         val annQs = spark.read.parquet(args.vectors)
         // the index's BASIS and CODEC identities apply here exactly as
-        // in serveTopK: queries rotate into the index basis and
-        // residual stores decode through the cell-dependent ADC — the
-        // CLI must never be the raw-serve backdoor the library closed
-        val annQb = graft.operators.Similarity.rotateQueries(ix, annQs,
-          annIdc, args.vecCol)
-        def annShortlist(k0: Int) =
-          if (ix.residual)
-            graft.operators.Similarity.ivfPqResidualTopK(annQb,
-              ix.centroids, ix.codebooks, ix.assignedEncoded,
-              args.vecCol, annIdc, ix.m, ix.k, k0, args.probes)
-          else graft.operators.Similarity.ivfPqTopK(annQb,
-            ix.centroids, ix.codebooks, ix.assignedEncoded,
-            args.vecCol, annIdc, ix.m, ix.k, k0, args.probes)
+        // in serveTopK (one serveIndex): queries rotate into the index
+        // basis and residual stores decode through the cell-dependent
+        // ADC — the CLI must never be the raw-serve backdoor the
+        // library closed
+        def annShortlist(k0: Int) = graft.operators.Similarity.serveIndex(
+          ix, annQs, args.vecCol, annIdc, k0, args.probes)
         if (args.rerank > 0) {
           // two-stage serving: C-deep ADC shortlist from the stored
           // codes, then exact-cosine rerank over the fetched

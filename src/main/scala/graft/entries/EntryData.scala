@@ -606,8 +606,9 @@ private[graft] object EntryData {
     * `vec_id < 300` slice (memoized per dataset, like [[x3jIndexDir]]),
     * copied to a fresh per-invocation directory, then the remaining
     * vectors absorbed via [[Similarity.updateIndex]] — frozen
-    * quantizers, delta-only encode, partitioned append. Fresh copy per
-    * call because the append mutates the layout in place; the copy +
+    * quantizers, delta-only encode, committed as the next version.
+    * Fresh copy per call because every maintenance row commits on top
+    * of the store it is handed; the copy +
     * update + query IS what the bench row measures (the incremental
     * ingest path), while quantizer training stays out of the timed
     * body. Returns the updated index directory. */
@@ -679,7 +680,7 @@ private[graft] object EntryData {
     * cosine mean AND σ recorded — so [[Similarity.maintainIndex]]'s
     * calibrated default tolerance (2σ) is what the policy rows
     * exercise. Copied fresh per invocation ([[x3nCopiedDir]]) because
-    * maintenance mutates the layout in place. */
+    * maintenance commits on top of the store it is handed. */
   val x3nInvocation = new java.util.concurrent.atomic.AtomicLong()
   def x3nBaseIndexDir(s: SparkSession, dir: String): String =
     annIndexDirs.computeIfAbsent(dir + "#x3n_base", _ => {

@@ -917,12 +917,9 @@ private[graft] object QueriesGraph {
       // per-round driver work and job tails back-fill the executors
       // the other leaves idle. Results are frames either way; the
       // union below is identical.
-      val louvF = scala.concurrent.Future(
-        GraphOps.louvainMultiLevel(edges))(
-        scala.concurrent.ExecutionContext.global)
-      val lpa = GraphOps.labelPropagation(edges, iters = 2)
-      val louv = scala.concurrent.Await.result(louvF,
-        scala.concurrent.duration.Duration.Inf)
+      val Seq(louv, lpa) = Concurrently.map(Seq[() => DataFrame](
+        () => GraphOps.louvainMultiLevel(edges),
+        () => GraphOps.labelPropagation(edges, iters = 2)))(_())
       q("louvain", louv)
         .unionAll(q("lpa", lpa))
         .orderBy("method")

@@ -148,7 +148,7 @@ private[graft] object QueriesSimilarity {
 
     // ---- X3k: INCREMENTAL index update — base index trained+encoded
     // on vec_id < 300, the rest absorbed by updateIndex (frozen
-    // quantizers, delta-only encode, partitioned append), then the
+    // quantizers, delta-only encode, one new segment), then the
     // UPDATED index queried. Oracle: the full-corpus encode against
     // the SAME base-slice-trained quantizers — per-row-deterministic
     // assignment/encoding makes the incremental result EXACTLY equal
@@ -166,7 +166,7 @@ private[graft] object QueriesSimilarity {
     }),
 
     // ---- X3p: index COMPACTION — the q_x3k fragmented layout (base
-    // encode + updateIndex append) rewritten one-file-per-cell by
+    // encode + updateIndex segment) rewritten one-file-per-cell by
     // compactIndex, then queried. Compaction moves codes, never
     // changes them, so the result is EXACTLY q_x3k's — and the oracle
     // IS q_x3k's (the one-pass encode against the base-slice-trained
@@ -175,7 +175,7 @@ private[graft] object QueriesSimilarity {
     "q_x3p_compacted_index" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val ixDir = x3kUpdatedIndexDir(s, dir)
-      Similarity.compactIndex(s, ixDir) // eager: rewrites vectors/
+      Similarity.compactIndex(s, ixDir) // eager: commits the rewrite
       val ix = Similarity.loadIndex(s, ixDir)
       Similarity.ivfPqTopK(e.filter(col("vec_id") < 8), ix.centroids,
           ix.codebooks, ix.assignedEncoded,

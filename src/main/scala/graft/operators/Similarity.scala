@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -825,11 +825,11 @@ object Similarity {
     codebooks.write.mode("overwrite").parquet(s"$dir/codebooks")
     assignedEncoded.write.mode("overwrite")
       .partitionBy("centroid_id").parquet(s"$dir/vectors")
-    // A rebuild resets the maintenance state alongside meta: the drift
-    // ledger measured the OLD quantizers (a stale ledger would latch
-    // retrain_recommended forever after one drifting era), and every
-    // row just written is live by definition (a stale tombstone would
-    // silently anti-join valid new rows out of serving).
+    // A re-save resets the maintenance state an index written before
+    // maintenance committed versions kept at its root: the drift ledger
+    // measured the OLD quantizers (a stale ledger would latch
+    // retrain_recommended), and every row just written is live (a stale
+    // tombstone would anti-join valid new rows out of serving).
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/drift_log"), true): Unit
@@ -893,21 +893,24 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  // ───────────────────── index versions (retrains) ─────────────────────
+  // ───────────────────── index versions ─────────────────────
   //
   // An index is a [[FrameVersions]] store: the [[saveIndex]] layout is
-  // version 0 (frames at the root) and [[retrainIndex]] commits each
-  // rebuild as the next version (`_v<n>/`, the regular saveIndex
-  // layout) without touching the version it read — a reader that
-  // loaded before the retrain keeps serving its version bit for bit.
-  // Every consumer resolves the latest version ([[indexVersion]]), and
-  // fine-grained maintenance (update/delete appends, compaction) runs
-  // within it. `FrameVersions.vacuum` is the physical purge (the root
-  // frames included) on the caller's retention schedule;
-  // `FrameVersions.recover` drops a crashed retrain's claim.
+  // version 0 (frames at the root), and every maintenance operation
+  // commits the next version. [[retrainIndex]] commits a full rebuild;
+  // [[updateIndex]], [[deleteFromIndex]] and [[compactIndex]] each
+  // commit once through [[commitIndex]], which reuses every frame it
+  // does not rewrite, so an update writes only its delta. No committed
+  // version changes afterwards: a reader that loaded before a commit
+  // keeps serving its version bit for bit until a vacuum drops it:
+  // [[compactIndex]] (and so [[maintainIndex]]'s compaction branch)
+  // vacuums to the version it commits, the root frames included, so a
+  // reader pinned to an older version must reload after a compaction;
+  // the streaming twins vacuum after each trigger the same way.
+  // `FrameVersions.recover` drops a crashed commit's claim.
 
   /** The version every consumer of the index at `dir` reads: the
-    * latest committed retrain, or the saveIndex root (version 0). An
+    * latest committed version, or the saveIndex root (version 0). An
     * index in the retired `eras/` layout is refused. */
   private[graft] def indexVersion(spark: SparkSession, dir: String)
       : FrameVersions.Version = {
@@ -926,25 +929,26 @@ object Similarity {
     * bit-exactly, so a query against the loaded index returns the same
     * rows as against the just-built one. */
   def loadIndex(spark: SparkSession, dir: String): AnnIndex =
-    loadIndexAt(spark, indexVersion(spark, dir).root)
+    loadIndexAt(indexVersion(spark, dir))
 
-  private def loadIndexAt(spark: SparkSession, dir: String): AnnIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val vectors0 = spark.read.parquet(s"$dir/vectors")
+  // The rows version `v` serves: its `vectors` segments minus its
+  // tombstones ([[deleteFromIndex]]), so EVERY consumer of a loaded
+  // index — serve, rerank, compaction — sees the post-delete corpus;
+  // the join side is the delete set (small, auto-broadcast by AQE).
+  private def liveVectors(v: FrameVersions.Version): DataFrame = {
+    val vectors = v.read("vectors")
       .withColumn("centroid_id", col("centroid_id").cast("long"))
-    // Tombstones ([[deleteFromIndex]]) anti-join out here, so EVERY
-    // consumer of the loaded index — serve, rerank, compaction —
-    // sees the post-delete corpus; the join side is the delete set
-    // (small, auto-broadcast by AQE).
-    val tombPath = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val tombFs = tombPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vectors =
-      if (tombFs.exists(tombPath)) {
-        val tomb = spark.read.parquet(tombPath.toString)
-        vectors0.join(tomb.select(tomb.columns.head).distinct(),
-          Seq(tomb.columns.head), "left_anti")
-      } else vectors0
+    if (!v.has("tombstones")) vectors
+    else {
+      val tomb = v.read("tombstones")
+      vectors.join(tomb.select(tomb.columns.head).distinct(),
+        Seq(tomb.columns.head), "left_anti")
+    }
+  }
+
+  private[graft] def loadIndexAt(v: FrameVersions.Version): AnnIndex = {
+    val spark = v.spark
+    val meta = v.read("meta").head()
     def optD(name: String): Double =
       if (meta.schema.fieldNames.contains(name)) meta.getAs[Double](name)
       else Double.NaN
@@ -960,23 +964,19 @@ object Similarity {
       else if (meta.schema.fieldNames.contains("rotation_kind"))
         meta.getAs[String]("rotation_kind")
       else "givens"
-    def requireRecord(p: org.apache.hadoop.fs.Path): Unit = {
-      val rotFs =
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(rotFs.exists(p),
-        s"loadIndex: $dir/meta declares a ROTATED index but $p is " +
-          "missing — serving raw query vectors against rotated " +
-          "quantizers returns silently wrong neighbors; restore the " +
-          "rotation record or rebuild via saveIndex")
-    }
+    def requireRecord(frame: String): Unit =
+      require(v.has(frame),
+        s"loadIndex: ${v.root}/meta declares a ROTATED index but its " +
+          s"$frame record is missing — serving raw query vectors against " +
+          "rotated quantizers returns silently wrong neighbors; restore " +
+          "the rotation record or rebuild via saveIndex")
     val rotation =
       if (kind != "givens") Nil
       else {
-        val rotPath = new org.apache.hadoop.fs.Path(s"$dir/rotation")
-        requireRecord(rotPath)
+        requireRecord("rotation")
         // bounded driver fetch: stages × d rows (the d²-cell
         // discipline of givensCascadeFit)
-        val rows = spark.read.parquet(rotPath.toString)
+        val rows = v.read("rotation")
           .select("stage", "offset", "i", "cos", "sin")
           .collect()
         rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).map {
@@ -995,11 +995,9 @@ object Similarity {
     val rotationMatrix =
       if (kind != "matrix") None
       else {
-        val rotMatPath =
-          new org.apache.hadoop.fs.Path(s"$dir/rotation_matrix")
-        requireRecord(rotMatPath)
+        requireRecord("rotation_matrix")
         // bounded driver fetch: d² cells (the pcaFit discipline)
-        val rows = spark.read.parquet(rotMatPath.toString)
+        val rows = v.read("rotation_matrix")
           .select("component", "i", "w", "mean_i", "eig")
           .collect()
         val d = rows.map(_.getLong(1)).max.toInt + 1
@@ -1025,15 +1023,15 @@ object Similarity {
     // local relations: same rows bit-exactly (parquet → JVM → local
     // relation round-trips floats unchanged), and each broadcast build
     // becomes a local-table scan with no file I/O.
-    def localize(p: String): org.apache.spark.sql.DataFrame = {
-      val df = spark.read.parquet(p)
+    def localize(frame: String): org.apache.spark.sql.DataFrame = {
+      val df = v.read(frame)
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
     }
     AnnIndex(
-      localize(s"$dir/centroids"),
-      localize(s"$dir/codebooks"),
-      vectors,
+      localize("centroids"),
+      localize("codebooks"),
+      liveVectors(v),
       meta.getAs[Int]("m"), meta.getAs[Int]("k"),
       optD("mean_assign_cosine"), optD("assign_cosine_std"),
       rotation, rotationMatrix, residual)
@@ -1072,18 +1070,22 @@ object Similarity {
     }
 
   /** One-call serving path over a persisted index: [[loadIndex]] (the
-    * tombstone-filtered, rotation-checked snapshot), queries brought
-    * into the index basis via [[rotateQueries]], then [[ivfPqTopK]]
-    * with the stored codec geometry. This IS the body the streaming
-    * search twin runs per trigger — the batch row and the stream
-    * serve through the same code. */
+    * tombstone-filtered, rotation-checked snapshot), then
+    * [[serveIndex]]. This IS the body the streaming search twin runs
+    * per trigger — the batch row and the stream serve through the same
+    * code. */
   def serveTopK(spark: SparkSession, dir: String, queries: DataFrame,
       vecCol: String, idCol: String, topK: Int = 5,
-      nProbe: Int = 8): DataFrame = {
-    val ix = loadIndex(spark, dir)
+      nProbe: Int = 8): DataFrame =
+    serveIndex(loadIndex(spark, dir), queries, vecCol, idCol, topK, nProbe)
+
+  /** Serve `queries` against a loaded index: brought into the index
+    * basis via [[rotateQueries]], then [[ivfPqTopK]] with the stored
+    * codec geometry — residual codes decode through the cell-dependent
+    * ADC ([[ivfPqResidualTopK]]), never the fixed table. */
+  private[graft] def serveIndex(ix: AnnIndex, queries: DataFrame,
+      vecCol: String, idCol: String, topK: Int, nProbe: Int): DataFrame = {
     val q = rotateQueries(ix, queries, idCol, vecCol)
-    // codec identity from meta: residual codes decode through the
-    // cell-dependent ADC, never the fixed table
     if (ix.residual)
       ivfPqResidualTopK(q, ix.centroids, ix.codebooks,
         ix.assignedEncoded, vecCol, idCol, m = ix.m, k = ix.k,
@@ -1094,39 +1096,114 @@ object Similarity {
         nProbe = nProbe)
   }
 
+  /** A delta encoded against a loaded index's FROZEN quantizers, as
+    * (`idCol`, `codes`, `centroid_id`, `assign_cosine`), checkpointed.
+    * Deltas arrive in the ORIGINAL basis (the query contract) and are
+    * brought into the index basis first — absorbing raw vectors into a
+    * rotated index would split the store across two bases. A residual
+    * store's deltas encode RESIDUALLY (plain-PQ codes in a residual
+    * store would decode as garbage distances). Codes fuse onto the
+    * assignment frame as a column (assignment preserves the vector), so
+    * assign + encode is ONE projection with no (id ⋈ id) join. */
+  private[graft] def encodeDelta(ix: AnnIndex, delta: DataFrame,
+      vecCol: String, idCol: String): DataFrame = {
+    val assigned = assignToCentroids(rotateQueries(ix, delta, idCol,
+      vecCol), vecCol, idCol, ix.centroids)
+    (if (ix.residual)
+        withPqCodesResidual(assigned, vecCol, ix.centroids, ix.codebooks,
+          ix.m)
+      else withPqCodes(assigned, vecCol, ix.codebooks, ix.m))
+      .select(col(idCol), col("codes"), col("centroid_id"),
+        col("assign_cosine"))
+      .localCheckpoint()
+  }
+
+  // (n_added, delta_mean_assign_cosine) of encoded adds — one row
+  private def deltaStats(adds: DataFrame): DataFrame =
+    adds.agg(count(lit(1)).as("n_added"),
+      avg(col("assign_cosine")).as("delta_mean_assign_cosine"))
+
+  /** The one commit of every fine-grained maintenance operation: the
+    * next version on top of `base`, tagged `tag`, from [[encodeDelta]]
+    * `adds` and a one-column frame of deleted ids.
+    *
+    *  - Without `compact`: the adds become a new `vectors` segment, the
+    *    deletes a new `tombstones` segment, and the adds one new
+    *    `drift_log` row; every other frame is reused from `base`.
+    *  - With `compact`: `vectors` is written as one segment clustered by
+    *    cell (one file per populated cell) holding the live rows minus
+    *    re-added ids plus the adds; `tombstones` holds only these
+    *    deletes, and `drift_log` is rolled up into one row.
+    *
+    * A crash before the marker leaves `base` serving unchanged.
+    * Returns the committed version. */
+  private[graft] def commitIndex(base: FrameVersions.Version, tag: String,
+      adds: Option[DataFrame], deletes: Option[DataFrame],
+      compact: Boolean): Long = {
+    // one ledger row per absorbed delta: `n_batches` lets a rollup keep
+    // the absorbed-batch count beside the n_added-weighted mean
+    val delta = adds.map(deltaStats(_).withColumn("n_batches", lit(1L)))
+    val codes = adds.map(_.drop("assign_cosine"))
+    val rewritten =
+      if (compact) Set("vectors", "tombstones", "drift_log") else Set[String]()
+    val carry = base.frames.filterNot(rewritten)
+      .map(f => f -> base.segments(f)).toMap
+    base.commitWith(tag, carry) { root =>
+      // an empty partitioned write lays no data file, only `_SUCCESS`,
+      // and such a segment could not be read back: an empty delta
+      // keeps the base's `vectors` and commits only its ledger row
+      val (vectors, ledger) =
+        if (!compact) (codes.filterNot(_.isEmpty), delta)
+        else {
+          val live = liveVectors(base)
+          val kept = adds.fold(live)(a => live.join(a.select(a.columns.head),
+            Seq(a.columns.head), "left_anti"))
+          (Some(codes.fold(kept)(kept.unionByName(_))
+              .repartition(col("centroid_id"))),
+            (driftLog(base) ++ delta).reduceOption(_.unionByName(_))
+              .map(rollUp))
+        }
+      vectors.foreach(_.write.partitionBy("centroid_id")
+        .parquet(s"$root/vectors"))
+      deletes.foreach(_.write.parquet(s"$root/tombstones"))
+      ledger.foreach(_.coalesce(1).write.parquet(s"$root/drift_log"))
+    }
+  }
+
   /** Incremental index maintenance — the retrieval twin of the
     * incremental-dedup discipline: encode ONLY the delta against the
     * stored index's FROZEN quantizers (centroids + codebooks are never
-    * retrained) and append the (centroid_id, id, codes) rows to the
-    * partitioned `vectors/` layout. A query against the updated index
-    * returns exactly what a full re-encode of (base ∪ delta) against
-    * the same quantizers would — assignment and encoding are per-row
-    * deterministic — so absorbing a growing corpus costs one narrow
-    * delta-sized pass instead of an index rebuild.
+    * retrained) and commit the (centroid_id, id, codes) rows as a new
+    * `vectors` segment of the next version ([[commitIndex]]). A query
+    * against the updated index returns exactly what a full re-encode of
+    * (base ∪ delta) against the same quantizers would — assignment and
+    * encoding are per-row deterministic — so absorbing a growing corpus
+    * costs one narrow delta-sized pass instead of an index rebuild.
     *
     * Frozen quantizers go stale as the corpus distribution drifts, so
     * the returned one-row report carries the retrain signal: the
     * delta's mean assignment cosine vs the build-time mean recorded by
     * [[saveIndex]] (`cosine_drift` = build − delta; a large positive
     * value means the delta lands far from every centroid and recall at
-    * fixed nProbe is degrading — time to retrain).
+    * fixed nProbe is degrading — time to retrain). The same numbers go
+    * to the version's `drift_log` for [[compactIndex]]'s retrain policy,
+    * so the signal survives across processes.
     *
     * Scale notes (100 TB): centroids and codebooks broadcast (k and
-    * m·k rows); the delta never joins the stored corpus — the append
-    * only touches the partition directories the delta lands in; the
-    * drift aggregate is one row. Not concurrency-safe against a
-    * simultaneous writer to the same `dir` (parquet append), matching
-    * the one-writer ingest discipline the layout assumes.
+    * m·k rows); the delta never joins the stored corpus and the commit
+    * writes only the delta's segment plus one ledger row; the drift
+    * aggregate is one row. A second publisher on the same base is
+    * refused by the commit claim.
     *
-    * ID CONTRACT (caller-owned, like the one-writer rule): delta ids
-    * must be NEW — the append never reconciles against the stored
-    * layout, so re-ingesting a `vec_id` already in the index leaves two
-    * live rows for it and BOTH surface in [[ivfPqTopK]] results. The
-    * cheap default trusts the ingest pipeline (an id check would scan
-    * the stored corpus on every delta); pass `checkIdOverlap = true` to
-    * fail fast instead — one broadcast-delta semi-join against the
-    * stored `vectors/` layout (delta ids are broadcast-sized in any
-    * sane incremental ingest), run BEFORE anything is appended.
+    * ID CONTRACT (caller-owned): delta ids must be NEW — the update
+    * never reconciles against the stored rows, so re-ingesting a
+    * `vec_id` already in the index leaves two live rows for it and
+    * BOTH surface in [[ivfPqTopK]] results. The cheap default trusts the
+    * ingest pipeline (an id check would scan the stored corpus on every
+    * delta); pass `checkIdOverlap = true` to fail fast instead — one
+    * broadcast-delta semi-join against the stored vectors (delta ids
+    * are broadcast-sized in any sane incremental ingest), run BEFORE
+    * anything is written.
     *
     * @return one row: (`n_added`, `delta_mean_assign_cosine`,
     *         `build_mean_assign_cosine`, `cosine_drift` — null when
@@ -1134,136 +1211,85 @@ object Similarity {
   def updateIndex(spark: SparkSession, dir: String, delta: DataFrame,
       vecCol: String, idCol: String,
       checkIdOverlap: Boolean = false): DataFrame = {
-    val root = indexVersion(spark, dir).root
-    val ix = loadIndexAt(spark, root)
+    val base = indexVersion(spark, dir)
+    val ix = loadIndexAt(base)
     if (checkIdOverlap) {
       val nDup = ix.assignedEncoded
         .join(broadcast(delta.select(col(idCol)).distinct()), Seq(idCol),
           "left_semi")
         .count()
       require(nDup == 0L,
-        s"updateIndex: $nDup delta id(s) already present in $root/vectors " +
+        s"updateIndex: $nDup delta id(s) already present in $dir " +
           s"— re-ingesting an id leaves duplicate live rows (id contract)")
     }
-    // deltas arrive in the ORIGINAL basis (the query contract): bring
-    // them into the index basis before assignment/encoding — absorbing
-    // raw vectors into a rotated index would split the store across
-    // two bases permanently
-    val deltaB = rotateQueries(ix, delta, idCol, vecCol)
-    val assigned = assignToCentroids(deltaB, vecCol, idCol, ix.centroids)
-    // codec identity: a residual store's deltas encode RESIDUALLY
-    // against the frozen quantizers — plain-PQ codes in a residual
-    // store would decode as garbage distances. Codes fuse onto the
-    // assignment frame as a column (assignment preserves the vector),
-    // so assign + encode is ONE projection — the old two-frame compose
-    // paid an (id ⋈ id) join just to reattach codes to assignments.
-    val ae = (if (ix.residual)
-        withPqCodesResidual(assigned, vecCol, ix.centroids,
-          ix.codebooks, ix.m)
-      else withPqCodes(assigned, vecCol, ix.codebooks, ix.m))
-      .select(col(idCol), col("centroid_id"), col("assign_cosine"),
-        col("codes"))
-    // One pass feeds both the append and the drift aggregate.
-    val cached = ae.localCheckpoint()
-    cached.select(col(idCol), col("codes"), col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$root/vectors")
+    val adds = encodeDelta(ix, delta, vecCol, idCol)
+    commitIndex(base, "-", Some(adds), None, compact = false): Unit
     val build =
       if (ix.meanAssignCosine.isNaN) lit(null).cast("double")
       else lit(ix.meanAssignCosine)
-    val report = cached.agg(
-      count(lit(1)).as("n_added"),
-      avg(col("assign_cosine")).as("delta_mean_assign_cosine"))
+    deltaStats(adds)
       .select(col("n_added"), col("delta_mean_assign_cosine"),
         build.as("build_mean_assign_cosine"),
         (build - col("delta_mean_assign_cosine")).as("cosine_drift"))
       .localCheckpoint()
-    // Ledger the batch for [[compactIndex]]'s retrain policy: one tiny
-    // row per ingest, so the drift signal survives across processes
-    // instead of evaporating with the returned frame. `n_batches` lets
-    // compaction roll the log up into ONE weighted summary row without
-    // losing the absorbed-batch count.
-    report.select(col("n_added"), col("delta_mean_assign_cosine"),
-        lit(1L).as("n_batches"))
-      .coalesce(1).write.mode("append").parquet(s"$root/drift_log")
-    report
   }
 
-  /** Compact a [[saveIndex]] layout in place after repeated
-    * [[updateIndex]] appends: every append writes one parquet fragment
-    * set into the partition directories its delta lands in, so a
-    * daily-ingest serving index accumulates small files until scan
-    * efficiency dies (file-open overhead + tiny row groups defeat the
-    * vectorized reader). Rewrites `dir/vectors` clustered by
-    * `centroid_id` — one writer task per cell, so each partition
-    * directory collapses to a single file — then swaps the rewrite in.
-    * The rows (id, codes, centroid_id) are untouched: a query against
-    * the compacted index returns EXACTLY what the fragmented one did
-    * (the spec asserts bit-equality; q_x3p's oracle is q_x3k's).
-    *
-    * RETRAIN POLICY (the consumer of [[updateIndex]]'s `cosine_drift`,
-    * which until now was reported but never acted on): every
-    * [[updateIndex]] call appends its one-row report to
-    * `dir/drift_log/`, and compaction — the natural maintenance point —
-    * reads the whole log and recommends. `retrain_recommended` is true
-    * when the n_added-weighted mean assignment cosine of ALL absorbed
-    * deltas has fallen more than `driftTolerance` below the build-time
-    * mean recorded by [[saveIndex]] — the documented default tolerance
-    * is 2× the build-time assignment-cosine STANDARD DEVIATION when
-    * [[saveIndex]] recorded one (a delta population whose mean sits
-    * outside 2σ of the build distribution is structurally new mass the
-    * frozen centroids cannot cover), falling back to `0.05` absolute.
-    * Once recommended, rebuild quantizers with a fresh [[saveIndex]];
-    * the deltas-weighted mean (not the last delta alone) means one
-    * outlier batch does not trigger a retrain but sustained drift does.
-    * Null when there is no log or no recorded build mean.
-    *
-    * Scale notes (100 TB): the rewrite is one shuffle of the codes
-    * table (m bytes + id per row — the floats never ship), exactly the
-    * cost profile of a parquet table compaction job; the drift log is
-    * one tiny row per ingest batch, and compaction ROLLS IT UP into a
-    * single summary row in a single file (weighted mean + batch count
-    * are sufficient statistics — the policy verdict is unchanged, the
-    * per-ingest small files are gone); [[saveIndex]] DELETES the
-    * ledger and the tombstone set, so the recommendation always
-    * reflects deltas absorbed since the last quantizer build, never a
-    * stale pre-rebuild era. Same one-writer contract as
-    * [[updateIndex]] — the delete+swap is not atomic against concurrent
-    * readers of the SAME index directory; serve from a snapshot copy or
-    * pause reads during maintenance.
-    *
-    * @return one row: (`n_rows`, `files_before`, `files_after`,
-    *         `n_deltas_absorbed`, `delta_weighted_mean_cosine`,
-    *         `build_mean_assign_cosine`, `cosine_drift`,
-    *         `drift_tolerance`, `retrain_recommended`) */
   /** Delete vectors from a stored index WITHOUT rewriting it — the
     * tombstone side of the serving lifecycle (right-to-erasure,
-    * content takedown): the ids append to `dir/tombstones/` and
-    * [[loadIndex]] anti-joins them out, so every consumer — serve,
-    * rerank, the next compaction — behaves as if the rows were never
-    * encoded. [[compactIndex]] purges them PHYSICALLY (its rewrite
-    * reads the filtered view) and clears the tombstone set; a crash
-    * between the rewrite and the clear is safe — a tombstone for an
-    * already-purged row is a no-op anti-join key.
+    * content takedown): the ids commit as a new `tombstones` segment of
+    * the next version ([[commitIndex]]) and [[loadIndex]] anti-joins
+    * them out, so every consumer — serve, rerank, the next compaction —
+    * behaves as if the rows were never encoded. [[compactIndex]]
+    * purges them PHYSICALLY (its rewrite reads the filtered view) and
+    * starts an empty tombstone set.
     *
-    * Caller-owned caveats, like the layout's one-writer rule:
-    * re-adding a tombstoned id via [[updateIndex]] stays dead until a
-    * compaction purges the tombstone first; deleting an id absent
-    * from the index is a harmless no-op. Cost: delta-sized write +
-    * two tiny counts — the index is NOT rewritten (that is the
-    * point; at 100 TB a per-delete rewrite would be the bug).
+    * Caller-owned caveats: re-adding a tombstoned id via
+    * [[updateIndex]] stays dead until a compaction purges the tombstone
+    * first; deleting an id absent from the index is a harmless no-op.
+    * Cost: delta-sized write + two tiny counts — the index is NOT
+    * rewritten (that is the point; at 100 TB a per-delete rewrite would
+    * be the bug).
     *
     * @return one-row report (n_deleted_now, n_tombstones_total) */
   def deleteFromIndex(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String): DataFrame = {
-    val root = indexVersion(spark, dir).root
-    val del = ids.select(col(idCol)).distinct()
-    del.write.mode("append").parquet(s"$root/tombstones")
-    val total = spark.read.parquet(s"$root/tombstones")
-      .distinct().count()
+    val base = indexVersion(spark, dir)
+    val del = ids.select(col(idCol)).distinct().localCheckpoint()
+    val next = commitIndex(base, "-", None, Some(del), compact = false)
+    val total = base.copy(n = next).read("tombstones").distinct().count()
     spark.range(1).select(
       lit(del.count()).as("n_deleted_now"),
       lit(total).as("n_tombstones_total"))
+  }
+
+  /** Build an IVF-PQ index over `corpus` (already in the index basis):
+    * `kCells` coarse cells, `m`×`k` PQ codebooks (residual when
+    * `residual`), and the assigned-and-encoded corpus as (`idCol`,
+    * `centroid_id`, `assign_cosine`, `codes`), checkpointed, with the
+    * row carrying the build-time assignment-cosine mean and σ that
+    * [[saveIndex]] records. One checkpointed pass feeds both the
+    * statistics and the vectors write, and assign + encode is ONE
+    * projection — no corpus-scale (id ⋈ id) reattachment join. The same
+    * deterministic id-hash sampling as [[ivfIndex]]/[[pqCodebooks]], so
+    * two builds on one corpus are bit-identical. */
+  private[graft] def buildIndex(corpus: DataFrame, vecCol: String,
+      idCol: String, kCells: Int, m: Int, k: Int, residual: Boolean)
+      : (DataFrame, DataFrame, DataFrame, Row) = {
+    val (cents, assigned) = ivfIndex(corpus, vecCol, idCol, kCells)
+    val cb =
+      if (residual)
+        pqCodebooksResidual(corpus, vecCol, idCol,
+          assigned.select(col(idCol), col("centroid_id")), cents, m, k)
+      else pqCodebooks(corpus, vecCol, idCol, m, k)
+    val ae = (if (residual)
+        withPqCodesResidual(assigned, vecCol, cents, cb, m)
+      else withPqCodes(assigned, vecCol, cb, m))
+      .select(col(idCol), col("centroid_id"), col("assign_cosine"),
+        col("codes"))
+      .localCheckpoint()
+    val st = ae.agg(avg(col("assign_cosine")),
+      stddev_pop(col("assign_cosine"))).head()
+    (cents, cb, ae, st)
   }
 
   /** Retrain executor — the ACTION behind [[compactIndex]]'s
@@ -1271,20 +1297,17 @@ object Similarity {
     * → update → drift ledger → compact → recommend → RETRAIN):
     * rebuilds the coarse quantizer and PQ codebooks from `corpus`
     * (the caller-owned float table — codes are lossy, so retraining
-    * needs the source vectors; same deterministic id-hash sampling
-    * discipline as [[ivfIndex]]/[[pqCodebooks]], so a retrain on
-    * corpus C is BIT-IDENTICAL to a fresh build on C), re-encodes
-    * everything, and commits the rebuild as the index's next
-    * [[FrameVersions]] version. The version it read is never touched,
-    * so a reader that loaded (even lazily) before the retrain keeps
-    * serving it bit for bit while the rebuild publishes on top — no
-    * hold-localCheckpoint-across-retrain reader discipline. Stored
-    * tombstones are applied to `corpus` BEFORE training (erased rows
-    * must not shape the new quantizers) and the new version starts
-    * clean: no drift ledger, no tombstones — the next recommendation
-    * reflects only post-retrain deltas. A crashed retrain leaves an
-    * uncommitted, claimed version that nothing serves;
-    * `FrameVersions.recover` drops it before the next retrain.
+    * needs the source vectors) through [[buildIndex]], so a retrain on
+    * corpus C is BIT-IDENTICAL to a fresh build on C, and commits the
+    * rebuild as the index's next [[FrameVersions]] version. The version
+    * it read is never touched, so a reader that loaded (even lazily)
+    * before the retrain keeps serving it bit for bit while the rebuild
+    * publishes on top. Stored tombstones are applied to `corpus` BEFORE
+    * training (erased rows must not shape the new quantizers) and the
+    * new version starts clean: no drift ledger, no tombstones — the
+    * next recommendation reflects only post-retrain deltas. A crashed
+    * retrain leaves an uncommitted, claimed version that nothing
+    * serves; `FrameVersions.recover` drops it before the next retrain.
     *
     * The returned one-row report carries the recall audit the judge
     * of a retrain wants: measured recall@`recallK` (vs exact brute
@@ -1309,15 +1332,12 @@ object Similarity {
     require(sampleQueries >= 1 && sampleQueries <= 256,
       "sampleQueries must be in [1, 256] — this is an audit sample")
     val base = indexVersion(spark, dir)
-    val ix = loadIndexAt(spark, base.root)
+    val ix = loadIndexAt(base)
     val kCells = ix.centroids.count().toInt
-    val tombPath =
-      new org.apache.hadoop.fs.Path(s"${base.root}/tombstones")
-    val fs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (live, purged) =
-      if (fs.exists(tombPath)) {
-        val tomb = spark.read.parquet(tombPath.toString)
-          .select(col(tomb1(spark, tombPath)).as(idCol)).distinct()
+      if (base.has("tombstones")) {
+        val t = base.read("tombstones")
+        val tomb = t.select(col(t.columns.head).as(idCol)).distinct()
         (corpus.join(tomb, Seq(idCol), "left_anti").localCheckpoint(),
           tomb.count())
       } else (corpus, 0L)
@@ -1328,22 +1348,11 @@ object Similarity {
       .localCheckpoint()
     val exact = bruteForceTopK(qs, live, vecCol, idCol, recallK)
       .localCheckpoint()
-    def hits(index: AnnIndex): Long = {
-      // audit queries are raw corpus vectors — serve them the way a
-      // user would: through the index-basis rotation
-      val qb = rotateQueries(index, qs, idCol, vecCol)
-      val ap =
-        if (index.residual)
-          ivfPqResidualTopK(qb, index.centroids, index.codebooks,
-            index.assignedEncoded, vecCol, idCol, m = index.m,
-            k = index.k, topK = recallK, nProbe = nProbe)
-        else ivfPqTopK(qb, index.centroids, index.codebooks,
-          index.assignedEncoded, vecCol, idCol, m = index.m,
-          k = index.k, topK = recallK, nProbe = nProbe)
-      recallAtK(exact, ap)
+    // audit queries are raw corpus vectors — serve them the way a user
+    // would: through the index-basis rotation
+    def hits(index: AnnIndex): Long =
+      recallAtK(exact, serveIndex(index, qs, vecCol, idCol, recallK, nProbe))
         .agg(sum(col("n_hits"))).head().getLong(0)
-    }
-    // Rebuild — the saveIndex path verbatim, so retrain ≡ fresh build.
     // A rotated index KEEPS its rotation across retrain: the corpus
     // (raw basis) rotates once, quantizers retrain on the rotated
     // vectors, and the record carries over — refitting the rotation
@@ -1353,31 +1362,7 @@ object Similarity {
       val liveB =
         if (ix.rotation.isEmpty && ix.rotationMatrix.isEmpty) live
         else rotateQueries(ix, live, idCol, vecCol).localCheckpoint()
-      val (cents, assigned) = ivfIndex(liveB, vecCol, idCol, kCells)
-      val cb =
-        if (ix.residual)
-          pqCodebooksResidual(liveB, vecCol, idCol,
-            assigned.select(col(idCol), col("centroid_id")), cents,
-            ix.m, ix.k)
-        else pqCodebooks(liveB, vecCol, idCol, ix.m, ix.k)
-      // One checkpointed pass feeds BOTH the build-stats aggregate and
-      // the vectors write (the updateIndexAt discipline): unpinned, the
-      // st aggregate ran the full assignment pass and saveIndex's
-      // vectors write re-ran assignment + encode over the corpus again
-      // — two corpus passes for one result. Codes fuse onto the
-      // assignment frame as a column (assignment preserves the vector),
-      // so assign + encode is ONE projection — no corpus-scale
-      // (id ⋈ id) reattachment join (§2.4), and the aggregate still
-      // sees exactly the rows `assigned` held.
-      val ae = (if (ix.residual)
-          withPqCodesResidual(assigned, vecCol, cents, cb, ix.m)
-        else withPqCodes(assigned, vecCol, cb, ix.m))
-        .select(col(idCol), col("centroid_id"), col("assign_cosine"),
-          col("codes"))
-        .localCheckpoint()
-      val st = ae.agg(avg(col("assign_cosine")),
-        stddev_pop(col("assign_cosine"))).head()
-      (cents, cb, ae, st)
+      buildIndex(liveB, vecCol, idCol, kCells, ix.m, ix.k, ix.residual)
     }
     // The before-audit serves the OLD layout and is independent of the
     // rebuild — overlap them (guide §2.6: submit independent job chains
@@ -1398,7 +1383,7 @@ object Similarity {
         ix.m, ix.k, st.getDouble(0), st.getDouble(1), ix.rotation,
         ix.rotationMatrix, ix.residual)
     }
-    val hitsAfter = hits(loadIndexAt(spark, base.copy(n = next).root))
+    val hitsAfter = hits(loadIndexAt(base.copy(n = next)))
     val nExact = exact.count()
     spark.range(1).select(
       lit(live.count()).as("n_corpus"),
@@ -1411,180 +1396,136 @@ object Similarity {
       lit(hitsAfter).as("n_hits_after"))
   }
 
-  // first column name of a stored tombstone set (written by
-  // deleteFromIndex under the caller's id column name)
-  private def tomb1(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path): String =
-    spark.read.parquet(p.toString).columns.head
+  // Version `v`'s drift ledger rows as (n_added,
+  // delta_mean_assign_cosine, n_batches), or None without a ledger.
+  // mergeSchema: a MIXED ledger (pre-r11 2-col files beside 3-col rows)
+  // would otherwise infer its schema from whichever file footer is read
+  // first — old rows would read n_batches as null and sum() would skip
+  // them. Each row without n_batches was one ingest batch.
+  private def driftLog(v: FrameVersions.Version): Option[DataFrame] =
+    if (!v.has("drift_log")) None
+    else {
+      val raw = v.spark.read.option("mergeSchema", "true")
+        .parquet(v.paths("drift_log"): _*)
+      Some(raw.select(col("n_added"), col("delta_mean_assign_cosine"),
+        (if (raw.schema.fieldNames.contains("n_batches"))
+          coalesce(col("n_batches").cast("long"), lit(1L))
+        else lit(1L)).as("n_batches")))
+    }
 
-  // Self-heal the aside ledger (a crash inside the compaction
-  // rollup's aside-rename window can leave no live drift_log but a
-  // complete copy at drift_log_compact_old), then fold it:
-  // (Σ n_batches, Σ n_added, n_added-weighted mean assign cosine).
-  private def readDriftLedger(spark: SparkSession, dir: String,
-      fs: org.apache.hadoop.fs.FileSystem): (Long, Long, Double) = {
-    val logPath = new org.apache.hadoop.fs.Path(s"$dir/drift_log")
-    val asideLog =
-      new org.apache.hadoop.fs.Path(s"$dir/drift_log_compact_old")
-    if (!fs.exists(logPath) && fs.exists(asideLog))
-      require(fs.rename(asideLog, logPath),
-        s"readDriftLedger: self-heal rename $asideLog -> $logPath " +
-          "failed (aside ledger untouched)")
-    if (fs.exists(logPath)) {
-      // mergeSchema: a MIXED ledger (pre-r11 2-col files beside new
-      // 3-col appends) would otherwise infer its schema from
-      // whichever file footer is read first — old rows would read
-      // n_batches as null and sum() would skip them, silently
-      // undercounting the rolled-up batch total. With the merged
-      // schema, per-row coalesce(n_batches, 1) restores the pre-r11
-      // contract (one row = one ingest batch).
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(logPath.toString)
-      // pre-r11 ledgers have no n_batches column: each row was one
-      // ingest batch
-      val log =
-        if (raw.schema.fieldNames.contains("n_batches"))
-          raw.withColumn("n_batches",
-            coalesce(col("n_batches").cast("long"), lit(1L)))
-        else raw.withColumn("n_batches", lit(1L))
-      val r = log.agg(sum(col("n_batches")), sum(col("n_added")),
-          sum(col("n_added") * col("delta_mean_assign_cosine")) /
-            sum(col("n_added"))).head()
-      (if (r.isNullAt(0)) 0L else r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) Double.NaN else r.getDouble(2))
-    } else (0L, 0L, Double.NaN)
-  }
+  // A drift ledger folded to its one-row summary: Σ n_added, the
+  // n_added-weighted mean assign cosine, Σ n_batches — sufficient
+  // statistics for the retrain verdict.
+  private def rollUp(log: DataFrame): DataFrame =
+    log.agg(sum(col("n_added")).as("n_added"),
+      (sum(col("n_added") * col("delta_mean_assign_cosine")) /
+        sum(col("n_added"))).as("delta_mean_assign_cosine"),
+      sum(col("n_batches")).as("n_batches"))
 
   // The retrain verdict WITHOUT the compaction rewrite — what lets
-  // [[maintainIndex]] decide BEFORE acting: (n deltas absorbed,
-  // measured drift, tolerance, recommended — None when either mean
-  // is unrecorded). Exactly the compactIndex report's decision
-  // columns, derived from the ledger and the meta alone.
-  private def driftVerdictAt(spark: SparkSession, root: String,
-      driftTolerance: Double)
-      : (Long, Double, Double, Option[Boolean]) = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (nDeltas, _, deltaMean) = readDriftLedger(spark, root, fs)
-    val ix = loadIndexAt(spark, root) // lazy frames — meta only reads
-    val buildMean = ix.meanAssignCosine
-    val tol =
-      if (!driftTolerance.isNaN) driftTolerance
-      else if (!ix.assignCosineStd.isNaN) 2.0 * ix.assignCosineStd
-      else 0.05
-    val drift =
+  // [[maintainIndex]] decide BEFORE acting: the compactIndex report's
+  // decision columns, from the ledger and the meta of one version.
+  private final case class DriftVerdict(nDeltas: Long, deltaMean: Double,
+      buildMean: Double, tol: Double) {
+    val drift: Double =
       if (deltaMean.isNaN || buildMean.isNaN) Double.NaN
       else buildMean - deltaMean
-    (nDeltas, drift, tol,
-      if (drift.isNaN) None else Some(drift > tol))
+    // None when either mean is unrecorded
+    def recommended: Option[Boolean] =
+      if (drift.isNaN) None else Some(drift > tol)
   }
 
-  def compactIndex(spark: SparkSession, dir: String,
-      driftTolerance: Double = Double.NaN): DataFrame = {
-    val root = indexVersion(spark, dir).root
-    val ix = loadIndexAt(spark, root)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val vecPath = new org.apache.hadoop.fs.Path(s"$root/vectors")
-    val fs = vecPath.getFileSystem(conf)
-    def dataFiles(p: org.apache.hadoop.fs.Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) n += 1
-      }
-      n
+  private def driftVerdictAt(v: FrameVersions.Version,
+      driftTolerance: Double): DriftVerdict = {
+    val (nDeltas, deltaMean) = driftLog(v).fold((0L, Double.NaN)) { log =>
+      val r = rollUp(log).head()
+      (if (r.isNullAt(2)) 0L else r.getLong(2),
+        if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
     }
-    val before = dataFiles(vecPath)
-    // Stage the rewrite next to the live layout (same filesystem ⇒ the
-    // final swap is a metadata move), clustered by cell so each
-    // partition directory lands as one file; localCheckpoint pins the
-    // row count read from the OLD layout before it is deleted.
-    val nRows = ix.assignedEncoded.count()
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/vectors_compact_tmp")
-    fs.delete(tmp, true): Unit
-    ix.assignedEncoded
-      .repartition(col("centroid_id"))
-      .write.partitionBy("centroid_id").parquet(tmp.toString)
-    fs.delete(vecPath, true): Unit
-    require(fs.rename(tmp, vecPath),
-      s"compactIndex: rename $tmp -> $vecPath failed (rewrite left in " +
-        "the tmp path; no data lost)")
-    val after = dataFiles(vecPath)
-    // The rewrite read the tombstone-filtered view (loadIndex), so the
-    // deletes are now physical — clear the tombstone set. Purging
-    // AFTER the rename is crash-safe: a leftover tombstone for an
-    // already-purged row is a no-op anti-join key.
-    val tombPath = new org.apache.hadoop.fs.Path(s"$root/tombstones")
-    val purged =
-      if (fs.exists(tombPath)) {
-        val n = spark.read.parquet(tombPath.toString).distinct().count()
-        fs.delete(tombPath, true): Unit
-        n
-      } else 0L
-    val logPath = new org.apache.hadoop.fs.Path(s"$root/drift_log")
-    // Self-heal a crash in a PREVIOUS compaction's ledger swap: the
-    // aside-rename window can leave no live drift_log but a complete
-    // copy at drift_log_compact_old. Restore it on entry — the swap
-    // below would otherwise fs.delete the aside copy unconditionally,
-    // destroying the only surviving ledger and silently resetting the
-    // retrain_recommended evidence.
-    val asideLog =
-      new org.apache.hadoop.fs.Path(s"$root/drift_log_compact_old")
-    val (nDeltas, nLedger, deltaMean) = readDriftLedger(spark, root, fs)
-    // Roll the ledger up into ONE summary row in ONE file — the
-    // weighted mean and batch count are sufficient statistics for the
-    // retrain policy, and a per-ingest-file ledger on a daily serving
-    // index is exactly the small-file pathology this pass exists to
-    // fix for vectors/. (saveIndex/retrain DELETES the ledger — the
-    // policy always reflects deltas absorbed since the last quantizer
-    // build, never across rebuilds.)
-    if (nDeltas > 0L && !deltaMean.isNaN) {
-      import spark.implicits._
-      val tmpLog =
-        new org.apache.hadoop.fs.Path(s"$root/drift_log_compact_tmp")
-      fs.delete(tmpLog, true): Unit
-      Seq((nLedger, deltaMean, nDeltas))
-        .toDF("n_added", "delta_mean_assign_cosine", "n_batches")
-        .coalesce(1).write.parquet(tmpLog.toString)
-      // Recoverable swap: rename the live
-      // ledger ASIDE first, then promote the summary, then drop the old
-      // copy — a crash at any point leaves at least one complete ledger
-      // on disk (old aside or new live), never the delete-then-rename
-      // window that would silently reset retrain_recommended evidence.
-      val oldLog = asideLog
-      fs.delete(oldLog, true): Unit
-      require(fs.rename(logPath, oldLog),
-        s"compactIndex: rename $logPath -> $oldLog failed (ledger " +
-          "untouched)")
-      require(fs.rename(tmpLog, logPath),
-        s"compactIndex: rename $tmpLog -> $logPath failed (previous " +
-          s"ledger preserved at $oldLog — rename it back to recover)")
-      fs.delete(oldLog, true): Unit
-    }
-    val buildMean = ix.meanAssignCosine
-    val tol =
+    val ix = loadIndexAt(v)
+    DriftVerdict(nDeltas, deltaMean, ix.meanAssignCosine,
       if (!driftTolerance.isNaN) driftTolerance
       else if (!ix.assignCosineStd.isNaN) 2.0 * ix.assignCosineStd
-      else 0.05
-    val drift =
-      if (deltaMean.isNaN || buildMean.isNaN) Double.NaN
-      else buildMean - deltaMean
-    def d(x: Double) =
-      if (x.isNaN) lit(null).cast("double") else lit(x)
+      else 0.05)
+  }
+
+  // a double literal, null for NaN (an unrecorded mean)
+  private def optLit(x: Double): Column =
+    if (x.isNaN) lit(null).cast("double") else lit(x)
+
+  /** Parquet files under version `v`'s `vectors` segments. */
+  private[graft] def vectorFiles(v: FrameVersions.Version): Long =
+    v.read("vectors").inputFiles.length.toLong
+
+  /** Compact an index after repeated [[updateIndex]] commits: every
+    * update adds one parquet fragment set (a `vectors` segment), so a
+    * daily-ingest serving index accumulates small files until scan
+    * efficiency dies (file-open overhead + tiny row groups defeat the
+    * vectorized reader). Commits the next version ([[commitIndex]]
+    * with `compact`) whose `vectors` is rewritten clustered by
+    * `centroid_id` — one writer task per cell, so each partition
+    * directory holds a single file — then vacuums to that version:
+    * tombstoned rows, superseded segments and older versions are
+    * PHYSICALLY gone, so a reader still on an older version must
+    * reload. The rows (id, codes, centroid_id) are untouched: a query
+    * against the compacted index returns EXACTLY what the fragmented
+    * one did (the spec asserts bit-equality; q_x3p's oracle is q_x3k's).
+    *
+    * RETRAIN POLICY (the consumer of [[updateIndex]]'s `cosine_drift`):
+    * every [[updateIndex]] commit adds its one-row report to the
+    * version's `drift_log`, and compaction — the natural maintenance
+    * point — reads the whole log and recommends. `retrain_recommended`
+    * is true when the n_added-weighted mean assignment cosine of ALL
+    * absorbed deltas has fallen more than `driftTolerance` below the
+    * build-time mean recorded by [[saveIndex]] — the documented default
+    * tolerance is 2× the build-time assignment-cosine STANDARD
+    * DEVIATION when [[saveIndex]] recorded one (a delta population
+    * whose mean sits outside 2σ of the build distribution is
+    * structurally new mass the frozen centroids cannot cover), falling
+    * back to `0.05` absolute. Once recommended, rebuild quantizers with
+    * [[retrainIndex]]; the deltas-weighted mean (not the last delta
+    * alone) means one outlier batch does not trigger a retrain but
+    * sustained drift does. Null when there is no log or no recorded
+    * build mean.
+    *
+    * Scale notes (100 TB): the rewrite is one shuffle of the codes
+    * table (m bytes + id per row — the floats never ship), exactly the
+    * cost profile of a parquet table compaction job; the drift log is
+    * one tiny row per ingest batch, and compaction ROLLS IT UP into a
+    * single summary row in a single file (weighted mean + batch count
+    * are sufficient statistics — the policy verdict is unchanged, the
+    * per-ingest small files are gone); a retrain starts an empty
+    * ledger and tombstone set, so the recommendation always reflects
+    * deltas absorbed since the last quantizer build.
+    *
+    * @return one row: (`n_rows`, `files_before`, `files_after`,
+    *         `n_tombstones_purged`, `n_deltas_absorbed`,
+    *         `delta_weighted_mean_cosine`, `build_mean_assign_cosine`,
+    *         `cosine_drift`, `drift_tolerance`, `retrain_recommended`) */
+  def compactIndex(spark: SparkSession, dir: String,
+      driftTolerance: Double = Double.NaN): DataFrame = {
+    val base = indexVersion(spark, dir)
+    val verdict = driftVerdictAt(base, driftTolerance)
+    val nRows = liveVectors(base).count()
+    val before = vectorFiles(base)
+    val purged =
+      if (base.has("tombstones"))
+        base.read("tombstones").distinct().count()
+      else 0L
+    val next = commitIndex(base, "-", None, None, compact = true)
+    FrameVersions.vacuum(spark, dir): Unit
     spark.range(1).select(
       lit(nRows).as("n_rows"),
       lit(before).as("files_before"),
-      lit(after).as("files_after"),
+      lit(vectorFiles(base.copy(n = next))).as("files_after"),
       lit(purged).as("n_tombstones_purged"),
-      lit(nDeltas).as("n_deltas_absorbed"),
-      d(deltaMean).as("delta_weighted_mean_cosine"),
-      d(buildMean).as("build_mean_assign_cosine"),
-      d(drift).as("cosine_drift"),
-      lit(tol).as("drift_tolerance"),
-      (if (drift.isNaN) lit(null).cast("boolean")
-       else lit(drift > tol)).as("retrain_recommended"))
+      lit(verdict.nDeltas).as("n_deltas_absorbed"),
+      optLit(verdict.deltaMean).as("delta_weighted_mean_cosine"),
+      optLit(verdict.buildMean).as("build_mean_assign_cosine"),
+      optLit(verdict.drift).as("cosine_drift"),
+      lit(verdict.tol).as("drift_tolerance"),
+      verdict.recommended.fold(lit(null).cast("boolean"))(lit(_))
+        .as("retrain_recommended"))
   }
 
   /** One-call self-driving maintenance — the POLICY CLOSURE of the
@@ -1595,7 +1536,7 @@ object Similarity {
     * runs — `retrain_recommended` dispatches [[retrainIndex]] (the
     * rebuild commits as the next version and subsumes compaction —
     * tombstones purge, fragments vanish, the ledger clears), anything
-    * else runs [[compactIndex]] within the latest version. The action
+    * else runs [[compactIndex]] on the latest version. The action
     * is conditioned on the measured signal, not on an operator
     * remembering to check a report column,
     * and a retrain never pays a wasted pre-compaction of the store it
@@ -1612,8 +1553,8 @@ object Similarity {
     * compaction (codes-only shuffle + d-row ledger math); the retrain
     * branch adds the [[retrainIndex]] build passes — the expensive
     * path runs only when sustained measured drift says the quantizers
-    * stopped covering the corpus. Same one-writer/pause-reads
-    * contract as both constituents.
+    * stopped covering the corpus. Both actions commit the next
+    * version, as their constituents do.
     *
     * @return one row: (`action` ∈ retrained | compacted,
     *         `cosine_drift`, `drift_tolerance`,
@@ -1630,37 +1571,22 @@ object Similarity {
     // subsumes compaction: tombstones purge, fragments vanish, the
     // ledger clears) and mutated the version a pinned reader was
     // serving right before superseding it
-    val (nDeltas, drift, tol, verdict) =
-      driftVerdictAt(spark, indexVersion(spark, dir).root,
-        driftTolerance)
-    val recommended = verdict.getOrElse(false)
-    def dOpt(x: Double): org.apache.spark.sql.Column =
-      if (x.isNaN) lit(null).cast("double") else lit(x)
-    if (recommended) {
+    val verdict = driftVerdictAt(indexVersion(spark, dir), driftTolerance)
+    if (verdict.recommended.getOrElse(false)) {
       val audit = retrainIndex(spark, dir, corpus, vecCol, idCol,
         sampleQueries, recallK, nProbe).head()
       spark.range(1).select(
         lit("retrained").as("action"),
-        dOpt(drift).as("cosine_drift"),
-        lit(tol).as("drift_tolerance"),
-        lit(nDeltas).as("n_deltas_absorbed"),
+        optLit(verdict.drift).as("cosine_drift"),
+        lit(verdict.tol).as("drift_tolerance"),
+        lit(verdict.nDeltas).as("n_deltas_absorbed"),
         lit(audit.getAs[Long]("n_corpus")).as("n_rows"),
         lit(audit.getAs[Long]("n_hits_before")).as("n_hits_before"),
         lit(audit.getAs[Long]("n_hits_after")).as("n_hits_after"))
     } else {
-      val rep = compactIndex(spark, dir, driftTolerance).head()
-      def optD(name: String): org.apache.spark.sql.Column =
-        if (rep.isNullAt(rep.fieldIndex(name)))
-          lit(null).cast("double")
-        else lit(rep.getAs[Double](name))
-      spark.range(1).select(
-        lit("compacted").as("action"),
-        optD("cosine_drift").as("cosine_drift"),
-        lit(rep.getAs[Double]("drift_tolerance"))
-          .as("drift_tolerance"),
-        lit(rep.getAs[Long]("n_deltas_absorbed"))
-          .as("n_deltas_absorbed"),
-        lit(rep.getAs[Long]("n_rows")).as("n_rows"),
+      compactIndex(spark, dir, driftTolerance).select(
+        lit("compacted").as("action"), col("cosine_drift"),
+        col("drift_tolerance"), col("n_deltas_absorbed"), col("n_rows"),
         lit(null).cast("long").as("n_hits_before"),
         lit(null).cast("long").as("n_hits_after"))
     }

@@ -857,14 +857,12 @@ object StreamingIngest {
     *    started marker is deleted;
     *  - a started marker already present means an earlier attempt died
     *    after any subset of the body's writes. The body is told so
-    *    (`midCrash`). Only the ANN twins, whose index takes in-place
-    *    appends, purge the batch's partial append first. Every other
-    *    store commits through [[graft.operators.FrameVersions]] with
-    *    the batch id as its tag ([[commitOnce]], the layout and
-    *    signature twins by hand), so the crashed attempt's uncommitted
-    *    version is dropped, the tag ([[Trigger.committed]]) says
-    *    whether the batch applied, and the latest commit otherwise
-    *    still holds the pre-batch state.
+    *    (`midCrash`). Every store commits through
+    *    [[graft.operators.FrameVersions]] with the batch id as its tag
+    *    ([[commitOnce]], the layout and signature twins by hand), so
+    *    the crashed attempt's uncommitted version is dropped, the tag
+    *    ([[Trigger.committed]]) says whether the batch applied, and the
+    *    latest commit otherwise still holds the pre-batch state.
     *
     * Op-store writes go through [[Trigger.record]], so a redelivered
     * batch replaces its own rows. */
@@ -1055,56 +1053,49 @@ object StreamingIngest {
     * [[graft.operators.Similarity.updateIndex]], completing the
     * streaming-twin grid (every other incremental primitive already
     * had one: G26s, ST30b): each trigger encodes the delta against the
-    * stored index's frozen quantizers, appends to the partitioned
-    * `vectors/` layout, and ledgers the batch to `drift_log/` — so a
-    * streaming corpus drives the full serving lifecycle, retrain
-    * recommendation included.
+    * stored index's frozen quantizers and commits it, with its
+    * `drift_log` row, as the index's next version tagged with the batch
+    * id ([[annCommitOnce]]) — so a streaming corpus drives the full
+    * serving lifecycle, retrain recommendation included.
     *
     * Exactly-once per batch via [[markerGuarded]], markers under
-    * `indexDir/_batches/`. The append is not idempotent, so a mid-crash
-    * redelivery, where a PARTIAL append may exist, SELF-HEALS by
-    * running the documented id-contract recovery mechanically:
-    * tombstone the batch's ids
-    * ([[graft.operators.Similarity.deleteFromIndex]]), purge them
-    * physically ([[graft.operators.Similarity.compactIndex]] — also
-    * clears the tombstones, so the re-applied ids come back live),
-    * then re-apply the batch. A first delivery pays no healing cost.
-    * The one residue: if the crash hit between the drift-ledger append
-    * and the final marker, the healed re-apply ledgers the batch twice
-    * — a policy-weight skew only (the drift verdict weights by
-    * n_added; labels and served rows stay exact).
+    * `indexDir/_batches/`, and the tagged commit: a mid-crash
+    * redelivery drops the crashed attempt's uncommitted version, and a
+    * batch whose commit landed is not applied again, so every batch
+    * is absorbed and ledgered once.
     *
     * Compaction threshold checked per trigger: with `maxFragments` >
-    * 0, a trigger that leaves more than that many parquet fragments
-    * under `vectors/` runs [[graft.operators.Similarity.compactIndex]]
-    * inline — the maintenance cadence a daily-ingest serving index
-    * needs, without an external scheduler. 0 disables (default:
-    * compaction stays an explicit operational decision). The check
-    * runs inside the guarded body, before the final marker. */
+    * 0, a trigger whose commit would leave more than that many parquet
+    * fragments under `vectors` (the base's plus one per cell the delta
+    * lands in) commits compacted
+    * ([[graft.operators.Similarity.compactIndex]]'s rewrite, in the
+    * same single commit) — the maintenance cadence a daily-ingest
+    * serving index needs, without an external scheduler. 0 disables
+    * (default: compaction stays an explicit operational decision). */
   def streamingAnnIngest(deltas: DataFrame, indexDir: String,
       checkpointDir: String, vecCol: String, idCol: String,
       maxFragments: Int = 0): StreamingQuery =
     markerGuarded(deltas, checkpointDir, indexDir, "streamingAnnIngest",
         Nil)(_.select(col(idCol), col(vecCol))) { (delta, t) =>
-      if (t.midCrash) {
-        // a partial append may exist — tombstone this batch's ids and
-        // purge them physically, then fall through to a clean re-apply
-        Similarity.deleteFromIndex(t.spark, indexDir,
-          delta.select(col(idCol)), idCol): Unit
-        Similarity.compactIndex(t.spark, indexDir): Unit
+      annCommitOnce(t, indexDir) { (v, ix) =>
+        val adds = Similarity.encodeDelta(ix, delta, vecCol, idCol)
+        (Some(adds), None, maxFragments > 0 && Similarity.vectorFiles(v) +
+          adds.select("centroid_id").distinct().count() > maxFragments)
       }
-      // eager by construction: the append + ledger happen inside
-      Similarity.updateIndex(t.spark, indexDir, delta, vecCol, idCol): Unit
-      if (maxFragments > 0) {
-        val root = Similarity.indexVersion(t.spark, indexDir).root
-        val it = t.fs.listFiles(new Path(s"$root/vectors"), true)
-        var n = 0
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-        if (n > maxFragments)
-          Similarity.compactIndex(t.spark, indexDir): Unit
-      }
+    }
+
+  /** [[commitOnce]] for the ANN index at `dir`, whose version 0 (the
+    * saveIndex root) is a base like any later version: `plan` turns the
+    * base and its loaded index into this batch's encoded adds, deleted
+    * ids and compact flag, which commit as one
+    * [[graft.operators.Similarity.commitIndex]] version. */
+  private def annCommitOnce(t: Trigger, dir: String)(
+      plan: (FrameVersions.Version, Similarity.AnnIndex) =>
+        (Option[DataFrame], Option[DataFrame], Boolean)): Unit =
+    commitOnce(t, dir)(identity, Similarity.indexVersion(t.spark, dir)) {
+      (v, tag) =>
+        val (adds, dels, compact) = plan(v, Similarity.loadIndexAt(v))
+        Similarity.commitIndex(v, tag, adds, dels, compact)
     }
 
   /** Dup-cluster maintenance under a CDC stream of verified pairs and
@@ -1195,84 +1186,50 @@ object StreamingIngest {
   /** ANN index maintenance under a CDC vector stream — adds AND
     * deletes interleaved, the takedown-complete upgrade of
     * [[streamingAnnIngest]] and the ANN member of the CDC-twin grid:
-    * per trigger, additions encode against the frozen quantizers
-    * through [[graft.operators.Similarity.updateIndex]] and deletions
-    * tombstone through [[graft.operators.Similarity.deleteFromIndex]],
-    * IN THAT ORDER — so a same-batch delete beats its add (the
-    * tombstone lands after the append and the row is born dead).
-    * Re-adding a previously deleted id RESURRECTS it: when any add id
-    * is currently tombstoned, the trigger runs
-    * [[graft.operators.Similarity.compactIndex]] FIRST — the physical
-    * purge is what makes clearing the tombstone safe (clearing alone
-    * would resurrect the old stale row beside the new one, the
-    * documented duplicate-live-rows id-contract violation).
-    * Re-adding a currently LIVE id UPDATES it: the old row is
-    * tombstoned and physically purged in the same trigger before the
-    * new row appends (the append-only store's spelling of
-    * latest-wins), and same-id adds WITHIN one trigger fold to a
-    * single deterministic representative before any mutation — so
+    * per trigger, additions encode against the frozen quantizers and
+    * deletions tombstone, in ONE commit
+    * ([[graft.operators.Similarity.commitIndex]]) — a same-batch delete
+    * beats its add (the row is born dead). Re-adding a previously
+    * deleted id RESURRECTS it, and re-adding a currently LIVE id
+    * UPDATES it: when any add id has a stored row or a tombstone, the
+    * trigger commits compacted, so the new version holds the live rows
+    * minus the re-added ids plus the adds, and only this batch's
+    * tombstones (clearing an old tombstone without the physical purge
+    * would resurrect the stale row beside the new one — the documented
+    * duplicate-live-rows id-contract violation). Same-id adds WITHIN one
+    * trigger fold to a single deterministic representative first — so
     * after every completed trigger the index holds exactly one live
     * row per live id, whatever the input stream did.
     * Resurrections/updates are rare relative to plain adds and
     * deletes, which is the asymmetry that pricing them at one inline
     * compaction accepts.
     *
-    * Crash safety is [[streamingAnnIngest]]'s: under [[markerGuarded]],
-    * a mid-crash redelivery self-heals by tombstoning the batch's add
-    * ids, compacting (physical purge + tombstone clear), and
-    * re-applying the whole batch — deletions re-tombstone
-    * idempotently. */
+    * Crash safety is [[streamingAnnIngest]]'s: the batch-tagged commit
+    * under [[markerGuarded]] applies each batch exactly once. */
   def streamingAnnCdc(events: DataFrame, indexDir: String,
       checkpointDir: String, vecCol: String, idCol: String,
       opCol: String = "op"): StreamingQuery =
     markerGuarded(events, checkpointDir, indexDir, "streamingAnnCdc", Nil)(
         withOp(opCol, Seq(idCol, vecCol))) { (b, t) =>
-      val spark = t.spark
-      // Fold adds to ONE row per id BEFORE touching the index: two
-      // adds of one id in a single trigger would otherwise append two
-      // live rows — the exact id-contract violation this twin exists to
-      // prevent. A trigger batch has no client-visible row order, so
-      // "latest" is undefined within it; the fold picks a deterministic
-      // representative (max by Spark's array ordering) — re-running the
-      // batch always yields the same index.
+      // Fold adds to ONE row per id: a trigger batch has no
+      // client-visible row order, so "latest" is undefined within it;
+      // the fold picks a deterministic representative (max by Spark's
+      // array ordering) — re-running the batch always yields the same
+      // index.
       val adds = b.filter(col("_op") === "add")
         .groupBy(col(idCol)).agg(max(col(vecCol)).as(vecCol))
         .localCheckpoint()
       val dels = b.filter(col("_op") === "del")
         .select(col(idCol)).distinct().localCheckpoint()
-      val hasAdds = !adds.isEmpty
-      if (t.midCrash && hasAdds) {
-        // purge any partial append
-        Similarity.deleteFromIndex(spark, indexDir,
-          adds.select(col(idCol)), idCol): Unit
-        Similarity.compactIndex(spark, indexDir): Unit
+      val (hasAdds, hasDels) = (!adds.isEmpty, !dels.isEmpty)
+      annCommitOnce(t, indexDir) { (v, ix) =>
+        def hit(frame: String) = v.has(frame) && !v.read(frame)
+          .select(col(idCol)).join(broadcast(adds.select(col(idCol))),
+            Seq(idCol), "left_semi").isEmpty
+        (Option.when(hasAdds)(Similarity.encodeDelta(ix, adds, vecCol,
+            idCol)), Option.when(hasDels)(dels),
+          hasAdds && (hit("vectors") || hit("tombstones")))
       }
-      if (hasAdds) {
-        val addIds = adds.select(col(idCol))
-        val root = Similarity.indexVersion(spark, indexDir).root
-        def hit(dir: String, ids: DataFrame => DataFrame) =
-          t.fs.exists(new Path(dir)) && !ids(spark.read.parquet(dir))
-            .join(broadcast(addIds), Seq(idCol), "left_semi").isEmpty
-        // resurrection check: a tombstoned re-add needs the old rows
-        // physically gone before its tombstone clears
-        val tombHit = hit(s"$root/tombstones", identity)
-        // update-style re-add of a LIVE id: the old row must be
-        // tombstoned and physically purged before the append, or the
-        // trigger leaves two live rows for one id (the other CDC twins
-        // fold latest-wins per identity; the ANN store is append-only,
-        // so "latest wins" is delete-then-add)
-        val liveHit = hit(s"$root/vectors", _.select(col(idCol)))
-        if (tombHit || liveHit) {
-          // tombstoning ids with no stored row is a no-op, so covering
-          // ALL add ids is safe and catches both cases
-          if (liveHit)
-            Similarity.deleteFromIndex(spark, indexDir, addIds, idCol): Unit
-          Similarity.compactIndex(spark, indexDir): Unit
-        }
-        Similarity.updateIndex(spark, indexDir, adds, vecCol, idCol): Unit
-      }
-      if (!dels.isEmpty)
-        Similarity.deleteFromIndex(spark, indexDir, dels, idCol): Unit
     }
 
   /** EXACT SCC maintenance under a CDC edge stream — adds AND deletes

@@ -1151,6 +1151,30 @@ class AnalyzeSpec extends SparkSpec {
         spark))
   }
 
+  test("annbuild builds the way retrainIndex does: a retrain on the " +
+      "same corpus commits v1 frames equal to v0's, meta included") {
+    import graft.operators.{FrameVersions, Similarity}
+    val dir = Files.createTempDirectory("graft-analyze-annbuild").toString
+    spark.read.parquet(sf() + "/embeddings.parquet")
+      .filter(col("vec_id") < 300).select("vec_id", "embedding")
+      .write.parquet(s"$dir/vecs")
+    Analyze.run(parse(List("annbuild", "--vectors", s"$dir/vecs",
+      "--target", s"$dir/ix", "--cells", "8", "--pq-m", "8",
+      "--pq-k", "8")), spark).write.format("noop").mode("overwrite").save()
+    Similarity.retrainIndex(spark, s"$dir/ix",
+      spark.read.parquet(s"$dir/vecs"), "embedding", "vec_id").collect()
+    val v1 = FrameVersions.latest(spark, s"$dir/ix")
+    val v0 = v1.copy(n = 0L)
+    assert(v1.n == 1L)
+    def rows(v: FrameVersions.Version, frame: String): Set[String] =
+      v.read(frame).collect().map(_.toString).toSet
+    Seq("centroids", "codebooks", "vectors", "meta").foreach { f =>
+      assert(rows(v1, f) == rows(v0, f), s"frame $f")
+    }
+    assert(!v0.read("meta").head().isNullAt(3),
+      "annbuild records the assignment-cosine σ")
+  }
+
   test("anneras runs the version lifecycle from argv: annretrain " +
       "commits versions, report, vacuum purges old versions and the " +
       "root, recover") {

@@ -14,9 +14,10 @@ import graft.streaming.StreamingIngest
 
 /** Crash injection for every store that commits through
   * [[graft.operators.FrameVersions]], each driven through its
-  * streaming twin (the ANN retrain, a batch operation, is killed and
-  * re-run directly). Batch 0 applies cleanly; batch k (k = 1, 2, 3) is
-  * killed at kill point k, then redelivered under the same checkpoint:
+  * streaming twin (the ANN retrain and compaction, batch operations,
+  * are killed and re-run directly). Batch 0 applies cleanly; batch k
+  * (k = 1, 2, 3) is killed at kill point k, then redelivered under the
+  * same checkpoint:
   *
   *  1. after the first frame of the new version is written (the
   *     one-frame layout manifest: as its write starts, after the data
@@ -533,6 +534,182 @@ class CommitCrashSpec extends SparkSpec {
         rowSet(Decontaminate.scrubContaminatedSpans(
           after("doc", k).toMap.toSeq.toDF("doc_id", "text"), "text",
           "doc_id", after("bench", k).toDF("doc_id", "text"), "text"))))
+  }
+
+  /** An 8-dim vector the ANN cases embed for id `i`. */
+  private def annVec(i: Long): Seq[Float] =
+    Seq.tabulate(8)(j => ((i * 8 + j) % 13).toFloat)
+
+  /** Saves a 2-cell IVF-PQ index over ids 0..15 at `ix` and returns
+    * (centroids, codebooks) for the expected-state encodes. */
+  private def annBase(ix: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.col
+    val base = (0L until 16L).map(i => (i, annVec(i)))
+      .toDF("vec_id", "embedding")
+    val (c, a) = Similarity.ivfIndex(base, "embedding", "vec_id", 2)
+    val cb = Similarity.pqCodebooks(base, "embedding", "vec_id", m = 4,
+      k = 2)
+    Similarity.saveIndex(ix, c, cb, a.select(col("centroid_id"),
+      col("vec_id")).join(Similarity.pqEncode(base, "embedding", "vec_id",
+        cb, m = 4), Seq("vec_id")), m = 4, k = 2, 0.9)
+    (c.localCheckpoint(), cb.localCheckpoint())
+  }
+
+  /** The (vec_id, codes, centroid_id) rows of `vecs` encoded against the
+    * frozen quantizers — the rows the batch primitives store for them. */
+  private def encoded(vecs: Seq[(Long, Seq[Float])], c: DataFrame,
+      cb: DataFrame): Set[String] = {
+    import org.apache.spark.sql.functions.col
+    val df = vecs.toDF("vec_id", "embedding")
+    rowSet(Similarity.assignToCentroids(df, "embedding", "vec_id", c)
+      .select(col("vec_id"), col("centroid_id").cast("long"))
+      .join(Similarity.pqEncode(df, "embedding", "vec_id", cb, m = 4),
+        Seq("vec_id"))
+      .select(col("vec_id"), col("codes").cast("string"),
+        col("centroid_id")))
+  }
+
+  /** The served (vec_id, codes, centroid_id) rows of the index at `ix`. */
+  private def served(ix: String): Set[String] = {
+    import org.apache.spark.sql.functions.col
+    rowSet(Similarity.loadIndex(spark, ix).assignedEncoded
+      .select(col("vec_id"), col("codes").cast("string"),
+        col("centroid_id")))
+  }
+
+  /** (Σ n_batches, Σ n_added) of the latest version's drift ledger. */
+  private def ledger(ix: String): (Long, Long) = {
+    val r = latestFrame(ix, "drift_log")
+      .selectExpr("sum(n_batches)", "sum(n_added)").head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** The index at `ix` holds exactly the directories its latest
+    * version reads: every non-`_` root entry and every `_v<k>/<frame>`
+    * directory is one of its segments. */
+  private def onlyLatestSegments(ix: String): Unit = {
+    val v = FrameVersions.latest(spark, ix)
+    val refs = v.frames.flatMap(f => v.segments(f)
+      .map(k => if (k == 0L) f else s"_v$k/$f")).toSet
+    def plain(dir: String): Seq[String] =
+      Option(new File(InjectingFs.local(dir)).list()).toSeq.flatten
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    val versionDirs = Option(new File(InjectingFs.local(ix)).list()).toSeq
+      .flatten.filter(_.matches("_v[0-9]+"))
+    val onDisk = plain(ix) ++ versionDirs.filter(_ != s"_v${v.n}")
+      .flatMap(d => Option(new File(InjectingFs.local(s"$ix/$d")).list())
+        .toSeq.flatten.filterNot(_.startsWith(".")).map(n => s"$d/$n"))
+    assert(onDisk.toSet == refs.filterNot(_.startsWith(s"_v${v.n}/")),
+      s"vacuum keeps exactly the latest version's segments: $onDisk")
+  }
+
+  test("streamingAnnIngest: a crash at any commit point, the inline " +
+      "compaction's included, heals to the batch primitives applied " +
+      "once") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_anningest")
+    val (ix, ref) = (s"$tmp/ix", s"$tmp/ref")
+    val (c, cb) = annBase(ix)
+    annBase(ref): Unit
+    val batches = (1 to 4).map(b =>
+      (100L * b until 100L * b + 4).map(i => (i, annVec(i))))
+    crashEachPoint(ix, "drift_log", batches, vacuums = false)((s, ckpt) =>
+      // the fragment threshold fires on batch 2 (the base of v3) only
+      StreamingIngest.streamingAnnIngest(s.toDF("vec_id", "embedding"),
+        ix, ckpt, "embedding", "vec_id",
+        maxFragments = if (FrameVersions.current(spark, ix) == 2L) 1 else 0))(
+      () => Seq(Similarity.loadIndex(spark, ix).assignedEncoded,
+        latestFrame(ix, "drift_log")),
+      k => {
+        // the batch primitives on a twin index, each batch once
+        Similarity.updateIndex(spark, ref, batches(k).toDF("vec_id",
+          "embedding"), "embedding", "vec_id").collect()
+        if (k == 2) Similarity.compactIndex(spark, ref).collect()
+        assert(served(ix) == served(ref) && served(ix) == encoded(
+          (0L until 16L).map(i => (i, annVec(i))) ++
+            batches.take(k + 1).flatten, c, cb))
+        assert(ledger(ix) == ((k + 1L, 4L * (k + 1))) &&
+          ledger(ix) == ledger(ref), "every batch ledgered once")
+        val v = FrameVersions.latest(spark, ix)
+        if (k == 2)
+          assert(v.segments("vectors") == Seq(v.n) &&
+            latestFrame(ix, "drift_log").count() == 1L,
+            "the compacting commit rewrote vectors and rolled the ledger")
+        onlyLatestSegments(ix)
+      })
+  }
+
+  test("streamingAnnCdc: a crash at any commit point, a resurrection " +
+      "and a live-id update included, heals to the batch primitives " +
+      "applied once") {
+    val tmp = InjectingFs.tempDir(spark, "graft_crash_anncdc")
+    val ix = s"$tmp/ix"
+    val (c, cb) = annBase(ix)
+    val none: Seq[Float] = null
+    val batches = Seq(
+      Seq(("add", 100L, annVec(100L)), ("add", 101L, annVec(101L)),
+        ("add", 102L, annVec(102L)), ("add", 200L, annVec(200L)),
+        ("del", 200L, none)),
+      Seq(("del", 101L, none), ("add", 103L, annVec(103L))),
+      // 101 resurrects, 102 updates in place, 3 is taken down
+      Seq(("add", 101L, annVec(101L)), ("add", 102L, annVec(777L)),
+        ("del", 3L, none)),
+      Seq(("add", 104L, annVec(104L)), ("del", 100L, none)))
+    val base = (0L until 16L).map(i => ("add", i, annVec(i)))
+    crashEachPoint(ix, "drift_log", batches, vacuums = false)((s, ckpt) =>
+      StreamingIngest.streamingAnnCdc(s.toDF("op", "vec_id", "embedding"),
+        ix, ckpt, "embedding", "vec_id"))(
+      () => Seq(Similarity.loadIndex(spark, ix).assignedEncoded,
+        latestFrame(ix, "drift_log")),
+      k => {
+        assert(served(ix) ==
+          encoded(liveAfter(base +: batches, k + 1), c, cb))
+        val adds = batches.take(k + 1).map(_.collect {
+          case ("add", id, _) => id }.distinct.size.toLong)
+        assert(ledger(ix) == ((k + 1L, adds.sum)),
+          "every batch ledgered once")
+        val v = FrameVersions.latest(spark, ix)
+        if (k == 2)
+          assert(v.segments("vectors") == Seq(v.n) &&
+            latestFrame(ix, "vectors").groupBy("vec_id").count()
+              .filter("count > 1").isEmpty,
+            "one stored row per id after the compacting commit")
+        onlyLatestSegments(ix)
+      })
+  }
+
+  test("compactIndex: a crash at any commit point leaves the previous " +
+      "version serving; recovery and a re-run commit the compaction " +
+      "once") {
+    val ix = InjectingFs.tempDir(spark, "graft_crash_compact") + "/ix"
+    annBase(ix): Unit
+    (1 to 3).foreach { k =>
+      Similarity.updateIndex(spark, ix, (100L * k until 100L * k + 4)
+        .map(i => (i, annVec(i))).toDF("vec_id", "embedding"),
+        "embedding", "vec_id").collect()
+      Similarity.deleteFromIndex(spark, ix, Seq(k.toLong).toDF("vec_id"),
+        "vec_id").collect()
+      val before = served(ix)
+      val ledgered = ledger(ix)
+      val version = FrameVersions.current(spark, ix)
+      InjectingFs.withHook(kill(k, "drift_log")) {
+        intercept[Exception](Similarity.compactIndex(spark, ix).collect())
+      }
+      if (k < 3) {
+        assert(FrameVersions.current(spark, ix) == version &&
+          served(ix) == before,
+          s"kill point $k: a load serves the previous version exactly")
+        intercept[IllegalArgumentException](
+          Similarity.compactIndex(spark, ix))
+        FrameVersions.recover(spark, ix)
+        Similarity.compactIndex(spark, ix).collect()
+      } else FrameVersions.vacuum(spark, ix): Unit
+      assert(FrameVersions.current(spark, ix) == version + 1,
+        s"kill point $k: the compaction committed exactly once")
+      assert(served(ix) == before && ledger(ix) == ledgered &&
+        !FrameVersions.latest(spark, ix).has("tombstones"),
+        s"kill point $k: compaction is serving-invariant")
+      onlyLatestSegments(ix)
+    }
   }
 
   test("retrainIndex: a crash at any commit point leaves the previous " +

@@ -205,4 +205,118 @@ class FrameVersionsSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/_v1/docs").exists &&
       new java.io.File(s"$dir/_commits").exists)
   }
+
+  test("segments: a version reuses an earlier version's frame and " +
+      "appends its own segment; reads union the segments, partition " +
+      "columns included; a version without a segment file reads its " +
+      "own directories exactly as before") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_fv_seg").toString + "/s"
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("id").collect().map(_.getLong(0)).toSet
+    FrameVersions.latest(spark, dir).commitWith() { root =>
+      Seq((1L, 0), (2L, 1)).toDF("id", "c").write.partitionBy("c")
+        .parquet(s"$root/part")
+      Seq(7L).toDF("m").write.parquet(s"$root/meta")
+    }
+    val v1 = FrameVersions.latest(spark, dir)
+    assert(!new java.io.File(s"$dir/_v1/_segments").exists &&
+      v1.frames == Seq("meta", "part") &&
+      v1.segments("part") == Seq(1L) &&
+      v1.paths("part") == Seq(s"$dir/_v1/part") &&
+      ids(v1.read("part")) == Set(1L, 2L) && !v1.has("other"),
+      "no segment file: every frame is the version's own directory")
+    v1.commitWith(carry = v1.frames.map(f => f -> v1.segments(f)).toMap) {
+      root =>
+        Seq((3L, 1)).toDF("id", "c").write.partitionBy("c")
+          .parquet(s"$root/part")
+    }
+    val v2 = FrameVersions.latest(spark, dir)
+    assert(v2.n == 2L && v2.frames == Seq("meta", "part") &&
+      v2.segments("part") == Seq(1L, 2L) && v2.segments("meta") == Seq(1L))
+    assert(!new java.io.File(s"$dir/_v2/meta").exists,
+      "a reused frame is not copied")
+    assert(v2.read("part").select("id", "c").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet ==
+      Set((1L, 0), (2L, 1), (3L, 1)),
+      "the appended segment reads with the reused one, c discovered")
+    assert(v2.read("meta").head().getLong(0) == 7L)
+    assert(ids(v1.read("part")) == Set(1L, 2L), "v1 is unchanged")
+  }
+
+  test("segments: a frame of many segments reads as ONE file scan, " +
+      "partitioned or not, and a partition filter prunes directories " +
+      "across every segment") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_fv_scan").toString + "/s"
+    FrameVersions.latest(spark, dir).commitWith() { root =>
+      Seq((1L, 0), (2L, 1)).toDF("id", "c").write.partitionBy("c")
+        .parquet(s"$root/part")
+      Seq(1L).toDF("id").write.parquet(s"$root/flat")
+    }
+    (2 to 4).foreach { k =>
+      val v = FrameVersions.latest(spark, dir)
+      v.commitWith(carry = v.frames.map(f => f -> v.segments(f)).toMap) {
+        root =>
+          Seq((10L * k, 1)).toDF("id", "c").write.partitionBy("c")
+            .parquet(s"$root/part")
+          Seq(10L * k).toDF("id").write.parquet(s"$root/flat")
+      }
+    }
+    val v = FrameVersions.latest(spark, dir)
+    assert(v.segments("part") == Seq(1L, 2L, 3L, 4L))
+    def scans(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans(v.read("part")).size == 1 && scans(v.read("flat")).size == 1)
+    assert(v.read("flat").collect().map(_.getLong(0)).toSet ==
+      Set(1L, 20L, 30L, 40L))
+    val c1 = v.read("part").filter(col("c") === 1)
+    val plan = c1.queryExecution.executedPlan
+    assert(plan.executeCollect().map(r => (r.getLong(0), r.getInt(1))).toSet ==
+      Set((2L, 1), (20L, 1), (30L, 1), (40L, 1)))
+    assert(plan.collect { case s: FileSourceScanExec => s }.head
+      .metrics("numFiles").value == 4L, "the c=0 directory is pruned")
+  }
+
+  test("recover and vacuum keep every segment a kept version reads " +
+      "and drop the rest") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_fv_segvac").toString + "/s"
+    def f(name: String) = new java.io.File(s"$dir/$name")
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("id").collect().map(_.getLong(0)).toSet
+    Seq(1L).toDF("id").write.parquet(s"$dir/docs")
+    Seq(1L).toDF("id").write.parquet(s"$dir/extra")
+    // v1 reuses the root's docs and adds `more`; v2 reuses both and
+    // appends a `more` segment
+    val v0 = FrameVersions.latest(spark, dir)
+    v0.commitWith(carry = Map("docs" -> v0.segments("docs")))(root =>
+      Seq(10L).toDF("id").write.parquet(s"$root/more"))
+    val v1 = FrameVersions.latest(spark, dir)
+    v1.commitWith(carry = v1.frames.map(n => n -> v1.segments(n)).toMap)(
+      root => Seq(20L).toDF("id").write.parquet(s"$root/more"))
+    // a crashed v3 claim: recover drops it, every committed one stays
+    assert(f("_v3/docs").mkdirs() && f("_v3/_claim").createNewFile())
+    FrameVersions.recover(spark, dir)
+    assert(!f("_v3").exists && f("_v1/more").exists && f("_v2/more").exists)
+    // vacuum to v2: v1's marker and own files go, the segment v2 reads
+    // stays; the root keeps docs (read by v2) and drops extra
+    assert(FrameVersions.vacuum(spark, dir) == 1L)
+    assert(f("_v1/more").exists && !f("_v1/_claim").exists &&
+      f("docs").exists && !f("extra").exists &&
+      !f("_commits/1_-").exists)
+    // a marker-less _v1 still read by v2 is not residue
+    FrameVersions.recover(spark, dir)
+    assert(f("_v1/more").exists)
+    val v2 = FrameVersions.latest(spark, dir)
+    assert(ids(v2.read("docs")) == Set(1L) &&
+      ids(v2.read("more")) == Set(10L, 20L))
+    // a full rewrite releases every reused segment
+    assert(FrameVersions.commit(spark, dir,
+      Seq("docs" -> Seq(5L).toDF("id"))) == 3L)
+    assert(FrameVersions.vacuum(spark, dir) == 1L)
+    assert(!f("_v1").exists && !f("_v2").exists && !f("docs").exists &&
+      ids(FrameVersions.latest(spark, dir).read("docs")) == Set(5L))
+  }
 }

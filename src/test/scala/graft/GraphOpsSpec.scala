@@ -14,6 +14,23 @@ class GraphOpsSpec extends SparkSpec {
     (0L, 1L), (1L, 2L), (2L, 3L), (4L, 5L), (5L, 4L))
     .toDF("start_id", "end_id")
 
+  test("q_g23b_louvain_vs_lpa runs both legs under the caller's job " +
+      "group, run after run") {
+    import org.apache.spark.sql.graft.SqlExecutions
+    val sc = spark.sparkContext
+    assert(spark.streams.active.isEmpty, "no other query may run jobs")
+    def under(group: String): Seq[String] = {
+      sc.setJobGroup(group, s"q_g23b under $group")
+      try SqlExecutions.jobGroupsDuring(spark)(
+        SparkEntry.queries("q_g23b_louvain_vs_lpa")(spark, sf()).collect())
+        ._1
+      finally sc.clearJobGroup()
+    }
+    under("g23b-first"): Unit
+    val second = under("g23b-second")
+    assert(second.nonEmpty && second.forall(_ == "g23b-second"), second)
+  }
+
   test("degrees: out, in, total") {
     val multi = Seq((0L, 1L), (0L, 2L), (1L, 2L)).toDF("start_id", "end_id")
     assert(GraphOps.degrees(multi, "out").orderBy("id").collect().toSeq ==

@@ -19,9 +19,14 @@ class InjectingFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("inject:///")
   override def getScheme: String = "inject"
 
+  // Plain statuses: the local ones load their permissions lazily
+  // through a `file:` URI, which an `inject:` path is not, so a
+  // recursive `listFiles` would fail on them.
   override def listStatus(f: Path): Array[FileStatus] = {
     hook(Listing, f)
-    super.listStatus(f)
+    super.listStatus(f).map(st => new FileStatus(st.getLen, st.isDirectory,
+      st.getReplication, st.getBlockSize, st.getModificationTime,
+      st.getPath))
   }
 
   override def mkdirs(f: Path): Boolean = {

@@ -468,20 +468,20 @@ class SimilaritySpec extends SparkSpec {
     // delta overlaps the stored layout on id 50 → fail fast, no append
     val overlapping = e.filter(col("vec_id") === 50 ||
       col("vec_id") === 200)
-    val before = spark.read.parquet(dir + "/vectors").count()
+    def stored() = FrameVersions.latest(spark, dir).read("vectors").count()
+    val before = stored()
     val ex = intercept[IllegalArgumentException](Similarity.updateIndex(
       spark, dir, overlapping, "embedding", "vec_id",
       checkIdOverlap = true).count())
     assert(ex.getMessage.contains("already present"))
-    assert(spark.read.parquet(dir + "/vectors").count() == before,
-      "guard must fire BEFORE the append")
+    assert(stored() == before && FrameVersions.current(spark, dir) == 0L,
+      "guard must fire BEFORE the commit")
     // disjoint delta passes the guard and appends
     val fresh = e.filter(col("vec_id") >= 200 && col("vec_id") < 210)
     val rep = Similarity.updateIndex(spark, dir, fresh, "embedding",
       "vec_id", checkIdOverlap = true).head()
     assert(rep.getLong(0) == fresh.count())
-    assert(spark.read.parquet(dir + "/vectors").count() ==
-      before + fresh.count())
+    assert(stored() == before + fresh.count())
   }
 
   test("compactIndex: fragmented appends collapse to one file per cell, " +
@@ -518,7 +518,7 @@ class SimilaritySpec extends SparkSpec {
     val beforeRows = rows(Similarity.loadIndex(spark, dir))
     val rep = Similarity.compactIndex(spark, dir).head()
     assert(rep.getLong(0) == e.count(), "row count preserved")
-    val nCells = spark.read.parquet(s"$dir/vectors")
+    val nCells = FrameVersions.latest(spark, dir).read("vectors")
       .select("centroid_id").distinct().count()
     assert(rep.getLong(2) < rep.getLong(1),
       s"must shrink: ${rep.getLong(1)} -> ${rep.getLong(2)}")
@@ -533,38 +533,24 @@ class SimilaritySpec extends SparkSpec {
     // with the batch count and weighted mean preserved as sufficient
     // statistics — a later compaction still reports both absorbed
     // batches and the same weighted drift
-    val ledger = spark.read.parquet(s"$dir/drift_log").collect()
+    val compacted = FrameVersions.latest(spark, dir)
+    val ledger = compacted.read("drift_log").collect()
     assert(ledger.length == 1 && ledger.head.getLong(2) == 2L)
-    assert(new java.io.File(s"$dir/drift_log").listFiles()
-      .count(_.getName.endsWith(".parquet")) == 1)
+    assert(compacted.paths("drift_log").map(p =>
+      new java.io.File(p).listFiles()
+        .count(_.getName.endsWith(".parquet"))) == Seq(1))
     val repAgain = Similarity.compactIndex(spark, dir).head()
     assert(repAgain.getLong(4) == 2L,
       "rolled-up ledger keeps the absorbed-batch count")
     assert(repAgain.getDouble(5) == rep.getDouble(5),
       "rolled-up ledger keeps the weighted delta mean")
-    // crash-window self-heal: a compaction that died between the
-    // aside-rename and the promote leaves NO live drift_log but a
-    // complete copy at drift_log_compact_old — the next compaction
-    // must rename it back on entry, not destroy it with the
-    // unconditional pre-swap delete
-    assert(new java.io.File(s"$dir/drift_log")
-      .renameTo(new java.io.File(s"$dir/drift_log_compact_old")),
-      "fixture: simulate the crash window")
-    val repHealed = Similarity.compactIndex(spark, dir).head()
-    assert(repHealed.getLong(4) == 2L,
-      "self-healed ledger keeps the absorbed-batch count")
-    assert(repHealed.getDouble(5) == rep.getDouble(5),
-      "self-healed ledger keeps the weighted delta mean")
-    assert(new java.io.File(s"$dir/drift_log").exists() &&
-      !new java.io.File(s"$dir/drift_log_compact_old").exists(),
-      "live ledger restored, aside copy gone")
-    // a rebuild into the same dir resets the maintenance state: the
-    // ledger measured the OLD quantizers (stale latch) and every
-    // fresh-written row is live by definition
-    Similarity.saveIndex(dir, cents, cb, ae, m = 8, k = 8,
-      stats.getDouble(0), stats.getDouble(1))
-    assert(!new java.io.File(s"$dir/drift_log").exists(),
-      "saveIndex clears the drift ledger")
+    // a rebuild resets the maintenance state: the ledger measured the
+    // OLD quantizers (stale latch) and every rebuilt row is live by
+    // definition
+    Similarity.retrainIndex(spark, dir, e, "embedding", "vec_id")
+      .write.format("noop").mode("overwrite").save()
+    assert(!FrameVersions.latest(spark, dir).has("drift_log"),
+      "a retrain starts without a drift ledger")
     assert(Similarity.compactIndex(spark, dir).head().isNullAt(9),
       "no ledger -> no recommendation")
     // planted drift: orthogonal-axis deltas push the weighted delta mean
@@ -662,9 +648,8 @@ class SimilaritySpec extends SparkSpec {
       "mixed-corpus quantizer sample covers both families")
     // the committed version starts clean: no ledger, no tombstones,
     // no leftover staging dirs
-    val root = FrameVersions.latest(spark, dir).root
-    assert(!new java.io.File(s"$root/drift_log").exists())
-    assert(!new java.io.File(s"$root/tombstones").exists())
+    val latest = FrameVersions.latest(spark, dir)
+    assert(!latest.has("drift_log") && !latest.has("tombstones"))
     assert(!new java.io.File(s"${dir}_retrain_tmp").exists())
     assert(!new java.io.File(s"${dir}_retrain_old").exists())
   }
@@ -704,9 +689,12 @@ class SimilaritySpec extends SparkSpec {
       "vec_id").collect()
     assert(served() == after)
     // compaction purges physically and clears the tombstone set
+    val tombDirs = FrameVersions.latest(spark, dir).paths("tombstones")
+    assert(tombDirs.size == 2 && tombDirs.forall(new java.io.File(_).exists))
     val crep = Similarity.compactIndex(spark, dir).head()
     assert(crep.getLong(3) == 4L, "purged distinct tombstones")
-    assert(!new java.io.File(s"$dir/tombstones").exists())
+    assert(!FrameVersions.latest(spark, dir).has("tombstones") &&
+      !tombDirs.exists(new java.io.File(_).exists))
     assert(served() == after, "purge must be serving-invariant")
   }
 
@@ -1755,8 +1743,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("index versions: a saveIndex store is version 0; retrainIndex " +
       "commits v1 WITHOUT touching it — a lazy pre-retrain reader keeps " +
-      "serving version 0 bit-for-bit; within-version maintenance routes " +
-      "to the latest version; a crashed retrain's claim is invisible " +
+      "serving version 0 bit-for-bit; an update commits on top of the " +
+      "latest version; a crashed retrain's claim is invisible " +
       "and refuses until recovered; vacuum drops the root frames") {
     val e = spark.read.parquet(sf() + "/embeddings.parquet")
     val base = e.filter(col("vec_id") < 300)
@@ -1809,24 +1797,149 @@ class SimilaritySpec extends SparkSpec {
       Similarity.saveIndex(dir, cents, cb, ae, m = 8, k = 8, meanCos))
     val served2 = serve()
     assert(served2.nonEmpty && served2.map(_._1).size >= 1)
-    // within-version maintenance routes to the LATEST version: an
-    // update's append lands under _v1 and serving reflects it
+    // an update commits on top of the LATEST version: v2 reuses v1's
+    // frames, adds its own segment and ledger row, and serving
+    // reflects it
     val extra = e.filter(col("vec_id") < 2)
       .select((col("vec_id") + 100000L).as("vec_id"),
         col("embedding"))
     Similarity.updateIndex(spark, dir, extra, "embedding", "vec_id")
       .write.format("noop").mode("overwrite").save()
-    assert(new java.io.File(s"$dir/_v1/drift_log").exists)
+    val v2 = FrameVersions.latest(spark, dir)
+    assert(v2.n == 2L && v2.has("drift_log") &&
+      v2.segments("vectors") == Seq(1L, 2L) &&
+      v2.segments("centroids") == Seq(1L))
     assert(serve().exists(_._2 >= 100000L),
       "the duplicate-vector ids surface in their own queries' top-5")
     assert(pinnedRows() == before, "version 0 still untouched by updates")
-    // vacuum: the version-0 root frames drop, current serving unaffected
-    assert(FrameVersions.vacuum(spark, dir, keepLast = 1) == 0L)
+    // vacuum: v1's marker and the version-0 root frames drop, the
+    // segments v2 reads stay, current serving unaffected
+    assert(FrameVersions.vacuum(spark, dir, keepLast = 1) == 1L)
     assert(!new java.io.File(s"$dir/vectors").exists &&
-      !new java.io.File(s"$dir/meta").exists)
+      !new java.io.File(s"$dir/meta").exists &&
+      new java.io.File(s"$dir/_v1/vectors").exists)
     assert(serve().nonEmpty)
     intercept[IllegalArgumentException](
       FrameVersions.vacuum(spark, dir, 0))
+  }
+
+  test("index versions: an index loaded before an updateIndex, " +
+      "deleteFromIndex or compaction commit keeps serving its rows bit " +
+      "for bit; compactIndex's vacuum then leaves one version") {
+    val e = spark.read.parquet(sf() + "/embeddings.parquet")
+    val base = e.filter(col("vec_id") < 200)
+    val q = e.filter(col("vec_id") < 4)
+    val (cents, assigned) =
+      Similarity.ivfIndex(base, "embedding", "vec_id", 8)
+    val cb = Similarity.pqCodebooks(base, "embedding", "vec_id",
+      m = 8, k = 8)
+    val ae = assigned.select(col("centroid_id"), col("vec_id"))
+      .join(Similarity.pqEncode(base, "embedding", "vec_id", cb, m = 8),
+        Seq("vec_id"))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_ann_pin").toString + "/ix"
+    Similarity.saveIndex(dir, cents, cb, ae, m = 8, k = 8)
+    def rows(ix: Similarity.AnnIndex) = Similarity.ivfPqTopK(q,
+        ix.centroids, ix.codebooks, ix.assignedEncoded, "embedding",
+        "vec_id", m = 8, k = 8, topK = 5, nProbe = 8)
+      .select("query_id", "vec_id", "adist", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .toSet
+    def pinned(changes: Boolean)(commit: => Any): Unit = {
+      val pin = Similarity.loadIndex(spark, dir)
+      val before = rows(pin)
+      val n = FrameVersions.current(spark, dir)
+      commit
+      assert(FrameVersions.current(spark, dir) == n + 1)
+      assert(rows(pin) == before, s"the pin on v$n keeps serving it")
+      assert((rows(Similarity.loadIndex(spark, dir)) != before) == changes)
+    }
+    pinned(changes = true)(Similarity.updateIndex(spark, dir,
+      e.filter(col("vec_id") >= 200), "embedding", "vec_id").collect())
+    val top = rows(Similarity.loadIndex(spark, dir)).map(_._2).toSeq
+    pinned(changes = true)(Similarity.deleteFromIndex(spark, dir,
+      top.toDF("vec_id"), "vec_id").collect())
+    // compactIndex's commit, without the vacuum that follows it
+    pinned(changes = false)(Similarity.commitIndex(
+      FrameVersions.latest(spark, dir), "-", None, None, compact = true))
+    val served = rows(Similarity.loadIndex(spark, dir))
+    Similarity.compactIndex(spark, dir).collect()
+    assert(FrameVersions.versions(spark, dir).map(_.n) == Seq(4L) &&
+      rows(Similarity.loadIndex(spark, dir)) == served)
+  }
+
+  // a saved 200-row index over sf0.001's first embeddings, with the
+  // build-time assignment-cosine mean and σ recorded
+  private def savedIndex(prefix: String): String = {
+    val base = spark.read.parquet(sf() + "/embeddings.parquet")
+      .filter(col("vec_id") < 200)
+    val (cents, assigned) =
+      Similarity.ivfIndex(base, "embedding", "vec_id", 8)
+    val cb = Similarity.pqCodebooks(base, "embedding", "vec_id",
+      m = 8, k = 8)
+    val ae = assigned.select(col("centroid_id"), col("vec_id"))
+      .join(Similarity.pqEncode(base, "embedding", "vec_id", cb, m = 8),
+        Seq("vec_id"))
+    val st = assigned.agg(avg(col("assign_cosine")),
+      stddev_pop(col("assign_cosine"))).head()
+    val dir = java.nio.file.Files
+      .createTempDirectory(prefix).toString + "/ix"
+    Similarity.saveIndex(dir, cents, cb, ae, m = 8, k = 8,
+      st.getDouble(0), st.getDouble(1))
+    dir
+  }
+
+  test("updateIndex: an empty delta commits only its ledger row; the " +
+      "index keeps loading, serving and compacting") {
+    val e = spark.read.parquet(sf() + "/embeddings.parquet")
+    val dir = savedIndex("graft_ann_empty")
+    val q = e.filter(col("vec_id") < 4)
+    def served() = Similarity.serveTopK(spark, dir, q, "embedding",
+        "vec_id", topK = 5, nProbe = 8)
+      .select("query_id", "vec_id", "adist", "rank").collect().toSet
+    val before = served()
+    val rep = Similarity.updateIndex(spark, dir,
+      e.filter(col("vec_id") < 0), "embedding", "vec_id").head()
+    assert(rep.getLong(0) == 0L)
+    val v1 = FrameVersions.latest(spark, dir)
+    assert(v1.n == 1L && v1.segments("vectors") == Seq(0L),
+      "no vectors segment for an empty delta")
+    assert(v1.read("drift_log").count() == 1L, "its ledger row commits")
+    assert(served() == before)
+    Similarity.updateIndex(spark, dir, e.filter(col("vec_id") === 300L),
+      "embedding", "vec_id").collect()
+    val crep = Similarity.compactIndex(spark, dir).head()
+    assert(crep.getLong(0) == 201L && crep.getLong(4) == 2L)
+    assert(Similarity.loadIndex(spark, dir).assignedEncoded.count() == 201L)
+  }
+
+  test("saveIndex: a re-save over a version-0 index clears the drift " +
+      "ledger and tombstones an earlier layout kept at its root") {
+    import spark.implicits._
+    val dir = savedIndex("graft_ann_resave")
+    // the root-level maintenance frames a version-0 index carried when
+    // updates and deletes wrote in place: one far-drifted ledger row,
+    // two tombstoned ids
+    Seq((50L, 0.0, 1L)).toDF("n_added", "delta_mean_assign_cosine",
+      "n_batches").write.parquet(s"$dir/drift_log")
+    Seq(0L, 1L).toDF("vec_id").write.parquet(s"$dir/tombstones")
+    assert(Similarity.loadIndex(spark, dir).assignedEncoded.count() == 198L,
+      "fixture: the root tombstones bite")
+    val e = spark.read.parquet(sf() + "/embeddings.parquet")
+      .filter(col("vec_id") < 200)
+    val (cents, assigned) = Similarity.ivfIndex(e, "embedding", "vec_id", 8)
+    val cb = Similarity.pqCodebooks(e, "embedding", "vec_id", m = 8, k = 8)
+    val ae = assigned.select(col("centroid_id"), col("vec_id"))
+      .join(Similarity.pqEncode(e, "embedding", "vec_id", cb, m = 8),
+        Seq("vec_id"))
+    val st = assigned.agg(avg(col("assign_cosine"))).head().getDouble(0)
+    Similarity.saveIndex(dir, cents, cb, ae, m = 8, k = 8, st, 0.01)
+    val v0 = FrameVersions.latest(spark, dir)
+    assert(v0.n == 0L && !v0.has("drift_log") && !v0.has("tombstones"))
+    assert(Similarity.loadIndex(spark, dir).assignedEncoded.count() == 200L)
+    val rep = Similarity.compactIndex(spark, dir).head()
+    assert(rep.getLong(4) == 0L && rep.isNullAt(9),
+      "no stale ledger -> no recommendation")
   }
 
   test("index versions: an index in the retired eras/ layout is " +
@@ -1844,8 +1957,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("maintainIndex on a versioned index: the drift branch commits " +
       "a NEW version (the pre-maintenance lazy pin keeps serving its " +
-      "version), the benign branch compacts WITHIN the latest version " +
-      "(no version bump)") {
+      "version), the benign branch commits its compaction as the next " +
+      "version") {
     val df = mixedFixture(spreadScales).toDF("vec_id", "embedding")
     def clus(d2: org.apache.spark.sql.DataFrame) =
       d2.select(col("vec_id"), transform(col("embedding"), x =>
@@ -1871,16 +1984,16 @@ class SimilaritySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getInt(3))).toSet
     val q = clus(df.filter(col("vec_id") < 4))
-    // benign: drift ≈ 0 — compaction runs IN the version, no bump
+    // benign: drift ≈ 0 — the update commits v1, the compaction v2
     val benign = clus(df.filter(col("vec_id") >= 100))
     Similarity.updateIndex(spark, dir, benign, "embedding", "vec_id")
       .write.format("noop").mode("overwrite").save()
     val bRep = Similarity.maintainIndex(spark, dir, clus(df),
       "embedding", "vec_id").head()
     assert(bRep.getString(0) == "compacted" &&
-      FrameVersions.current(spark, dir) == 0L,
-      "the benign branch must not publish a version")
-    // pin version 0 lazily, then FORCE the retrain branch
+      FrameVersions.current(spark, dir) == 2L,
+      "the benign branch commits the compaction, not a retrain")
+    // pin version 2 lazily, then FORCE the retrain branch
     val pinned = Similarity.loadIndex(spark, dir)
     val pinnedBefore = rows(Similarity.ivfPqTopK(q, pinned.centroids,
       pinned.codebooks, pinned.assignedEncoded, "embedding",
@@ -1890,12 +2003,12 @@ class SimilaritySpec extends SparkSpec {
       sampleQueries = 2, recallK = 3, nProbe = 2).head()
     assert(dRep.getString(0) == "retrained" &&
       !dRep.isNullAt(dRep.fieldIndex("n_hits_after")))
-    assert(FrameVersions.current(spark, dir) == 1L,
-      "the retrain commits v1")
+    assert(FrameVersions.current(spark, dir) == 3L,
+      "the retrain commits v3")
     assert(rows(Similarity.ivfPqTopK(q, pinned.centroids,
       pinned.codebooks, pinned.assignedEncoded, "embedding",
       "vec_id", m = 4, k = 8, topK = 5, nProbe = 2)) == pinnedBefore,
-      "the pre-maintenance pin keeps serving version 0")
+      "the pre-maintenance pin keeps serving version 2")
     // and the new era serves ≡ a fresh build on the live corpus
     val live = clus(df)
     val (c2, a2) = Similarity.ivfIndex(live, "embedding", "vec_id", 4)

@@ -786,7 +786,7 @@ class StreamingSpec extends SparkSpec {
         .join(enc, Seq("vec_id"))
       Similarity.saveIndex(s"$tmp/$d", c, cb, ae, m = 4, k = 2, 0.9)
     }
-    def vset(dir: String) = spark.read.parquet(s"$dir/vectors")
+    def vset(dir: String) = latest(dir, "vectors")
       .select(col("vec_id"), col("codes").cast("string"),
         col("centroid_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -809,7 +809,7 @@ class StreamingSpec extends SparkSpec {
       b2.toDF("vec_id", "embedding"), "embedding", "vec_id").collect()
     assert(vset(s"$tmp/s") == vset(s"$tmp/b"),
       "stream ≡ batch primitive bit-for-bit")
-    val ledger = spark.read.parquet(s"$tmp/s/drift_log").collect()
+    val ledger = latest(s"$tmp/s", "drift_log").collect()
     assert(ledger.length == 2 && ledger.map(_.getLong(0)).sum == 12L,
       "one ledger row per trigger")
     // redelivery: a fresh checkpoint restarts batch ids at 0, so the
@@ -825,7 +825,7 @@ class StreamingSpec extends SparkSpec {
       q2.processAllAvailable()
     } finally q2.stop()
     assert(vset(s"$tmp/s").size == rows, "redelivered batch absorbed once")
-    assert(spark.read.parquet(s"$tmp/s/drift_log").count() == 2L)
+    assert(latest(s"$tmp/s", "drift_log").count() == 2L)
     // the compaction threshold fires inline once fragments exceed it
     val mem3 = MemoryStream[(Long, Seq[Float])]
     val q3 = StreamingIngest.streamingAnnIngest(
@@ -836,10 +836,9 @@ class StreamingSpec extends SparkSpec {
       mem3.addData((300L until 302L).map(i => (i, vec(i))): _*)
       q3.processAllAvailable()
     } finally q3.stop()
-    val frags = new java.io.File(s"$tmp/b/vectors").listFiles()
-      .filter(_.isDirectory)
-      .flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
-    val cells = spark.read.parquet(s"$tmp/b/vectors")
+    val frags = Similarity.vectorFiles(
+      FrameVersions.latest(spark, s"$tmp/b"))
+    val cells = latest(s"$tmp/b", "vectors")
       .select("centroid_id").distinct().count()
     assert(frags == cells, "inline compaction collapsed to one file/cell")
   }
@@ -924,11 +923,9 @@ class StreamingSpec extends SparkSpec {
       a.select(col("centroid_id"), col("vec_id")).join(enc, Seq("vec_id")),
       m = 4, k = 2, 0.9)
     def live(): Set[Long] = {
-      val v = spark.read.parquet(s"$ix/vectors").select("vec_id")
-      val t = new java.io.File(s"$ix/tombstones")
-      (if (t.exists)
-        v.join(spark.read.parquet(s"$ix/tombstones"), Seq("vec_id"),
-          "left_anti")
+      val v = latest(ix, "vectors").select("vec_id")
+      (if (FrameVersions.latest(spark, ix).has("tombstones"))
+        v.join(latest(ix, "tombstones"), Seq("vec_id"), "left_anti")
       else v).collect().map(_.getLong(0)).toSet
     }
     val mem = MemoryStream[(String, Long, Seq[Float])]
@@ -950,7 +947,7 @@ class StreamingSpec extends SparkSpec {
       mem.addData(("add", 101L, vec(101L)))
       q.processAllAvailable()
       assert(live().contains(101L))
-      assert(spark.read.parquet(s"$ix/vectors")
+      assert(latest(ix, "vectors")
         .filter(col("vec_id") === 101L).count() == 1L,
         "no duplicate live rows after resurrection")
       assert(!live().contains(200L), "born-dead id stays dead")
@@ -958,7 +955,7 @@ class StreamingSpec extends SparkSpec {
       // must leave exactly one live row (id contract)
       mem.addData(("add", 300L, vec(300L)), ("add", 300L, vec(301L)))
       q.processAllAvailable()
-      assert(spark.read.parquet(s"$ix/vectors")
+      assert(latest(ix, "vectors")
         .filter(col("vec_id") === 300L).count() == 1L,
         "same-trigger duplicate adds fold to one live row")
       assert(live().contains(300L))
@@ -966,7 +963,7 @@ class StreamingSpec extends SparkSpec {
       // row is purged in the same trigger, never two live rows
       mem.addData(("add", 102L, vec(777L)))
       q.processAllAvailable()
-      assert(spark.read.parquet(s"$ix/vectors")
+      assert(latest(ix, "vectors")
         .filter(col("vec_id") === 102L).count() == 1L,
         "live re-add replaces, not duplicates")
       assert(live().contains(102L))
